@@ -40,10 +40,7 @@ object SparkEntry {
     val path = s"$dir/$name.parquet"
     val df = s.read.parquet(path)
     val cores = s.sparkContext.defaultParallelism
-    val maxSplit =
-      try s.conf.get("spark.sql.files.maxPartitionBytes").replace("b", "")
-        .replace("m", "000000").replace("g", "000000000").toLong
-      catch { case _: Throwable => 134217728L }
+    val maxSplit = maxSplitBytes(s)
     val bytes =
       try {
         val p = java.nio.file.Paths.get(path)
@@ -55,6 +52,14 @@ object SparkEntry {
       } catch { case _: Throwable => Long.MaxValue }
     if (bytes / math.max(maxSplit, 1L) < cores) df.repartition(cores) else df
   }
+
+  /** The split size [[tp]] divides the input by:
+    * `spark.sql.files.maxPartitionBytes` through Spark's own typed parse,
+    * so a size string means what it means to the scan planner (`128MB`,
+    * `512MB`, and `64m` = 64 MiB).
+    */
+  private[graft] def maxSplitBytes(s: SparkSession): Long =
+    s.sessionState.conf.filesMaxPartitionBytes
 
   private val IsoFmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
   private val IsoFmtDuck = "%Y-%m-%dT%H:%M:%S.%gZ"
@@ -80,19 +85,36 @@ object SparkEntry {
     s"(ascii(substr($x||'xx',1,1))*961+ascii(substr($x||'xx',2,1))*31+" +
       s"ascii(substr($x||'xx',3,1))+length($x)*7919)"
 
+  /** Every dir [[scratchDir]] made; ONE JVM shutdown hook deletes them
+    * all recursively (`deleteQuietly` swallows errors, so a dir that fails
+    * to delete does not stop the rest).
+    */
+  private[graft] val scratchDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private lazy val scratchDirsHook: Unit = {
+    sys.addShutdownHook(scratchDirs.forEach(d =>
+      org.apache.spark.network.util.JavaUtils.deleteQuietly(d.toFile)))
+    ()
+  }
+
   /** Scratch dir for ephemeral per-query state (crawl session snapshots,
     * stream checkpoints, built indices): tmpfs when available — the crawl
     * rounds' many tiny parquet commits (segment + tombstone writes, footer
     * reads, atomic manifest renames) are fsync/rename-bound on a
     * disk-backed /tmp, pure memory ops on /dev/shm. Same discipline as the
     * bench's shuffle dir; on a cluster this state lives on real storage
-    * and the knob is the table location, not this helper.
+    * and the knob is the table location, not this helper. Every dir is
+    * registered in [[scratchDirs]] and deleted when the JVM exits.
     */
-  private def scratchDir(prefix: String): String = {
+  private[graft] def scratchDir(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir =
+      if (java.nio.file.Files.isWritable(shm))
+        java.nio.file.Files.createTempDirectory(shm, prefix)
+      else java.nio.file.Files.createTempDirectory(prefix)
+    scratchDirsHook
+    scratchDirs.add(dir)
+    dir.toString
   }
 
   // --- flagship: a real crawl through the whole engine ----------------------

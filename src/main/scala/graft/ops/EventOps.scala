@@ -29,29 +29,23 @@ object EventOps {
     * Scale shape: ONE shuffle keyed on the user (the session windows are
     * derived by an in-partition sort-merge, not a second exchange). The
     * per-user partition is the sequential unit — measured on the bench's
-    * hot-user probe (one user owning 50% of 4M events), the plain form runs
-    * 5.16× the uniform leg while [[sessionizeBucketed]] stays at 1.07×. So
-    * this entry point AUTO-ROUTES: when the largest per-user event count
-    * exceeds `hotUserThreshold` (one cheap map-side-combinable count-agg
-    * pre-pass), it delegates to [[sessionizeBucketed]] — identical output,
-    * property-proven. Pass `hotUserThreshold = Long.MaxValue` to force the
-    * plain single-sort form (the bench probe does, to measure it); the
-    * streaming path ([[graft.streaming.StreamingOps]]) always takes the
-    * plain form — watermarks bound its state instead, and an eager
-    * pre-count is impossible on an unbounded stream.
-    */
-  /** `maxGroupHint` (0 = unset): caller-supplied upper bound on the
-    * largest per-user event count — from table stats, the previous run,
-    * or domain knowledge. When set, the router compares IT against
-    * `hotUserThreshold` instead of running the eager pre-count scan
-    * (at corpus scale that scan is a full extra read per call; both
-    * routes are output-identical, so an inexact hint can only cost
-    * performance, never correctness).
+    * hot-user probe (one user owning 50% of 4M events), this form runs
+    * 5.16× the uniform leg while [[sessionizeBucketed]] stays at 1.07×;
+    * on the uniform sf0.1 events table the bucketed form runs ~2× this
+    * form's wall. So this entry point
+    * always runs the single-shuffle plan and no eager job: call
+    * [[sessionizeBucketed]] by name when one user can own a large share
+    * of the log. The streaming form
+    * ([[graft.streaming.StreamingOps.sessionizeStream]]) delegates here;
+    * its watermark bounds the per-user state.
+    *
+    * `hotUserThreshold` is ignored. It stays in the signature only so that
+    * callers passing it by name keep compiling; a caller with a hot key
+    * should call [[sessionizeBucketed]].
     */
   def sessionize(events: DataFrame, gapSeconds: Long = 1800L,
       userCol: String = "user_id", tsCol: String = "ts",
-      hotUserThreshold: Long = 1048576L,
-      maxGroupHint: Long = 0L): DataFrame = {
+      hotUserThreshold: Long = 1048576L): DataFrame = {
     // parquet event times arrive as TIMESTAMP_NTZ; with the engine-wide
     // UTC session zone this cast is wall-clock exact, and unix_micros /
     // session_window require TIMESTAMP. An already-TIMESTAMP column is
@@ -61,20 +55,7 @@ object EventOps {
       if (events.schema(tsCol).dataType ==
         org.apache.spark.sql.types.TimestampType) events
       else events.withColumn(tsCol, col(tsCol).cast("timestamp"))
-    val routeBucketed =
-      !evs.isStreaming && hotUserThreshold > 0 &&
-        hotUserThreshold < Long.MaxValue && {
-          if (maxGroupHint > 0L) maxGroupHint > hotUserThreshold
-          else {
-            val m = evs.groupBy(col(userCol)).count()
-              .agg(max(col("count"))).head().get(0)
-            m != null && m.asInstanceOf[Long] > hotUserThreshold
-          }
-        }
-    if (routeBucketed)
-      sessionizeBucketed(evs, gapSeconds,
-        bucketSeconds = math.max(86400L, gapSeconds * 2L), userCol, tsCol)
-    else evs
+    evs
       .groupBy(col(userCol),
         session_window(col(tsCol), s"$gapSeconds seconds").as("__w"))
       .agg(count(lit(1)).as("n_events"))
@@ -230,45 +211,26 @@ object EventOps {
     * rows per user map-side. Per-user event lists bound the collect_list —
     * the same inherent sequential unit as [[sessionize]], and the same
     * hot-key exposure: ONE user with billions of step events is one
-    * aggregation buffer. [[funnelBucketed]] is the scale path (identical
-    * output, property-proven): per-(user, time-bucket) partial folds whose
-    * completed-prefix states merge across buckets. Like [[sessionize]],
-    * this entry point AUTO-ROUTES there when the largest per-user STEP
-    * event count exceeds `hotUserThreshold` (one cheap
-    * map-side-combinable count-agg pre-pass over the step-filtered rows);
-    * `Long.MaxValue` forces the plain form (the bench probe does, to
-    * measure it). Measured on the bench's hot-user probe (one user owning
-    * 50% of 8M step events, two clean round-5 passes): the bucketed form
-    * pays ~1.1× the plain form's WALL here — its second exchange — while
-    * plain holds one 4M-element aggregation buffer. The routing is not a
-    * wall-clock optimization at this n; it is the memory bound: the
-    * plain buffer grows linearly with the hot user (an OOM at 10×), the
-    * bucketed per-(user, bucket) group does not.
+    * aggregation buffer, which grows linearly with that user. This entry
+    * point always runs the single-shuffle plan and no eager job; call
+    * [[funnelBucketed]] by name (identical output, property-proven) when
+    * one user can own a large share of the step events. Measured on the
+    * bench's hot-user probe (one user owning 50% of 8M step events) the
+    * bucketed form pays ~1.1× this form's wall — its second exchange —
+    * but its per-(user, bucket) buffer stays bounded; on the uniform sf0.1
+    * events table it runs ~1.7× this form's wall.
+    *
+    * `hotUserThreshold` is ignored. It stays in the signature only so that
+    * callers passing it by name keep compiling; a caller with a hot key
+    * should call [[funnelBucketed]].
     */
   def funnel(events: DataFrame, steps: Seq[String],
       userCol: String = "user_id", tsCol: String = "ts",
       typeCol: String = "event_type",
-      hotUserThreshold: Long = 1048576L,
-      maxGroupHint: Long = 0L): DataFrame = {
+      hotUserThreshold: Long = 1048576L): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    val k = steps.length
     val stepsArr = array(steps.map(lit): _*)
-    val stepped = events.filter(col(typeCol).isin(steps: _*))
-    // maxGroupHint: see [[sessionize]] — skips the eager pre-count scan
-    val routeBucketed =
-      !events.isStreaming && hotUserThreshold > 0 &&
-        hotUserThreshold < Long.MaxValue && {
-          if (maxGroupHint > 0L) maxGroupHint > hotUserThreshold
-          else {
-            val m = stepped.groupBy(col(userCol)).count()
-              .agg(max(col("count"))).head().get(0)
-            m != null && m.asInstanceOf[Long] > hotUserThreshold
-          }
-        }
-    if (routeBucketed)
-      return funnelBucketed(events, steps, bucketSeconds = 86400L,
-        userCol, tsCol, typeCol)
-    val perUser = stepped
+    val perUser = events.filter(col(typeCol).isin(steps: _*))
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .select(col(userCol), unix_micros(col(tsCol)).as("us"),
         col(typeCol).as("et"))
@@ -412,39 +374,17 @@ object EventOps {
     * cross-engine hash-exactness requires picking a real element
     * deterministically.
     *
-    * This entry point ROUTES on group size (both forms return identical
-    * rows — the rank-r element's VALUE is the same whether found by
-    * sorting rows or by walking the cents histogram): groups at or under
-    * `maxSortGroup` rows take [[valueQuantilesSorted]] (one sort-shuffle,
-    * cheapest at small n); above it, [[valueQuantilesHistogram]] — per-type
-    * row counts come from one cheap map-side-combinable count-agg pre-pass.
-    * With ~5 event types a "group" is corpus/5-sized, so at 100× scale the
-    * sorted form would funnel billions of rows through one window task —
-    * the histogram form never sorts raw rows at all.
+    * Scale shape: one sort-shuffle per group (the window), then a
+    * conditional-max rollup that collapses map-side. This entry point
+    * runs no eager job. The per-group sort is the sequential unit, and
+    * with ~5 event types a "group" is corpus/5-sized, so at 100× scale
+    * it funnels billions of rows through one window task: call
+    * [[valueQuantilesHistogram]] by name there (identical rows — the
+    * rank-r element's VALUE is the same whether found by sorting rows or
+    * by walking the cents histogram). On the uniform sf0.1 events table
+    * the histogram form runs ~1.5× this form's wall.
     */
   def valueQuantiles(events: DataFrame, typeCol: String = "event_type",
-      valueCol: String = "value", idCol: String = "event_id",
-      maxSortGroup: Long = 4194304L,
-      maxGroupHint: Long = 0L): DataFrame = {
-    // maxGroupHint: see [[sessionize]] — skips the eager pre-count scan
-    val useHistogram = maxSortGroup <= 0 || (maxSortGroup < Long.MaxValue && {
-      if (maxGroupHint > 0L) maxGroupHint > maxSortGroup
-      else {
-        val m = events.groupBy(col(typeCol)).count()
-          .agg(max(col("count"))).head().get(0)
-        m != null && m.asInstanceOf[Long] > maxSortGroup
-      }
-    })
-    if (useHistogram) valueQuantilesHistogram(events, typeCol, valueCol)
-    else valueQuantilesSorted(events, typeCol, valueCol, idCol)
-  }
-
-  /** Single-sort form of [[valueQuantiles]] — the oracle-checkable twin:
-    * one sort-shuffle per group (the window), then a conditional-max
-    * rollup that collapses map-side. The per-group sort is the sequential
-    * unit; route through [[valueQuantilesHistogram]] above ~4M rows/group.
-    */
-  def valueQuantilesSorted(events: DataFrame, typeCol: String = "event_type",
       valueCol: String = "value", idCol: String = "event_id"): DataFrame = {
     val cents = events.select(col(typeCol),
       floor(col(valueCol) * 100 + 0.5).cast("long").as("cents"), col(idCol))
@@ -468,7 +408,7 @@ object EventOps {
     * picks the smallest cents whose cumulative count reaches each rank.
     * The rank-r element of the sorted multiset lies inside that cell, so
     * its value IS that cell's cents: identical output to
-    * [[valueQuantilesSorted]] by construction.
+    * [[valueQuantiles]] by construction.
     */
   def valueQuantilesHistogram(events: DataFrame,
       typeCol: String = "event_type", valueCol: String = "value"): DataFrame = {

@@ -26,6 +26,28 @@ class SparkEntrySpec extends AnyFunSuite {
     }
   }
 
+  test("tp's split size is Spark's typed parse of maxPartitionBytes") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      assert(SparkEntry.maxSplitBytes(spark) == (128L << 20))
+      spark.conf.set(key, "512MB")
+      assert(SparkEntry.maxSplitBytes(spark) == (512L << 20))
+      spark.conf.set(key, "64m")
+      assert(SparkEntry.maxSplitBytes(spark) == (64L << 20))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("scratch dirs are registered for deletion at JVM exit") {
+    val d = java.nio.file.Paths.get(SparkEntry.scratchDir("graft-spec"))
+    assert(java.nio.file.Files.isDirectory(d))
+    assert(SparkEntry.scratchDirs.contains(d))
+  }
+
   test("entry returns extracted crawl docs") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)

@@ -1370,7 +1370,7 @@ class EventOpsSpec extends AnyFunSuite {
       "b" -> ((3L, 500L, 900L))), got.toString)
   }
 
-  test("valueQuantiles histogram path equals the sorted form (and the router routes)") {
+  test("valueQuantiles histogram path equals the sorted form") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val gen = Gen.listOfN(400, for {
@@ -1383,11 +1383,8 @@ class EventOpsSpec extends AnyFunSuite {
       val df = rows.toDF("event_type", "value", "event_id")
       def set(d: org.apache.spark.sql.DataFrame) = d.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      val sorted = set(EventOps.valueQuantilesSorted(df))
+      val sorted = set(EventOps.valueQuantiles(df))
       assert(set(EventOps.valueQuantilesHistogram(df)) == sorted, s"seed=$seed")
-      // router: forced-histogram (maxSortGroup=0) and forced-sort agree
-      assert(set(EventOps.valueQuantiles(df, maxSortGroup = 0L)) == sorted)
-      assert(set(EventOps.valueQuantiles(df, maxSortGroup = 1L)) == sorted)
     }
   }
 
@@ -1439,7 +1436,7 @@ class EventOpsSpec extends AnyFunSuite {
       (3L, "purchase") -> 1L), got.toString)
   }
 
-  test("funnel auto-routes hot users through the bucketed form, same output") {
+  test("funnelBucketed equals funnel on a hot user") {
     val steps = Seq("view", "click", "purchase")
     val rows = ((0 until 120).map(i =>
       evt(1L, i * 1000000L, steps(i % 3))) ++
@@ -1447,62 +1444,39 @@ class EventOpsSpec extends AnyFunSuite {
       .toDF("user_id", "ts", "event_type")
     def m(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    val plain = m(EventOps.funnel(rows, steps, hotUserThreshold = Long.MaxValue))
-    // threshold 50 < user 1's 120 step events → routes bucketed
-    val routed = m(EventOps.funnel(rows, steps, hotUserThreshold = 50L))
-    assert(routed == plain)
+    val plain = m(EventOps.funnel(rows, steps))
+    // one bucket for the whole log, and 10 s buckets that split user 1's
+    // 120 step events across 12 of them
+    for (b <- Seq(86400L, 10L))
+      assert(m(EventOps.funnelBucketed(rows, steps, bucketSeconds = b)) == plain,
+        s"bucketSeconds=$b")
   }
 
-  test("sessionize auto-routes hot users through the bucketed form, same output") {
+  test("sessionizeBucketed equals sessionize on a hot user") {
     val rows = ((0 until 200).map(i => ev(1L, i * 30000000L)) ++
       (0 until 10).map(i => ev(2L, i * 400000000L))).toDF("user_id", "ts")
     def set(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val plain = set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = Long.MaxValue))
-    // threshold 50 < user 1's 200 events → routes bucketed; output identical
-    val routed = set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = 50L))
-    assert(routed == plain)
+    val plain = set(EventOps.sessionize(rows, gapSeconds = 60L))
+    // one bucket for the whole log, and 600 s buckets that cut user 1's
+    // single 100-minute session at every boundary
+    for (b <- Seq(86400L, 600L))
+      assert(set(EventOps.sessionizeBucketed(rows, gapSeconds = 60L,
+        bucketSeconds = b)) == plain, s"bucketSeconds=$b")
   }
 
-  test("stats-hint router: a maxGroupHint skips the eager pre-count scan and routes by the hint") {
-    val rows = ((0 until 200).map(i => ev(1L, i * 30000000L)) ++
+  test("sessionize, funnel and valueQuantiles run no Spark job at plan-build time") {
+    // user_id and event_type throw on ANY row evaluation, so any job run
+    // while the plans are built raises here
+    val poisoned = ((0 until 200).map(i => ev(1L, i * 30000000L)) ++
       (0 until 10).map(i => ev(2L, i * 400000000L))).toDF("user_id", "ts")
-    def set(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    // hint above the threshold → bucketed; below → plain; both ≡ plain output
-    val plain = set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = Long.MaxValue))
-    assert(set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = 50L, maxGroupHint = 200L)) == plain)
-    assert(set(EventOps.sessionize(rows, gapSeconds = 60L,
-      hotUserThreshold = 50L, maxGroupHint = 40L)) == plain)
-    // NO JOB may run at plan-build time when hinted: a poisoned user column
-    // throws on ANY row evaluation, so the eager pre-count raises on the
-    // unhinted call while the hinted call builds a lazy plan untouched
-    val poisoned = rows.withColumn("user_id",
-      raise_error(lit("pre-count ran")).cast("long"))
-    EventOps.sessionize(poisoned, gapSeconds = 60L,
-      hotUserThreshold = 50L, maxGroupHint = 200L) // lazy — must NOT throw
-    intercept[Exception] {
-      EventOps.sessionize(poisoned, gapSeconds = 60L, hotUserThreshold = 50L)
-    } // the unhinted router's pre-count evaluates the column eagerly
-    // funnel + quantiles: hinted forms equal their unhinted twins
-    val evs = rows.withColumn("event_type",
-      concat(lit("s"), (pmod(col("user_id"), lit(2)) + 1).cast("string")))
-    assert(
-      EventOps.funnel(evs, Seq("s1", "s2"), hotUserThreshold = 50L,
-        maxGroupHint = 200L).collect().toSet ==
-      EventOps.funnel(evs, Seq("s1", "s2"),
-        hotUserThreshold = Long.MaxValue).collect().toSet)
-    val vals = rows.withColumn("event_type", lit("t"))
-      .withColumn("value", (col("user_id") * 7 % 13).cast("double"))
+      .withColumn("user_id", raise_error(lit("job ran")).cast("long"))
+      .withColumn("event_type", raise_error(lit("job ran")).cast("string"))
+      .withColumn("value", lit(1.0))
       .withColumn("event_id", monotonically_increasing_id())
-    assert(
-      EventOps.valueQuantiles(vals, maxSortGroup = 50L, maxGroupHint = 200L)
-        .collect().toSet ==
-      EventOps.valueQuantilesHistogram(vals).collect().toSet)
+    EventOps.sessionize(poisoned, gapSeconds = 60L, hotUserThreshold = 50L)
+    EventOps.funnel(poisoned, Seq("s1", "s2"), hotUserThreshold = 50L)
+    EventOps.valueQuantiles(poisoned)
   }
 
   test("retention floors pre-1970 days like DuckDB's // (not truncating div)") {

@@ -218,8 +218,9 @@ class PlanSpec extends AnyFunSuite {
     val aggIdx = hist.lastIndexOf("HashAggregate")
     assert(windowIdx >= 0 && aggIdx > windowIdx,
       s"expected a HashAggregate below the window\n$hist")
-    // the sorted twin DOES rank raw rows — the contrast locking the routing
-    val sorted = planOf(graft.ops.EventOps.valueQuantilesSorted(events))
+    // the sorted form DOES rank raw rows — the contrast that makes the
+    // histogram form the scale path
+    val sorted = planOf(graft.ops.EventOps.valueQuantiles(events))
     assert(sorted.contains("row_number"), sorted)
   }
 

@@ -41,11 +41,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     val corpus = SyntheticCorpus.Builder(n = 80, hostCount = 8).corpus(spark).toDF()
     corpus.write.mode("overwrite").parquet(pagesDir)
 
-    val stream = spark.readStream.schema(StreamingOps.pageSchema).parquet(pagesDir)
     runAvailableNow(
-      graft.extract.Extractor.extract(StreamingOps.fetchShape(stream), cfg)
-        .drop("children"),
-      "sx")
+      StreamingOps.extractStream(spark, pagesDir, cfg).drop("children"), "sx")
     val streamed = spark.table("sx")
       .select("url", "title").collect().map(r => (r.getString(0), r.getString(1))).toSet
 

@@ -42,15 +42,18 @@ object SparkEntry {
     val cores = s.sparkContext.defaultParallelism
     val maxSplit = maxSplitBytes(s)
     val bytes =
-      try {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.isDirectory(p)) {
-          val st = java.nio.file.Files.list(p)
-          try st.mapToLong(q => java.nio.file.Files.size(q)).sum
-          finally st.close()
-        } else java.nio.file.Files.size(p)
-      } catch { case _: Throwable => Long.MaxValue }
+      try inputBytes(s, path)
+      catch { case _: Throwable => Long.MaxValue }
     if (bytes / math.max(maxSplit, 1L) < cores) df.repartition(cores) else df
+  }
+
+  /** Bytes [[tp]] splits: a file's length, or a dir's summed recursively,
+    * through the Hadoop `FileSystem` the path names — a plain local path,
+    * a `file:` URI and an `hdfs:` URI all read their real size.
+    */
+  private[graft] def inputBytes(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(p).getLength
   }
 
   /** The split size [[tp]] divides the input by:

@@ -211,249 +211,240 @@ final class CrawlSession(
     val remaining = config.maxAccessCount - processed
     if (frontierRows == 0 || remaining <= 0) return None
 
-    val frontier = frontierTable.readVersion(v)
-    val seenCount = if (seenV < 0) 0L else seenTable.rowsOf(seenV)
-    val seen = if (seenCount == 0) null else seenTable.readVersion(seenV)
+    // what the round caches, released on every exit — a failed round too
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.persist() }
+    var docsF = scala.concurrent.Future.successful(0L)
+    try {
+      val frontier = frontierTable.readVersion(v)
+      val seenCount = if (seenV < 0) 0L else seenTable.rowsOf(seenV)
+      val seen = if (seenCount == 0) null else seenTable.readVersion(seenV)
 
-    // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
-    val delayBudgets =
-      if (config.robotsTxt && robots.columns.contains("crawl_delay_s"))
-        Some(robots.filter(col("crawl_delay_s").isNotNull)
-          .select(col("host"),
-            greatest(lit(1L), floor(lit(config.roundWindowSeconds) /
-              col("crawl_delay_s")).cast("long")).cast("int").as("budget")))
-      else None
-    // claim shape routed on the KNOWN frontier row count (manifest metric,
-    // no job): below the gate a single per-host window claims in one
-    // exchange+sort — even a frontier fully owned by one host is a trivial
-    // sort task at this size; above it the two-phase salted claim bounds
-    // hot-host partitions as before.
-    val salt =
-      if (frontierRows <= SingleWindowClaimRows) 1 else 16
-    // the global A2 cap cannot bind when the whole frontier fits in the
-    // remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows ≤
-    // remaining) — skip the TakeOrdered stage those rounds pay for nothing
-    val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
-    val claimed = delayBudgets
-      .map(b => Politeness.claimWithHostBudgets(
-        frontier, config.hostBudgetPerRound, b, capRemaining, saltBuckets = salt))
-      .getOrElse(Politeness.claim(frontier, config.hostBudgetPerRound,
-        capRemaining, saltBuckets = salt))
-      .persist()
-    val claimedCount = timed("claim-count")(claimed.count())
-    if (claimedCount == 0) { claimed.unpersist(); return None }
-    // Small rounds write ONE file per snapshot instead of shuffle-partition
-    // many near-empty ones: parquet task-commit overhead dominates
-    // small-crawl round latency (~0.3-0.5 s per tiny write at 32
-    // partitions). repartition(1) — not coalesce — keeps the upstream
-    // anti-join/extraction stages parallel and serializes only the write
-    // task. Above the gate the parallel multi-file write is untouched.
-    // The new-entries segment is gated 16× tighter: its row count is
-    // claim × branching factor, so a claim-sized gate could serialize a
-    // write 100× larger than intended.
-    val smallRound = claimedCount <= SmallWriteRows
-    def writeShape(df: DataFrame): DataFrame =
-      if (smallRound) df.repartition(1) else df
+      // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
+      val delayBudgets =
+        if (config.robotsTxt && robots.columns.contains("crawl_delay_s"))
+          Some(robots.filter(col("crawl_delay_s").isNotNull)
+            .select(col("host"),
+              greatest(lit(1L), floor(lit(config.roundWindowSeconds) /
+                col("crawl_delay_s")).cast("long")).cast("int").as("budget")))
+        else None
+      // claim shape routed on the KNOWN frontier row count (manifest metric,
+      // no job): below the gate a single per-host window claims in one
+      // exchange+sort — even a frontier fully owned by one host is a trivial
+      // sort task at this size; above it the two-phase salted claim bounds
+      // hot-host partitions as before.
+      val salt =
+        if (frontierRows <= SingleWindowClaimRows) 1 else 16
+      // the global A2 cap cannot bind when the whole frontier fits in the
+      // remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows ≤
+      // remaining) — skip the TakeOrdered stage those rounds pay for nothing
+      val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
+      val claimed = cache(delayBudgets
+        .map(b => Politeness.claimWithHostBudgets(
+          frontier, config.hostBudgetPerRound, b, capRemaining, saltBuckets = salt))
+        .getOrElse(Politeness.claim(frontier, config.hostBudgetPerRound,
+          capRemaining, saltBuckets = salt)))
+      val claimedCount = claimed.count()
+      if (claimedCount == 0) return None
+      // Small rounds write ONE file per snapshot instead of shuffle-partition
+      // many near-empty ones: parquet task-commit overhead dominates
+      // small-crawl round latency (~0.3-0.5 s per tiny write at 32
+      // partitions). repartition(1) — not coalesce — keeps the upstream
+      // anti-join/extraction stages parallel and serializes only the write
+      // task. Above the gate the parallel multi-file write is untouched.
+      // The new-entries segment is gated 16× tighter: its row count is
+      // claim × branching factor, so a claim-sized gate could serialize a
+      // write 100× larger than intended.
+      val smallRound = claimedCount <= SmallWriteRows
+      def writeShape(df: DataFrame): DataFrame =
+        if (smallRound) df.repartition(1) else df
 
-    // --- fetch = claim ⋈ corpus (S5/J4) ------------------------------------
-    // The claim batch is usually orders of magnitude smaller than the corpus
-    // (≤ hosts·budget rows) and broadcasts as the build side; the hint is
-    // size-GATED on the known claimedCount — an unconditional broadcast OOMs
-    // once hosts×budget reaches 10^7+ rows (see fetchJoin) — falling through
-    // to an AQE-planned shuffle join above the cap.
-    // Response status comes from the corpus when it carries one (PageDoc
-    // .httpStatus); a status-less corpus is all-200. Non-200 pages flow
-    // through the round but the P5 gate stores no document and emits no
-    // children (304 = the incremental-skip route, crawler/rule+.xml:39-40;
-    // 4xx/5xx = fetch failure).
-    val statusCol =
-      if (corpus.columns.contains("httpStatus"))
-        coalesce(corpus("httpStatus"), lit(200))
-      else lit(200)
-    val fetched = fetchJoin(corpus, claimed, claimedCount)
-      .select(
-        claimed("url"), claimed("parentUrl"), claimed("depth"),
-        claimed("urlHash"), claimed("host").as("claimHost"),
-        lit("GET").as("method"),
-        lit("text/html").as("mimeType"),
-        lit("UTF-8").as("charSet"),
-        statusCol.as("httpStatusCode"),
-        graft.functions.SpanFieldColumns.spanTextLength(corpus("spans"))
-          .as("contentLength"),
-        pmod(claimed("urlHash"), lit(500)).as("executionTime"),
-        corpus("lastModified").as("lastModified"),
-        corpus("spans").as("spans"))
-      .persist()
+      // --- fetch = claim ⋈ corpus (S5/J4) ------------------------------------
+      // The claim batch is usually orders of magnitude smaller than the corpus
+      // (≤ hosts·budget rows) and broadcasts as the build side; the hint is
+      // size-GATED on the known claimedCount — an unconditional broadcast OOMs
+      // once hosts×budget reaches 10^7+ rows (see fetchJoin) — falling through
+      // to an AQE-planned shuffle join above the cap.
+      // Response status comes from the corpus when it carries one (PageDoc
+      // .httpStatus); a status-less corpus is all-200. Non-200 pages flow
+      // through the round but the P5 gate stores no document and emits no
+      // children (304 = the incremental-skip route, crawler/rule+.xml:39-40;
+      // 4xx/5xx = fetch failure).
+      val statusCol =
+        if (corpus.columns.contains("httpStatus"))
+          coalesce(corpus("httpStatus"), lit(200))
+        else lit(200)
+      val fetched = cache(fetchJoin(corpus, claimed, claimedCount)
+        .select(
+          claimed("url"), claimed("parentUrl"), claimed("depth"),
+          claimed("urlHash"), claimed("host").as("claimHost"),
+          lit("GET").as("method"),
+          lit("text/html").as("mimeType"),
+          lit("UTF-8").as("charSet"),
+          statusCol.as("httpStatusCode"),
+          graft.functions.SpanFieldColumns.spanTextLength(corpus("spans"))
+            .as("contentLength"),
+          pmod(claimed("urlHash"), lit(500)).as("executionTime"),
+          corpus("lastModified").as("lastModified"),
+          corpus("spans").as("spans")))
 
-    // HTTP redirect classification (reference `auto_redirect`,
-    // RiverWeb.java:302-303): a page whose spans carry a `redirect` span is
-    // a 3xx response — Location = the span's media_ref. Redirects are
-    // HTTP-layer, so they bypass rule matching AND the P5 status gate:
-    // no document is stored, no content children are extracted, and (with
-    // autoRedirect on, the reference's default) the target is enqueued at
-    // the SOURCE's depth — a redirect hop costs no depth, exactly like the
-    // reference's transparent HttpClient follow. Both source and target
-    // end up seen (the source was claimed; the target goes through the
-    // normal candidate anti-join). autoRedirect=false drops the target:
-    // the 3xx response simply fails the 200 gate, like the reference with
-    // redirect handling off. Targets pass robots + include/exclude like
-    // any enqueued URL (the declarative analog of never fetching them).
-    val redirectRefs = Extractor.spanRefs(col("spans"), "redirect")
-    val isRedirect = size(redirectRefs) > 0
-    val followRedirects = config.http.autoRedirect.getOrElse(true)
-    val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
+      // HTTP redirect classification (reference `auto_redirect`,
+      // RiverWeb.java:302-303): a page whose spans carry a `redirect` span is
+      // a 3xx response — Location = the span's media_ref. Redirects are
+      // HTTP-layer, so they bypass rule matching AND the P5 status gate:
+      // no document is stored, no content children are extracted, and (with
+      // autoRedirect on, the reference's default) the target is enqueued at
+      // the SOURCE's depth — a redirect hop costs no depth, exactly like the
+      // reference's transparent HttpClient follow. Both source and target
+      // end up seen (the source was claimed; the target goes through the
+      // normal candidate anti-join). autoRedirect=false drops the target:
+      // the 3xx response simply fails the 200 gate, like the reference with
+      // redirect handling off. Targets pass robots + include/exclude like
+      // any enqueued URL (the declarative analog of never fetching them).
+      val redirectRefs = Extractor.spanRefs(col("spans"), "redirect")
+      val isRedirect = size(redirectRefs) > 0
+      val followRedirects = config.http.autoRedirect.getOrElse(true)
+      val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
 
-    // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
-    // persisted when Overwrite/Incremental reference the extraction twice
-    // (merge/skip join + count); Default mode writes it exactly once, so
-    // the cache would be pure copy overhead there
-    val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
-      .drop("children")
-      .withColumn("@timestamp", lit(clock()))
-    val docs =
-      if (config.mode == WriteMode.Default) docs0 else docs0.persist()
-    // The docs-table commit touches only docsTable/docsIndexTable — fully
-    // independent of the frontier/seen transition below — so it runs
-    // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
-    // sequential because the driver calls them sequentially); its tasks
-    // back-fill executor slots left idle by the children DAG's stage
-    // tails. The round checkpoint still flips only after BOTH commits are
-    // durable, and a docs failure aborts the round before the flip, so
-    // crash semantics are unchanged (frontier/seen snapshots without a
-    // checkpoint are resume-ignored orphans by design).
-    val docsF = scala.concurrent.Future {
-      timed("docs-write")(writeDocs(writeShape(docs), writeShape))
-    }(CrawlSession.docsCommitEc)
+      // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
+      // persisted when Overwrite/Incremental reference the extraction twice
+      // (merge/skip join + count); Default mode writes it exactly once, so
+      // the cache would be pure copy overhead there
+      val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
+        .drop("children")
+        .withColumn("@timestamp", lit(clock()))
+      val docs =
+        if (config.mode == WriteMode.Default) docs0 else cache(docs0)
+      // The docs-table commit touches only docsTable/docsIndexTable — fully
+      // independent of the frontier/seen transition below — so it runs
+      // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
+      // sequential because the driver calls them sequentially); its tasks
+      // back-fill executor slots left idle by the children DAG's stage
+      // tails. The round checkpoint still flips only after BOTH commits are
+      // durable, and a docs failure aborts the round before the flip, so
+      // crash semantics are unchanged (frontier/seen snapshots without a
+      // checkpoint are resume-ignored orphans by design).
+      docsF = scala.concurrent.Future {
+        writeDocs(writeShape(docs), writeShape)
+      }(CrawlSession.docsCommitEc)
 
-    // --- children (X5 + S6 sitemaps + redirect remap) → J1 anti-join ---------
-    // each branch carries its CHILD's depth: content/sitemap children are
-    // one level deeper; redirect targets inherit the source's depth
-    val scrapedChildren = Extractor
-      .childLinks(fetched.filter(!isSitemap && !isRedirect), config)
-      .select(col("child"), (col("depth") + 1).as("cdepth"), col("parentUrl"))
-    // sitemap children obey the same P5 status gate as content children
-    // (a 4xx/304 sitemap response has no body to parse)
-    val sitemapChildren = fetched
-      .filter(isSitemap && col("httpStatusCode") === 200)
-      .select(explode(Extractor.spanRefs(col("spans"), "sitemap-loc")).as("child"),
-        (col("depth") + 1).as("cdepth"), col("url").as("parentUrl"))
-    val redirectChildren =
-      if (!followRedirects)
-        sitemapChildren.limit(0)
-      else fetched.filter(isRedirect)
-        .select(explode(redirectRefs).as("child"),
-          col("depth").as("cdepth"), col("url").as("parentUrl"))
-    // persist: the seen-filter's bloom routing scans candidates twice
-    // (definitely-new branch ∪ maybe-seen anti-join branch)
-    val cand = toCandidates(
-      scrapedChildren.unionByName(sitemapChildren).unionByName(redirectChildren),
-      col("cdepth"), col("parentUrl"), applyIncludeExclude = true)
-      .persist()
+      // --- children (X5 + S6 sitemaps + redirect remap) → J1 anti-join ---------
+      // each branch carries its CHILD's depth: content/sitemap children are
+      // one level deeper; redirect targets inherit the source's depth
+      val scrapedChildren = Extractor
+        .childLinks(fetched.filter(!isSitemap && !isRedirect), config)
+        .select(col("child"), (col("depth") + 1).as("cdepth"), col("parentUrl"))
+      // sitemap children obey the same P5 status gate as content children
+      // (a 4xx/304 sitemap response has no body to parse)
+      val sitemapChildren = fetched
+        .filter(isSitemap && col("httpStatusCode") === 200)
+        .select(explode(Extractor.spanRefs(col("spans"), "sitemap-loc")).as("child"),
+          (col("depth") + 1).as("cdepth"), col("url").as("parentUrl"))
+      val redirectChildren =
+        if (!followRedirects)
+          sitemapChildren.limit(0)
+        else fetched.filter(isRedirect)
+          .select(explode(redirectRefs).as("child"),
+            col("depth").as("cdepth"), col("url").as("parentUrl"))
+      // persist: the seen-filter's bloom routing scans candidates twice
+      // (definitely-new branch ∪ maybe-seen anti-join branch)
+      val cand = cache(toCandidates(
+        scrapedChildren.unionByName(sitemapChildren).unionByName(redirectChildren),
+        col("cdepth"), col("parentUrl"), applyIncludeExclude = true))
 
-    var releaseRoute: () => Unit = () => ()
-    val newEntries = timed("seen-route-build")(
-      if (seen == null) cand
-      else config.seenRoute match {
-        case SeenRoute.Auto =>
-          // Below the floor the bloom route costs more than it saves: the
-          // incremental filter's per-round maintenance is one Spark job per
-          // new segment (stat.bloomFilter over it), and the routed plan
-          // adds a branch union — while the exact anti-join over a tiny
-          // seen set is a single cheap (SHJ-hinted) join. Above the floor,
-          // incrementally merged bloom: O(new URLs last round), not O(seen).
-          if (seenCount < AutoBloomMinItems)
-            SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L)
-          else {
-            val bloom =
-              if (seenCount <= AutoBloomMaxItems)
-                Some(seenBloom.forVersion(seenV, seenCount))
-              else None
-            SeenSet.filterNew(cand, seen, seenCount, prebuiltBloom = bloom)
-          }
-        case SeenRoute.Exact =>
-          SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L)
-        case SeenRoute.RangePartitioned(nRanges) =>
-          import spark.implicits._
-          val (out, release) = SeenSet.filterNewRangePartitioned(
-            cand.select("url", "urlHash", "host", "depth", "parentUrl")
-              .as[FrontierEntry],
-            seen, seenCount, nRanges)
-          releaseRoute = release
-          out.toDF().select(cand.columns.map(col): _*)
-      })
+      // Below the floor the bloom route costs more than it saves: the
+      // incremental filter's per-round maintenance is one Spark job per new
+      // segment (stat.bloomFilter over it), and the routed plan adds a branch
+      // union — while the exact anti-join over a tiny seen set is a single
+      // cheap (SHJ-hinted) join. Inside the band, the incrementally merged
+      // bloom: O(new URLs last round), not O(seen). Above the single-bloom
+      // ceiling, the exact anti-join again (maxBloomItems = 0 keeps filterNew
+      // from building a filter of its own).
+      val bloom =
+        if (seenCount >= AutoBloomMinItems && seenCount <= SeenSet.MaxBloomItems)
+          Some(seenBloom.forVersion(seenV, seenCount))
+        else None
+      val newEntries =
+        if (seen == null) cand
+        else SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L,
+          prebuiltBloom = bloom)
 
-    // The new-entries write keys its single-file gate on the CLAIM count
-    // (both branches of the bloom route read the persisted `cand`, so the
-    // segment write itself is the one materialization — the previous
-    // persist + eager count() spent a whole extra job per round only to
-    // re-derive what the claim count already bounds). A small claim over
-    // extreme-fanout pages (a handful of huge sitemaps) can still emit
-    // SmallWriteRows × 100 children through the single write task — a
-    // rare, bounded case (one task writing ~10^6 rows) that costs seconds
-    // when it happens, vs. a count job on EVERY small round. Above the
-    // gate the parallel multi-file write is untouched.
-    //
-    // coalesce(1), NOT repartition(1): the children pipeline ends in the
-    // dedup groupBy's exchange, so coalesce collapses only the tiny
-    // post-shuffle stages into one task — the map-side extraction stays
-    // parallel — and skips the extra round-robin exchange+stage that
-    // repartition(1) paid per round. (writeDocs keeps repartition(1):
-    // its pipeline is shuffle-free, so a coalesce there WOULD serialize
-    // the whole fetch-join + extract.)
-    def fanoutShape(df: DataFrame): DataFrame =
-      if (smallRound) df.coalesce(1) else df
+      // The new-entries write keys its single-file gate on the CLAIM count
+      // (both branches of the bloom route read the persisted `cand`, so the
+      // segment write itself is the one materialization — the previous
+      // persist + eager count() spent a whole extra job per round only to
+      // re-derive what the claim count already bounds). A small claim over
+      // extreme-fanout pages (a handful of huge sitemaps) can still emit
+      // SmallWriteRows × 100 children through the single write task — a
+      // rare, bounded case (one task writing ~10^6 rows) that costs seconds
+      // when it happens, vs. a count job on EVERY small round. Above the
+      // gate the parallel multi-file write is untouched.
+      //
+      // coalesce(1), NOT repartition(1): the children pipeline ends in the
+      // dedup groupBy's exchange, so coalesce collapses only the tiny
+      // post-shuffle stages into one task — the map-side extraction stays
+      // parallel — and skips the extra round-robin exchange+stage that
+      // repartition(1) paid per round. (writeDocs keeps repartition(1):
+      // its pipeline is shuffle-free, so a coalesce there WOULD serialize
+      // the whole fetch-join + extract.)
+      def fanoutShape(df: DataFrame): DataFrame =
+        if (smallRound) df.coalesce(1) else df
 
-    // --- frontier transition + seen growth (S3 snapshot-atomic claim) -------
-    // delta commit: append the new entries, tombstone the claimed rows —
-    // O(claim + new) write instead of rewriting the whole frontier
-    // (SnapshotTable compacts copy-on-write once tombstones accumulate)
-    val newProcessed = processed + claimedCount
-    val (newFv, frontierLeft) = timed("frontier-commit")(frontierTable.commitDeltaTo(
-      fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
-      // tombstones read the persisted claim cache — coalesce merges the
-      // tiny cache-scan tasks without repartition(1)'s extra exchange
-      fanoutShape(claimed.select("urlHash", "url")), v, Map(
-        "round" -> (round + 1).toString,
-        "processed" -> newProcessed.toString,
-        "claimed" -> claimedCount.toString),
-      // tombstones are exactly the claim batch (1:1) — the exact hint lets
-      // the store overlap the tombstone and segment writes
-      tombstoneRowsHint = claimedCount))
-    // delta path: frontier segment newFv IS exactly newEntries — the seen
-    // table references those files instead of writing the rows again
-    // (halves per-round new-URL write bytes). Compaction path: the segment
-    // folds the whole frontier, so fall back to a direct write.
-    val (newSv, seenTotal) = timed("seen-commit")(
-      if (frontierTable.tombstonesOf(newFv).nonEmpty)
-        seenTable.commitAppendRef(
-          s"${frontierTable.root}/segments/$newFv", seenV,
+      // --- frontier transition + seen growth (S3 snapshot-atomic claim) -------
+      // delta commit: append the new entries, tombstone the claimed rows —
+      // O(claim + new) write instead of rewriting the whole frontier
+      // (SnapshotTable compacts copy-on-write once tombstones accumulate)
+      val newProcessed = processed + claimedCount
+      val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
+        fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
+        // tombstones read the persisted claim cache — coalesce merges the
+        // tiny cache-scan tasks without repartition(1)'s extra exchange
+        fanoutShape(claimed.select("urlHash", "url")), v, Map(
+          "round" -> (round + 1).toString,
+          "processed" -> newProcessed.toString,
+          "claimed" -> claimedCount.toString),
+        // tombstones are exactly the claim batch (1:1) — the exact hint lets
+        // the store overlap the tombstone and segment writes
+        tombstoneRowsHint = claimedCount)
+      // delta path: frontier segment newFv IS exactly newEntries — the seen
+      // table references those files instead of writing the rows again
+      // (halves per-round new-URL write bytes). Compaction path: the segment
+      // folds the whole frontier, so fall back to a direct write.
+      val (newSv, seenTotal) =
+        if (frontierTable.tombstonesOf(newFv).nonEmpty)
+          seenTable.commitAppendRef(
+            s"${frontierTable.root}/segments/$newFv", seenV,
+            Map("round" -> (round + 1).toString))
+        else seenTable.commitAppendTo(
+          fanoutShape(newEntries.select("urlHash", "url")), seenV,
           Map("round" -> (round + 1).toString))
-      else seenTable.commitAppendTo(
-        fanoutShape(newEntries.select("urlHash", "url")), seenV,
-        Map("round" -> (round + 1).toString)))
-    // both commits must be durable before the round becomes visible
-    val docsWritten = scala.concurrent.Await.result(
-      docsF, scala.concurrent.duration.Duration.Inf)
-    // the round becomes visible HERE — one atomic rename for both tables
-    writeCheckpoint(newFv, newSv)
-    // new-URL count comes free from the seen-commit's segment metric
-    val newUrls = seenTable.metric(newSv, "segmentRows").map(_.toLong).getOrElse(0L)
+      // both commits must be durable before the round becomes visible
+      val docsWritten = scala.concurrent.Await.result(
+        docsF, scala.concurrent.duration.Duration.Inf)
+      // the round becomes visible HERE — one atomic rename for both tables
+      writeCheckpoint(newFv, newSv)
+      // new-URL count comes free from the seen-commit's segment metric
+      val newUrls = seenTable.metric(newSv, "segmentRows").map(_.toLong).getOrElse(0L)
 
-    // round claim order for parity tests (small: ≤ claim batch)
-    val order =
-      if (!recordOrder) Array.empty[(String, Int)]
-      else claimed
-        .orderBy(col("depth"), col("urlHash"), col("url"))
-        .select("url", "depth").collect()
-        .map(r => (r.getString(0), r.getInt(1)))
+      // round claim order for parity tests (small: ≤ claim batch)
+      val order =
+        if (!recordOrder) Array.empty[(String, Int)]
+        else claimed
+          .orderBy(col("depth"), col("urlHash"), col("url"))
+          .select("url", "depth").collect()
+          .map(r => (r.getString(0), r.getInt(1)))
 
-    claimed.unpersist(); fetched.unpersist(); cand.unpersist()
-    if (config.mode != WriteMode.Default) docs.unpersist()
-    releaseRoute()
-    log(s"round ${round + 1}: claimed=$claimedCount docs=$docsWritten " +
-      s"new=$newUrls frontier=$frontierLeft seen=$seenTotal processed=$newProcessed")
-    Some(RoundResult(round + 1, claimedCount, docsWritten, newUrls,
-      frontierLeft, seenTotal, newProcessed, order.toSeq))
+      log(s"round ${round + 1}: claimed=$claimedCount docs=$docsWritten " +
+        s"new=$newUrls frontier=$frontierLeft seen=$seenTotal processed=$newProcessed")
+      Some(RoundResult(round + 1, claimedCount, docsWritten, newUrls,
+        frontierLeft, seenTotal, newProcessed, order.toSeq))
+    } catch { case scala.util.control.NonFatal(e) =>
+      // the docs commit may still be scanning `fetched` and `docs`: let it
+      // end before they are released (its own failure is secondary)
+      scala.util.Try(scala.concurrent.Await.result(
+        docsF, scala.concurrent.duration.Duration.Inf))
+      throw e
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Mode-aware document write (RiverWebTest semantics, SURVEY.md §2.1 S8 +
@@ -616,17 +607,6 @@ final class CrawlSession(
 
   private def log(msg: String): Unit =
     if (sys.env.get("GRAFT_QUIET").isEmpty) println(s"[crawl ${config.sessionId}] $msg")
-
-  // GRAFT_PROF=1: per-phase wall times of a round, for overhead hunting
-  private val prof = sys.env.contains("GRAFT_PROF")
-  private def timed[A](label: String)(f: => A): A =
-    if (!prof) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof ${config.sessionId}] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 }
 
 /** X3 driver-side lifecycle hooks (no executor involvement — the reference
@@ -669,14 +649,7 @@ object CrawlSession {
         val t = new Thread(r, "graft-docs-commit"); t.setDaemon(true); t
       }))
 
-  /** single-bloom ceiling for the Auto seen route (matches
-    * [[graft.frontier.SeenSet.filterNew]]'s default `maxBloomItems`; beyond
-    * it the route falls back to the plain shuffled anti-join, and the
-    * range-partitioned route is the explicit upgrade path).
-    */
-  private[graft] val AutoBloomMaxItems = 50000000L
-
-  /** Auto-route floor: below this seen-set size the plain exact anti-join
+  /** Bloom-route floor: below this seen-set size the plain exact anti-join
     * (SHJ-hinted, one small build) beats the bloom route's per-round
     * segment-bloom job + two-branch plan. Routing on the KNOWN seen count
     * — no extra job either way.

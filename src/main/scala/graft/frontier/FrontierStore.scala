@@ -3,6 +3,7 @@ package graft.frontier
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -248,67 +249,83 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
     val compactionBudget = math.max(4096L, prevRows / 4)
     val tombDir = s"$root/tombstones/$v"
-    val stamped =
-      if (sequenced) tombstones.withColumn(SeqCol, lit(v)) else tombstones
-    var segPreWritten = false
-    if (tombstoneRowsHint >= 0 &&
-        prevTombRows + tombstoneRowsHint <= compactionBudget) {
-      // hint predicts the delta path → the data segment is needed either
-      // way; write it concurrently with the tombstones
-      val segDir = s"$root/segments/$v"
-      val segOut =
-        if (sequenced) newRows.withColumn(SeqCol, lit(v)) else newRows
-      val tombF = scala.concurrent.Future {
-        stamped.write.mode("overwrite").parquet(tombDir)
-      }(SnapshotTable.writeEc)
-      segOut.write.mode("overwrite").parquet(segDir)
-      scala.concurrent.Await.result(tombF,
-        scala.concurrent.duration.Duration.Inf)
-      segPreWritten = true
-    } else {
-      // write the tombstone segment first; its footer count drives the
-      // compaction decision (no Spark count() job, no trusting the caller)
-      stamped.write.mode("overwrite").parquet(tombDir)
-    }
-    val newTombRows = dirRowCount(tombDir)
-    val deleted = if (deletedRows >= 0) deletedRows else newTombRows
-    val totalTomb = prevTombRows + newTombRows
+    val segDir = s"$root/segments/$v"
     def rm(p: Path): Unit = {
       if (Files.isDirectory(p)) listDir(p).foreach(rm)
       Files.deleteIfExists(p)
     }
-    if (totalTomb > math.max(4096L, prevRows / 4)) {
-      // a wrong hint pre-wrote the delta segment — reclaim it (it was
-      // never referenced by any manifest)
-      if (segPreWritten) rm(Paths.get(s"$root/segments/$v"))
-      // compact: parent live rows minus the fresh tombstones, plus newRows.
-      // readVersion(parent) already applied older tombstones (and dropped
-      // __seq for sequenced tables); the fresh ones apply by key alone —
-      // every parent row was written before this commit
-      val tombRaw = spark.read.parquet(tombDir).drop(SeqCol)
-      val tomb =
-        if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
-      val kept = readVersion(parentVersion).join(tomb,
-        tombRaw.columns.toSeq, "left_anti")
-      val merged = kept.unionByName(newRows.select(kept.columns.map(c =>
-        org.apache.spark.sql.functions.col(c)): _*))
-      val out = commit(merged, metrics, appendTo = Seq.empty, prevRows = 0L)
-      // the tombstone dir is orphaned by the full rewrite — reclaim it
-      rm(Paths.get(tombDir))
-      out
-    } else {
-      val prevSegs = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-      val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-      if (segPreWritten)
-        // segment already on disk from the concurrent write — manifest only
-        commitManifest(v.toString, metrics, appendTo = prevSegs,
+    try {
+      val stamped =
+        if (sequenced) tombstones.withColumn(SeqCol, lit(v)) else tombstones
+      var segPreWritten = false
+      if (tombstoneRowsHint >= 0 &&
+          prevTombRows + tombstoneRowsHint <= compactionBudget) {
+        // hint predicts the delta path → the data segment is needed either
+        // way; write it concurrently with the tombstones
+        val segOut =
+          if (sequenced) newRows.withColumn(SeqCol, lit(v)) else newRows
+        val tombF = scala.concurrent.Future {
+          stamped.write.mode("overwrite").parquet(tombDir)
+        }(SnapshotTable.writeEc)
+        // a failed segment write first waits the tombstone write out: left
+        // running, it would race the cleanup below and a retry's write of
+        // the same dir
+        try segOut.write.mode("overwrite").parquet(segDir)
+        catch { case NonFatal(e) =>
+          scala.util.Try(scala.concurrent.Await.result(tombF,
+            scala.concurrent.duration.Duration.Inf))
+          throw e
+        }
+        scala.concurrent.Await.result(tombF,
+          scala.concurrent.duration.Duration.Inf)
+        segPreWritten = true
+      } else {
+        // write the tombstone segment first; its footer count drives the
+        // compaction decision (no Spark count() job, no trusting the caller)
+        stamped.write.mode("overwrite").parquet(tombDir)
+      }
+      val newTombRows = dirRowCount(tombDir)
+      val deleted = if (deletedRows >= 0) deletedRows else newTombRows
+      val totalTomb = prevTombRows + newTombRows
+      if (totalTomb > math.max(4096L, prevRows / 4)) {
+        // a wrong hint pre-wrote the delta segment — reclaim it (it was
+        // never referenced by any manifest)
+        if (segPreWritten) rm(Paths.get(segDir))
+        // compact: parent live rows minus the fresh tombstones, plus newRows.
+        // readVersion(parent) already applied older tombstones (and dropped
+        // __seq for sequenced tables); the fresh ones apply by key alone —
+        // every parent row was written before this commit
+        val tombRaw = spark.read.parquet(tombDir).drop(SeqCol)
+        val tomb =
+          if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
+        val kept = readVersion(parentVersion).join(tomb,
+          tombRaw.columns.toSeq, "left_anti")
+        val merged = kept.unionByName(newRows.select(kept.columns.map(c =>
+          org.apache.spark.sql.functions.col(c)): _*))
+        val out = commit(merged, metrics, appendTo = Seq.empty, prevRows = 0L)
+        // the tombstone dir is orphaned by the full rewrite — reclaim it
+        rm(Paths.get(tombDir))
+        out
+      } else {
+        val prevSegs = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
+        val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
+        if (segPreWritten)
+          // segment already on disk from the concurrent write — manifest only
+          commitManifest(v.toString, metrics, appendTo = prevSegs,
+            prevRows = prevRows - deleted,
+            tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
+            expectVersion = v)
+        else commit(newRows, metrics, appendTo = prevSegs,
           prevRows = prevRows - deleted,
           tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
           expectVersion = v)
-      else commit(newRows, metrics, appendTo = prevSegs,
-        prevRows = prevRows - deleted,
-        tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
-        expectVersion = v)
+      }
+    } catch { case NonFatal(e) if currentVersion < v =>
+      // no manifest references snapshot v's dirs yet: drop them (partial
+      // ones included) so a retry starts from a clean slate; best-effort,
+      // so the write's own failure is what the caller sees
+      Seq(tombDir, segDir).foreach(d => scala.util.Try(rm(Paths.get(d))))
+      throw e
     }
   }
 

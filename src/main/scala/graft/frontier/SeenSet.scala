@@ -1,12 +1,10 @@
 package graft.frontier
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
-
-import graft.model.FrontierEntry
 
 /** URL-seen filtering (J1) — the rebuild of fess-crawler's ES-backed
   * `EsUrlFilterService`/duplicate-id queue insert (RiverWeb.java:392-398).
@@ -19,11 +17,12 @@ import graft.model.FrontierEntry
   * `true` falls through to the exact anti-join. A false positive therefore
   * costs a join probe, never a dropped URL.
   *
-  * Scale path: below `maxBloomItems` the filter is built with
-  * `df.stat.bloomFilter` and broadcast (~1.2 GB at 1e9 items / 3% fpp is
-  * the practical ceiling); above it we skip the prefilter and rely on the
-  * shuffle hash anti-join (AQE-sized, co-partitioned on urlHash). A
-  * per-hash-range partitioned bloom is the documented 10^10 upgrade.
+  * One bloom route: the crawl loop passes the filter that
+  * [[IncrementalSeenBloom]] keeps (O(new URLs) per round) while the seen
+  * set is between `CrawlSession.AutoBloomMinItems` and [[MaxBloomItems]],
+  * and takes the exact anti-join (SHJ-hinted while it fits task memory,
+  * else sort-merge) on either side of that band. A per-hash-range
+  * partitioned bloom is the documented 10^10 upgrade (DESIGN.md).
   */
 object SeenSet {
 
@@ -36,7 +35,7 @@ object SeenSet {
       candidates: DataFrame,
       seen: DataFrame,
       seenCount: Long,
-      maxBloomItems: Long = 50000000L,
+      maxBloomItems: Long = MaxBloomItems,
       fpp: Double = 0.03,
       prebuiltBloom: Option[BloomFilter] = None): DataFrame = {
 
@@ -102,88 +101,11 @@ object SeenSet {
     */
   val ShuffledHashRowsPerPartition: Long = 1000000L
 
-  /** The 10^10 upgrade path (SURVEY.md §7.5.3, DESIGN.md): hash-range-
-    * partitioned bloom routing. A single broadcast bloom caps at ~1e9 items
-    * (~1.2 GB at 3% fpp); beyond that, partition the seen set into
-    * `nRanges` ranges by `pmod(urlHash, nRanges)`, build one bloom PER
-    * RANGE in parallel (one shuffle of seen hashes), and `cogroup`
-    * candidates with their range's bloom — each task deserializes the
-    * blooms for its ranges once, never per row, and nothing is broadcast
-    * through the driver.
-    *
-    * Routing contract is identical to [[filterNew]]: `mightContain=false`
-    * proves newness (skips the exact join); `true` falls through to the
-    * exact `(urlHash, url)` anti-join. A false positive costs a probe,
-    * never a URL. When the crawl is in expansion phase (most candidates
-    * genuinely new) the exact join shrinks to the fpp + true-dup fraction;
-    * in a mature crawl (most candidates already seen) routing cannot help —
-    * a bloom can only prove absence — so the caller picks the path per
-    * round from the new-URL ratio of the previous round.
-    *
-    * Candidates must be materialized (persisted) by the caller: the routed
-    * set feeds two branches, exactly like [[filterNew]].
-    *
-    * Returns the filtered entries plus a `release` handle that unpersists
-    * the internally cached routed set — the CALLER invokes it after
-    * materializing the result (leaving it cached leaks one MEMORY_AND_DISK
-    * dataset per crawl round; disk-spilled blocks are not reclaimed by the
-    * memory LRU, which starves a long-running daemon).
+  /** Single-bloom ceiling: above this many seen rows [[filterNew]] builds
+    * no filter and the crawl loop passes none, so the exact anti-join runs
+    * alone (the filter's bytes ride every probing task's binary).
     */
-  def filterNewRangePartitioned(
-      candidates: Dataset[FrontierEntry],
-      seen: DataFrame,
-      seenCount: Long,
-      nRanges: Int,
-      fpp: Double = 0.03): (Dataset[FrontierEntry], () => Unit) = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-
-    def rangeOf(h: Long): Int = (((h % nRanges) + nRanges) % nRanges).toInt
-    val perRange = math.max(seenCount / nRanges * 2, 1000L)
-
-    // one bloom per hash range, built where the data lives
-    val blooms: Dataset[(Int, Array[Byte])] = seen
-      .select(col("urlHash")).as[Long]
-      .groupByKey(rangeOf)
-      .mapGroups { (r, hashes) =>
-        val bf = BloomFilter.create(perRange, fpp)
-        hashes.foreach(bf.putLong)
-        val out = new ByteArrayOutputStream()
-        bf.writeTo(out)
-        (r, out.toByteArray)
-      }
-
-    // route candidates against their range's bloom (co-grouped shuffle —
-    // bloom bytes deserialize once per range per task). Persisted: the
-    // routed set feeds both output branches, and without it the cogroup
-    // (bloom build shuffle included) would execute twice; the returned
-    // release handle unpersists it once the caller has materialized.
-    val routed: Dataset[(FrontierEntry, Boolean)] = candidates
-      .groupByKey(c => rangeOf(c.urlHash))
-      .cogroup(blooms.groupByKey(_._1)) { (_, candIt, bloomIt) =>
-        bloomIt.toSeq.headOption match {
-          case None => candIt.map(c => (c, false)) // empty range: all new
-          case Some((_, bytes)) =>
-            val bf = BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-            candIt.map(c => (c, bf.mightContainLong(c.urlHash)))
-        }
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val definitelyNew = routed.filter(!_._2).map(_._1)
-    val maybeSeen = routed.filter(_._2).map(_._1)
-    val seenNarrow = seen.select("urlHash", "url")
-    val seenBuild =
-      if (seenCount <= ShuffledHashRowsPerPartition *
-          spark.sessionState.conf.numShufflePartitions)
-        seenNarrow.hint("shuffle_hash")
-      else seenNarrow
-    val maybeNew = maybeSeen.toDF()
-      .join(seenBuild, Seq("urlHash", "url"), "left_anti")
-      .select("url", "urlHash", "host", "depth", "parentUrl")
-      .as[FrontierEntry]
-    (definitelyNew.union(maybeNew), () => { routed.unpersist(); () })
-  }
+  val MaxBloomItems: Long = 50000000L
 }
 
 /** Incrementally maintained seen-set Bloom router (the fix for the

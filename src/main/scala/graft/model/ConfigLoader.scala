@@ -196,17 +196,6 @@ object ConfigLoader {
     val interval = math.max(asLong(j \ "interval", 1000L), 1L)
     val hostBudget = math.max((threads * 1000L / interval).toInt, 1)
 
-    // physical seen-route selection (engine extension, not in the reference):
-    // "seen_route": "auto" | "exact" | {"range": 64}
-    val seenRoute = j \ "seen_route" match {
-      case JString("exact") => SeenRoute.Exact
-      case JObject(fields) =>
-        fields.toMap.get("range")
-          .map(v => SeenRoute.RangePartitioned(math.max(asLong(v, 64L).toInt, 1)))
-          .getOrElse(SeenRoute.Auto)
-      case _ => SeenRoute.Auto
-    }
-
     // HTTP-client surface (RiverWeb.java:268-383): parsed into inert
     // metadata so a reference river config round-trips without key loss
     def optLong(v: JValue): Option[Long] = v match {
@@ -279,7 +268,6 @@ object ConfigLoader {
       robotsTxt = asBool(j \ "robots_txt", dflt = true),
       mode = mode,
       sitemapPattern = asStr(j \ "sitemap_pattern", ".*sitemap.*"),
-      seenRoute = seenRoute,
       rules = rules,
       http = http,
       roundWindowSeconds =

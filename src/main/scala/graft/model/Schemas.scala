@@ -181,23 +181,6 @@ object WriteMode {
   case object Incremental extends WriteMode
 }
 
-/** Which J1 seen-filter route the crawl loop uses. All routes return the
-  * EXACT same row set (the bloom variants only route around the anti-join,
-  * never decide a drop — SeenSet scaladoc), so this is a pure physical
-  * choice; parity tests run the same crawl under every route.
-  */
-sealed trait SeenRoute
-object SeenRoute {
-  /** broadcast bloom prefilter when the seen set fits, else exact (default). */
-  case object Auto extends SeenRoute
-  /** plain co-partitioned anti-join, no prefilter. */
-  case object Exact extends SeenRoute
-  /** hash-range-partitioned blooms cogrouped with candidates — the route
-    * for seen sets too large for one broadcast bloom (10^10 path).
-    */
-  final case class RangePartitioned(nRanges: Int = 64) extends SeenRoute
-}
-
 /** One HTTP authentication entry (RiverWeb.java:322-373 —
   * BASIC/DIGEST/NTLM over an AuthScope). Recorded for config round-trip
   * fidelity; inert in this engine (the corpus join stands in for fetching).
@@ -245,7 +228,6 @@ final case class CrawlConfig(
     // their sitemap-loc refs are enqueued, no document is stored
     // (SitemapsRule, crawler/rule+.xml:18-30)
     sitemapPattern: String = ".*sitemap.*",
-    seenRoute: SeenRoute = SeenRoute.Auto,
     rules: Seq[ScrapingRule] = Seq.empty,
     http: HttpSettings = HttpSettings(),
     // Z1: the wall-clock politeness window one crawl round models; only

@@ -42,6 +42,21 @@ class SparkEntrySpec extends AnyFunSuite {
     }
   }
 
+  test("tp's input size reads a file: URI through the Hadoop FileSystem") {
+    val dir = TestSpark.tmpDir("tp-bytes")
+    spark.range(1000).repartition(3).write.mode("overwrite").parquet(dir)
+    // the local Hadoop FileSystem hides its `.crc` checksum sidecars
+    val onDisk = {
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try st.filter(f => !f.getFileName.toString.endsWith(".crc"))
+        .mapToLong(f => java.nio.file.Files.size(f)).sum
+      finally st.close()
+    }
+    assert(onDisk > 0)
+    assert(SparkEntry.inputBytes(spark, dir) == onDisk)
+    assert(SparkEntry.inputBytes(spark, new java.io.File(dir).toURI.toString) == onDisk)
+  }
+
   test("scratch dirs are registered for deletion at JVM exit") {
     val d = java.nio.file.Paths.get(SparkEntry.scratchDir("graft-spec"))
     assert(java.nio.file.Files.isDirectory(d))

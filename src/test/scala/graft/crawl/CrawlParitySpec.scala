@@ -88,19 +88,19 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
-  test("seen-route invariance: exact / broadcast / range-partitioned routes " +
-      "give identical crawl order + seen set") {
-    val oracle = Oracle.crawl(pagesMap, robotsMap, baseConfig("route-oracle"))
-    Seq(
-      "exact" -> SeenRoute.Exact,
-      "range" -> SeenRoute.RangePartitioned(nRanges = 7)).foreach {
-      case (name, route) =>
-        val cfg = baseConfig(s"route-$name").copy(seenRoute = route)
-        val (engine, engineSeen, session) = runEngine(cfg)
-        assert(engine.crawlOrder == oracle.crawlOrder, s"route $name order")
-        assert(engineSeen == oracle.seen, s"route $name seen set")
-        session.cleanup()
-    }
+  test("a failed round releases every frame it cached") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val broken = corpusDf.withColumn("lastModified",
+      raise_error(lit("boom")).cast("timestamp"))
+    val session = new CrawlSession(spark, baseConfig("failed-round"), broken,
+      robotsDf.toDF(), TestSpark.tmpDir("crawl-failed-round"))
+    session.init()
+    corpusDf.count() // the shared corpus cache is not the round's
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](session.runRound())
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"round left cached RDDs $left")
+    session.cleanup()
   }
 
   test("crash between a round's two table commits: resume ignores orphan snapshots") {

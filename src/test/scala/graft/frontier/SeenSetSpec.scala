@@ -19,14 +19,28 @@ class SeenSetSpec extends AnyFunSuite {
 
   test("bloom path never drops a truly-new URL and equals the exact anti-join") {
     val seen = urlsDf(seenUrls)
+    val n = seenUrls.size.toLong
     val cand = urlsDf(candUrls).persist() // bloom routing requires materialized input
-    val viaBloom = SeenSet.filterNew(cand, seen, seenUrls.size.toLong,
-      maxBloomItems = 1000000L, fpp = 0.3) // high fpp to force exact-join fallbacks
-    val got = viaBloom.select("url").collect().map(_.getString(0)).toSet
-    assert(got == trulyNew)
+    def urls(df: org.apache.spark.sql.DataFrame) =
+      df.select("url").collect().map(_.getString(0)).toSet
+    val viaExact = SeenSet.filterNew(cand, seen, n, maxBloomItems = 0L)
+    assert(urls(viaExact) == trulyNew)
 
-    val viaExact = SeenSet.filterNew(cand, seen, seenUrls.size.toLong, maxBloomItems = 0L)
-    assert(viaExact.select("url").collect().map(_.getString(0)).toSet == trulyNew)
+    // the crawl loop's call: the incrementally kept filter, no own build
+    val table = new SnapshotTable(TestSpark.tmpDir("seen-bloom"), spark)
+    table.commitAppend(seen)
+    val kept = new IncrementalSeenBloom(table).forVersion(table.currentVersion, n)
+    Seq(
+      "built" -> SeenSet.filterNew(cand, seen, n,
+        maxBloomItems = 1000000L, fpp = 0.3), // high fpp to force exact-join fallbacks
+      "prebuilt" -> SeenSet.filterNew(cand, seen, n,
+        maxBloomItems = 0L, prebuiltBloom = Some(kept))).foreach {
+      case (name, viaBloom) =>
+        assert(viaBloom.queryExecution.executedPlan.toString
+          .contains("might_contain"), s"$name: bloom route not taken")
+        assert(urls(viaBloom) == urls(viaExact), name)
+    }
+    table.drop()
     cand.unpersist()
   }
 
@@ -36,29 +50,6 @@ class SeenSetSpec extends AnyFunSuite {
     val got = SeenSet.filterNew(cand, seen, seenUrls.size.toLong)
       .select("url").collect().map(_.getString(0)).toSet
     assert(got == trulyNew)
-  }
-
-  test("range-partitioned bloom path equals the exact anti-join (10^10 route)") {
-    import graft.model.FrontierEntry
-    def entries(urls: Seq[String]) = urls.map(u =>
-      FrontierEntry(u, UrlOps.urlHash(u), UrlOps.host(u), 1, "p"))
-    val seen = urlsDf(seenUrls)
-    val cand = spark.createDataset(entries(candUrls))(
-      org.apache.spark.sql.Encoders.product[FrontierEntry]).persist()
-    // urlsDf hashes with xxhash64(col) == UrlOps.urlHash — same function
-    val (got8, release8) = SeenSet.filterNewRangePartitioned(cand, seen,
-      seenUrls.size.toLong,
-      nRanges = 8, fpp = 0.2) // high fpp: force plenty of exact-join fallthrough
-    val got = got8.collect().map(_.url).toSet
-    release8()
-    assert(got == trulyNew)
-    // ranges with no seen rows must still pass candidates through
-    val (gotMany, releaseMany) = SeenSet.filterNewRangePartitioned(cand, seen,
-      seenUrls.size.toLong, nRanges = 512)
-    val gotManyRanges = gotMany.collect().map(_.url).toSet
-    releaseMany()
-    assert(gotManyRanges == trulyNew)
-    cand.unpersist()
   }
 
   test("hash collisions do not conflate distinct urls (url participates in the join)") {
@@ -124,6 +115,32 @@ class SeenSetSpec extends AnyFunSuite {
     assert(n2 == 110)
     assert(!t.readVersion(v2).select("url").collect().map(_.getString(0)).toSet.contains("u3"))
     t.drop()
+  }
+
+  test("snapshot table: a failed delta commit leaves no snapshot dirs; a retry commits") {
+    def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong)).toDF("url", "urlHash")
+    val broken = rows(100 until 110)
+      .withColumn("url", raise_error(lit("boom")).cast("string"))
+    // with the hint the tombstone and segment writes overlap; without it
+    // they run one after the other
+    Seq(5L, -1L).foreach { hint =>
+      val dir = TestSpark.tmpDir("snap-fail")
+      val t = new SnapshotTable(dir, spark)
+      val (v0, _) = t.commitFull(rows(0 until 100))
+      intercept[Exception](t.commitDeltaTo(broken, rows(0 until 5), v0,
+        tombstoneRowsHint = hint))
+      assert(t.currentVersion == v0, s"hint $hint")
+      Seq("segments", "tombstones").foreach { kind =>
+        assert(!java.nio.file.Files.exists(
+          java.nio.file.Paths.get(dir, kind, (v0 + 1).toString)), s"hint $hint: $kind")
+      }
+      val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5), v0,
+        tombstoneRowsHint = hint)
+      assert(v1 == v0 + 1 && n1 == 105, s"hint $hint")
+      assert(t.readVersion(v1).select("url").collect().map(_.getString(0)).toSet ==
+        (5 until 110).map(i => s"u$i").toSet, s"hint $hint")
+      t.drop()
+    }
   }
 
   test("snapshot table: tombstones past the live-row threshold trigger compaction") {

@@ -70,7 +70,6 @@ class ConfigLoaderSpec extends AnyFunSuite {
     assert(props("first_h2").extraction ==
       graft.model.Extraction.SpanText("h2", Some(graft.model.Positional.Eq(0))))
     assert(props("up").transform.contains(graft.model.NamedTransform.Upper))
-    assert(cfg.seenRoute == graft.model.SeenRoute.Auto) // unset → Auto
   }
 
   test("parses multi-step query navigation (text/attr as a step array)") {
@@ -98,14 +97,6 @@ class ConfigLoaderSpec extends AnyFunSuite {
     val cfg = ConfigLoader.fromJson(json, "s")
     assert(cfg.rules.head.properties.head.transform
       .contains(graft.model.NamedTransform.Custom("es_flag")))
-  }
-
-  test("parses seen_route variants") {
-    def route(v: String) =
-      ConfigLoader.fromJson(s"""{ "url": [], "seen_route": $v }""", "s").seenRoute
-    assert(route("\"exact\"") == graft.model.SeenRoute.Exact)
-    assert(route("{\"range\": 128}") == graft.model.SeenRoute.RangePartitioned(128))
-    assert(route("\"auto\"") == graft.model.SeenRoute.Auto)
   }
 
   test("HTTP client surface round-trips (RiverWeb.java:268-383 keys) + sitemap_pattern") {

@@ -171,10 +171,12 @@ final class CrawlSession(
     // first-occurrence rule is exactly min-depth).
     // min over (depth, parentUrl) AS A PAIR: aggregating them independently
     // could stitch the min depth to a parent from a deeper occurrence —
-    // a provenance pair that never existed
+    // a provenance pair that never existed. Grouped on the seen anti-join's
+    // key pair, so that join reuses this exchange's hash partitioning; host
+    // is a function of url, so min(host) only carries it through.
     applyRobots(depthOk)
-      .groupBy("url", "urlHash", "host")
-      .agg(min(struct(col("depth"), col("parentUrl"))).as("dp"))
+      .groupBy("urlHash", "url")
+      .agg(min("host").as("host"), min(struct(col("depth"), col("parentUrl"))).as("dp"))
       .select(col("url"), col("urlHash"), col("host"),
         col("dp.depth").as("depth"), col("dp.parentUrl").as("parentUrl"))
   }
@@ -329,28 +331,24 @@ final class CrawlSession(
       }(CrawlSession.docsCommitEc)
 
       // --- children (X5 + S6 sitemaps + redirect remap) → J1 anti-join ---------
-      // each branch carries its CHILD's depth: content/sitemap children are
-      // one level deeper; redirect targets inherit the source's depth
-      val scrapedChildren = Extractor
-        .childLinks(fetched.filter(!isSitemap && !isRedirect), config)
-        .select(col("child"), (col("depth") + 1).as("cdepth"), col("parentUrl"))
-      // sitemap children obey the same P5 status gate as content children
-      // (a 4xx/304 sitemap response has no body to parse)
-      val sitemapChildren = fetched
-        .filter(isSitemap && col("httpStatusCode") === 200)
-        .select(explode(Extractor.spanRefs(col("spans"), "sitemap-loc")).as("child"),
-          (col("depth") + 1).as("cdepth"), col("url").as("parentUrl"))
-      val redirectChildren =
-        if (!followRedirects)
-          sitemapChildren.limit(0)
-        else fetched.filter(isRedirect)
-          .select(explode(redirectRefs).as("child"),
-            col("depth").as("cdepth"), col("url").as("parentUrl"))
-      // persist: the seen-filter's bloom routing scans candidates twice
-      // (definitely-new branch ∪ maybe-seen anti-join branch)
-      val cand = cache(toCandidates(
-        scrapedChildren.unionByName(sitemapChildren).unionByName(redirectChildren),
-        col("cdepth"), col("parentUrl"), applyIncludeExclude = true))
+      // one pass over `fetched`: a page's children come from one branch —
+      // a redirect's target (none with autoRedirect off), a 200 sitemap's
+      // locs, or a 200 rule-matched page's links (the docs' P5 gate); any
+      // other page emits none. Redirect targets keep the source's depth;
+      // every other child is one level deeper.
+      val none = lit(null).cast("array<string>")
+      val ok = col("httpStatusCode") === 200
+      val children = fetched
+        .withColumn("ruleId", RuleCompiler.ruleId(config.rules, col("url"), col("mimeType")))
+        .select(
+          explode(when(isRedirect, if (followRedirects) redirectRefs else none)
+            .when(isSitemap && ok, Extractor.spanRefs(col("spans"), "sitemap-loc"))
+            .when(col("ruleId").isNotNull && ok, Extractor.childArray(config)))
+            .as("child"),
+          (col("depth") + when(isRedirect, 0).otherwise(1)).as("cdepth"),
+          col("url").as("parentUrl"))
+      val raw = toCandidates(children, col("cdepth"), col("parentUrl"),
+        applyIncludeExclude = true)
 
       // Below the floor the bloom route costs more than it saves: the
       // incremental filter's per-round maintenance is one Spark job per new
@@ -364,14 +362,17 @@ final class CrawlSession(
         if (seenCount >= AutoBloomMinItems && seenCount <= SeenSet.MaxBloomItems)
           Some(seenBloom.forVersion(seenV, seenCount))
         else None
+      // persisted only for the bloom route, whose two branches each scan it
+      // (definitely-new ∪ maybe-seen anti-join); the exact route reads it
+      // once, straight through the dedup's exchange
+      val cand = if (bloom.isDefined) cache(raw) else raw
       val newEntries =
         if (seen == null) cand
         else SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L,
           prebuiltBloom = bloom)
 
       // The new-entries write keys its single-file gate on the CLAIM count
-      // (both branches of the bloom route read the persisted `cand`, so the
-      // segment write itself is the one materialization — the previous
+      // (the segment write itself is the one materialization — the previous
       // persist + eager count() spent a whole extra job per round only to
       // re-derive what the claim count already bounds). A small claim over
       // extreme-fanout pages (a handful of huge sitemaps) can still emit
@@ -409,7 +410,8 @@ final class CrawlSession(
       // delta path: frontier segment newFv IS exactly newEntries — the seen
       // table references those files instead of writing the rows again
       // (halves per-round new-URL write bytes). Compaction path: the segment
-      // folds the whole frontier, so fall back to a direct write.
+      // folds the whole frontier, so fall back to a direct write (newEntries
+      // is recomputed from the cached `fetched`).
       val (newSv, seenTotal) =
         if (frontierTable.tombstonesOf(newFv).nonEmpty)
           seenTable.commitAppendRef(

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 
 /** Snapshot-versioned table shim (S3/Z6) — stands in for Iceberg (no Iceberg
   * runtime jar ships offline; SURVEY.md §7.1). Semantics mirrored:
@@ -32,7 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The interface is deliberately Iceberg-shaped so a real catalog slots in
   * unchanged on a cluster (atomic rename → Iceberg commit).
   */
-final class SnapshotTable(val root: String, spark: SparkSession,
+final class SnapshotTable(dir: String, spark: SparkSession,
     // Iceberg-style sequence-aware equality deletes: every data segment is
     // stamped with a hidden `__seq` column (= commit version) and a
     // tombstone only deletes rows with a LOWER sequence — so a single
@@ -46,6 +47,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     val broadcastTombRows: Long = SnapshotTable.MaxTombRows) {
 
   import SnapshotTable._
+
+  /** absolute and normalized: shared-ref entries other tables build from it
+    * must read as absolute dirs (see [[segPath]]) whatever the working dir.
+    */
+  val root: String = Paths.get(dir).toAbsolutePath.normalize.toString
 
   private def manifestPath: Path = Paths.get(root, "manifest.json")
   Files.createDirectories(Paths.get(root, "segments"))
@@ -112,11 +118,28 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     readSchema = Some(s); this
   }
 
-  private def readParquet(paths: Seq[String]): DataFrame = {
-    val r = readSchema.fold(spark.read)(s => spark.read.schema(s))
-    val df = r.parquet(paths: _*)
-    readSchema.fold(df)(s => df.select(s.fieldNames.map(
-      org.apache.spark.sql.functions.col): _*))
+  private def readParquet(paths: Seq[String]): DataFrame = readSchema match {
+    case None => parquetAt(paths)
+    case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      .select(s.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+  }
+
+  /** `spark.read.parquet(dirs)` without its one-task schema-inference job:
+    * the schema is the Spark row-metadata key of one footer, read on the
+    * driver from the file Spark's own `mergeSchema=false` inference reads
+    * (the least data-file path). With schema merging on, or a footer that
+    * lacks the key, Spark infers as before.
+    */
+  private def parquetAt(dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else dirs.flatMap(d => parquetFiles(d).map(f => s"$d/$f")).minOption
+        .flatMap(f => footer(f)(r => Option(r.getFileMetaData
+          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+    schema.fold(spark.read)(spark.read.schema).parquet(dirs: _*)
   }
 
   /** a segment entry is a local name, or an absolute dir for shared refs. */
@@ -140,7 +163,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     val tombs = tombstonesOf(v)
     if (tombs.isEmpty) { if (sequenced) data.drop(SeqCol) else data }
     else {
-      val tomb = spark.read.parquet(tombs.map(t => s"$root/tombstones/$t"): _*)
+      val tomb = parquetAt(tombs.map(t => s"$root/tombstones/$t"))
       val tside = if (tombRowsOf(v) <= broadcastTombRows) broadcast(tomb) else tomb
       if (!sequenced)
         data.join(tside, tomb.columns.toSeq, "left_anti")
@@ -295,7 +318,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         // readVersion(parent) already applied older tombstones (and dropped
         // __seq for sequenced tables); the fresh ones apply by key alone —
         // every parent row was written before this commit
-        val tombRaw = spark.read.parquet(tombDir).drop(SeqCol)
+        val tombRaw = parquetAt(Seq(tombDir)).drop(SeqCol)
         val tomb =
           if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
         val kept = readVersion(parentVersion).join(tomb,
@@ -330,9 +353,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   }
 
   private def dirRowCount(dir: String): Long =
-    listDir(Paths.get(dir))
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
-      .map(f => footerRowCount(s"$dir/$f")).sum
+    parquetFiles(dir).map(f => footerRowCount(s"$dir/$f")).sum
+
+  private def parquetFiles(dir: String): Seq[String] =
+    listDir(Paths.get(dir)).map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).sorted
 
   private def commit(df: DataFrame, metrics: Map[String, String],
       appendTo: Seq[String], prevRows: Long,
@@ -365,8 +390,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     require(expectVersion < 0 || expectVersion == v,
       s"concurrent commit detected: expected $expectVersion, at $v")
     val segDir = segPath(segEntry)
-    val files = listDir(Paths.get(segDir))
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
+    val files = parquetFiles(segDir)
     val segRows = files.map(f => footerRowCount(s"$segDir/$f")).sum
     val rows = prevRows + segRows
     val segs = appendTo :+ segEntry
@@ -399,12 +423,15 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     try st.iterator().asScala.toSeq finally st.close()
   }
 
-  private def footerRowCount(file: String): Long = {
+  private def footerRowCount(file: String): Long = footer(file)(_.getRecordCount)
+
+  private def footer[A](file: String)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file),
       spark.sessionState.newHadoopConf())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+    try f(r) finally r.close()
   }
 
   /** every segment / tombstone entry referenced by any snapshot in

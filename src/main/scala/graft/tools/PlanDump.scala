@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dump `.explain("formatted")` for named declared queries to files —
-  * evidence harness for the optimization rounds (plans/<tag>/<query>.txt).
-  * Not part of the bench contract: planning only (the query DataFrame is
-  * built but never executed beyond what its builder itself materializes).
+/** Dump `.explain("formatted")` of the EXECUTED plan for named declared
+  * queries to files — evidence harness for the optimization rounds
+  * (plans/<tag>/<query>.txt). Not part of the bench contract: each query
+  * runs once, so the dump is AQE's final plan (`isFinalPlan=true`, with
+  * its `ReusedExchange` nodes), not the initial one.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <query...>
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01),
@@ -34,8 +35,7 @@ object PlanDump {
         case Some(fn) =>
           try {
             val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val plan = executedPlan(df)
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(outDir, s"$n.txt"), plan)
             println(s"[plandump] wrote $outDir/$n.txt")
@@ -46,5 +46,13 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** formatted explain after running `df` (result rows discarded), so the
+    * adaptive plan printed is the final one.
+    */
+  private[graft] def executedPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
   }
 }

@@ -103,6 +103,44 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
+  test("a steady-state round runs no schema-inference job and at most 18 Spark jobs") {
+    val session = new CrawlSession(spark, baseConfig("round-jobs"), corpusDf,
+      robotsDf.toDF(), TestSpark.tmpDir("crawl-round-jobs"))
+    session.init()
+    session.runRound(); session.runRound()
+    val t = TestSpark.traced(session.runRound())
+    assert(t.result.exists(_.claimed > 0), "round 3 still claims pages")
+    def sqlExecution(j: org.apache.spark.scheduler.SparkListenerJobStart) =
+      Option(j.properties).exists(_.getProperty("spark.sql.execution.id") != null)
+    val inference = t.jobs.filter(j => !sqlExecution(j) &&
+      j.stageInfos.exists(_.name.contains("FrontierStore.scala")))
+    assert(inference.isEmpty,
+      s"jobs outside any SQL execution: ${inference.flatMap(_.stageInfos.map(_.name))}")
+    // measured: 18 jobs for this round on this corpus
+    assert(t.jobs.size <= 18,
+      s"${t.jobs.size} jobs: ${t.jobs.map(_.stageInfos.map(_.name).mkString("+"))}")
+    session.cleanup()
+  }
+
+  test("a relative workDir crawls like an absolute one; gc() keeps the seen refs") {
+    val cfg = baseConfig("relative")
+    val abs = java.nio.file.Paths.get(TestSpark.tmpDir("crawl-relative"))
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs).toString
+    assert(!rel.startsWith("/"))
+    val s1 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), rel)
+    val result = s1.run()
+    val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
+    assert(result.crawlOrder == oracle.crawlOrder)
+    def seenOf(s: CrawlSession) =
+      s.seenTable.read().select("url").collect().map(_.getString(0)).toSet
+    assert(seenOf(s1) == oracle.seen)
+    s1.gc()
+    val s2 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), rel)
+    assert(s2.run().rounds.isEmpty, "completed crawl resumes as a no-op after gc")
+    assert(seenOf(s2) == oracle.seen, "gc kept the frontier segments seen refers to")
+    s2.cleanup()
+  }
+
   test("crash between a round's two table commits: resume ignores orphan snapshots") {
     val cfg = baseConfig("crash")
     val dir = TestSpark.tmpDir("crawl-crash")

@@ -293,6 +293,51 @@ class SeenSetSpec extends AnyFunSuite {
     t.drop()
   }
 
+  test("snapshot table: read schemas come from one footer, with no Spark job before the action") {
+    val dir = TestSpark.tmpDir("snap-footer")
+    val t = new SnapshotTable(dir, spark)
+    def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong, i % 3)).toDF("url", "urlHash", "depth")
+    val (v0, _) = t.commitFull(rows(0 until 50))
+    // a later segment with an extra column: Spark's inference reads one
+    // file's schema, and the footer read must pick the same one
+    val (v1, _) = t.commitAppendTo(rows(50 until 60).withColumn("x", lit("e")), v0)
+    val (v2, _) = t.commitDeltaTo(rows(60 until 70), rows(0 until 5).select("url", "urlHash"), v1)
+    val reopened = new SnapshotTable(dir, spark)
+    val read = TestSpark.traced(reopened.read())
+    assert(read.jobs.isEmpty, read.jobs.flatMap(_.stageInfos.map(_.name)))
+    val data = spark.read.parquet(t.segmentsOf(v2).map(s => s"$dir/segments/$s"): _*)
+    val tomb = spark.read.parquet(t.tombstonesOf(v2).map(s => s"$dir/tombstones/$s"): _*)
+    val plain = data.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
+    assert(read.result.schema == plain.schema)
+    assert(read.result.collect().toSet == plain.collect().toSet)
+    assert(read.result.count() == 65)
+    val seg = TestSpark.traced(reopened.readSegment(v1.toString))
+    assert(seg.jobs.isEmpty)
+    assert(seg.result.schema == spark.read.parquet(s"$dir/segments/$v1").schema)
+
+    // a footer without Spark's row-metadata key: Spark infers, as before
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val ext = TestSpark.tmpDir("snap-footer-ext")
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 urlHash; required binary url (UTF8); }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$ext/part-0.parquet"),
+      spark.sessionState.newHadoopConf())).withType(schema).build()
+    val g = new SimpleGroupFactory(schema)
+    try (0 until 5).foreach(i => w.write(g.newGroup().append("urlHash", i.toLong).append("url", s"u$i")))
+    finally w.close()
+    val t2 = new SnapshotTable(TestSpark.tmpDir("snap-footer2"), spark)
+    t2.commitAppendRef(ext, -1L)
+    val inferred = TestSpark.traced(t2.read())
+    assert(inferred.jobs.exists(_.stageInfos.exists(_.name.contains("FrontierStore.scala"))),
+      "the fallback runs Spark's schema inference")
+    assert(inferred.result.schema == spark.read.parquet(ext).schema)
+    assert(inferred.result.count() == 5)
+    t.drop(); t2.drop()
+  }
+
   test("snapshot table: sequenced deletes replace same-keyed rows (Iceberg sequence rule)") {
     val dir = TestSpark.tmpDir("snap-seq")
     val t = new SnapshotTable(dir, spark, sequenced = true)

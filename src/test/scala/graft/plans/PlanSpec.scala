@@ -195,6 +195,82 @@ class PlanSpec extends AnyFunSuite {
     } finally cand.unpersist()
   }
 
+  test("crawl round: the exact seen route reuses the dedup's exchange; the bloom route scans a persisted cand") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.HashJoin
+    import graft.corpus.SyntheticCorpus
+    import graft.crawl.CrawlSession
+
+    // every node of an executed plan, through the adaptive wrappers
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case o => o.children.flatMap(nodes)
+    })
+    val builder = SyntheticCorpus.Builder(n = 400, hostCount = 25)
+    val corpus = builder.corpus(spark).toDF()
+    val robots = builder.robots(spark).toDF()
+    val seeds = Seq(0L, 5L, 96L).map(i => UrlOps.canonicalize(SyntheticCorpus.urlOf(i,
+      SyntheticCorpus.hostOfDoc(i, 42L, SyntheticCorpus.zipfCdf(25, 1.1)))))
+    def cfg(id: String, extraSeeds: Seq[String]) = CrawlConfig(sessionId = id,
+      seeds = seeds ++ extraSeeds, maxDepth = 3, maxAccessCount = 150,
+      hostBudgetPerRound = 3, rules = Seq(ScrapingRule(urlPattern = ".*/page/.*",
+        properties = Seq(PropertyRule("title", SpanText("title"))))))
+    // the executed plan of one round's frontier segment write
+    def roundWritePlan(session: CrawlSession): SparkPlan = {
+      val t = TestSpark.traced(session.runRound())
+      assert(t.result.exists(_.newUrls > 0))
+      val root = session.frontierTable.root
+      t.queries.flatMap(q => nodes(q.executedPlan)).collectFirst {
+        case w: DataWritingCommandExec if (w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand =>
+            i.outputPath.toString.contains(s"$root/segments/")
+          case _ => false
+        }) => w.child
+      }.getOrElse(fail(s"no frontier segment write among ${t.queries.size} executions"))
+    }
+
+    // exact route (seen < 1,048,576 rows): the candidate side of the anti-join
+    // shuffles once, in the dedup — the join reuses its hash partitioning
+    val exact = new CrawlSession(spark, cfg("plan-exact", Nil), corpus, robots,
+      TestSpark.tmpDir("plan-exact"))
+    exact.init()
+    val exactPlan = roundWritePlan(exact)
+    val antiJoin = nodes(exactPlan).collectFirst {
+      case j: HashJoin if j.joinType == LeftAnti => j.asInstanceOf[SparkPlan]
+    }.getOrElse(fail(exactPlan.toString))
+    val candSide = nodes(antiJoin.children.head)
+    assert(candSide.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, antiJoin.toString)
+    assert(!candSide.exists(_.isInstanceOf[UnionExec]), "children come from one pass")
+    exact.cleanup()
+
+    // bloom route (seen ≥ 1,048,576 rows, seeded here): both branches of the
+    // routed union scan the persisted candidates
+    val filler = (0 until 1048576).map(i => s"http://filler.example.com/s/$i")
+    val bloomed = new CrawlSession(spark, cfg("plan-bloom", filler), corpus, robots,
+      TestSpark.tmpDir("plan-bloom"))
+    bloomed.init()
+    val bloomPlan = roundWritePlan(bloomed)
+    val union = nodes(bloomPlan).collectFirst { case u: UnionExec => u }
+      .getOrElse(fail(bloomPlan.toString))
+    union.children.foreach(c =>
+      assert(nodes(c).exists(_.isInstanceOf[InMemoryTableScanExec]), union.toString))
+    bloomed.cleanup()
+  }
+
+  test("PlanDump explains the executed (final adaptive) plan") {
+    val df = spark.range(0, 1000).groupBy((col("id") % 7).as("k")).count()
+    val plan = graft.tools.PlanDump.executedPlan(df)
+    assert(plan.contains("isFinalPlan=true"), plan)
+  }
+
   test("global budget cap plans as TakeOrderedAndProject, not a full sort") {
     val frontier = (0 until 100).map { i =>
       val url = s"http://h${i % 5}.example.com/page/$i"

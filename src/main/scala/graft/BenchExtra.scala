@@ -78,7 +78,7 @@ object BenchExtra {
       .withColumn("parentUrl", lit("bench"))
     def fresh = SeenSet.filterNew(dedup, seen, nCand / 4, maxBloomItems = 0L)
     def claimed = Politeness.claim(fresh, hostBudget = 500,
-      remaining = Long.MaxValue, saltBuckets = 32)
+      remaining = Long.MaxValue)
 
     sc.setJobDescription("stage1: scan+canonicalize+hash")
     timeIt("scan+canonicalize+hash", reps)(noop(canon))

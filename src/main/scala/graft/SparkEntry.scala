@@ -869,9 +869,9 @@ object SparkEntry {
         Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
         .select("doc_id", "source")),
 
-    // exact per-stratum bottom-k (md5-priority draw, two-phase salted
-    // windows); DuckDB replays it as the naive single window — the
-    // single-node luxury the salted shape avoids on a hot stratum
+    // exact per-stratum bottom-k (md5-priority draw, one per-stratum
+    // window under Spark's partial group limit); DuckDB replays it as
+    // the same single window
     "q_sample_bottomk" -> ((s, d) =>
       graft.ops.Sampling.bottomK(t(s, d, "documents"), "doc_id", "lang", k = 20)
         .select("doc_id", "lang")),
@@ -905,7 +905,7 @@ object SparkEntry {
 
     // exact phrase search (the ES match_phrase surface): consecutive
     // "hash join" occurrences counted via positional postings + an
-    // adjacency hash-join — no per-doc sort — then the salted top-k
+    // adjacency hash-join — no per-doc sort — then the global top-k
     "q_search_phrase" -> ((s, d) =>
       graft.ops.SearchOps.phraseTopK(t(s, d, "documents"),
         Seq("hash", "join"), k = 10)
@@ -1063,7 +1063,8 @@ object SparkEntry {
         .select("doc_id", "n_tokens", "cum_tokens", "shard_id")),
 
     // exact heavy hitters: top-5 most active users per event type via the
-    // two-phase salted window (a hot group ranks across 16 tasks first)
+    // per-group window (the partial group limit caps a hot group's rows
+    // per map task)
     "q_heavy_hitters" -> ((s, d) =>
       graft.ops.Sketches.heavyHitters(t(s, d, "events"), "event_type",
         "user_id", k = 5)
@@ -1847,7 +1848,7 @@ object SparkEntry {
 
     // collocation mining: bigram lift in integer ticks (decimal(38,0)
     // cross-multiplied — log-PMI would reintroduce the libm hazard and
-    // orders identically), two-phase salted top-k
+    // orders identically), global top-k
     "q_text_colloc" -> ((s, d) =>
       TextOps.collocations(tp(s, d, "documents"), k = 15, minCount = 20L)),
 

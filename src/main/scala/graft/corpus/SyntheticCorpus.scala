@@ -23,7 +23,7 @@ import graft.model.{PageDoc, RobotsRules, Span, UrlOps}
   * partitioning / core count — required for the two-cluster-size bench.
   *
   * Host skew is zipf(s≈1.1) over `hostCount` hosts (BASELINE.md bench plan),
-  * exercising the salted politeness window + AQE skew handling.
+  * exercising the politeness window's group limit + AQE skew handling.
   */
 object SyntheticCorpus {
 

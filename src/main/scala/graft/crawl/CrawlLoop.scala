@@ -230,22 +230,15 @@ final class CrawlSession(
               greatest(lit(1L), floor(lit(config.roundWindowSeconds) /
                 col("crawl_delay_s")).cast("long")).cast("int").as("budget")))
         else None
-      // claim shape routed on the KNOWN frontier row count (manifest metric,
-      // no job): below the gate a single per-host window claims in one
-      // exchange+sort — even a frontier fully owned by one host is a trivial
-      // sort task at this size; above it the two-phase salted claim bounds
-      // hot-host partitions as before.
-      val salt =
-        if (frontierRows <= SingleWindowClaimRows) 1 else 16
       // the global A2 cap cannot bind when the whole frontier fits in the
       // remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows ≤
       // remaining) — skip the TakeOrdered stage those rounds pay for nothing
       val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
       val claimed = cache(delayBudgets
         .map(b => Politeness.claimWithHostBudgets(
-          frontier, config.hostBudgetPerRound, b, capRemaining, saltBuckets = salt))
+          frontier, config.hostBudgetPerRound, b, capRemaining))
         .getOrElse(Politeness.claim(frontier, config.hostBudgetPerRound,
-          capRemaining, saltBuckets = salt)))
+          capRemaining)))
       val claimedCount = claimed.count()
       if (claimedCount == 0) return None
       // Small rounds write ONE file per snapshot instead of shuffle-partition
@@ -631,15 +624,6 @@ object CrawlSession {
     * rounds keep the parallel multi-file write and per-partition lineage.
     */
   private[graft] val SmallWriteRows = 8192L
-
-  /** Below this KNOWN frontier row count the politeness claim takes the
-    * single per-host-window path (one exchange + sort instead of the
-    * two-phase salted pair): even a frontier fully owned by one host is a
-    * single trivial sort task at this size. Routed on the manifest's row
-    * metric — no extra job; any larger frontier keeps the salted claim
-    * and its skew bound.
-    */
-  private[graft] val SingleWindowClaimRows = 131072L
 
   /** Driver pool for the concurrent docs-table commit (guide §2.6 overlap
     * of independent jobs): 2 threads is plenty — one in-flight docs write

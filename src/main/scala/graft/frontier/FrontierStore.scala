@@ -52,6 +52,10 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * must read as absolute dirs (see [[segPath]]) whatever the working dir.
     */
   val root: String = Paths.get(dir).toAbsolutePath.normalize.toString
+  // manifest entries are written unescaped and read back by a regex plus
+  // split(","), so a root holding any of these would corrupt them
+  require(!root.exists(",\"[]\\".contains(_)),
+    "snapshot table root must not contain , \" [ ] or \\: " + root)
 
   private def manifestPath: Path = Paths.get(root, "manifest.json")
   Files.createDirectories(Paths.get(root, "segments"))

@@ -11,22 +11,25 @@ import org.apache.spark.sql.functions._
   * `(depth asc, urlHash asc, url asc)` (BFS within-depth, W1), then globally
   * capped by the remaining `max_access_count` budget (A2/Z4).
   *
-  * Skew: hosts are zipf-distributed (BASELINE.md), so a naive
-  * `Window.partitionBy(host)` funnels the hottest host's 10^8 frontier rows
-  * through one partition. We rank in two phases:
-  *   1. per (host, salt) top-`hostBudget`, salt = pmod(urlHash, saltBuckets)
-  *      — bounded partitions regardless of skew;
-  *   2. exact per-host top-`hostBudget` over the ≤ saltBuckets·budget
-  *      survivors — tiny by construction.
-  * The true per-host top-k is always contained in the union of per-salt
-  * top-ks, so phase 2 is exact.
+  * Skew: hosts are zipf-distributed (BASELINE.md), so the per-host rank
+  * must not funnel the hottest host's frontier rows through one task. It
+  * is one `row_number()` window per host, filtered on the literal
+  * `hostBudget`: Spark's `InsertWindowGroupLimit` then plans a partial
+  * `WindowGroupLimit` below the single hash exchange, so every map task
+  * ships at most `hostBudget` rows per host and a hot host's reducer
+  * sees at most (map tasks × budget) rows. Spark inserts the partial
+  * limit only while the budget is at most
+  * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000); a
+  * larger budget ranks each host in one sort task.
   */
 object Politeness {
 
   val OrderCols = Seq("depth", "urlHash", "url")
 
   /** Claim up to `hostBudget` rows per host and `remaining` rows overall,
-    * in the canonical BFS order (depth, urlHash, url).
+    * in the canonical BFS order (depth, urlHash, url). `saltBuckets` is
+    * ignored: the per-host window needs no salting (see the object doc);
+    * the parameter stays for callers that pass it by name.
     */
   def claim(
       frontier: DataFrame,
@@ -35,7 +38,7 @@ object Politeness {
       saltBuckets: Int = 16): DataFrame =
     claimOrdered(frontier,
       Seq(col("depth").asc, col("urlHash").asc, col("url").asc),
-      hostBudget, remaining, saltBuckets)
+      hostBudget, remaining)
 
   /** Priority-aware claim — frontier prioritization, the reason a crawler
     * computes link authority at all (see [[graft.ops.GraphOps.pageRank]]):
@@ -44,44 +47,40 @@ object Politeness {
     * the claim stays fully deterministic. The caller attaches the priority
     * column (typically a broadcast join against the node-count-sized rank
     * table — ranks are one row per node, orders smaller than the
-    * frontier). Identical two-phase salted shape as [[claim]]: the
-    * per-salt-top-k ⊇ per-host-top-k containment argument holds for ANY
-    * total order, so the skew bound and exactness carry over unchanged.
+    * frontier). Same per-host window as [[claim]], over this order.
     */
   def claimPrioritized(
       frontier: DataFrame,
       hostBudget: Int,
       remaining: Long,
-      saltBuckets: Int = 16,
       priorityCol: String = "priority"): DataFrame =
     claimOrdered(frontier,
       Seq(col(priorityCol).desc, col("depth").asc, col("urlHash").asc,
         col("url").asc),
-      hostBudget, remaining, saltBuckets)
+      hostBudget, remaining)
 
   /** Per-host budget overrides (robots.txt Crawl-delay, Z1/Z2): hosts in
     * `hostBudgets` ("host", "budget") claim at most min(budget,
     * hostBudget) rows this round; absent hosts get the default. The
     * override table is one row per DISTINCT host with a delay directive —
     * orders smaller than the frontier — so it rides in as a broadcast
-    * left join ahead of the same two-phase salted windows (the
-    * containment argument is per host, each with its own k, so exactness
-    * and the skew bound carry over unchanged). A budget ≤ 0 claims
-    * nothing from that host.
+    * left join ahead of the same per-host window. The rank filter keeps
+    * the literal `hostBudget` conjunct next to the per-host one, so the
+    * partial group limit still applies. A budget ≤ 0 claims nothing from
+    * that host.
     */
   def claimWithHostBudgets(
       frontier: DataFrame,
       hostBudget: Int,
       hostBudgets: DataFrame,
-      remaining: Long,
-      saltBuckets: Int = 16): DataFrame = {
+      remaining: Long): DataFrame = {
     val joined = frontier.join(
       broadcast(hostBudgets.select(col("host"), col("budget").as("__hb"))),
       Seq("host"), "left")
     claimOrdered(joined,
       Seq(col("depth").asc, col("urlHash").asc, col("url").asc),
-      hostBudget, remaining, saltBuckets,
-      budget = coalesce(least(col("__hb"), lit(hostBudget)), lit(hostBudget)))
+      hostBudget, remaining,
+      budget = coalesce(col("__hb"), lit(hostBudget)))
       .drop("__hb")
   }
 
@@ -90,32 +89,14 @@ object Politeness {
       order: Seq[org.apache.spark.sql.Column],
       hostBudget: Int,
       remaining: Long,
-      saltBuckets: Int,
       budget: org.apache.spark.sql.Column = null): DataFrame = {
-    val budgetExpr = Option(budget).getOrElse(lit(hostBudget))
-
-    val phase2 = Window.partitionBy(col("host")).orderBy(order: _*)
-
-    // saltBuckets <= 1 degenerates both phases to the same per-host
-    // window — skip phase 1 outright (ONE exchange + sort instead of
-    // two). Callers route here when the frontier is small enough that a
-    // single host owning every row is still one trivial sort task
-    // (CrawlSession gates on the known frontier row count — no extra
-    // job); the salted two-phase stays the default for any frontier
-    // where a hot host could be a real partition.
-    val perHost = (if (saltBuckets <= 1) frontier
-      else {
-        val phase1 = Window
-          .partitionBy(col("host"), pmod(col("urlHash"), lit(saltBuckets)))
-          .orderBy(order: _*)
-        frontier
-          .withColumn("__r1", row_number().over(phase1))
-          .filter(col("__r1") <= budgetExpr)
-          .drop("__r1")
-      })
-      .withColumn("__r2", row_number().over(phase2))
-      .filter(col("__r2") <= budgetExpr)
-      .drop("__r2")
+    val w = Window.partitionBy(col("host")).orderBy(order: _*)
+    // the literal bound is what lets Spark plan the partial group limit
+    // below the exchange; a per-host `budget` can only tighten it
+    val keep = col("__r") <= hostBudget
+    val perHost = frontier.withColumn("__r", row_number().over(w))
+      .filter(Option(budget).fold(keep)(b => keep && col("__r") <= b))
+      .drop("__r")
 
     // global budget cap in canonical order — planned as
     // TakeOrderedAndProject (no full global sort materialization). When

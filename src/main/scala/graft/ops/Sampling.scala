@@ -124,31 +124,24 @@ object Sampling {
     * engines (md5 of the decimal id string is bit-identical in ANSI SQL),
     * with no `rand()` and no seed plumbing.
     *
-    * Scale shape — the two-phase salted window proven for the politeness
-    * claim ([[graft.frontier.Politeness.claim]]): phase 1 takes top-k per
-    * (stratum, salt) so a hot stratum spreads over `saltBuckets` tasks;
-    * phase 2 re-ranks the ≤ k·saltBuckets survivors per stratum. Exact
-    * for any total order by the containment argument (every true top-k row
-    * is top-k within its salt bucket). The naive single window puts an
-    * entire stratum in one task — at 100 TB a head domain is billions of
-    * rows.
+    * Scale shape — the politeness claim's per-group window
+    * ([[graft.frontier.Politeness.claim]]): one `row_number()` per
+    * stratum filtered on the literal k, which Spark plans with a partial
+    * `WindowGroupLimit` below the exchange, so a hot stratum ships at
+    * most k rows per map task rather than the whole stratum into one
+    * task (for k up to `spark.sql.optimizer.windowGroupLimitThreshold`,
+    * default 1000).
     */
-  def bottomK(df: DataFrame, idCol: String, strataCol: String, k: Int,
-      saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+  def bottomK(df: DataFrame, idCol: String, strataCol: String,
+      k: Int): DataFrame = {
+    require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
-    val order = Seq(col("__pri").asc, col(idCol).asc)
-    val phase1 = Window
-      .partitionBy(col(strataCol), pmod(xxhash64(col(idCol)), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(col(strataCol)).orderBy(order: _*)
+    val w = Window.partitionBy(col(strataCol))
+      .orderBy(col("__pri").asc, col(idCol).asc)
     df.withColumn("__pri", md5(col(idCol).cast("string")))
-      .withColumn("__r1", row_number().over(phase1))
-      .filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("__r2", row_number().over(phase2))
-      .filter(col("__r2") <= k)
-      .drop("__r2", "__pri")
+      .withColumn("__r", row_number().over(w))
+      .filter(col("__r") <= k)
+      .drop("__r", "__pri")
   }
 
   /** [[packSequences]] plus a release handle for the internal persisted

@@ -44,10 +44,12 @@ import org.apache.spark.sql.functions._
   * match the query — work is proportional to matching postings, not the
   * corpus. Document length comes from `size(tokens)` map-side (no
   * second corpus-wide explode), corpus stats (N, L) and per-term df are
-  * broadcast scalars/tiny dims, and the final top-k is the two-phase
-  * salted window (phase 1 per (query, salt) so one hot query spreads
-  * over `saltBuckets` tasks; phase 2 re-ranks ≤ k·saltBuckets
-  * survivors). [[buildIndex]] persists the posting lists bucketed by
+  * broadcast scalars/tiny dims, and the final top-k is one `row_number()`
+  * window filtered on the literal k: Spark plans a partial
+  * `WindowGroupLimit` below its one exchange, so each map task ships at
+  * most k rows per query and a hot query cannot funnel its postings into
+  * one task (for k up to `spark.sql.optimizer.windowGroupLimitThreshold`,
+  * default 1000). [[buildIndex]] persists the posting lists bucketed by
   * term via [[graft.sources.BucketedStore]] so repeated query batches
   * skip the tokenize+tf stage entirely.
   */
@@ -134,37 +136,37 @@ object SearchOps {
     * `requireAll = true` switches OR semantics (any query term matches)
     * to AND (only docs containing EVERY query term score) — the
     * conjunctive gate is a per-doc distinct-term count against the query
-    * size, applied before the top-k so the salted windows rank only
-    * qualifying docs.
+    * size, applied before the top-k so the window ranks only qualifying
+    * docs.
     */
   def searchTopK(docs: DataFrame, query: Seq[String], k: Int,
       idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 16, requireAll: Boolean = false,
+      requireAll: Boolean = false,
       after: Option[(Long, Long)] = None): DataFrame = {
     val qdf = queryFrame(docs, query.distinct)
     searchAllTopK(index(docs, idCol, textCol, termFilter = query), qdf, k,
-      saltBuckets, requireAll, after).drop("query_id")
+      requireAll, after).drop("query_id")
   }
 
   /** Batch form: `queries(query_id, term)` (exploded term list; rows MUST
     * be distinct per (query_id, term) — a duplicate would double-count
     * that term's contribution) against a prebuilt or ad-hoc index. Returns (query_id, idCol, score_ticks,
     * rank ≤ k). One plan for the whole batch: postings ⋈ broadcast
-    * queries, per-(query, doc) BIGINT sum, two-phase salted top-k.
+    * queries, per-(query, doc) BIGINT sum, per-query top-k window.
     *
     * `after` is ES `search_after` keyset pagination: given the LAST hit of
     * the previous page as a (score_ticks, id) cursor, return the next k
     * rows strictly after it in (score desc, id asc) order — the predicate
-    * `score < s ∨ (score = s ∧ id > i)` filters BEFORE the top-k windows,
+    * `score < s ∨ (score = s ∧ id > i)` filters BEFORE the top-k window,
     * so page N costs the same one ranking pass as page 1 (never a
     * `row_number ≤ N·k` deep-paging scan, the exact trap ES's
     * from/size API has and search_after exists to avoid). The returned
     * `rank` restarts at 1 per page, as ES does.
     */
   def searchAllTopK(idx: SearchIndex, queries: DataFrame, k: Int,
-      saltBuckets: Int = 16, requireAll: Boolean = false,
+      requireAll: Boolean = false,
       after: Option[(Long, Long)] = None): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+    require(k > 0, "k must be positive")
     val id = col(idx.idCol)
     val p = idx.postings.join(broadcast(queries), "term")
     val dfreq = idx.postings
@@ -194,15 +196,9 @@ object SearchOps {
         col("score_ticks") < s || (col("score_ticks") === s && id > i))
       case None => scored
     }
-    val order = Seq(col("score_ticks").desc, id.asc)
-    val phase1 = Window
-      .partitionBy(col("query_id"), pmod(xxhash64(id), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(col("query_id")).orderBy(order: _*)
-    paged
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score_ticks").desc, id.asc)
+    paged.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Field-boosted ranked retrieval — the ES multi-field (`most_fields`)
@@ -220,12 +216,11 @@ object SearchOps {
     * [[searchTopK]] (the query-term filter sits below the tf aggregation,
     * so each field's exchange carries only matching postings); the
     * cross-field combine is a union + one per-doc sum on the id the
-    * field pipelines already hash by; then the two-phase salted top-k.
+    * field pipelines already hash by; then the global top-k.
     */
   def fieldedTopK(docs: DataFrame, query: Seq[String], k: Int,
-      fields: Seq[(String, Long)], idCol: String = "doc_id",
-      saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+      fields: Seq[(String, Long)], idCol: String = "doc_id"): DataFrame = {
+    require(k > 0, "k must be positive")
     require(fields.nonEmpty && fields.forall(_._2 > 0),
       "need at least one field, all weights positive")
     val q = query.distinct
@@ -245,14 +240,8 @@ object SearchOps {
     }
     val scored = perField.reduce(_.unionByName(_))
       .groupBy(id).agg(sum(col("__fticks")).as("score_ticks"))
-    val order = Seq(col("score_ticks").desc, id.asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(id), lit(saltBuckets))).orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
-    scored
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(lit(1)).orderBy(col("score_ticks").desc, id.asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Lucene-form BM25 (k1=1.2, b=0.75, idf = ln(1 + (N−df+0.5)/(df+0.5))
@@ -262,9 +251,8 @@ object SearchOps {
     * engine-hashable. Same plan shape as [[searchTopK]].
     */
   def bm25TopK(docs: DataFrame, query: Seq[String], k: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    require(k > 0, "k must be positive")
     val idx = index(docs, idCol, textCol, termFilter = query)
     val id = col(idCol)
     val dfreq = idx.postings.groupBy("term").agg(count(lit(1)).as("df"))
@@ -276,14 +264,8 @@ object SearchOps {
           (col("tf") * 2.2) /
           (col("tf") + 0.3 + (col("dl") * 0.9 * col("n")) / col("l")))
       .groupBy(id).agg(sum(col("__c")).as("score"))
-    val order = Seq(col("score").desc, id.asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(id), lit(saltBuckets))).orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
-    scored
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(lit(1)).orderBy(col("score").desc, id.asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Exact phrase search: top-k docs by the number of CONSECUTIVE
@@ -293,15 +275,14 @@ object SearchOps {
     * (doc, pos) pairs — and the adjacency check is a chain of m−1 hash
     * joins on (doc, pos − offset): no per-doc sort, no window, keys
     * uniformly spread (a hot DOC is fine — its positions distribute by
-    * hash). Count per doc, then the two-phase salted top-k. A repeated
+    * hash). Count per doc, then the global top-k. A repeated
     * term in the phrase is handled naturally (each join leg re-filters
     * the same postings at its own offset).
     */
   def phraseTopK(docs: DataFrame, phrase: Seq[String], k: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 16): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(phrase.size >= 2, "phrase needs at least two terms")
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+    require(k > 0, "k must be positive")
     val toks = docs
       .select(col(idCol), posexplode(TextOps.tokens(col(textCol)))
         .as(Seq("pos", "term")))
@@ -319,14 +300,8 @@ object SearchOps {
       .agg(count(lit(1)).as("matches"))
       .withColumnRenamed("__id", idCol)
     val id = col(idCol)
-    val order = Seq(col("matches").desc, id.asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(id), lit(saltBuckets))).orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
-    counts
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(lit(1)).orderBy(col("matches").desc, id.asc)
+    counts.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Snippet/highlight column: the ±`width`-token window around the FIRST
@@ -360,14 +335,13 @@ object SearchOps {
     * BELOW the corpus tf aggregation, so the (doc, term) exchange
     * carries only postings matching the profile (the [[searchTopK]]
     * recipe); df/idf are a ≤ maxQueryTerms broadcast; the final top-k is
-    * the two-phase salted window. Returns (idCol, score_ticks, n_shared,
+    * a global top-k window. Returns (idCol, score_ticks, n_shared,
     * rank).
     */
   def moreLikeThis(docs: DataFrame, srcId: Long, k: Int,
       maxQueryTerms: Int = 10, idCol: String = "doc_id",
-      textCol: String = "text", saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && maxQueryTerms > 0 && saltBuckets > 0,
-      "k, maxQueryTerms, saltBuckets must be positive")
+      textCol: String = "text"): DataFrame = {
+    require(k > 0 && maxQueryTerms > 0, "k and maxQueryTerms must be positive")
     val srcTerms = docs.filter(col(idCol) === srcId)
       .select(explode(TextOps.tokens(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("tf"))
@@ -390,14 +364,8 @@ object SearchOps {
       .groupBy(col(idCol))
       .agg(sum(col("w")).as("score_ticks"), count(lit(1)).as("n_shared"))
     val id = col(idCol)
-    val order = Seq(col("score_ticks").desc, id.asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(id), lit(saltBuckets))).orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
-    scored
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(lit(1)).orderBy(col("score_ticks").desc, id.asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Full-corpus ordered export with global positions — the ES scroll API
@@ -461,12 +429,12 @@ object SearchOps {
     * against the broadcast prefix list BEFORE the term-frequency
     * aggregation, so the exchange carries only (prefix, term) pairs that
     * match — work proportional to matching tokens, not the corpus — and a
-    * hot prefix ranks through the two-phase salted window. Returns
+    * hot prefix ranks through the per-prefix group limit. Returns
     * (prefix, term, weight, rank ≤ k).
     */
   def suggest(docs: DataFrame, prefixes: Seq[String], k: Int,
-      textCol: String = "text", saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+      textCol: String = "text"): DataFrame = {
+    require(k > 0, "k must be positive")
     require(prefixes.nonEmpty && prefixes.forall(_.nonEmpty),
       "need at least one non-empty prefix")
     val spark = docs.sparkSession
@@ -477,15 +445,9 @@ object SearchOps {
       .join(broadcast(pdf), col("term").startsWith(col("prefix")))
       .groupBy(col("prefix"), col("term"))
       .agg(count(lit(1)).as("weight"))
-    val order = Seq(col("weight").desc, col("term").asc)
-    val phase1 = Window
-      .partitionBy(col("prefix"), pmod(xxhash64(col("term")), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(col("prefix")).orderBy(order: _*)
-    freq
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(col("prefix"))
+      .orderBy(col("weight").desc, col("term").asc)
+    freq.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** All deletion variants of `c` up to `maxEdits` chars removed,
@@ -552,7 +514,7 @@ object SearchOps {
     */
   def fuzzyTopK(docs: DataFrame, query: Seq[String], k: Int,
       maxEdits: Int = 1, maxExpansions: Int = 50, idCol: String = "doc_id",
-      textCol: String = "text", saltBuckets: Int = 16): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(maxExpansions > 0, "maxExpansions must be positive")
     val expanded = fuzzyTerms(docs, query, maxEdits, textCol)
       .groupBy("term").agg(min(col("distance")).as("__d"))
@@ -562,7 +524,7 @@ object SearchOps {
     // no vocabulary match ⟹ no original term exists either (distance-0
     // self-match), so searching the raw query is an equivalent cheap empty
     val terms = if (expanded.isEmpty) query else expanded
-    searchTopK(docs, terms, k, idCol, textCol, saltBuckets)
+    searchTopK(docs, terms, k, idCol, textCol)
   }
 
   /** Percolation — the ES percolator, i.e. reverse search: match every
@@ -646,12 +608,12 @@ object SearchOps {
     * filtered slice, background from the corpus) joined on term — all
     * exchanges carry (term, count) pairs bounded by vocabulary, the
     * slice totals ride a broadcast scalar, and the final top-k is the
-    * two-phase salted window over the vocabulary-sized score list.
+    * global top-k over the vocabulary-sized score list.
     * Returns (term, fg_count, bg_count, score_ticks, rank ≤ k).
     */
   def significantTerms(docs: DataFrame, foreground: Column, k: Int,
-      textCol: String = "text", saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+      textCol: String = "text"): DataFrame = {
+    require(k > 0, "k must be positive")
     def termCounts(df: DataFrame, cnt: String) = df
       .select(explode(TextOps.tokens(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as(cnt))
@@ -670,15 +632,9 @@ object SearchOps {
           |      (fg_count*B - bg_count*F)) div (F*F*bg_count)
           |AS BIGINT)""".stripMargin))
       .select("term", "fg_count", "bg_count", "score_ticks")
-    val order = Seq(col("score_ticks").desc, col("term").asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(col("term")), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
-    scored
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(lit(1))
+      .orderBy(col("score_ticks").desc, col("term").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Hybrid retrieval — keyword + embedding rankings fused by RECIPROCAL
@@ -693,22 +649,21 @@ object SearchOps {
     * The keyword list is [[searchTopK]] (pool of `poolK`); the embedding
     * list is exact cosine top-poolK against the embedding of
     * `queryVecId`. Both sides end in bounded lists, so the fusion input
-    * is ≤ 2·poolK rows — the final rank needs no salting. Returns
+    * is ≤ 2·poolK rows. Returns
     * (idCol, rrf_ticks, n_lists, rank ≤ k); `n_lists` says whether a doc
     * was found by both retrievers or one.
     */
   def hybridTopK(docs: DataFrame, embeddings: DataFrame,
       query: Seq[String], queryVecId: Long, k: Int, poolK: Int = 60,
       rrfK: Int = 60, idCol: String = "doc_id", textCol: String = "text",
-      vecIdCol: String = "vec_id", vecCol: String = "embedding",
-      saltBuckets: Int = 16): DataFrame = {
+      vecIdCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && poolK >= k && rrfK > 0,
       "need k > 0, poolK >= k, rrfK > 0")
-    val kw = searchTopK(docs, query, poolK, idCol, textCol, saltBuckets)
+    val kw = searchTopK(docs, query, poolK, idCol, textCol)
       .select(col(idCol).as("__id"), col("rank").as("__rk"))
     val ann = Similarity.bruteForceTopKMulti(embeddings,
         embeddings.filter(col(vecIdCol) === queryVecId), poolK,
-        vecIdCol, vecCol, saltBuckets)
+        vecIdCol, vecCol)
       .select(col(vecIdCol).as("__id"), col("rank").as("__rk"))
     val fused = kw.unionByName(ann)
       .withColumn("__t", expr(s"CAST(1000000 div ($rrfK + __rk) AS BIGINT)"))

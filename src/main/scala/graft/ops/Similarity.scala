@@ -117,26 +117,25 @@ object Similarity {
 
   /** Exact top-k for a (small) DataFrame of query vectors in one corpus
     * pass: broadcast the queries, score every (query, vector) pair with the
-    * codegen cosine kernel, then rank per query in TWO phases (per
-    * (q_id, salt) top-k, then exact top-k over the ≤ saltBuckets·k
-    * survivors — the [[graft.frontier.Politeness]] skew recipe): a
-    * single-phase `Window.partitionBy(q_id)` would funnel corpusSize rows
-    * per query through one task, which at 100 TB is the politeness hot-host
-    * problem all over again. Output: (q_id, idCol, cosine, rank).
+    * codegen cosine kernel, then rank per query with one window filtered
+    * on the literal k. Spark plans a partial `WindowGroupLimit` below the
+    * window's exchange, so each map task ships at most k rows per query
+    * instead of funnelling corpusSize rows per query through one task
+    * (the [[graft.frontier.Politeness]] hot-host shape). Output: (q_id,
+    * idCol, cosine, rank).
     */
   def bruteForceTopKMulti(
       embeddings: DataFrame,
       queries: DataFrame,
       k: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      saltBuckets: Int = 16): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(queries.select(
       col(idCol).cast("long").as("q_id"), col(vecCol).as("__q_vec")))
     val scored = embeddings.crossJoin(q)
       .select(col("q_id"), col(idCol),
         round(cosine(col(vecCol), col("__q_vec")), 6).as("cosine"))
-    topKPerQuery(scored, k, idCol, saltBuckets)
+    topKPerQuery(scored, k, idCol)
   }
 
   /** LSH-accelerated top-k for a DataFrame of query vectors: bucket each
@@ -155,8 +154,7 @@ object Similarity {
       dim: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      seed: Long = 42L,
-      saltBuckets: Int = 16): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(nBits, dim, seed)
     val masks = array((0 until nBits).map(b => lit(1L << b)): _*)
     val probed = queries.select(
@@ -168,24 +166,14 @@ object Similarity {
     val cand = bucketed.join(broadcast(probed), Seq("bucket"))
       .select(col("q_id"), col(idCol),
         round(cosine(col(vecCol), col("__q_vec")), 6).as("cosine"))
-    topKPerQuery(cand, k, idCol, saltBuckets)
+    topKPerQuery(cand, k, idCol)
   }
 
-  /** two-phase per-query top-k over (q_id, idCol, cosine) rows; exact
-    * because the global top-k is contained in the union of per-salt top-ks.
-    */
-  private def topKPerQuery(scored: DataFrame, k: Int, idCol: String,
-      saltBuckets: Int): DataFrame = {
-    val order = Seq(col("cosine").desc, col(idCol).asc)
-    val phase1 = Window
-      .partitionBy(col("q_id"), pmod(xxhash64(col(idCol)), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(col("q_id")).orderBy(order: _*)
-    scored
-      .withColumn("__r1", row_number().over(phase1))
-      .filter(col("__r1") <= k).drop("__r1")
-      .withColumn("rank", row_number().over(phase2))
-      .filter(col("rank") <= k)
+  /** per-query top-k over (q_id, idCol, cosine) rows. */
+  private def topKPerQuery(scored: DataFrame, k: Int, idCol: String): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cosine").desc, col(idCol).asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** recall@k scoring: per query, |approx ∩ exact| / k. Inputs are the

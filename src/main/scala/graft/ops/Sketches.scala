@@ -48,29 +48,22 @@ object Sketches {
     * broken by the value ascending) — "hottest URLs per host", "top error
     * pages per status". One count aggregation (map-side partials, the
     * exchange carries distinct (group, value) pairs once) then the
-    * two-phase salted top-k window ([[Sampling.bottomK]]'s shape): a
-    * group with millions of distinct values ranks across `saltBuckets`
-    * tasks in phase 1, and phase 2 re-ranks ≤ k·saltBuckets survivors.
-    * Exact by containment: a true top-k value is top-k within its salt
-    * bucket. For a sketch-only pass at extreme cardinality, compose
+    * per-group top-k window ([[Sampling.bottomK]]'s shape): a group with
+    * millions of distinct values ships at most k of them per map task
+    * through the partial group limit. For a sketch-only pass at extreme
+    * cardinality, compose
     * [[distinctPerGroupApprox]] to size groups first; the count exchange
     * here is already the minimal exact form.
     */
   def heavyHitters(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int, saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+      k: Int): DataFrame = {
+    require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
     val counts = df.groupBy(col(groupCol), col(valueCol))
       .agg(count(lit(1)).as("n"))
-    val order = Seq(col("n").desc, col(valueCol).asc)
-    val phase1 = Window
-      .partitionBy(col(groupCol), pmod(xxhash64(col(valueCol)), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(col(groupCol)).orderBy(order: _*)
-    counts
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(col(groupCol))
+      .orderBy(col("n").desc, col(valueCol).asc)
+    counts.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Approximate per-group percentiles via the PercentileDigest sketch

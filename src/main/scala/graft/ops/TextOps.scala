@@ -503,22 +503,17 @@ object TextOps {
 
   /** The top-k merge CANDIDATES of iteration 1 (adjacent character pairs
     * weighted by word frequency) — the oracle-checkable window into BPE
-    * training; [[bpeTrain]]'s first selected merge is row 1. Two-phase
-    * salted top-k over the pair alphabet.
+    * training; [[bpeTrain]]'s first selected merge is row 1. Global
+    * top-k over the pair alphabet.
     */
-  def bpePairCandidates(docs: DataFrame, k: Int, textCol: String = "text",
-      saltBuckets: Int = 16): DataFrame = {
-    require(k > 0 && saltBuckets > 0, "k and saltBuckets must be positive")
+  def bpePairCandidates(docs: DataFrame, k: Int,
+      textCol: String = "text"): DataFrame = {
+    require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
-    val order = Seq(col("c").desc, col("l").asc, col("r").asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(col("l"), col("r")), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
+    val w = Window.partitionBy(lit(1))
+      .orderBy(col("c").desc, col("l").asc, col("r").asc)
     bpePairCountsOf(bpeVocab(docs, textCol))
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** BPE tokenizer TRAINING over the corpus: `nMerges` rounds of
@@ -635,11 +630,11 @@ object TextOps {
     * unigram counts) + two joins of the bigram table against the unigram
     * table keyed on a single term — all exchanges carry (term, count)
     * pairs; the corpus totals ride broadcast scalars ([[ngramCounts]] /
-    * `significantTerms` discipline); final top-k is the two-phase salted
-    * window.
+    * `significantTerms` discipline); the final global top-k plans as a
+    * `TakeOrderedAndProject`, with no window over the scored table.
     */
   def collocations(docs: DataFrame, k: Int, minCount: Long = 5L,
-      textCol: String = "text", saltBuckets: Int = 16): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
     // ONE corpus pass, ONE corpus-sized exchange. Every token position
@@ -682,14 +677,8 @@ object TextOps {
           |AS BIGINT)""".stripMargin))
       .select(col("ngram").as("bigram"), col("cnt"), col("cx"), col("cy"),
         col("lift_ticks"))
-    val order = Seq(col("lift_ticks").desc, col("bigram").asc)
-    val phase1 = Window
-      .partitionBy(pmod(xxhash64(col("bigram")), lit(saltBuckets)))
-      .orderBy(order: _*)
-    val phase2 = Window.partitionBy(lit(1)).orderBy(order: _*)
-    scored
-      .withColumn("__r1", row_number().over(phase1)).filter(col("__r1") <= k)
-      .drop("__r1")
-      .withColumn("rank", row_number().over(phase2)).filter(col("rank") <= k)
+    val w = Window.partitionBy(lit(1))
+      .orderBy(col("lift_ticks").desc, col("bigram").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 }

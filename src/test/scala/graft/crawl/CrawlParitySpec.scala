@@ -141,6 +141,15 @@ class CrawlParitySpec extends AnyFunSuite {
     s2.cleanup()
   }
 
+  test("a workDir holding a manifest delimiter fails at construction, not inside a round") {
+    val dir = TestSpark.tmpDir("crawl-delim") + "/run,1"
+    val e = intercept[IllegalArgumentException](
+      new CrawlSession(spark, baseConfig("delim"), corpusDf, robotsDf.toDF(), dir))
+    assert(e.getMessage.contains("must not contain") && e.getMessage.contains("run,1"),
+      e.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+  }
+
   test("crash between a round's two table commits: resume ignores orphan snapshots") {
     val cfg = baseConfig("crash")
     val dir = TestSpark.tmpDir("crawl-crash")

@@ -25,12 +25,6 @@ class PolitenessSpec extends AnyFunSuite {
     val got = Politeness.claimPrioritized(rows, hostBudget = 2, remaining = 3)
       .select("url").collect().map(_.getString(0)).toSet
     assert(got == Set("http://a/3", "http://a/1", "http://b/2"))
-    // the two-phase salted claim is EXACT for the priority order too:
-    // every salt split yields the same per-host top-k
-    def claimed(buckets: Int) =
-      Politeness.claimPrioritized(rows, 2, 100, saltBuckets = buckets)
-        .select("url").collect().map(_.getString(0)).toSet
-    assert(claimed(1) == claimed(16))
     // plain claim is unchanged by the refactor: canonical BFS order
     val bfs = Politeness.claim(rows, hostBudget = 2, remaining = 100)
       .select("url").collect().map(_.getString(0)).toSet
@@ -48,11 +42,6 @@ class PolitenessSpec extends AnyFunSuite {
       .groupBy(identity).view.mapValues(_.length).toMap
     // a: override 1; b: 99 clamps to default 3; c: absent → 3; z: 0 → none
     assert(got == Map("a" -> 1, "b" -> 3, "c" -> 3), got.toString)
-    // salt-invariance: the per-host-k containment argument per budget
-    def claimed(buckets: Int) = Politeness.claimWithHostBudgets(
-      rows, 3, budgets, remaining = 100, saltBuckets = buckets)
-      .select("url").collect().map(_.getString(0)).toSet
-    assert(claimed(1) == claimed(16))
     // within a host, the claimed rows are the canonical BFS front
     val aClaims = Politeness.claimWithHostBudgets(rows, 3, budgets, 100)
       .filter($"host" === "a").select("url").collect().map(_.getString(0)).toSeq
@@ -60,5 +49,58 @@ class PolitenessSpec extends AnyFunSuite {
       .orderBy($"depth", $"urlHash", $"url").limit(1)
       .select("url").collect().map(_.getString(0)).toSeq
     assert(aClaims == aFront)
+  }
+
+  test("hot-host claims and bottomK equal a driver-side sort-and-take on both sides of the group-limit threshold") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // one host owns at least half of 3200+ rows, so every budget binds on
+    // it; budgets straddle Spark's windowGroupLimitThreshold (1000), up to
+    // which the partial limit applies
+    val budgets = Seq(1, 2, 3, 5, 1000, 1500)
+    val cases = Gen.listOfN(budgets.size, for {
+      n <- Gen.chooseNum(3200, 4000)
+      hotPct <- Gen.chooseNum(50, 95)
+      cold <- Gen.chooseNum(1, 6)
+      parts <- Gen.chooseNum(1, 9)
+      capped <- Gen.oneOf(true, false)
+      seed <- Gen.long
+    } yield (n, hotPct, cold, parts, capped, seed))
+      .apply(Gen.Parameters.default, Seed(9L)).get.zip(budgets)
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    cases.foreach { case ((n, hotPct, cold, parts, capped, seed), budget) =>
+      val rnd = new scala.util.Random(seed)
+      // narrow hash and depth ranges force ties the url must break
+      val rows = (0 until n).map { i =>
+        val host = if (rnd.nextInt(100) < hotPct) "hot" else s"c${rnd.nextInt(cold)}"
+        (s"http://$host/$i", host, rnd.nextInt(3), rnd.nextInt(50).toLong)
+      }
+      val frontier = rows.toDF("url", "host", "depth", "urlHash").repartition(parts)
+      val remaining = if (capped) (n / 3).toLong else Long.MaxValue
+      val overrides = Map("hot" -> (budget / 2 + 1), "c0" -> 0)
+      val budgetDf = overrides.toSeq.toDF("host", "budget")
+      def reference(cap: String => Int) = {
+        val perHost = rows.groupBy(_._2).toSeq.flatMap { case (h, rs) =>
+          rs.sortBy(r => (r._3, r._4, r._1)).take(cap(h)) }
+        perHost.sortBy(r => (r._3, r._4, r._1))
+          .take(math.min(remaining, n.toLong).toInt).map(_._1).toSet
+      }
+      def urls(df: org.apache.spark.sql.DataFrame) =
+        df.select("url").collect().map(_.getString(0)).toSet
+      val ctx = s"n=$n hot=$hotPct% parts=$parts budget=$budget capped=$capped"
+      assert(urls(Politeness.claim(frontier, budget, remaining)) ==
+        reference(_ => budget), ctx)
+      assert(urls(Politeness.claimWithHostBudgets(frontier, budget, budgetDf,
+        remaining)) == reference(h => overrides.get(h).fold(budget)(math.min(_, budget)).max(0)),
+        ctx)
+      val strata = rows.zipWithIndex.map { case (r, i) => (i.toLong, r._2) }
+      val sample = graft.ops.Sampling.bottomK(
+        strata.toDF("doc_id", "host").repartition(parts), "doc_id", "host", budget)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      val sampleRef = strata.groupBy(_._2).values
+        .flatMap(_.sortBy(r => (md5(r._1.toString), r._1)).take(budget)).toSet
+      assert(sample == sampleRef, ctx)
+    }
   }
 }

@@ -66,7 +66,7 @@ class SeenSetSpec extends AnyFunSuite {
       (url, UrlOps.urlHash(url), s"h${i % 5}.example.com", i % 3, "p")
     }
     val frontier = rows.toDF("url", "urlHash", "host", "depth", "parentUrl")
-    val claimed = Politeness.claim(frontier, hostBudget = 4, remaining = 12, saltBuckets = 4)
+    val claimed = Politeness.claim(frontier, hostBudget = 4, remaining = 12)
       .collect()
     assert(claimed.length == 12)
     val byHost = claimed.groupBy(_.getString(2))

@@ -1805,9 +1805,7 @@ class SamplingSketchSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     val rep = Sampling.bottomK(strat.repartition(7), "doc_id", "lang", k = 10)
       .collect().map(_.getLong(0)).toSet
-    val salt1 = Sampling.bottomK(strat, "doc_id", "lang", k = 10, saltBuckets = 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(base == rep && base == salt1)
+    assert(base == rep)
   }
 
   // 5 groups with known distinct cardinalities (values repeat 3x)
@@ -1848,10 +1846,10 @@ class SamplingSketchSpec extends AnyFunSuite {
       ("g0", "u0", 10L, 1), ("g0", "u1", 9L, 2), ("g0", "u2", 8L, 3),
       ("g1", "u0", 1L, 1), ("g1", "u1", 1L, 2), ("g1", "u2", 1L, 3))
     assert(got == expect)
-    val salt1 = Sketches.heavyHitters(df.repartition(5), "host", "url",
-      k = 3, saltBuckets = 1).collect()
+    val rep = Sketches.heavyHitters(df.repartition(5), "host", "url", k = 3)
+      .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getInt(3))).toSet
-    assert(salt1 == expect)
+    assert(rep == expect)
   }
 
   test("quantilesApprox honors the rank-error bound vs exact quantiles") {
@@ -1953,9 +1951,8 @@ class SearchOpsSpec extends AnyFunSuite {
     assert(got == expect, s"got $got expect $expect")
     // the anchor weight lifts the anchor-only doc over the body-only one
     assert(got.map(_._1).indexOf(3L) < got.map(_._1).indexOf(2L))
-    // and it is partition/salt invariant
-    val again = SearchOps.fieldedTopK(fdocs.repartition(7), query, 4,
-      fields, saltBuckets = 3)
+    // and it is partition invariant
+    val again = SearchOps.fieldedTopK(fdocs.repartition(7), query, 4, fields)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(again == got.toSet)
   }
@@ -1973,11 +1970,10 @@ class SearchOpsSpec extends AnyFunSuite {
   }
 
   test("searchTopK is invariant to partitioning and salt-bucket count") {
-    def run(df: org.apache.spark.sql.DataFrame, salts: Int) =
-      SearchOps.searchTopK(df, Seq("zebra", "scan"), k = 4, saltBuckets = salts)
+    def run(df: org.apache.spark.sql.DataFrame) =
+      SearchOps.searchTopK(df, Seq("zebra", "scan"), k = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(run(docs, 16) == run(docs.repartition(5), 16))
-    assert(run(docs, 16) == run(docs, 1))
+    assert(run(docs) == run(docs.repartition(5)))
   }
 
   test("search_after pagination: page 2 equals rows k+1..2k of the deep top-2k") {
@@ -2038,9 +2034,9 @@ class SearchOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getInt(3))).toSet
     assert(got == (brute("s", 3) ++ brute("ha", 3)).toSet)
-    // salt invariance
-    val again = SearchOps.suggest(docs.repartition(5), Seq("s", "ha"), 3,
-      saltBuckets = 2).collect().map(r =>
+    // partition invariance
+    val again = SearchOps.suggest(docs.repartition(5), Seq("s", "ha"), 3)
+      .collect().map(r =>
       (r.getString(0), r.getString(1), r.getLong(2), r.getInt(3))).toSet
     assert(again == got)
   }
@@ -2312,7 +2308,7 @@ class SearchOpsSpec extends AnyFunSuite {
       assert(got == brute(phrase), s"phrase $phrase")
     }
     val rep = SearchOps.phraseTopK(docs.repartition(5), Seq("scan", "filter"),
-      k = 10, saltBuckets = 1)
+      k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(rep == brute(Seq("scan", "filter")).toSet)
   }

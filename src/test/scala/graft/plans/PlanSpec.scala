@@ -271,6 +271,73 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("isFinalPlan=true"), plan)
   }
 
+  test("top-k: one rank exchange with a partial group limit below it; global top-k via TakeOrderedAndProject") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    // the final adaptive plan: PlanDump runs the query before explaining it
+    def executed(df: DataFrame): (Seq[SparkPlan], String) = {
+      val text = graft.tools.PlanDump.executedPlan(df)
+      (nodes(df.queryExecution.executedPlan), text)
+    }
+    def shuffles(ns: Seq[SparkPlan]) = ns.collect { case e: ShuffleExchangeLike => e }
+    def keyedOn(e: ShuffleExchangeLike, key: String) = e.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == key
+      case _ => false
+    }
+    def partialBelow(e: ShuffleExchangeLike) = nodes(e.asInstanceOf[SparkPlan]).exists {
+      case w: WindowGroupLimitExec => w.mode == Partial
+      case _ => false
+    }
+
+    val dir = TestSpark.tmpDir("topk-plan")
+    (0 until 2000).map { i =>
+      val host = if (i % 2 == 0) "hot.example.com" else s"h${i % 7}.example.com"
+      val url = s"http://$host/page/$i"
+      (url, UrlOps.urlHash(url), host, i % 3, "p")
+    }.toDF("url", "urlHash", "host", "depth", "parentUrl")
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    val frontier = spark.read.parquet(dir)
+    val budgets = Seq(("hot.example.com", 2)).toDF("host", "budget")
+    for ((name, claimed) <- Seq(
+        "claim" -> Politeness.claim(frontier, hostBudget = 5, remaining = 20),
+        "claimWithHostBudgets" -> Politeness.claimWithHostBudgets(
+          frontier, hostBudget = 5, budgets, remaining = Long.MaxValue))) {
+      val (ns, text) = executed(claimed)
+      val ex = shuffles(ns)
+      assert(ex.size == 1 && keyedOn(ex.head, "host"), s"$name:\n$text")
+      assert(partialBelow(ex.head), s"$name:\n$text")
+    }
+
+    val docs = (0L until 400L)
+      .map(i => (i, s"alpha beta d$i ${if (i % 3 == 0) "gamma" else "delta"}"))
+      .toDF("doc_id", "text").repartition(4)
+    val idx = graft.ops.SearchOps.index(docs, termFilter = Seq("alpha", "gamma"))
+    val queries = Seq(("q1", "alpha"), ("q1", "gamma"), ("q2", "gamma"))
+      .toDF("query_id", "term")
+    val (sns, stext) = executed(graft.ops.SearchOps.searchAllTopK(idx, queries, k = 5))
+    val perQuery = shuffles(sns).filter(keyedOn(_, "query_id"))
+    assert(perQuery.size == 1 && partialBelow(perQuery.head), stext)
+
+    val (cns, ctext) = executed(graft.ops.TextOps.collocations(
+      (0L until 200L).map(i => (i, s"new york city d${i % 9} new york"))
+        .toDF("doc_id", "text"), k = 3, minCount = 2L))
+    assert(cns.exists(_.isInstanceOf[TakeOrderedAndProjectExec]), ctext)
+    cns.collect { case w: WindowExec => w }.foreach(w =>
+      assert(nodes(w).exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+        s"window over unbounded input:\n$ctext"))
+  }
+
   test("global budget cap plans as TakeOrderedAndProject, not a full sort") {
     val frontier = (0 until 100).map { i =>
       val url = s"http://h${i % 5}.example.com/page/$i"
@@ -435,9 +502,9 @@ class PlanSpec extends AnyFunSuite {
     val out = graft.ops.SearchOps.phraseTopK(docs, Seq("alpha", "beta"), k = 5)
     val plan = planOf(out)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"), plan)
-    // exactly the two top-k windows (salted phase 1 + global phase 2)
+    // exactly one top-k window, over the TakeOrderedAndProject's k rows
     val windows = "\\bWindow\\b".r.findAllIn(plan).size
-    assert(windows == 2, s"$windows windows:\n$plan")
+    assert(windows == 1, s"$windows windows:\n$plan")
   }
 }
 

@@ -363,7 +363,7 @@ object SparkEntry {
     */
   /** run-1 workdir scaffolds, shared across the mode queries: on an EMPTY
     * docs table all three write modes produce identical state
-    * (`CrawlLoop.writeDocs`: commitAppend + side index), so the first run
+    * (`CrawlLoop.writeDocs`: one commitAppend of the batch), so the first run
     * of `q_mode_overwrite` and `q_mode_incremental` — same seeds, same
     * corpus, same clock — is one crawl executed once and copied, not twice.
     */
@@ -407,8 +407,7 @@ object SparkEntry {
     import s.implicits._
     val robots = s.emptyDataset[RobotsRules].toDF()
     // run 1 once per (dir, seed range) — mode-independent on an empty table
-    // (Incremental here only so the side index both mode queries read gets
-    // written; Overwrite would write the identical one)
+    // (Incremental here; Overwrite would commit the identical segment)
     val scaffold = scaffoldCache.getOrElseUpdate((s, d, seeds1.toString), {
       val dir = scratchDir("graft-mode-scaffold")
       val corpus1 = cachedCorpus(s, d, "id", identity)

@@ -65,11 +65,6 @@ final class CrawlSession(
   // deletes (tombstone old rows for re-crawled urls + append the new rows)
   // instead of rewriting the whole docs history every round
   val docsTable = new SnapshotTable(s"$workDir/docs", spark, sequenced = true)
-  // narrow (url, lastModified) side index of docsTable, maintained by the
-  // Incremental/Overwrite writers so the J2 skip join reads 2 columns
-  // instead of rescanning the full (wide) docs history every round
-  private val docsIndexTable =
-    new SnapshotTable(s"$workDir/docsidx", spark, sequenced = true)
   // incrementally merged seen-set bloom router (O(new URLs) per round
   // instead of an O(|seen|) stat.bloomFilter rebuild)
   private val seenBloom = new IncrementalSeenBloom(seenTable)
@@ -302,15 +297,16 @@ final class CrawlSession(
       val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
 
       // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
-      // persisted when Overwrite/Incremental reference the extraction twice
-      // (merge/skip join + count); Default mode writes it exactly once, so
-      // the cache would be pure copy overhead there
+      // persisted only for Overwrite, whose merge reads the extraction three
+      // times (matched count, url tombstones, replacement segment); Default
+      // and Incremental read it once, so the cache would be pure copy
+      // overhead there
       val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
         .drop("children")
         .withColumn("@timestamp", lit(clock()))
       val docs =
-        if (config.mode == WriteMode.Default) docs0 else cache(docs0)
-      // The docs-table commit touches only docsTable/docsIndexTable — fully
+        if (config.mode == WriteMode.Overwrite) cache(docs0) else docs0
+      // The docs-table commit touches only docsTable — fully
       // independent of the frontier/seen transition below — so it runs
       // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
       // sequential because the driver calls them sequentially); its tasks
@@ -387,7 +383,8 @@ final class CrawlSession(
       // --- frontier transition + seen growth (S3 snapshot-atomic claim) -------
       // delta commit: append the new entries, tombstone the claimed rows —
       // O(claim + new) write instead of rewriting the whole frontier
-      // (SnapshotTable compacts copy-on-write once tombstones accumulate)
+      // (SnapshotTable compacts the parent's survivors into a base segment
+      // once tombstones accumulate)
       val newProcessed = processed + claimedCount
       val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
         fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
@@ -396,23 +393,13 @@ final class CrawlSession(
         fanoutShape(claimed.select("urlHash", "url")), v, Map(
           "round" -> (round + 1).toString,
           "processed" -> newProcessed.toString,
-          "claimed" -> claimedCount.toString),
-        // tombstones are exactly the claim batch (1:1) — the exact hint lets
-        // the store overlap the tombstone and segment writes
-        tombstoneRowsHint = claimedCount)
-      // delta path: frontier segment newFv IS exactly newEntries — the seen
-      // table references those files instead of writing the rows again
-      // (halves per-round new-URL write bytes). Compaction path: the segment
-      // folds the whole frontier, so fall back to a direct write (newEntries
-      // is recomputed from the cached `fetched`).
-      val (newSv, seenTotal) =
-        if (frontierTable.tombstonesOf(newFv).nonEmpty)
-          seenTable.commitAppendRef(
-            s"${frontierTable.root}/segments/$newFv", seenV,
-            Map("round" -> (round + 1).toString))
-        else seenTable.commitAppendTo(
-          fanoutShape(newEntries.select("urlHash", "url")), seenV,
-          Map("round" -> (round + 1).toString))
+          "claimed" -> claimedCount.toString))
+      // frontier segment newFv IS exactly newEntries, compaction or not —
+      // the seen table references those files instead of writing the rows
+      // again (halves per-round new-URL write bytes)
+      val (newSv, seenTotal) = seenTable.commitAppendRef(
+        s"${frontierTable.root}/segments/$newFv", seenV,
+        Map("round" -> (round + 1).toString))
       // both commits must be durable before the round becomes visible
       val docsWritten = scala.concurrent.Await.result(
         docsF, scala.concurrent.duration.Duration.Inf)
@@ -443,7 +430,10 @@ final class CrawlSession(
   }
 
   /** Mode-aware document write (RiverWebTest semantics, SURVEY.md §2.1 S8 +
-    * §2.3 J2/J3).
+    * §2.3 J2/J3). The J2/J3 history reads use only `url` and
+    * `lastModified` of `docsTable.read()`: parquet column pruning reads
+    * those column chunks and the hidden `__seq` the sequenced merge-on-read
+    * needs, not the wide extracted columns.
     */
   /** `shape` re-applies the small-round single-file write layout to the
     * tombstone/skip-join intermediates Overwrite/Incremental derive from
@@ -455,100 +445,39 @@ final class CrawlSession(
     val hasExisting = !docsTable.isEmpty && docsTable.rowsOf(docsTable.currentVersion) > 0
     config.mode match {
       case WriteMode.Default =>
-        // Default mode never reads history — no index maintenance (a later
-        // Incremental session detects the stale index and rebuilds once)
-        val (_, _) = docsTable.commitAppend(docs)
-        docsTable.metric(docsTable.currentVersion, "segmentRows").map(_.toLong).getOrElse(0L)
+        docsTable.commitAppend(docs)
       case WriteMode.Overwrite =>
         // J3: delete-by-url then insert = MERGE, committed as a sequenced
         // delta (url tombstones + new segment) — O(batch) per round instead
         // of the O(history) copy-on-write rewrite; SnapshotTable compacts
-        // once tombstones outgrow the read-side broadcast budget. The
-        // deleted-row count (for exact live-row accounting) comes from the
-        // NARROW side index, not a full docs scan.
-        if (!hasExisting) {
-          docsTable.commitAppend(docs)
-          appendDocsIndex()
-          docsTable.metric(docsTable.currentVersion, "segmentRows")
-            .map(_.toLong).getOrElse(0L)
-        } else {
+        // once tombstones pass a quarter of the live rows. The deleted-row
+        // count keeps the live-row accounting exact.
+        if (!hasExisting) docsTable.commitAppend(docs)
+        else {
           val urls = shape(docs.select("url").distinct())
-          val matched = docsIndexSource()
+          val matched = docsTable.read().select("url")
             .join(urls, Seq("url"), "left_semi").count()
           docsTable.commitDeltaTo(docs, urls, docsTable.currentVersion,
             deletedRows = matched)
-          val v = docsTable.currentVersion
-          // batch (url, lastModified) pairs, NOT readSegment(v): an
-          // internal compaction folds the whole table into segment v
-          val idxSeg = docs.select("url", "lastModified")
-          if (indexConsistentBefore(v - 1))
-            docsIndexTable.commitDeltaTo(idxSeg, urls,
-              docsIndexTable.currentVersion,
-              Map("docsVersion" -> v.toString),
-              deletedRows = matched)
-          else refreshDocsIndexFull()
-          // segmentRows == the batch unless the commit compacted (then the
-          // segment is the whole merged table); docs is persisted, so the
-          // fallback count is a cache scan
-          if (docsTable.tombstonesOf(v).nonEmpty)
-            docsTable.metric(v, "segmentRows").map(_.toLong).getOrElse(0L)
-          else docs.count()
         }
       case WriteMode.Incremental =>
-        // J2: skip docs whose lastModified is not newer than what's indexed.
-        // The skip join reads the narrow (url, lastModified) side index when
-        // it is consistent with the docs head — rescanning the full wide
-        // docs history every round is O(history) per round
+        // J2: skip docs whose lastModified is not newer than what's stored
         val fresh =
           if (!hasExisting) docs
           else {
-            val indexed = docsIndexSource()
+            val stored = docsTable.read()
               .groupBy(col("url").as("i_url"))
               .agg(max("lastModified").as("i_lastModified"))
-            docs.join(indexed, docs("url") === col("i_url"), "left")
+            docs.join(stored, docs("url") === col("i_url"), "left")
               .filter(col("i_lastModified").isNull ||
                 col("lastModified") > col("i_lastModified"))
               .drop("i_url", "i_lastModified")
           }
         docsTable.commitAppend(shape(fresh))
-        val written = docsTable.metric(docsTable.currentVersion, "segmentRows")
-          .map(_.toLong).getOrElse(0L)
-        appendDocsIndex()
-        written
     }
+    // every docs commit's segment is exactly the rows it wrote
+    docsTable.metric(docsTable.currentVersion, "segmentRows").map(_.toLong).getOrElse(0L)
   }
-
-  /** index rows for the J2 skip join: the side index when consistent with
-    * the docs head (metric check), else the docs table itself (index behind
-    * — e.g. Default-mode appends — heals on the next index write).
-    */
-  private def docsIndexSource(): DataFrame = {
-    val consistent = !docsIndexTable.isEmpty &&
-      docsIndexTable.metric(docsIndexTable.currentVersion, "docsVersion")
-        .contains(docsTable.currentVersion.toString)
-    if (consistent) docsIndexTable.read() else docsTable.read()
-  }
-
-  private def indexConsistentBefore(prevDocsVersion: Long): Boolean =
-    !docsIndexTable.isEmpty &&
-      docsIndexTable.metric(docsIndexTable.currentVersion, "docsVersion")
-        .contains(prevDocsVersion.toString)
-
-  /** append the fresh segment's (url, lastModified) to the index, or rebuild
-    * it from the full docs table if it had fallen behind.
-    */
-  private def appendDocsIndex(): Unit = {
-    val docsV = docsTable.currentVersion
-    val newSeg = docsTable.readSegment(docsV.toString).select("url", "lastModified")
-    if (indexConsistentBefore(docsV - 1))
-      docsIndexTable.commitAppend(newSeg, Map("docsVersion" -> docsV.toString))
-    else refreshDocsIndexFull()
-  }
-
-  private def refreshDocsIndexFull(): Unit =
-    docsIndexTable.commitFull(
-      docsTable.read().select("url", "lastModified"),
-      Map("docsVersion" -> docsTable.currentVersion.toString))
 
   /** Run to completion (budget hit or frontier drained). */
   def run(maxRounds: Int = 1000): CrawlResult = {
@@ -578,7 +507,7 @@ final class CrawlSession(
   }
 
   def cleanup(): Unit = { // S9
-    frontierTable.drop(); seenTable.drop(); docsTable.drop(); docsIndexTable.drop()
+    frontierTable.drop(); seenTable.drop(); docsTable.drop()
   }
 
   /** Expire dead snapshot storage for this session (the Iceberg
@@ -596,8 +525,7 @@ final class CrawlSession(
     val (fS, fT) = frontierTable.expireBefore(fv, refsIntoFrontier)
     val (sS, sT) = seenTable.expireBefore(sv)
     val (dS, dT) = docsTable.expireBefore(docsTable.currentVersion)
-    val (iS, iT) = docsIndexTable.expireBefore(docsIndexTable.currentVersion)
-    (fS + sS + dS + iS, fT + sT + dT + iT)
+    (fS + sS + dS, fT + sT + dT)
   }
 
   private def log(msg: String): Unit =

@@ -2,6 +2,8 @@ package graft.frontier
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -25,8 +27,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
   *     (frontier round transition: the claimed rows become tombstones
   *     anti-joined out on read, so a round writes O(claim batch + new URLs)
   *     instead of rewriting a 10^10-row frontier to remove 10^5 claimed
-  *     rows), with automatic copy-on-write compaction once tombstones
-  *     outgrow the broadcast-anti-join budget;
+  *     rows), with automatic compaction once tombstones pass a quarter of
+  *     the live rows (the parent's surviving rows become one base segment);
   *   - resume = read the current manifest (session isolation + resume,
   *     RiverWeb.java:80-84,238-240); crawl state (round, processed) rides in
   *     the metrics map.
@@ -234,115 +236,77 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       tombSegs = prevTombs, tombRows = prevTombRows)
   }
 
-  /** Delta transition anchored at `parentVersion`: append `newRows` as a
-    * data segment and `tombstones` (key columns of rows to logically
-    * delete) as a tombstone segment. Write cost is O(new + tombstones)
-    * regardless of table size — the round-loop fix for the per-round
-    * O(frontier) copy-on-write rewrite.
+  /** Delta transition anchored at `parentVersion`: `newRows` becomes data
+    * segment `<v>` and `tombstones` (key columns of rows to logically
+    * delete) tombstone segment `<v>`, written concurrently (two independent
+    * Spark jobs). Write cost is O(new + tombstones) regardless
+    * of table size — the round-loop fix for the per-round O(frontier)
+    * copy-on-write rewrite.
     *
-    * Compaction: once accumulated tombstones would exceed a quarter of the
-    * live rows (floor 4096), the transition is applied as a full
-    * copy-on-write rewrite instead and the tombstone list resets. The
+    * Compaction: once accumulated tombstones, counted from the written
+    * footers, exceed a quarter of the live rows (floor 4096), the parent's
+    * surviving rows (`readVersion(parent)` minus the fresh tombstones) are
+    * rewritten as a second segment of snapshot v, `<v>-base`, and the
+    * tombstone list resets. Segment `<v>` holds exactly `newRows` on both
+    * paths, so no row is written twice and `segmentRows` is the batch
+    * (other tables may reference that dir, see [[commitAppendRef]]). The
     * budget scales WITH the table — amortized, one rewrite per live/4
     * claimed rows ≈ 4 rows rewritten per claim at any size (at 10^10 rows
     * an absolute cap forced a full rewrite every ~1M claims ≈ 10^4 rows
     * per claim). Reads between compactions stay broadcast-anti-join up to
     * [[broadcastTombRows]] tombstones and shuffled-anti-join beyond.
-    */
-  /** `deletedRows` — how many LIVE rows the tombstones actually match, for
+    *
+    * `deletedRows` — how many LIVE rows the tombstones actually match, for
     * exact row accounting. Default -1 means "tombstones match 1:1" (the
     * frontier claim case, where every tombstoned key exists exactly once);
     * sequenced replace-style callers pass the measured count because a
     * tombstoned key may match 0 (first write of a url) or several
     * (Default-mode duplicate appends) live rows.
     */
-  /** `tombstoneRowsHint` ≥ 0: the caller's exact tombstone row count
-    * (e.g. the crawl round's claim count — tombstones are 1:1 there).
-    * When the hint predicts NO compaction, the tombstone and data-segment
-    * writes run CONCURRENTLY (two independent Spark jobs — guide §2.6);
-    * the decision is still re-verified from the written footers, and a
-    * wrong hint falls back to the compaction path (the pre-written
-    * segment dir is reclaimed), so the hint can cost at most one wasted
-    * write, never correctness.
-    */
   def commitDeltaTo(newRows: DataFrame, tombstones: DataFrame,
       parentVersion: Long,
       metrics: Map[String, String] = Map.empty,
-      deletedRows: Long = -1L,
-      tombstoneRowsHint: Long = -1L): (Long, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
+      deletedRows: Long = -1L): (Long, Long) = {
+    import org.apache.spark.sql.functions.broadcast
     val v = currentVersion + 1
     val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
     val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
-    val compactionBudget = math.max(4096L, prevRows / 4)
     val tombDir = s"$root/tombstones/$v"
     val segDir = s"$root/segments/$v"
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
+    val base = s"$v-base"
     try {
-      val stamped =
-        if (sequenced) tombstones.withColumn(SeqCol, lit(v)) else tombstones
-      var segPreWritten = false
-      if (tombstoneRowsHint >= 0 &&
-          prevTombRows + tombstoneRowsHint <= compactionBudget) {
-        // hint predicts the delta path → the data segment is needed either
-        // way; write it concurrently with the tombstones
-        val segOut =
-          if (sequenced) newRows.withColumn(SeqCol, lit(v)) else newRows
-        val tombF = scala.concurrent.Future {
-          stamped.write.mode("overwrite").parquet(tombDir)
-        }(SnapshotTable.writeEc)
-        // a failed segment write first waits the tombstone write out: left
-        // running, it would race the cleanup below and a retry's write of
-        // the same dir
-        try segOut.write.mode("overwrite").parquet(segDir)
-        catch { case NonFatal(e) =>
-          scala.util.Try(scala.concurrent.Await.result(tombF,
-            scala.concurrent.duration.Duration.Inf))
-          throw e
-        }
-        scala.concurrent.Await.result(tombF,
-          scala.concurrent.duration.Duration.Inf)
-        segPreWritten = true
-      } else {
-        // write the tombstone segment first; its footer count drives the
-        // compaction decision (no Spark count() job, no trusting the caller)
-        stamped.write.mode("overwrite").parquet(tombDir)
+      val tombF = Future {
+        stamp(tombstones, v).write.mode("overwrite").parquet(tombDir)
+      }(SnapshotTable.writeEc)
+      // a failed segment write first waits the tombstone write out: left
+      // running, it would race the cleanup below and a retry's write of
+      // the same dir
+      try stamp(newRows, v).write.mode("overwrite").parquet(segDir)
+      catch { case NonFatal(e) =>
+        scala.util.Try(Await.result(tombF, Duration.Inf))
+        throw e
       }
+      Await.result(tombF, Duration.Inf)
       val newTombRows = dirRowCount(tombDir)
-      val deleted = if (deletedRows >= 0) deletedRows else newTombRows
       val totalTomb = prevTombRows + newTombRows
       if (totalTomb > math.max(4096L, prevRows / 4)) {
-        // a wrong hint pre-wrote the delta segment — reclaim it (it was
-        // never referenced by any manifest)
-        if (segPreWritten) rm(Paths.get(segDir))
-        // compact: parent live rows minus the fresh tombstones, plus newRows.
         // readVersion(parent) already applied older tombstones (and dropped
         // __seq for sequenced tables); the fresh ones apply by key alone —
         // every parent row was written before this commit
         val tombRaw = parquetAt(Seq(tombDir)).drop(SeqCol)
         val tomb =
           if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
-        val kept = readVersion(parentVersion).join(tomb,
-          tombRaw.columns.toSeq, "left_anti")
-        val merged = kept.unionByName(newRows.select(kept.columns.map(c =>
-          org.apache.spark.sql.functions.col(c)): _*))
-        val out = commit(merged, metrics, appendTo = Seq.empty, prevRows = 0L)
-        // the tombstone dir is orphaned by the full rewrite — reclaim it
-        rm(Paths.get(tombDir))
-        out
+        stamp(readVersion(parentVersion).join(tomb, tombRaw.columns.toSeq, "left_anti"), v)
+          .write.mode("overwrite").parquet(segPath(base))
+        // the base segment replaces every tombstone: no snapshot needs this one
+        rmTree(Paths.get(tombDir))
+        commitManifest(v.toString, metrics, appendTo = Seq(base),
+          prevRows = segmentRows(base), expectVersion = v)
       } else {
         val prevSegs = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
         val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-        if (segPreWritten)
-          // segment already on disk from the concurrent write — manifest only
-          commitManifest(v.toString, metrics, appendTo = prevSegs,
-            prevRows = prevRows - deleted,
-            tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
-            expectVersion = v)
-        else commit(newRows, metrics, appendTo = prevSegs,
+        val deleted = if (deletedRows >= 0) deletedRows else newTombRows
+        commitManifest(v.toString, metrics, appendTo = prevSegs,
           prevRows = prevRows - deleted,
           tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
           expectVersion = v)
@@ -351,10 +315,15 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       // no manifest references snapshot v's dirs yet: drop them (partial
       // ones included) so a retry starts from a clean slate; best-effort,
       // so the write's own failure is what the caller sees
-      Seq(tombDir, segDir).foreach(d => scala.util.Try(rm(Paths.get(d))))
+      Seq(tombDir, segDir, segPath(base))
+        .foreach(d => scala.util.Try(rmTree(Paths.get(d))))
       throw e
     }
   }
+
+  /** `df` stamped with snapshot v's sequence, on a sequenced table. */
+  private def stamp(df: DataFrame, v: Long): DataFrame =
+    if (sequenced) df.withColumn(SeqCol, org.apache.spark.sql.functions.lit(v)) else df
 
   private def dirRowCount(dir: String): Long =
     parquetFiles(dir).map(f => footerRowCount(s"$dir/$f")).sum
@@ -365,17 +334,10 @@ final class SnapshotTable(dir: String, spark: SparkSession,
 
   private def commit(df: DataFrame, metrics: Map[String, String],
       appendTo: Seq[String], prevRows: Long,
-      tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
-      expectVersion: Long = -1L): (Long, Long) = {
+      tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L): (Long, Long) = {
     val v = currentVersion + 1
-    require(expectVersion < 0 || expectVersion == v,
-      s"concurrent commit detected: expected $expectVersion, at $v")
     val seg = v.toString
-    val segDir = s"$root/segments/$seg"
-    val out =
-      if (sequenced) df.withColumn(SeqCol, org.apache.spark.sql.functions.lit(v))
-      else df
-    out.write.mode("overwrite").parquet(segDir)
+    stamp(df, v).write.mode("overwrite").parquet(s"$root/segments/$seg")
     commitManifest(seg, metrics, appendTo, prevRows, tombSegs, tombRows,
       expectVersion = v)
   }
@@ -427,6 +389,11 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     try st.iterator().asScala.toSeq finally st.close()
   }
 
+  private def rmTree(p: Path): Unit = {
+    if (Files.isDirectory(p)) listDir(p).foreach(rmTree)
+    Files.deleteIfExists(p)
+  }
+
   private def footerRowCount(file: String): Long = footer(file)(_.getRecordCount)
 
   private def footer[A](file: String)(
@@ -468,13 +435,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     def sweep(kind: String, keep: Set[String]): Int = {
       var n = 0
       listDir(Paths.get(root, kind)).foreach { p =>
-        if (!keep.contains(p.getFileName.toString)) {
-          def rm(q: Path): Unit = {
-            if (Files.isDirectory(q)) listDir(q).foreach(rm)
-            Files.deleteIfExists(q)
-          }
-          rm(p); n += 1
-        }
+        if (!keep.contains(p.getFileName.toString)) { rmTree(p); n += 1 }
       }
       n
     }
@@ -488,21 +449,17 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   }
 
   /** Drop the whole table (S9 cleanup sink, RiverWeb.java:482-508). */
-  def drop(): Unit = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(Paths.get(root))
-  }
+  def drop(): Unit = rmTree(Paths.get(root))
 }
 
 object SnapshotTable {
   /** hidden per-segment sequence column of `sequenced` tables. */
   val SeqCol = "__seq"
 
-  /** driver pool for the concurrent tombstone+segment delta write
-    * ([[SnapshotTable.commitDeltaTo]] with a tombstone-rows hint).
+  /** driver pool for the tombstone write that [[SnapshotTable.commitDeltaTo]]
+    * overlaps with its segment write. Two threads: a crawl round's frontier
+    * and docs commits (the latter on its own pool thread) can both be in
+    * one at a time.
     */
   private[frontier] lazy val writeEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(

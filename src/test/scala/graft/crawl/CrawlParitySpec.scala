@@ -122,6 +122,28 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
+  test("steady-state Overwrite and Incremental rounds: no docs side index, at most 30 and 21 Spark jobs") {
+    // measured on this corpus: Overwrite 28-29 jobs in 7 SQL actions,
+    // Incremental 20 in 5 (with a side index: 33-34 in 9, 22-23 in 6); a
+    // round's job count varies by one with AQE, its SQL actions do not
+    Seq((WriteMode.Overwrite, 30, 7), (WriteMode.Incremental, 21, 5)).foreach {
+      case (mode, maxJobs, sqlActions) =>
+        val dir = TestSpark.tmpDir(s"crawl-round-jobs-$mode")
+        val session = new CrawlSession(spark, baseConfig(s"round-jobs-$mode")
+          .copy(mode = mode), corpusDf, robotsDf.toDF(), dir)
+        session.init()
+        session.runRound(); session.runRound()
+        val t = TestSpark.traced(session.runRound())
+        assert(t.result.exists(r => r.claimed > 0 && r.docsWritten > 0), mode)
+        val (actions, jobs) = (t.queries.size, t.jobs.size)
+        assert(actions == sqlActions, s"$mode: $actions SQL actions")
+        assert(jobs <= maxJobs,
+          s"$mode: $jobs jobs: ${t.jobs.map(_.stageInfos.map(_.name).mkString("+"))}")
+        assert(new java.io.File(dir).list().toSet == Set("sessions", "docs"), mode)
+        session.cleanup()
+    }
+  }
+
   test("a relative workDir crawls like an absolute one; gc() keeps the seen refs") {
     val cfg = baseConfig("relative")
     val abs = java.nio.file.Paths.get(TestSpark.tmpDir("crawl-relative"))
@@ -261,6 +283,48 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(seen == oracle.seen)
     s2.cleanup()
   }
+
+  test("a session across a frontier compaction keeps oracle parity; seen holds only refs") {
+    // > 4096 claims cross the compaction floor (max(4096, live/4) cumulative
+    // tombstones) inside one session
+    val cmpBuilder = SyntheticCorpus.Builder(n = 5000, hostCount = 10)
+    val cmpCorpus = cmpBuilder.corpus(spark)
+    val cmpPages = cmpCorpus.collect().map(p => p.doc_id -> p).toMap
+    val cmpRobots = cmpBuilder.robots(spark)
+    val cmpRobotsMap = cmpRobots.collect().map(r => r.host -> r.disallow_prefixes).toMap
+    val cdf = SyntheticCorpus.zipfCdf(10, 1.1)
+    def seed(i: Long) = UrlOps.canonicalize(
+      SyntheticCorpus.urlOf(i, SyntheticCorpus.hostOfDoc(i, 42L, cdf)))
+    val cfg = CrawlConfig(
+      sessionId = "compaction",
+      seeds = Seq(seed(0L), seed(7L), seed(96L)),
+      maxDepth = -1, maxAccessCount = 4400, hostBudgetPerRound = 1000,
+      rules = Seq(ScrapingRule(".*/page/.*", properties = Seq(
+        PropertyRule("title", SpanText("title"), trimSpaces = true)))))
+    val dir = TestSpark.tmpDir("crawl-compaction")
+    val s1 = new CrawlSession(spark, cfg, cmpCorpus.toDF(), cmpRobots.toDF(), dir)
+    val engine = s1.run()
+    val ft = s1.frontierTable
+    val compactions = (0L to ft.currentVersion).filter(v =>
+      ft.metric(v, "round").exists(_.toInt > 1) && ft.tombstonesOf(v).isEmpty)
+    assert(compactions.nonEmpty, s"no compaction in ${engine.rounds.size} rounds")
+    val oracle = Oracle.crawl(cmpPages, cmpRobotsMap, cfg)
+    assert(engine.crawlOrder == oracle.crawlOrder,
+      s"order diverged at ${engine.crawlOrder.zip(oracle.crawlOrder).indexWhere(p => p._1 != p._2)}")
+    def seenOf(s: CrawlSession) =
+      s.seenTable.read().select("url").collect().map(_.getString(0)).toSet
+    assert(seenOf(s1) == oracle.seen)
+    // every seen entry references a frontier segment: nothing written locally
+    val seenSegs = java.nio.file.Paths.get(dir, "sessions", "compaction", "seen", "segments")
+    assert(new java.io.File(seenSegs.toString).list().isEmpty)
+    val frontierLeft = ft.rowsOf(ft.currentVersion)
+    s1.gc()
+    val s2 = new CrawlSession(spark, cfg, cmpCorpus.toDF(), cmpRobots.toDF(), dir)
+    assert(s2.run().rounds.isEmpty, "completed crawl resumes as a no-op after gc")
+    assert(seenOf(s2) == oracle.seen, "gc kept the frontier segments seen refers to")
+    assert(s2.frontierTable.read().count() == frontierLeft, "gc kept the base segment")
+    s2.cleanup()
+  }
 }
 
 /** RiverWebTest mode semantics: default duplicates accumulate (:220-273),
@@ -369,6 +433,50 @@ class WriteModeSpec extends AnyFunSuite {
     assert(read.length == 1)
     assert(!docs.read().columns.contains("__seq"))
     s2.docsTable.drop()
+  }
+
+  test("Default, Incremental, then Overwrite sessions on one workDir: skip, re-store, one row per url") {
+    import org.apache.spark.sql.functions._
+    val dir = TestSpark.tmpDir("mode-history")
+    def deep(id: String, mode: WriteMode) =
+      cfg(id, mode).copy(maxDepth = 2, maxAccessCount = 20, hostBudgetPerRound = 4)
+    // a re-crawl sees half the pages with a newer lastModified
+    val changedCorpus = corpusDf.withColumn("lastModified",
+      when(pmod(xxhash64(col("doc_id")), lit(2)) === 1, col("lastModified") + 1)
+        .otherwise(col("lastModified")))
+    def run(id: String, mode: WriteMode, corpus: org.apache.spark.sql.DataFrame,
+        ts: Long): CrawlSession = {
+      val s = new CrawlSession(spark, deep(id, mode), corpus, robotsDf, dir,
+        () => new Timestamp(ts))
+      s.run(); s
+    }
+    def rows(s: CrawlSession) = s.docsTable.read()
+      .select(col("url"), col("lastModified"), col("@timestamp").cast("long"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    val first = rows(run("hist-default", WriteMode.Default, corpusDf, 1700000001000L))
+    val urls = first.map(_._1).toSet
+    assert(first.size == urls.size && urls.size > 2, "one doc per crawled page")
+    val lastMod = first.map(r => r._1 -> r._2).toMap
+    val newer = changedCorpus.select("doc_id", "lastModified").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val changed = urls.filter(u => newer(u) > lastMod(u))
+    assert(changed.nonEmpty && changed.size < urls.size, "both kinds are crawled")
+
+    // J2: unchanged docs are skipped, changed ones stored again
+    val inc = rows(run("hist-inc", WriteMode.Incremental, changedCorpus, 1700000002000L))
+    val added = inc.filter(_._3 == 1700000002L)
+    assert(inc.size == urls.size + changed.size)
+    assert(added.map(_._1).toSet == changed && added.size == changed.size)
+    assert(added.forall(r => r._2 == newer(r._1)))
+
+    // J3: the merge leaves one row per url, all from this session
+    val ow = run("hist-ow", WriteMode.Overwrite, changedCorpus, 1700000003000L)
+    val last = rows(ow)
+    assert(last.size == urls.size && last.map(_._1).toSet == urls)
+    assert(last.forall(r => r._3 == 1700000003L && r._2 == newer(r._1)))
+    assert(ow.docsTable.rowsOf(ow.docsTable.currentVersion) == urls.size,
+      "exact live accounting")
+    ow.cleanup()
   }
 
   test("docsAsJson serializes one JSON object per document, nulls omitted (F14)") {

@@ -121,24 +121,72 @@ class SeenSetSpec extends AnyFunSuite {
     def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong)).toDF("url", "urlHash")
     val broken = rows(100 until 110)
       .withColumn("url", raise_error(lit("boom")).cast("string"))
-    // with the hint the tombstone and segment writes overlap; without it
-    // they run one after the other
-    Seq(5L, -1L).foreach { hint =>
-      val dir = TestSpark.tmpDir("snap-fail")
-      val t = new SnapshotTable(dir, spark)
-      val (v0, _) = t.commitFull(rows(0 until 100))
-      intercept[Exception](t.commitDeltaTo(broken, rows(0 until 5), v0,
-        tombstoneRowsHint = hint))
-      assert(t.currentVersion == v0, s"hint $hint")
-      Seq("segments", "tombstones").foreach { kind =>
-        assert(!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, kind, (v0 + 1).toString)), s"hint $hint: $kind")
-      }
-      val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5), v0,
-        tombstoneRowsHint = hint)
-      assert(v1 == v0 + 1 && n1 == 105, s"hint $hint")
-      assert(t.readVersion(v1).select("url").collect().map(_.getString(0)).toSet ==
-        (5 until 110).map(i => s"u$i").toSet, s"hint $hint")
+    // the tombstone and segment writes overlap
+    val dir = TestSpark.tmpDir("snap-fail")
+    val t = new SnapshotTable(dir, spark)
+    val (v0, _) = t.commitFull(rows(0 until 100))
+    intercept[Exception](t.commitDeltaTo(broken, rows(0 until 5), v0))
+    assert(t.currentVersion == v0)
+    Seq("segments", "tombstones").foreach { kind =>
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, kind, (v0 + 1).toString)), kind)
+    }
+    val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5), v0)
+    assert(v1 == v0 + 1 && n1 == 105)
+    assert(t.readVersion(v1).select("url").collect().map(_.getString(0)).toSet ==
+      (5 until 110).map(i => s"u$i").toSet)
+    t.drop()
+  }
+
+  test("snapshot table: a compacting delta writes the batch once, beside a base of the survivors") {
+    import java.nio.file.{Files, Paths}
+    Seq(false, true).foreach { sequenced =>
+      val tag = if (sequenced) "sequenced" else "plain"
+      val dir = TestSpark.tmpDir("snap-compact-once")
+      val t = new SnapshotTable(dir, spark, sequenced = sequenced)
+      def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong)).toDF("url", "urlHash")
+      def urls(df: org.apache.spark.sql.DataFrame) =
+        df.select("url").collect().map(_.getString(0)).toSet
+      // two files, so a corrupt one fails the base write's scan task
+      // after the plan (and its footer-read schema) is built
+      val (v0, _) = t.commitFull(rows(0 until 20000).repartition(2))
+      val batch = rows(20000 until 20010)
+      val tombs = rows(0 until 6000) // > max(4096, 20000/4): compacts
+      val v = v0 + 1
+      val seg = Paths.get(dir, "segments", v.toString)
+      val base = Paths.get(dir, "segments", s"$v-base")
+      val tombDir = Paths.get(dir, "tombstones", v.toString)
+
+      // a write failure inside the compaction branch leaves no dir of v
+      val victim = new java.io.File(s"$dir/segments/$v0").listFiles().map(_.toPath)
+        .filter(_.getFileName.toString.endsWith(".parquet")).maxBy(_.toString)
+      val good = Files.readAllBytes(victim)
+      Files.write(victim, Array.fill[Byte](good.length)(7))
+      intercept[Exception](t.commitDeltaTo(batch, tombs, v0))
+      assert(t.currentVersion == v0, tag)
+      Seq(seg, base, tombDir).foreach(p => assert(!Files.exists(p), s"$tag: $p left"))
+      Files.write(victim, good)
+
+      val (v1, live) = t.commitDeltaTo(batch, tombs, v0)
+      assert(v1 == v && t.tombstonesOf(v1).isEmpty, s"$tag: compacted")
+      assert(!Files.exists(tombDir), tag)
+      assert(t.segmentsOf(v1).toSet == Set(s"$v-base", v.toString), tag)
+      // segment v is exactly the batch, and so is its metric
+      assert(t.metric(v1, "segmentRows").contains("10"), tag)
+      assert(urls(spark.read.parquet(seg.toString)) == urls(batch), tag)
+      assert(t.segmentRows(s"$v-base") == 14000, tag)
+      // parent − tombstones + batch
+      val want = (6000 until 20010).map(i => s"u$i").toSet
+      assert(live == want.size && t.rowsOf(v1) == want.size, tag)
+      assert(urls(t.readVersion(v1)) == want, tag)
+      // a seen-shaped table referencing segment v reads exactly the batch
+      import org.apache.spark.sql.types._
+      val seen = new SnapshotTable(TestSpark.tmpDir("snap-compact-ref"), spark)
+        .withReadSchema(StructType(Seq(
+          StructField("urlHash", LongType), StructField("url", StringType))))
+      val (_, n) = seen.commitAppendRef(seg.toString, -1L)
+      assert(n == 10 && urls(seen.read()) == urls(batch), tag)
+      seen.drop()
       t.drop()
     }
   }
@@ -197,7 +245,9 @@ class SeenSetSpec extends AnyFunSuite {
       rows(live + 90 until live + 100), rows(9000 until 23000), v)
     assert(t.tombstonesOf(vc).isEmpty, "compaction resets tombstones")
     assert(liveAfter == live + 100 - 23000)
-    assert(t.metric(vc, "segmentRows").get.toLong == liveAfter)
+    // the batch stays the delta segment; the survivors form the base
+    assert(t.metric(vc, "segmentRows").get.toLong == 10)
+    assert(t.segmentRows(s"$vc-base") + 10 == liveAfter)
     assert(t.readVersion(vc).count() == liveAfter)
     t.drop()
   }
@@ -243,16 +293,16 @@ class SeenSetSpec extends AnyFunSuite {
     val (w0, _) = t.commitFull(rows(0 until 20000))
     val (w1, _) = t.commitDeltaTo(rows(20000 until 20010), rows(0 until 4000), w0)
     // second delta crosses the tombstone threshold → compaction folds the
-    // live rows into ONE new segment; w0/w1 segments become garbage once
-    // their snapshots expire
+    // surviving parent rows into a base segment beside the delta; w0/w1
+    // segments become garbage once their snapshots expire
     val (w2, live) = t.commitDeltaTo(rows(20010 until 20020), rows(4000 until 8000), w1)
     assert(t.tombstonesOf(w2).isEmpty)
     val segsBefore = new java.io.File(s"$dir/segments").list().length
-    assert(segsBefore == 3)
+    assert(segsBefore == 4)
     // retain only the head: pre-compaction segments + metas go
     val (delSegs, _) = t.expireBefore(w2)
     assert(delSegs == 2, s"expected the 2 pre-compaction segments deleted, got $delSegs")
-    assert(new java.io.File(s"$dir/segments").list().length == 1)
+    assert(new java.io.File(s"$dir/segments").list().length == 2)
     assert(t.read().count() == live, "head snapshot unaffected")
     assert(t.rowsOf(t.currentVersion) == live)
     // extraRetain protects segments another table references

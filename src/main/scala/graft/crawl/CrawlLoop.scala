@@ -79,7 +79,7 @@ final class CrawlSession(
   // after the docs append but before the pointer flip re-runs the round,
   // duplicating Default-mode docs — the same semantics as re-running the
   // reference, whose ES sink has no idempotence key in default mode;
-  // Incremental re-runs are naturally deduped by the lastModified skip.)
+  // an Overwrite re-run replaces them, an Incremental one skips them.)
   private val checkpointPath =
     java.nio.file.Paths.get(s"$workDir/sessions/${config.sessionId}/round.json")
 
@@ -297,10 +297,10 @@ final class CrawlSession(
       val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
 
       // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
-      // persisted only for Overwrite, whose merge reads the extraction three
-      // times (matched count, url tombstones, replacement segment); Default
-      // and Incremental read it once, so the cache would be pure copy
-      // overhead there
+      // persisted only for Overwrite, whose merge reads the extraction twice
+      // (the replaced-row tombstones' semi-join and the replacement
+      // segment); Default and Incremental read it once, so the cache would
+      // be pure copy overhead there
       val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
         .drop("children")
         .withColumn("@timestamp", lit(clock()))
@@ -431,41 +431,42 @@ final class CrawlSession(
 
   /** Mode-aware document write (RiverWebTest semantics, SURVEY.md §2.1 S8 +
     * §2.3 J2/J3). The J2/J3 history reads use only `url` and
-    * `lastModified` of `docsTable.read()`: parquet column pruning reads
-    * those column chunks and the hidden `__seq` the sequenced merge-on-read
-    * needs, not the wide extracted columns.
-    */
-  /** `shape` re-applies the small-round single-file write layout to the
-    * tombstone/skip-join intermediates Overwrite/Incremental derive from
-    * `docs` — their distinct()/join shuffles otherwise fan the write back
-    * out to shuffle-partition-many near-empty files.
+    * `lastModified` of the docs table: parquet column pruning reads those
+    * column chunks and the hidden `__seq` the sequenced merge-on-read
+    * needs, not the wide extracted columns. `shape` re-applies the
+    * small-round single-file write layout to the tombstone/skip-join
+    * intermediates Overwrite/Incremental derive from `docs` — their join
+    * shuffles otherwise fan the write back out to shuffle-partition-many
+    * near-empty files.
     */
   private def writeDocs(docs: DataFrame,
       shape: DataFrame => DataFrame = identity): Long = {
-    val hasExisting = !docsTable.isEmpty && docsTable.rowsOf(docsTable.currentVersion) > 0
+    val parent = docsTable.currentVersion
+    val hasExisting = parent >= 0 && docsTable.rowsOf(parent) > 0
     config.mode match {
       case WriteMode.Default =>
         docsTable.commitAppend(docs)
       case WriteMode.Overwrite =>
         // J3: delete-by-url then insert = MERGE, committed as a sequenced
-        // delta (url tombstones + new segment) — O(batch) per round instead
-        // of the O(history) copy-on-write rewrite; SnapshotTable compacts
-        // once tombstones pass a quarter of the live rows. The deleted-row
-        // count keeps the live-row accounting exact.
+        // delta (tombstones + new segment) — O(batch) per round instead of
+        // the O(history) copy-on-write rewrite. The tombstones are the url
+        // of each live history row the batch replaces (a url stored twice
+        // is tombstoned twice, a new one not at all), so each deletes one
+        // row: the live count stays exact and compaction counts only real
+        // deletes. The history read runs inside the tombstone write,
+        // beside the segment write.
         if (!hasExisting) docsTable.commitAppend(docs)
         else {
-          val urls = shape(docs.select("url").distinct())
-          val matched = docsTable.read().select("url")
-            .join(urls, Seq("url"), "left_semi").count()
-          docsTable.commitDeltaTo(docs, urls, docsTable.currentVersion,
-            deletedRows = matched)
+          val replaced = docsTable.readVersion(parent).select("url")
+            .join(docs.select("url"), Seq("url"), "left_semi")
+          docsTable.commitDeltaTo(docs, shape(replaced), parent)
         }
       case WriteMode.Incremental =>
         // J2: skip docs whose lastModified is not newer than what's stored
         val fresh =
           if (!hasExisting) docs
           else {
-            val stored = docsTable.read()
+            val stored = docsTable.readVersion(parent)
               .groupBy(col("url").as("i_url"))
               .agg(max("lastModified").as("i_lastModified"))
             docs.join(stored, docs("url") === col("i_url"), "left")

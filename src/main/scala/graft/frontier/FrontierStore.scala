@@ -75,13 +75,14 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   private def metaPath(v: Long): Path =
     Paths.get(root, "snapshots", v.toString, "meta.json")
 
-  /** live segment dirs of snapshot v. */
+  /** live segment dirs of snapshot v (none before the first commit, v = -1). */
   def segmentsOf(v: Long): Seq[String] = listOf(v, "segments")
 
   /** tombstone segment dirs of snapshot v (rows anti-joined out on read). */
   def tombstonesOf(v: Long): Seq[String] = listOf(v, "tombstones")
 
   private def listOf(v: Long, key: String): Seq[String] = {
+    if (v < 0) return Seq.empty
     val json = Files.readString(metaPath(v))
     ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(json) match {
       case Some(m) =>
@@ -204,36 +205,21 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     // referenced files carry the WRITER's columns — they would lack this
     // table's __seq stamp and break the sequenced tombstone rule
     require(!sequenced, "commitAppendRef is incompatible with sequenced tables")
-    val prev = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-    val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
-    val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-    val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
-    commitManifest(absSegmentDir, metrics, appendTo = prev, prevRows = prevRows,
-      tombSegs = prevTombs, tombRows = prevTombRows)
+    commitManifest(absSegmentDir, metrics, appendTo = segmentsOf(parentVersion),
+      prevRows = rowsOf(parentVersion), tombSegs = tombstonesOf(parentVersion),
+      tombRows = tombRowsOf(parentVersion))
   }
 
   def commitFull(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) =
     commit(df, metrics, appendTo = Seq.empty, prevRows = 0L)
 
-  def commitAppend(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) =
-    commitAppendTo(df, currentVersion, metrics)
-
-  /** Append anchored at an EXPLICIT parent snapshot rather than the table's
-    * own head — the caller (CrawlSession) tracks the committed version in
-    * its round checkpoint, so an orphan snapshot left by a crash between a
-    * round's two table commits is ignored on resume instead of silently
-    * folded into the next append.
-    */
-  def commitAppendTo(df: DataFrame, parentVersion: Long,
-      metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    val prev = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-    val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
+  /** Append `df` on top of the table's head. */
+  def commitAppend(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) = {
+    val parent = currentVersion
     // carry the parent's tombstones forward — an append must not resurrect
     // logically deleted rows
-    val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-    val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
-    commit(df, metrics, appendTo = prev, prevRows = prevRows,
-      tombSegs = prevTombs, tombRows = prevTombRows)
+    commit(df, metrics, appendTo = segmentsOf(parent), prevRows = rowsOf(parent),
+      tombSegs = tombstonesOf(parent), tombRows = tombRowsOf(parent))
   }
 
   /** Delta transition anchored at `parentVersion`: `newRows` becomes data
@@ -256,21 +242,22 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * per claim). Reads between compactions stay broadcast-anti-join up to
     * [[broadcastTombRows]] tombstones and shuffled-anti-join beyond.
     *
-    * `deletedRows` — how many LIVE rows the tombstones actually match, for
-    * exact row accounting. Default -1 means "tombstones match 1:1" (the
-    * frontier claim case, where every tombstoned key exists exactly once);
-    * sequenced replace-style callers pass the measured count because a
-    * tombstoned key may match 0 (first write of a url) or several
-    * (Default-mode duplicate appends) live rows.
+    * Contract: every tombstone row deletes exactly ONE live row of the
+    * parent. The new live count is then parent − tombstone rows + segment
+    * rows, all read from footers, and the compaction trigger counts only
+    * real deletes. The frontier's claimed rows satisfy it (each url is in
+    * the frontier once); a replace-style caller on a sequenced table
+    * tombstones the key of each parent row it replaces, e.g.
+    * `readVersion(parent)` keys left-semi-joined with the batch — a key
+    * live twice is tombstoned twice, a new key not at all.
     */
   def commitDeltaTo(newRows: DataFrame, tombstones: DataFrame,
       parentVersion: Long,
-      metrics: Map[String, String] = Map.empty,
-      deletedRows: Long = -1L): (Long, Long) = {
+      metrics: Map[String, String] = Map.empty): (Long, Long) = {
     import org.apache.spark.sql.functions.broadcast
     val v = currentVersion + 1
-    val prevRows = if (parentVersion < 0) 0L else rowsOf(parentVersion)
-    val prevTombRows = if (parentVersion < 0) 0L else tombRowsOf(parentVersion)
+    val prevRows = rowsOf(parentVersion)
+    val prevTombRows = tombRowsOf(parentVersion)
     val tombDir = s"$root/tombstones/$v"
     val segDir = s"$root/segments/$v"
     val base = s"$v-base"
@@ -303,12 +290,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         commitManifest(v.toString, metrics, appendTo = Seq(base),
           prevRows = segmentRows(base), expectVersion = v)
       } else {
-        val prevSegs = if (parentVersion < 0) Seq.empty else segmentsOf(parentVersion)
-        val prevTombs = if (parentVersion < 0) Seq.empty else tombstonesOf(parentVersion)
-        val deleted = if (deletedRows >= 0) deletedRows else newTombRows
-        commitManifest(v.toString, metrics, appendTo = prevSegs,
-          prevRows = prevRows - deleted,
-          tombSegs = prevTombs :+ v.toString, tombRows = totalTomb,
+        commitManifest(v.toString, metrics, appendTo = segmentsOf(parentVersion),
+          prevRows = prevRows - newTombRows,
+          tombSegs = tombstonesOf(parentVersion) :+ v.toString, tombRows = totalTomb,
           expectVersion = v)
       }
     } catch { case NonFatal(e) if currentVersion < v =>

@@ -166,9 +166,11 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
   private def segmentBloom(seg: String): BloomFilter =
     table.readSegment(seg).stat.bloomFilter("urlHash", capacity, fpp)
 
-  // sidecar layout: version line, capacity line, segment list line, then the
-  // serialized filter. Best-effort on both ends — a missing/corrupt sidecar
-  // just means one rebuild scan.
+  // sidecar layout: version, capacity, segment count, one string per
+  // segment (a single joined string would pass writeUTF's 64 KiB cap after
+  // ~1,000 rounds of absolute ref paths), then the serialized filter.
+  // Best-effort on both ends — a missing/corrupt sidecar just means one
+  // rebuild scan.
   private def saveSidecar(): Unit =
     try {
       val tmp = java.nio.file.Paths.get(table.root, ".bloom.tmp")
@@ -177,7 +179,8 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
       try {
         out.writeLong(coveredVersion)
         out.writeLong(capacity)
-        out.writeUTF(coveredSegments.toSeq.sorted.mkString(","))
+        out.writeInt(coveredSegments.size)
+        coveredSegments.toSeq.sorted.foreach(out.writeUTF)
         filter.get.writeTo(out)
       } finally out.close()
       java.nio.file.Files.move(tmp, sidecar,
@@ -193,7 +196,7 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
       try {
         coveredVersion = in.readLong()
         capacity = in.readLong()
-        coveredSegments = in.readUTF().split(",").filter(_.nonEmpty).toSet
+        coveredSegments = Seq.fill(in.readInt())(in.readUTF()).toSet
         filter = Some(BloomFilter.readFrom(in))
       } finally in.close()
     } catch { case _: java.io.IOException =>

@@ -111,7 +111,7 @@ class SeenSetSpec extends AnyFunSuite {
     // parent snapshot unaffected (time travel ignores later tombstones)
     assert(t.readVersion(v0).count() == 100)
     // a plain append on top must carry the tombstones forward
-    val (v2, n2) = t.commitAppendTo(rows(110 until 115), v1)
+    val (v2, n2) = t.commitAppend(rows(110 until 115))
     assert(n2 == 110)
     assert(!t.readVersion(v2).select("url").collect().map(_.getString(0)).toSet.contains("u3"))
     t.drop()
@@ -350,7 +350,7 @@ class SeenSetSpec extends AnyFunSuite {
     val (v0, _) = t.commitFull(rows(0 until 50))
     // a later segment with an extra column: Spark's inference reads one
     // file's schema, and the footer read must pick the same one
-    val (v1, _) = t.commitAppendTo(rows(50 until 60).withColumn("x", lit("e")), v0)
+    val (v1, _) = t.commitAppend(rows(50 until 60).withColumn("x", lit("e")))
     val (v2, _) = t.commitDeltaTo(rows(60 until 70), rows(0 until 5).select("url", "urlHash"), v1)
     val reopened = new SnapshotTable(dir, spark)
     val read = TestSpark.traced(reopened.read())
@@ -391,14 +391,14 @@ class SeenSetSpec extends AnyFunSuite {
   test("snapshot table: sequenced deletes replace same-keyed rows (Iceberg sequence rule)") {
     val dir = TestSpark.tmpDir("snap-seq")
     val t = new SnapshotTable(dir, spark, sequenced = true)
-    def rows(ids: Range, tag: String) = ids.map(i => (s"u$i", tag)).toDF("url", "tag")
+    def rows(ids: Seq[Int], tag: String) = ids.map(i => (s"u$i", tag)).toDF("url", "tag")
     val (v0, n0) = t.commitAppend(rows(0 until 10, "old"))
     assert(n0 == 10)
     assert(!t.read().columns.contains("__seq"), "hidden seq column dropped on read")
     // replace u0..u4 in ONE commit: tombstone the urls AND insert new rows
     // for the same urls — the sequence rule keeps the fresh rows
     val (v1, n1) = t.commitDeltaTo(rows(0 until 5, "new"),
-      rows(0 until 5, "x").select("url"), v0, deletedRows = 5)
+      rows(0 until 5, "x").select("url"), v0)
     assert(n1 == 10, "5 deleted + 5 inserted")
     val byTag = t.readVersion(v1).collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
@@ -406,15 +406,26 @@ class SeenSetSpec extends AnyFunSuite {
     assert((0 until 5).forall(i => byTag(s"u$i") == "new"),
       "same-keyed NEW rows survive their own tombstone")
     assert((5 until 10).forall(i => byTag(s"u$i") == "old"))
-    // unmatched tombstone keys: live accounting via explicit deletedRows
-    val (v2, n2) = t.commitDeltaTo(rows(10 until 12, "new"),
-      Seq("u99").toDF("url"), v1, deletedRows = 0)
-    assert(n2 == 12 && t.readVersion(v2).count() == 12)
+    // J3-shaped merge: a batch whose keys match 0 (u10), 1 (u5) and 2 (u6,
+    // appended twice) live rows, tombstoned as the parent's keys semi-joined
+    // with the batch — one tombstone row per replaced row
+    val (v2, _) = t.commitAppend(rows(6 until 7, "dup"))
+    assert(t.rowsOf(v2) == 11)
+    val batch = rows(Seq(5, 6, 10), "merge")
+    val replaced = t.readVersion(v2).select("url")
+      .join(batch.select("url"), Seq("url"), "left_semi")
+    val (v3, n3) = t.commitDeltaTo(batch, replaced, v2)
+    assert(t.tombRowsOf(v3) - t.tombRowsOf(v2) == 3, "u5 once, u6 twice")
+    assert(n3 == 11 - 3 + 3 && t.rowsOf(v3) == t.readVersion(v3).count())
+    val merged = t.readVersion(v3).collect().map(r => (r.getString(0), r.getString(1)))
+    assert(merged.count(_._1 == "u6") == 1 && merged.toMap.apply("u6") == "merge")
+    assert(merged.toMap.apply("u10") == "merge" && merged.toMap.apply("u5") == "merge")
     // append on top carries sequenced tombstones forward without resurrecting
-    val (v3, _) = t.commitAppendTo(rows(20 until 22, "app"), v2)
-    val tags = t.readVersion(v3).collect()
+    val (v4, _) = t.commitAppend(rows(20 until 22, "app"))
+    val tags = t.readVersion(v4).collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
-    assert(tags("u0") == "new" && tags("u20") == "app" && tags.size == 14)
+    assert(tags("u0") == "new" && tags("u20") == "app" && tags.size == 13)
+    assert(t.rowsOf(v4) == t.readVersion(v4).count())
     t.drop()
   }
 
@@ -424,12 +435,12 @@ class SeenSetSpec extends AnyFunSuite {
     def seenRows(ids: Range) = ids.map { i =>
       val u = s"http://h/$i"; (u, UrlOps.urlHash(u))
     }.toDF("url", "urlHash")
-    val (v0, _) = t.commitAppendTo(seenRows(0 until 500), -1L)
+    val (v0, _) = t.commitAppend(seenRows(0 until 500))
     val bloom0 = new IncrementalSeenBloom(t)
     val f0 = bloom0.forVersion(v0, 500)
     assert((0 until 500).forall(i => f0.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
     // append a segment; advance must cover the new urls (merge, not rebuild)
-    val (v1, _) = t.commitAppendTo(seenRows(500 until 600), v0)
+    val (v1, _) = t.commitAppend(seenRows(500 until 600))
     val f1 = bloom0.forVersion(v1, 600)
     assert((0 until 600).forall(i => f1.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
     // a FRESH instance reloads the persisted sidecar instead of rescanning:
@@ -439,14 +450,37 @@ class SeenSetSpec extends AnyFunSuite {
     assert((0 until 600).forall(i => f2.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
     // a round can add ZERO new urls — advancing over the empty segment must
     // not crash (stat.bloomFilter NPEs on empty input) nor lose coverage
-    val (vEmpty, _) = t.commitAppendTo(seenRows(0 until 0), v1)
+    val (vEmpty, _) = t.commitAppend(seenRows(0 until 0))
     val fEmpty = bloom1.forVersion(vEmpty, 600)
     assert((0 until 600).forall(i => fEmpty.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
     // growth past the capacity (max(4×rows, 2^16) at build time) rebuilds —
     // coverage must hold through the rebuild too
-    val (v2, _) = t.commitAppendTo(seenRows(600 until 70000), vEmpty)
+    val (v2, _) = t.commitAppend(seenRows(600 until 70000))
     val f3 = bloom1.forVersion(v2, 70000)
     assert((0 until 70000 by 7).forall(i => f3.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
+    t.drop()
+  }
+
+  test("incremental seen bloom: a segment list past 64 KiB still saves and reloads the sidecar") {
+    import org.apache.spark.sql.types._
+    val dir = TestSpark.tmpDir("snap-bloom-long")
+    val ext = TestSpark.tmpDir("snap-bloom-long-ext")
+    val t = new SnapshotTable(dir, spark).withReadSchema(StructType(Seq(
+      StructField("urlHash", LongType), StructField("url", StringType))))
+    Seq.tabulate(50)(i => (UrlOps.urlHash(s"http://h/$i"), s"http://h/$i"))
+      .toDF("urlHash", "url").write.parquet(s"$ext/a")
+    val (v0, rows) = t.commitAppendRef(s"$ext/a", -1L)
+    // ~100 rounds that added no url, under a ~700-character work dir
+    val deep = Seq.fill(3)("d" * 230).mkString(s"$ext/", "/", "")
+    val v = (0 until 100).foldLeft(v0) { (parent, i) =>
+      val empty = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(f"$deep/e$i%03d"))
+      t.commitAppendRef(empty.toString, parent)._1
+    }
+    assert(t.segmentsOf(v).mkString(",").getBytes("UTF-8").length > 65535)
+    new IncrementalSeenBloom(t).forVersion(v, rows)
+    val reloaded = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v, rows))
+    assert(reloaded.jobs.isEmpty, "a fresh instance loads the sidecar instead of rescanning")
+    assert((0 until 50).forall(i => reloaded.result.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
     t.drop()
   }
 }

@@ -208,9 +208,10 @@ final class CrawlSession(
     val remaining = config.maxAccessCount - processed
     if (frontierRows == 0 || remaining <= 0) return None
 
-    // what the round caches, released on every exit — a failed round too
+    // what the round caches, released on every exit — a failed round too;
+    // the docs commit's thread registers its cache here as well
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { cached += df; df.persist() }
+    def cache(df: DataFrame): DataFrame = { cached.synchronized(cached += df); df.persist() }
     var docsF = scala.concurrent.Future.successful(0L)
     try {
       val frontier = frontierTable.readVersion(v)
@@ -229,12 +230,29 @@ final class CrawlSession(
       // remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows ≤
       // remaining) — skip the TakeOrdered stage those rounds pay for nothing
       val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
-      val claimed = cache(delayBudgets
+      val claim = delayBudgets
         .map(b => Politeness.claimWithHostBudgets(
           frontier, config.hostBudgetPerRound, b, capRemaining))
         .getOrElse(Politeness.claim(frontier, config.hostBudgetPerRound,
-          capRemaining)))
-      val claimedCount = claimed.count()
+          capRemaining))
+      // The claim is a subset of the frontier and of the budget, so
+      // min(frontierRows, remaining) — both from the manifest — bounds it
+      // with no job. Under the gate the claim is ONE collect, ending at the
+      // window's own result stage, and comes back as a LocalRelation: the
+      // fetch join broadcasts it, the tombstones write it, and the claim
+      // order sorts it on the driver, with no cache and no count stages.
+      // Above the gate the claim stays a cached frame counted once: a large
+      // round is bound by its data, not by this action, and collecting it
+      // would move up to FetchBroadcastMaxRows rows through the driver.
+      val (claimed, claimedCount, claimRows) =
+        if (math.min(frontierRows, remaining) <= SmallWriteRows) {
+          val rows = claim.collect()
+          (spark.createDataFrame(java.util.Arrays.asList(rows: _*), claim.schema),
+            rows.length.toLong, Some(rows))
+        } else {
+          val c = cache(claim)
+          (c, c.count(), None)
+        }
       if (claimedCount == 0) return None
       // Small rounds write ONE file per snapshot instead of shuffle-partition
       // many near-empty ones: parquet task-commit overhead dominates
@@ -242,9 +260,6 @@ final class CrawlSession(
       // partitions). repartition(1) — not coalesce — keeps the upstream
       // anti-join/extraction stages parallel and serializes only the write
       // task. Above the gate the parallel multi-file write is untouched.
-      // The new-entries segment is gated 16× tighter: its row count is
-      // claim × branching factor, so a claim-sized gate could serialize a
-      // write 100× larger than intended.
       val smallRound = claimedCount <= SmallWriteRows
       def writeShape(df: DataFrame): DataFrame =
         if (smallRound) df.repartition(1) else df
@@ -297,26 +312,29 @@ final class CrawlSession(
       val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
 
       // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
-      // persisted only for Overwrite, whose merge reads the extraction twice
-      // (the replaced-row tombstones' semi-join and the replacement
-      // segment); Default and Incremental read it once, so the cache would
-      // be pure copy overhead there
-      val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
-        .drop("children")
-        .withColumn("@timestamp", lit(clock()))
-      val docs =
-        if (config.mode == WriteMode.Overwrite) cache(docs0) else docs0
       // The docs-table commit touches only docsTable — fully
       // independent of the frontier/seen transition below — so it runs
       // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
       // sequential because the driver calls them sequentially); its tasks
       // back-fill executor slots left idle by the children DAG's stage
-      // tails. The round checkpoint still flips only after BOTH commits are
-      // durable, and a docs failure aborts the round before the flip, so
-      // crash semantics are unchanged (frontier/seen snapshots without a
-      // checkpoint are resume-ignored orphans by design).
+      // tails, and the docs plan is built and analysed there too, while
+      // this thread plans the children DAG. The round checkpoint still
+      // flips only after BOTH commits are durable, and a docs failure
+      // aborts the round before the flip, so crash semantics are unchanged
+      // (frontier/seen snapshots without a checkpoint are resume-ignored
+      // orphans by design).
+      val stamp = clock()
       docsF = scala.concurrent.Future {
-        writeDocs(writeShape(docs), writeShape)
+        val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
+          .drop("children")
+          .withColumn("@timestamp", lit(stamp))
+        // persisted only for Overwrite, whose merge reads the extraction
+        // twice (the replaced-row tombstones' semi-join and the replacement
+        // segment); Default and Incremental read it once, so the cache
+        // would be pure copy overhead there
+        val docs =
+          if (config.mode == WriteMode.Overwrite) cache(docs0) else docs0
+        writeDocs(docs, writeShape)
       }(CrawlSession.docsCommitEc)
 
       // --- children (X5 + S6 sitemaps + redirect remap) → J1 anti-join ---------
@@ -388,8 +406,9 @@ final class CrawlSession(
       val newProcessed = processed + claimedCount
       val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
         fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
-        // tombstones read the persisted claim cache — coalesce merges the
-        // tiny cache-scan tasks without repartition(1)'s extra exchange
+        // tombstones read the collected claim (or, above the gate, its
+        // cache) — coalesce merges the tiny scan tasks without
+        // repartition(1)'s extra exchange
         fanoutShape(claimed.select("urlHash", "url")), v, Map(
           "round" -> (round + 1).toString,
           "processed" -> newProcessed.toString,
@@ -408,18 +427,17 @@ final class CrawlSession(
       // new-URL count comes free from the seen-commit's segment metric
       val newUrls = seenTable.metric(newSv, "segmentRows").map(_.toLong).getOrElse(0L)
 
-      // round claim order for parity tests (small: ≤ claim batch)
+      // round claim order for parity tests, sorted on the driver: a small
+      // round sorts the rows its claim collected and runs no Spark job
       val order =
-        if (!recordOrder) Array.empty[(String, Int)]
-        else claimed
-          .orderBy(col("depth"), col("urlHash"), col("url"))
-          .select("url", "depth").collect()
-          .map(r => (r.getString(0), r.getInt(1)))
+        if (!recordOrder) Seq.empty[(String, Int)]
+        else claimOrder(claimRows.getOrElse(
+          claimed.select("url", "depth", "urlHash").collect()).toSeq)
 
       log(s"round ${round + 1}: claimed=$claimedCount docs=$docsWritten " +
         s"new=$newUrls frontier=$frontierLeft seen=$seenTotal processed=$newProcessed")
       Some(RoundResult(round + 1, claimedCount, docsWritten, newUrls,
-        frontierLeft, seenTotal, newProcessed, order.toSeq))
+        frontierLeft, seenTotal, newProcessed, order))
     } catch { case scala.util.control.NonFatal(e) =>
       // the docs commit may still be scanning `fetched` and `docs`: let it
       // end before they are released (its own failure is secondary)
@@ -433,11 +451,11 @@ final class CrawlSession(
     * §2.3 J2/J3). The J2/J3 history reads use only `url` and
     * `lastModified` of the docs table: parquet column pruning reads those
     * column chunks and the hidden `__seq` the sequenced merge-on-read
-    * needs, not the wide extracted columns. `shape` re-applies the
-    * small-round single-file write layout to the tombstone/skip-join
-    * intermediates Overwrite/Incremental derive from `docs` — their join
-    * shuffles otherwise fan the write back out to shuffle-partition-many
-    * near-empty files.
+    * needs, not the wide extracted columns. `docs` arrives unshaped:
+    * `shape` (the small-round single-file write layout) applies only to
+    * what is written — the batch segment, the Overwrite tombstones and the
+    * Incremental survivors — so the joins that read `docs` see the batch
+    * without a layout exchange of its own.
     */
   private def writeDocs(docs: DataFrame,
       shape: DataFrame => DataFrame = identity): Long = {
@@ -445,7 +463,7 @@ final class CrawlSession(
     val hasExisting = parent >= 0 && docsTable.rowsOf(parent) > 0
     config.mode match {
       case WriteMode.Default =>
-        docsTable.commitAppend(docs)
+        docsTable.commitAppend(shape(docs))
       case WriteMode.Overwrite =>
         // J3: delete-by-url then insert = MERGE, committed as a sequenced
         // delta (tombstones + new segment) — O(batch) per round instead of
@@ -455,11 +473,11 @@ final class CrawlSession(
         // row: the live count stays exact and compaction counts only real
         // deletes. The history read runs inside the tombstone write,
         // beside the segment write.
-        if (!hasExisting) docsTable.commitAppend(docs)
+        if (!hasExisting) docsTable.commitAppend(shape(docs))
         else {
           val replaced = docsTable.readVersion(parent).select("url")
             .join(docs.select("url"), Seq("url"), "left_semi")
-          docsTable.commitDeltaTo(docs, shape(replaced), parent)
+          docsTable.commitDeltaTo(shape(docs), shape(replaced), parent)
         }
       case WriteMode.Incremental =>
         // J2: skip docs whose lastModified is not newer than what's stored
@@ -570,6 +588,18 @@ object CrawlSession {
     * — no extra job either way.
     */
   private[graft] val AutoBloomMinItems = 1048576L
+
+  /** `(url, depth)` of claim rows in canonical crawl order, as Spark's
+    * `orderBy(depth, urlHash, url)` sorts them: `urlHash` as a signed long,
+    * `url` by its UTF-8 bytes (not by Java's UTF-16 `compareTo`).
+    */
+  private[graft] def claimOrder(rows: Seq[org.apache.spark.sql.Row]): Seq[(String, Int)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    implicit val utf8Order: Ordering[UTF8String] = (a, b) => a.compareTo(b)
+    rows.map(r => (r.getAs[Int]("depth"), r.getAs[Long]("urlHash"), r.getAs[String]("url")))
+      .sortBy { case (d, h, u) => (d, h, UTF8String.fromString(u)) }
+      .map { case (d, _, u) => (u, d) }
+  }
 
   /** fetch join with a size-gated broadcast hint on the claim batch. */
   private[graft] def fetchJoin(corpus: DataFrame, claimed: DataFrame,

@@ -103,7 +103,11 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
-  test("a steady-state round runs no schema-inference job and at most 18 Spark jobs") {
+  /** jobs started by the claim's `count()` (the cached claim path). */
+  def claimCountJobs(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
+    jobs.filter(_.stageInfos.exists(_.name.startsWith("count at CrawlLoop.scala")))
+
+  test("a steady-state round runs no schema-inference job and at most 14 Spark jobs") {
     val session = new CrawlSession(spark, baseConfig("round-jobs"), corpusDf,
       robotsDf.toDF(), TestSpark.tmpDir("crawl-round-jobs"))
     session.init()
@@ -116,18 +120,23 @@ class CrawlParitySpec extends AnyFunSuite {
       j.stageInfos.exists(_.name.contains("FrontierStore.scala")))
     assert(inference.isEmpty,
       s"jobs outside any SQL execution: ${inference.flatMap(_.stageInfos.map(_.name))}")
-    // measured: 18 jobs for this round on this corpus
-    assert(t.jobs.size <= 18,
+    // a small frontier's claim is one collect: no cache, no count stages,
+    // and the claim order is sorted on the driver
+    assert(claimCountJobs(t.jobs).isEmpty, "the small claim ran a count")
+    assert(t.queries.size == 4, s"${t.queries.size} SQL actions")
+    // measured: 12-13 jobs for this round on this corpus (17-18 with a
+    // cached and counted claim and a Spark-sorted claim order)
+    assert(t.jobs.size <= 14,
       s"${t.jobs.size} jobs: ${t.jobs.map(_.stageInfos.map(_.name).mkString("+"))}")
     session.cleanup()
   }
 
-  test("steady-state Overwrite and Incremental rounds: no docs side index, at most 27 and 21 Spark jobs") {
-    // measured on this corpus: Overwrite 23-26 jobs in 6 SQL actions (28-29
-    // in 7 with a separate replaced-row count), Incremental 20-21 in 5 (with
-    // a side index: 33-34 in 9, 22-23 in 6); a round's job count varies
-    // with AQE, its SQL actions do not
-    Seq((WriteMode.Overwrite, 27, 6), (WriteMode.Incremental, 21, 5)).foreach {
+  test("steady-state Overwrite and Incremental rounds: no docs side index, at most 21 and 16 Spark jobs") {
+    // measured on this corpus: Overwrite 17-20 jobs in 5 SQL actions,
+    // Incremental 14-15 in 4 (with a cached, counted claim and a
+    // Spark-sorted claim order: 23-26 in 6 and 20-21 in 5); a round's job
+    // count varies with AQE, its SQL actions do not
+    Seq((WriteMode.Overwrite, 21, 5), (WriteMode.Incremental, 16, 4)).foreach {
       case (mode, maxJobs, sqlActions) =>
         val dir = TestSpark.tmpDir(s"crawl-round-jobs-$mode")
         val session = new CrawlSession(spark, baseConfig(s"round-jobs-$mode")
@@ -325,6 +334,59 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(seenOf(s2) == oracle.seen, "gc kept the frontier segments seen refers to")
     assert(s2.frontierTable.read().count() == frontierLeft, "gc kept the base segment")
     s2.cleanup()
+  }
+
+  test("a frontier above the small-claim gate takes the cached claim and keeps oracle parity") {
+    // the gate reads min(frontierRows, remaining): ~9,000 seeds and a budget
+    // above it put both past SmallWriteRows; the session is cut after two
+    // rounds instead, and the oracle is capped at the pages they claimed
+    val lgBuilder = SyntheticCorpus.Builder(n = 10000, hostCount = 40)
+    val lgCorpus = lgBuilder.corpus(spark)
+    val lgPages = lgCorpus.collect().map(p => p.doc_id -> p).toMap
+    val lgRobots = lgBuilder.robots(spark)
+    val lgRobotsMap = lgRobots.collect().map(r => r.host -> r.disallow_prefixes).toMap
+    val cdf = SyntheticCorpus.zipfCdf(40, 1.1)
+    def seed(i: Long) = UrlOps.canonicalize(
+      SyntheticCorpus.urlOf(i, SyntheticCorpus.hostOfDoc(i, 42L, cdf)))
+    val cfg = CrawlConfig(
+      sessionId = "large-frontier",
+      seeds = (0L until 9000L).map(seed),
+      maxDepth = 3, maxAccessCount = 20000, hostBudgetPerRound = 4,
+      rules = Seq(ScrapingRule(".*/page/.*", properties = Seq(
+        PropertyRule("title", SpanText("title"), trimSpaces = true)))))
+    val dir = TestSpark.tmpDir("crawl-large-frontier")
+    val session = new CrawlSession(spark, cfg, lgCorpus.toDF(), lgRobots.toDF(), dir)
+    session.init()
+    val ft = session.frontierTable
+    assert(ft.rowsOf(ft.currentVersion) > CrawlSession.SmallWriteRows)
+    val r1 = session.runRound().get
+    val t = TestSpark.traced(session.runRound())
+    val r2 = t.result.get
+    assert(claimCountJobs(t.jobs).nonEmpty, "the large frontier's claim was not counted")
+    val claimed = r1.claimed + r2.claimed
+    val oracle = Oracle.crawl(lgPages, lgRobotsMap, cfg.copy(maxAccessCount = claimed))
+    val order = Seq(r1, r2).flatMap(_.claimOrder)
+    assert(order == oracle.crawlOrder,
+      s"order diverged at ${order.zip(oracle.crawlOrder).indexWhere(p => p._1 != p._2)}")
+    val seen = session.seenTable.read().select("url").collect().map(_.getString(0)).toSet
+    assert(seen == oracle.seen)
+    assert(claimed == oracle.processed)
+    session.cleanup()
+  }
+
+  test("the driver-side claim order sorts like Spark's orderBy(depth, urlHash, url)") {
+    import spark.implicits._
+    // signed hashes, equal keys broken by url, and urls whose UTF-16 order
+    // differs from their UTF-8 byte order (U+FF5E vs U+1F600)
+    val rows = Seq(
+      ("http://a/～", 1, 5L), ("http://a/😀", 1, 5L),
+      ("http://b/", 0, -3L), ("http://c/", 0, 7L), ("http://a/", 1, 5L),
+      ("http://d/", 1, Long.MinValue), ("http://e/", 2, -1L))
+    val df = rows.toDF("url", "depth", "urlHash")
+    val sparkOrder = df.orderBy("depth", "urlHash", "url").select("url", "depth")
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(CrawlSession.claimOrder(df.collect().toSeq) == sparkOrder)
+    assert(sparkOrder.take(2) == Seq(("http://b/", 0), ("http://c/", 0)))
   }
 }
 

@@ -370,12 +370,8 @@ object SparkEntry {
   private val scaffoldCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
 
-  /** Copy a workdir tree AND re-root it: snapshot manifests may carry
-    * ABSOLUTE shared-segment refs (seen → frontier delta segments,
-    * `FrontierStore.commitAppendRef`) pointing inside `src`; rewriting
-    * those in the copied *.json metadata makes the copy self-contained —
-    * otherwise both mode queries would silently keep reading segment data
-    * out of the scaffold temp dir (and break if it is ever reaped).
+  /** Copy a workdir tree (snapshot metadata names segments relative to
+    * its table root, so the copy is self-contained).
     */
   private def copyTree(src: String, dst: String): Unit = {
     val sp = java.nio.file.Paths.get(src)
@@ -384,9 +380,6 @@ object SparkEntry {
     try walk.forEach { p =>
       val t = dp.resolve(sp.relativize(p))
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else if (p.getFileName.toString.endsWith(".json"))
-        java.nio.file.Files.writeString(t,
-          java.nio.file.Files.readString(p).replace(src, dst))
       else java.nio.file.Files.copy(p, t,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } finally walk.close()

@@ -16,7 +16,7 @@ import graft.model._
   *   claim (politeness windows, W1/W2) → fetch = frontier⋈corpus (J4, S5)
   *   → extract (P3-P9, F1-F9, A1, X4) → children (X5, U2/U3)
   *   → canonicalize-hash-dedup (F13 + J1 bloom-prefiltered exact anti-join)
-  *   → mode-aware doc write (S8, J2/J3) + frontier/seen snapshot commits.
+  *   → mode-aware doc write (S8, J2/J3) + frontier snapshot commit.
   *
   * All state crosses rounds through [[SnapshotTable]] commits, so a crawl
   * resumes from its latest manifest (Z6) and every round's plan starts from
@@ -51,50 +51,48 @@ final class CrawlSession(
   // session-scoped working state vs shared output index (Z6: the reference
   // keys queue/filter state by sessionId but writes docs to one target index)
   val frontierTable = new SnapshotTable(s"$workDir/sessions/${config.sessionId}/frontier", spark)
-  // narrowed read schema: the seen table REFERENCES the frontier's
-  // new-entries segments (commitAppendRef) instead of rewriting the same
-  // rows — each round's new URLs are written once; the parquet reader
-  // prunes the frontier's extra columns by name
-  val seenTable = new SnapshotTable(s"$workDir/sessions/${config.sessionId}/seen", spark)
-    .withReadSchema(org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("urlHash",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("url",
-        org.apache.spark.sql.types.StringType))))
   // sequenced: Overwrite-mode merges commit as sequence-aware equality
   // deletes (tombstone old rows for re-crawled urls + append the new rows)
   // instead of rewriting the whole docs history every round
   val docsTable = new SnapshotTable(s"$workDir/docs", spark, sequenced = true)
   // incrementally merged seen-set bloom router (O(new URLs) per round
   // instead of an O(|seen|) stat.bloomFilter rebuild)
-  private val seenBloom = new IncrementalSeenBloom(seenTable)
+  private val seenBloom = new IncrementalSeenBloom(frontierTable)
+
+  /** The URL-seen set (J1), read-only: the frontier's append log at the
+    * checkpointed version — the seed segment and every round's new-entries
+    * segment, no tombstones applied — so every url ever enqueued, once.
+    */
+  object seenTable {
+    def read(): DataFrame = seenAt(readCheckpoint().getOrElse(-1L))
+  }
+
+  private def seenAt(v: Long): DataFrame =
+    frontierTable.readSegments(frontierTable.appendedOf(v)).select("urlHash", "url")
 
   // --- round checkpoint: the ATOMIC commit point of a round ----------------
-  // A round writes two snapshots (frontier transition + seen growth); the
-  // round only "happens" when this pointer flips (atomic rename), exactly
-  // like an Iceberg multi-table transaction commit. A crash between the two
-  // table commits leaves orphan snapshots that resume IGNORES, because all
-  // reads and appends anchor on the checkpointed versions, never on the
-  // tables' own heads. (Docs are the one at-least-once surface: a crash
-  // after the docs append but before the pointer flip re-runs the round,
-  // duplicating Default-mode docs — the same semantics as re-running the
-  // reference, whose ES sink has no idempotence key in default mode;
-  // an Overwrite re-run replaces them, an Incremental one skips them.)
+  // A round commits the frontier transition and the docs; the round only
+  // "happens" when this pointer flips (atomic rename), after both commits
+  // are durable. A crash before the flip leaves an orphan frontier snapshot
+  // that resume IGNORES, because all reads and appends anchor on the
+  // checkpointed version, never on the table's own head. (Docs are the one
+  // at-least-once surface: a crash after the docs append but before the
+  // pointer flip re-runs the round, duplicating Default-mode docs — the
+  // same semantics as re-running the reference, whose ES sink has no
+  // idempotence key in default mode; an Overwrite re-run replaces them, an
+  // Incremental one skips them.)
   private val checkpointPath =
     java.nio.file.Paths.get(s"$workDir/sessions/${config.sessionId}/round.json")
 
-  private def readCheckpoint(): Option[(Long, Long)] =
+  private def readCheckpoint(): Option[Long] =
     if (!java.nio.file.Files.exists(checkpointPath)) None
-    else {
-      val json = java.nio.file.Files.readString(checkpointPath)
-      def num(k: String) =
-        ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json).map(_.group(1).toLong)
-      for (f <- num("frontier"); s <- num("seen")) yield (f, s)
-    }
+    else "\"frontier\"\\s*:\\s*(-?\\d+)".r
+      .findFirstMatchIn(java.nio.file.Files.readString(checkpointPath))
+      .map(_.group(1).toLong)
 
-  private def writeCheckpoint(frontierV: Long, seenV: Long): Unit = {
+  private def writeCheckpoint(frontierV: Long): Unit = {
     val tmp = java.nio.file.Paths.get(s"$checkpointPath.tmp")
-    java.nio.file.Files.writeString(tmp, s"""{"frontier": $frontierV, "seen": $seenV}""")
+    java.nio.file.Files.writeString(tmp, s"""{"frontier": $frontierV}""")
     java.nio.file.Files.move(tmp, checkpointPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -176,9 +174,9 @@ final class CrawlSession(
         col("dp.depth").as("depth"), col("dp.parentUrl").as("parentUrl"))
   }
 
-  /** Seed the frontier + seen set (round 0). Idempotent: no-op on resume
-    * (checkpoint present); orphan snapshots from a crash mid-init are
-    * ignored because the checkpoint never pointed at them.
+  /** Seed the frontier, and so the seen set (round 0). Idempotent: no-op
+    * on resume (checkpoint present); orphan snapshots from a crash mid-init
+    * are ignored because the checkpoint never pointed at them.
     */
   def init(): Unit = {
     if (readCheckpoint().isDefined) return
@@ -190,10 +188,7 @@ final class CrawlSession(
       if (config.seeds.size <= SmallWriteRows) cand0.repartition(1) else cand0
     val (fv, n) = frontierTable.commitFull(cand,
       Map("round" -> "0", "processed" -> "0", "kind" -> "seed"))
-    // the seed rows are written once — the seen table references them
-    val (sv, _) = seenTable.commitAppendRef(
-      s"${frontierTable.root}/segments/$fv", -1L, Map("round" -> "0"))
-    writeCheckpoint(fv, sv)
+    writeCheckpoint(fv)
     log(s"seeded frontier: $n urls")
   }
 
@@ -201,7 +196,7 @@ final class CrawlSession(
     * complete (empty frontier or access budget exhausted, Z4/Z5).
     */
   def runRound(): Option[RoundResult] = {
-    val (v, seenV) = readCheckpoint().getOrElse(return None)
+    val v = readCheckpoint().getOrElse(return None)
     val round = frontierTable.metric(v, "round").map(_.toInt).getOrElse(0)
     val processed = frontierTable.metric(v, "processed").map(_.toLong).getOrElse(0L)
     val frontierRows = frontierTable.rowsOf(v)
@@ -215,8 +210,10 @@ final class CrawlSession(
     var docsF = scala.concurrent.Future.successful(0L)
     try {
       val frontier = frontierTable.readVersion(v)
-      val seenCount = if (seenV < 0) 0L else seenTable.rowsOf(seenV)
-      val seen = if (seenCount == 0) null else seenTable.readVersion(seenV)
+      // every claimed row is tombstoned exactly once (the commitDeltaTo
+      // contract), so the append log holds the live frontier plus every
+      // page processed
+      val seenCount = frontierRows + processed
 
       // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
       val delayBudgets =
@@ -313,7 +310,7 @@ final class CrawlSession(
 
       // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
       // The docs-table commit touches only docsTable — fully
-      // independent of the frontier/seen transition below — so it runs
+      // independent of the frontier transition below — so it runs
       // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
       // sequential because the driver calls them sequentially); its tasks
       // back-fill executor slots left idle by the children DAG's stage
@@ -321,8 +318,8 @@ final class CrawlSession(
       // this thread plans the children DAG. The round checkpoint still
       // flips only after BOTH commits are durable, and a docs failure
       // aborts the round before the flip, so crash semantics are unchanged
-      // (frontier/seen snapshots without a checkpoint are resume-ignored
-      // orphans by design).
+      // (a frontier snapshot without a checkpoint is a resume-ignored
+      // orphan by design).
       val stamp = clock()
       docsF = scala.concurrent.Future {
         val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
@@ -367,16 +364,14 @@ final class CrawlSession(
       // from building a filter of its own).
       val bloom =
         if (seenCount >= AutoBloomMinItems && seenCount <= SeenSet.MaxBloomItems)
-          Some(seenBloom.forVersion(seenV, seenCount))
+          Some(seenBloom.forVersion(v, seenCount))
         else None
       // persisted only for the bloom route, whose two branches each scan it
       // (definitely-new ∪ maybe-seen anti-join); the exact route reads it
       // once, straight through the dedup's exchange
       val cand = if (bloom.isDefined) cache(raw) else raw
-      val newEntries =
-        if (seen == null) cand
-        else SeenSet.filterNew(cand, seen, seenCount, maxBloomItems = 0L,
-          prebuiltBloom = bloom)
+      val newEntries = SeenSet.filterNew(cand, seenAt(v), seenCount,
+        maxBloomItems = 0L, prebuiltBloom = bloom)
 
       // The new-entries write keys its single-file gate on the CLAIM count
       // (the segment write itself is the one materialization — the previous
@@ -398,11 +393,13 @@ final class CrawlSession(
       def fanoutShape(df: DataFrame): DataFrame =
         if (smallRound) df.coalesce(1) else df
 
-      // --- frontier transition + seen growth (S3 snapshot-atomic claim) -------
+      // --- frontier transition (S3 snapshot-atomic claim) ---------------------
       // delta commit: append the new entries, tombstone the claimed rows —
       // O(claim + new) write instead of rewriting the whole frontier
       // (SnapshotTable compacts the parent's survivors into a base segment
-      // once tombstones accumulate)
+      // once tombstones accumulate). Segment newFv is exactly newEntries,
+      // compaction or not, and joins the append log: it IS the seen set's
+      // growth, written once.
       val newProcessed = processed + claimedCount
       val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
         fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
@@ -413,19 +410,13 @@ final class CrawlSession(
           "round" -> (round + 1).toString,
           "processed" -> newProcessed.toString,
           "claimed" -> claimedCount.toString))
-      // frontier segment newFv IS exactly newEntries, compaction or not —
-      // the seen table references those files instead of writing the rows
-      // again (halves per-round new-URL write bytes)
-      val (newSv, seenTotal) = seenTable.commitAppendRef(
-        s"${frontierTable.root}/segments/$newFv", seenV,
-        Map("round" -> (round + 1).toString))
+      val newUrls = frontierTable.metric(newFv, "segmentRows").map(_.toLong).getOrElse(0L)
+      val seenTotal = frontierLeft + newProcessed
       // both commits must be durable before the round becomes visible
       val docsWritten = scala.concurrent.Await.result(
         docsF, scala.concurrent.duration.Duration.Inf)
-      // the round becomes visible HERE — one atomic rename for both tables
-      writeCheckpoint(newFv, newSv)
-      // new-URL count comes free from the seen-commit's segment metric
-      val newUrls = seenTable.metric(newSv, "segmentRows").map(_.toLong).getOrElse(0L)
+      // the round becomes visible HERE — one atomic rename
+      writeCheckpoint(newFv)
 
       // round claim order for parity tests, sorted on the driver: a small
       // round sorts the rows its claim collected and runs no Spark job
@@ -526,25 +517,22 @@ final class CrawlSession(
   }
 
   def cleanup(): Unit = { // S9
-    frontierTable.drop(); seenTable.drop(); docsTable.drop()
+    frontierTable.drop(); docsTable.drop()
   }
 
   /** Expire dead snapshot storage for this session (the Iceberg
     * `expire_snapshots` analog — Z6 operability: compactions and crash
     * orphans otherwise accumulate segment dirs forever). Retains everything
     * reachable from the checkpointed round through each table's head, and
-    * honors the seen table's shared refs into frontier segments, so a
-    * resume after gc() is unaffected. Returns (segment dirs, tombstone
-    * dirs) deleted.
+    * the checkpointed frontier's append log (the seen set, which keeps
+    * segments a compaction replaced), so a resume after gc() is
+    * unaffected. Returns (segment dirs, tombstone dirs) deleted.
     */
   def gc(): (Int, Int) = {
-    val (fv, sv) = readCheckpoint().getOrElse(return (0, 0))
-    val refsIntoFrontier =
-      seenTable.referencedEntries(sv)._1.filter(_.startsWith("/"))
-    val (fS, fT) = frontierTable.expireBefore(fv, refsIntoFrontier)
-    val (sS, sT) = seenTable.expireBefore(sv)
+    val fv = readCheckpoint().getOrElse(return (0, 0))
+    val (fS, fT) = frontierTable.expireBefore(fv, frontierTable.appendedOf(fv).toSet)
     val (dS, dT) = docsTable.expireBefore(docsTable.currentVersion)
-    (fS + sS + dS, fT + sT + dT)
+    (fS + dS, fT + dT)
   }
 
   private def log(msg: String): Unit =

@@ -22,13 +22,18 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
   *     exactly-once discipline, RiverWeb.java:183-195, becomes
   *     snapshot-transition atomicity);
   *   - `commitFull` = copy-on-write replace, `commitAppend` = delta segment
-  *     (seen-set growth, doc appends) — merge-on-read via multi-dir parquet
-  *     scan; `commitDeltaTo` = delta segment PLUS a tombstone segment
-  *     (frontier round transition: the claimed rows become tombstones
-  *     anti-joined out on read, so a round writes O(claim batch + new URLs)
-  *     instead of rewriting a 10^10-row frontier to remove 10^5 claimed
-  *     rows), with automatic compaction once tombstones pass a quarter of
-  *     the live rows (the parent's surviving rows become one base segment);
+  *     (doc appends) — merge-on-read via multi-dir parquet scan;
+  *     `commitDeltaTo` = delta segment PLUS a tombstone segment (frontier
+  *     round transition: the claimed rows become tombstones anti-joined out
+  *     on read, so a round writes O(claim batch + new URLs) instead of
+  *     rewriting a 10^10-row frontier to remove 10^5 claimed rows), with
+  *     automatic compaction once tombstones pass a quarter of the live rows
+  *     (the parent's surviving rows become one base segment);
+  *   - every snapshot also lists its APPEND LOG: the data segment `<v>` of
+  *     each commit since the last `commitFull`, which starts a new log. A
+  *     compaction's `<v>-base` never joins it, so the log holds every row
+  *     the table was given exactly once, tombstoned or not — the frontier's
+  *     log is the crawl's URL-seen set ([[appendedOf]], [[readSegments]]);
   *   - resume = read the current manifest (session isolation + resume,
   *     RiverWeb.java:80-84,238-240); crawl state (round, processed) rides in
   *     the metrics map.
@@ -41,8 +46,8 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     // tombstone only deletes rows with a LOWER sequence — so a single
     // commit can replace same-keyed rows (delete old + insert new), which
     // plain equality tombstones cannot (they would delete the fresh rows
-    // too). Opt-in per table: the frontier/seen never re-insert a
-    // tombstoned key, so they skip the +8 B/row.
+    // too). Opt-in per table: the frontier never re-inserts a tombstoned
+    // key, so it skips the +8 B/row.
     val sequenced: Boolean = false,
     // read-side broadcast budget for the tombstone anti-join; above it the
     // merge-on-read falls back to a shuffled anti-join (test-injectable)
@@ -50,8 +55,8 @@ final class SnapshotTable(dir: String, spark: SparkSession,
 
   import SnapshotTable._
 
-  /** absolute and normalized: shared-ref entries other tables build from it
-    * must read as absolute dirs (see [[segPath]]) whatever the working dir.
+  /** absolute and normalized: one spelling of every dir this table hands
+    * to Spark and to java.nio, whatever the working dir.
     */
   val root: String = Paths.get(dir).toAbsolutePath.normalize.toString
   // manifest entries are written unescaped and read back by a regex plus
@@ -80,6 +85,11 @@ final class SnapshotTable(dir: String, spark: SparkSession,
 
   /** tombstone segment dirs of snapshot v (rows anti-joined out on read). */
   def tombstonesOf(v: Long): Seq[String] = listOf(v, "tombstones")
+
+  /** the append log of snapshot v: segment `<k>` of every commit k ≤ v
+    * since the last `commitFull`, compacted away or not (see the class doc).
+    */
+  def appendedOf(v: Long): Seq[String] = listOf(v, "appended")
 
   private def listOf(v: Long, key: String): Seq[String] = {
     if (v < 0) return Seq.empty
@@ -112,25 +122,6 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   /** Read the current snapshot (caller guards `isEmpty`). */
   def read(): DataFrame = readVersion(currentVersion)
 
-  /** Optional fixed read schema (set via [[withReadSchema]]): lets a table
-    * reference shared segments carrying EXTRA columns (see
-    * [[commitAppendRef]]) — the parquet reader prunes to these columns by
-    * name, so 2-col seen reads work over 5-col frontier segment files.
-    */
-  private var readSchema: Option[org.apache.spark.sql.types.StructType] = None
-  def withReadSchema(s: org.apache.spark.sql.types.StructType): this.type = {
-    // a narrowed schema would drop the hidden __seq column the sequenced
-    // tombstone rule needs — the two features serve different tables
-    require(!sequenced, "withReadSchema is incompatible with sequenced tables")
-    readSchema = Some(s); this
-  }
-
-  private def readParquet(paths: Seq[String]): DataFrame = readSchema match {
-    case None => parquetAt(paths)
-    case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      .select(s.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-  }
-
   /** `spark.read.parquet(dirs)` without its one-task schema-inference job:
     * the schema is the Spark row-metadata key of one footer, read on the
     * driver from the file Spark's own `mergeSchema=false` inference reads
@@ -149,9 +140,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     schema.fold(spark.read)(spark.read.schema).parquet(dirs: _*)
   }
 
-  /** a segment entry is a local name, or an absolute dir for shared refs. */
-  private def segPath(s: String): String =
-    if (s.startsWith("/")) s else s"$root/segments/$s"
+  private def segPath(s: String): String = s"$root/segments/$s"
 
   /** Merge-on-read: union of live data segments, minus tombstoned rows.
     * Up to [[broadcastTombRows]] accumulated tombstones the anti-join
@@ -166,7 +155,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   def readVersion(v: Long): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val segs = segmentsOf(v)
-    val data = readParquet(segs.map(segPath))
+    val data = parquetAt(segs.map(segPath))
     val tombs = tombstonesOf(v)
     if (tombs.isEmpty) { if (sequenced) data.drop(SeqCol) else data }
     else {
@@ -184,42 +173,26 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     }
   }
 
-  /** read one raw data segment (no tombstone application). */
-  def readSegment(seg: String): DataFrame = readParquet(Seq(segPath(seg)))
+  /** raw data segments, no tombstones applied (e.g. an [[appendedOf]] log). */
+  def readSegments(segs: Seq[String]): DataFrame = parquetAt(segs.map(segPath))
 
   /** raw row count of one segment from its parquet footers (driver-side,
-    * no Spark job) — works for local and shared-ref segments alike.
+    * no Spark job).
     */
   def segmentRows(seg: String): Long = dirRowCount(segPath(seg))
 
-  /** Append a SHARED segment by absolute path instead of rewriting the
-    * rows — the round loop writes each round's new URLs ONCE (the frontier
-    * delta segment) and the seen table references the same files, halving
-    * the per-round new-URL write bytes. The referencing table must have a
-    * [[withReadSchema]] narrowing to its own columns. Lifecycle: refs are
-    * valid for the owning session (frontier compaction orphans but never
-    * deletes segment dirs; `cleanup()` drops both tables together).
-    */
-  def commitAppendRef(absSegmentDir: String, parentVersion: Long,
-      metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    // referenced files carry the WRITER's columns — they would lack this
-    // table's __seq stamp and break the sequenced tombstone rule
-    require(!sequenced, "commitAppendRef is incompatible with sequenced tables")
-    commitManifest(absSegmentDir, metrics, appendTo = segmentsOf(parentVersion),
-      prevRows = rowsOf(parentVersion), tombSegs = tombstonesOf(parentVersion),
-      tombRows = tombRowsOf(parentVersion))
-  }
-
+  /** Replace the table with `df`; starts a new append log. */
   def commitFull(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) =
-    commit(df, metrics, appendTo = Seq.empty, prevRows = 0L)
+    commit(df, metrics, appendTo = Seq.empty, logTo = Seq.empty, prevRows = 0L)
 
   /** Append `df` on top of the table's head. */
   def commitAppend(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) = {
     val parent = currentVersion
     // carry the parent's tombstones forward — an append must not resurrect
     // logically deleted rows
-    commit(df, metrics, appendTo = segmentsOf(parent), prevRows = rowsOf(parent),
-      tombSegs = tombstonesOf(parent), tombRows = tombRowsOf(parent))
+    commit(df, metrics, appendTo = segmentsOf(parent), logTo = appendedOf(parent),
+      prevRows = rowsOf(parent), tombSegs = tombstonesOf(parent),
+      tombRows = tombRowsOf(parent))
   }
 
   /** Delta transition anchored at `parentVersion`: `newRows` becomes data
@@ -234,9 +207,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * surviving rows (`readVersion(parent)` minus the fresh tombstones) are
     * rewritten as a second segment of snapshot v, `<v>-base`, and the
     * tombstone list resets. Segment `<v>` holds exactly `newRows` on both
-    * paths, so no row is written twice and `segmentRows` is the batch
-    * (other tables may reference that dir, see [[commitAppendRef]]). The
-    * budget scales WITH the table — amortized, one rewrite per live/4
+    * paths, so no row is written twice, `segmentRows` is the batch, and
+    * `<v>` (never `<v>-base`) joins the append log. The budget scales
+    * WITH the table — amortized, one rewrite per live/4
     * claimed rows ≈ 4 rows rewritten per claim at any size (at 10^10 rows
     * an absolute cap forced a full rewrite every ~1M claims ≈ 10^4 rows
     * per claim). Reads between compactions stay broadcast-anti-join up to
@@ -287,11 +260,12 @@ final class SnapshotTable(dir: String, spark: SparkSession,
           .write.mode("overwrite").parquet(segPath(base))
         // the base segment replaces every tombstone: no snapshot needs this one
         rmTree(Paths.get(tombDir))
-        commitManifest(v.toString, metrics, appendTo = Seq(base),
-          prevRows = segmentRows(base), expectVersion = v)
+        commitManifest(metrics, appendTo = Seq(base),
+          logTo = appendedOf(parentVersion), prevRows = segmentRows(base),
+          expectVersion = v)
       } else {
-        commitManifest(v.toString, metrics, appendTo = segmentsOf(parentVersion),
-          prevRows = prevRows - newTombRows,
+        commitManifest(metrics, appendTo = segmentsOf(parentVersion),
+          logTo = appendedOf(parentVersion), prevRows = prevRows - newTombRows,
           tombSegs = tombstonesOf(parentVersion) :+ v.toString, tombRows = totalTomb,
           expectVersion = v)
       }
@@ -317,33 +291,32 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       .filter(_.endsWith(".parquet")).sorted
 
   private def commit(df: DataFrame, metrics: Map[String, String],
-      appendTo: Seq[String], prevRows: Long,
+      appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L): (Long, Long) = {
     val v = currentVersion + 1
-    val seg = v.toString
-    stamp(df, v).write.mode("overwrite").parquet(s"$root/segments/$seg")
-    commitManifest(seg, metrics, appendTo, prevRows, tombSegs, tombRows,
+    stamp(df, v).write.mode("overwrite").parquet(segPath(v.toString))
+    commitManifest(metrics, appendTo, logTo, prevRows, tombSegs, tombRows,
       expectVersion = v)
   }
 
-  /** manifest-only commit step: record `segEntry` (a local segment name, or
-    * an ABSOLUTE shared dir from [[commitAppendRef]]) as snapshot v's new
-    * segment. Row count comes straight from the parquet footers on the
-    * driver — no Spark job (a count() per commit was ~3 driver round-trips
-    * per crawl round of pure scheduling overhead).
+  /** manifest-only commit step: record the written segment `<v>` as
+    * snapshot v's new segment, after `appendTo` in the live list and after
+    * `logTo` in the append log. Row count comes straight from the parquet
+    * footers on the driver — no Spark job (a count() per commit was ~3
+    * driver round-trips per crawl round of pure scheduling overhead).
     */
-  private def commitManifest(segEntry: String, metrics: Map[String, String],
-      appendTo: Seq[String], prevRows: Long,
+  private def commitManifest(metrics: Map[String, String],
+      appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
       expectVersion: Long = -1L): (Long, Long) = {
     val v = currentVersion + 1
     require(expectVersion < 0 || expectVersion == v,
       s"concurrent commit detected: expected $expectVersion, at $v")
-    val segDir = segPath(segEntry)
+    val seg = v.toString
+    val segDir = segPath(seg)
     val files = parquetFiles(segDir)
     val segRows = files.map(f => footerRowCount(s"$segDir/$f")).sum
     val rows = prevRows + segRows
-    val segs = appendTo :+ segEntry
     val metricsJson = (metrics ++ Map(
       "parentVersion" -> currentVersion.toString,
       "rows" -> rows.toString,
@@ -352,12 +325,10 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       .toSeq.sortBy(_._1)
       .map { case (k, q) => s""""$k": "${q.replace("\"", "'")}"""" }
       .mkString(",\n  ")
-    val segsJson = segs.map(s => s""""$s"""").mkString("[", ",", "]")
-    val tombsJson = tombSegs.map(s => s""""$s"""").mkString("[", ",", "]")
-    val filesJson = files.map(f => s""""$f"""").mkString("[", ",", "]")
+    def arr(xs: Seq[String]) = xs.map(x => s""""$x"""").mkString("[", ",", "]")
     Files.createDirectories(metaPath(v).getParent)
     Files.writeString(metaPath(v),
-      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": $segsJson,\n  "tombstones": $tombsJson,\n  "newFiles": $filesJson\n}\n""")
+      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": ${arr(appendTo :+ seg)},\n  "tombstones": ${arr(tombSegs)},\n  "appended": ${arr(logTo :+ seg)},\n  "newFiles": ${arr(files)}\n}\n""")
     val tmp = Paths.get(root, s".manifest.$v.tmp")
     Files.writeString(tmp, s"""{"current": $v}""")
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
@@ -398,30 +369,26 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   /** every segment / tombstone entry referenced by any snapshot in
     * [max(0, from), currentVersion] — crash-orphan snapshots in that range
     * included, so a conservative GC never deletes what a resume (which
-    * anchors at the checkpointed version ≥ `from`) could still read.
+    * anchors at the checkpointed version ≥ `from`) could still read. Append
+    * logs are not references: a log keeps every segment a compaction
+    * replaced, so a caller that reads one retains it through `extraRetain`.
     */
-  def referencedEntries(from: Long): (Set[String], Set[String]) = {
+  private def referencedEntries(from: Long): (Set[String], Set[String]) = {
     val vs = (math.max(0L, from) to currentVersion)
       .filter(v => Files.exists(metaPath(v)))
     (vs.flatMap(segmentsOf).toSet, vs.flatMap(tombstonesOf).toSet)
   }
 
   /** Expire storage not referenced by any snapshot ≥ `from` (the Iceberg
-    * `expire_snapshots` analog for this shim): deletes LOCAL segment and
+    * `expire_snapshots` analog for this shim): deletes segment and
     * tombstone dirs outside the retain sets and the metas of snapshots
-    * below `from`. `extraRetain` holds claims other tables have on THIS
-    * table's local segments via [[commitAppendRef]] (pass the ref paths;
-    * matching is by resolved path). Absolute entries in this table's own
-    * manifests are external and never touched. Time travel below `from`
-    * stops working, exactly like Iceberg snapshot expiry.
+    * below `from`. `extraRetain` holds further segment names to keep (the
+    * crawl passes the frontier's append log, which it reads as the seen
+    * set). Time travel below `from` stops working, exactly like Iceberg
+    * snapshot expiry.
     */
   def expireBefore(from: Long, extraRetain: Set[String] = Set.empty): (Int, Int) = {
     val (segs, tombs) = referencedEntries(from)
-    val keepSegs = segs.filterNot(_.startsWith("/")) ++
-      extraRetain.collect {
-        case p if p.startsWith(s"$root/segments/") =>
-          p.stripPrefix(s"$root/segments/")
-      }
     def sweep(kind: String, keep: Set[String]): Int = {
       var n = 0
       listDir(Paths.get(root, kind)).foreach { p =>
@@ -429,8 +396,8 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       }
       n
     }
-    val deletedSegs = sweep("segments", keepSegs)
-    val deletedTombs = sweep("tombstones", tombs.filterNot(_.startsWith("/")))
+    val deletedSegs = sweep("segments", segs ++ extraRetain)
+    val deletedTombs = sweep("tombstones", tombs)
     (0L until math.max(0L, from)).foreach { v =>
       Files.deleteIfExists(metaPath(v))
       Files.deleteIfExists(metaPath(v).getParent)

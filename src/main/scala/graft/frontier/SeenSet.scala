@@ -112,19 +112,22 @@ object SeenSet {
   * per-round O(|seen|) `stat.bloomFilter` rebuild — a crawl's cumulative
   * routing cost was quadratic in rounds).
   *
-  * The seen table grows by append-only delta segments; this keeps ONE
-  * filter of fixed capacity and merges in a per-NEW-SEGMENT bloom at each
-  * advance (`mergeInPlace` requires identical sizing, hence the fixed
-  * capacity). When the seen count outgrows the capacity the filter is
-  * rebuilt at 4× from a full scan — geometric growth, so total rebuild
-  * cost over a crawl is O(N), not O(N·rounds). Overflow between rebuilds
-  * only degrades fpp (more join probes), never correctness: a bloom OR
-  * has no false negatives, and `mightContain=true` falls through to the
-  * exact anti-join.
+  * The seen set is `table`'s append log ([[SnapshotTable.appendedOf]]: for
+  * the crawl, the frontier's seed segment plus every round's new-entries
+  * segment); this keeps ONE filter of fixed capacity and merges in a
+  * per-NEW-SEGMENT bloom at each advance (`mergeInPlace` requires identical
+  * sizing, hence the fixed capacity). When the seen count outgrows the
+  * capacity the filter is rebuilt at 4× from a full scan of the log —
+  * geometric growth, so total rebuild cost over a crawl is O(N), not
+  * O(N·rounds). Overflow between rebuilds only degrades fpp (more join
+  * probes), never correctness: a bloom OR has no false negatives, and
+  * `mightContain=true` falls through to the exact anti-join.
   *
   * The filter is persisted as a sidecar (`$root/bloom.current`) keyed by
   * the covered snapshot version, so a resumed crawl reloads it instead of
-  * rescanning the seen table.
+  * rescanning; the covered segments are that snapshot's append log. Once
+  * gc has expired that snapshot's meta the sidecar no longer loads, and
+  * the next call rebuilds once.
   */
 final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
 
@@ -135,27 +138,25 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
 
   private def sidecar = java.nio.file.Paths.get(table.root, "bloom.current")
 
-  /** Bloom covering seen snapshot `v` (with `rows` live rows), advancing the
-    * cached filter over only the NEW segments since the last call.
+  /** Bloom covering the append log of snapshot `v` (`rows` rows), advancing
+    * the cached filter over only the NEW segments since the last call.
     */
   def forVersion(v: Long, rows: Long): BloomFilter = {
     if (coveredVersion == v && filter.isDefined) return filter.get
     if (filter.isEmpty) loadSidecar()
-    val segs = table.segmentsOf(v)
+    val segs = table.appendedOf(v)
     val canAdvance = filter.isDefined && rows <= capacity &&
       coveredSegments.subsetOf(segs.toSet)
     if (canAdvance) {
       val f = filter.get
       segs.filterNot(coveredSegments).foreach { seg =>
         // skip empty segments (a round can add 0 new URLs):
-        // stat.bloomFilter NPEs on zero-row input. Count from the parquet
-        // footers — segment entries may be shared-ref absolute dirs whose
-        // name is not a version number.
-        if (table.segmentRows(seg) > 0L) f.mergeInPlace(segmentBloom(seg))
+        // stat.bloomFilter NPEs on zero-row input
+        if (table.segmentRows(seg) > 0L) f.mergeInPlace(bloomOf(Seq(seg)))
       }
     } else {
       capacity = math.max(4 * rows, 1L << 16)
-      filter = Some(table.readVersion(v).stat.bloomFilter("urlHash", capacity, fpp))
+      filter = Some(bloomOf(segs))
     }
     coveredVersion = v
     coveredSegments = segs.toSet
@@ -163,14 +164,12 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
     filter.get
   }
 
-  private def segmentBloom(seg: String): BloomFilter =
-    table.readSegment(seg).stat.bloomFilter("urlHash", capacity, fpp)
+  private def bloomOf(segs: Seq[String]): BloomFilter =
+    table.readSegments(segs).stat.bloomFilter("urlHash", capacity, fpp)
 
-  // sidecar layout: version, capacity, segment count, one string per
-  // segment (a single joined string would pass writeUTF's 64 KiB cap after
-  // ~1,000 rounds of absolute ref paths), then the serialized filter.
-  // Best-effort on both ends — a missing/corrupt sidecar just means one
-  // rebuild scan.
+  // sidecar layout: covered version, capacity, then the serialized filter.
+  // Best-effort on both ends — a missing/corrupt sidecar, or one whose
+  // covered snapshot has expired, just means one rebuild scan.
   private def saveSidecar(): Unit =
     try {
       val tmp = java.nio.file.Paths.get(table.root, ".bloom.tmp")
@@ -179,8 +178,6 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
       try {
         out.writeLong(coveredVersion)
         out.writeLong(capacity)
-        out.writeInt(coveredSegments.size)
-        coveredSegments.toSeq.sorted.foreach(out.writeUTF)
         filter.get.writeTo(out)
       } finally out.close()
       java.nio.file.Files.move(tmp, sidecar,
@@ -196,9 +193,9 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
       try {
         coveredVersion = in.readLong()
         capacity = in.readLong()
-        coveredSegments = Seq.fill(in.readInt())(in.readUTF()).toSet
         filter = Some(BloomFilter.readFrom(in))
       } finally in.close()
+      coveredSegments = table.appendedOf(coveredVersion).toSet
     } catch { case _: java.io.IOException =>
       filter = None; coveredVersion = -1L; coveredSegments = Set.empty
     }

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole test run. */
@@ -24,10 +26,26 @@ object TestSpark {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** What `f` ran on Spark: the jobs it started and the SQL executions it
-    * finished, in order.
+    * finished, in order, and the rows its tasks read from input files.
+    * `descriptions` maps each SQL execution to the description of its root
+    * execution: the engine call site of the action, e.g.
+    * `collect at CrawlLoop.scala:249`.
     */
   final case class Traced[A](result: A, jobs: Seq[SparkListenerJobStart],
-      queries: Seq[QueryExecution])
+      queries: Seq[QueryExecution], descriptions: Map[Long, String],
+      rowsRead: Long) {
+    /** the action a job belongs to, or None outside any SQL execution. AQE
+      * names its map-stage jobs after a JDK frame, so stage names cannot
+      * tell which action started a job; its SQL execution can.
+      */
+    def actionOf(job: SparkListenerJobStart): Option[String] =
+      Option(job.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => descriptions.get(id.toLong))
+
+    /** the jobs of every action whose description starts with `prefix`. */
+    def jobsOf(prefix: String): Seq[SparkListenerJobStart] =
+      jobs.filter(actionOf(_).exists(_.startsWith(prefix)))
+  }
 
   private val FenceKey = "graft.test.fence"
 
@@ -40,6 +58,9 @@ object TestSpark {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
     val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    // execution id -> (description, root execution id)
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, (String, Long)]
+    val rowsRead = new java.util.concurrent.atomic.AtomicLong
     val (open, close) = (java.util.UUID.randomUUID().toString, java.util.UUID.randomUUID().toString)
     @volatile var recording = false
     val closed = new java.util.concurrent.CountDownLatch(1)
@@ -50,6 +71,15 @@ object TestSpark {
           case Some(`close`) => recording = false; closed.countDown()
           case _ => if (recording) jobs.add(e)
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (recording) Option(e.taskMetrics)
+          .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId,
+            (s.description, s.rootExecutionId.getOrElse(s.executionId)))
+        case _ =>
+      }
     }
     val queryListener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -69,7 +99,10 @@ object TestSpark {
       assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "Spark listener events were not delivered within 60 s")
       import scala.jdk.CollectionConverters._
-      Traced(out, jobs.asScala.toSeq, queries.asScala.toSeq)
+      val described = executions.asScala.toMap
+      val roots = described.map { case (id, (_, root)) =>
+        id -> described.get(root).fold("")(_._1) }
+      Traced(out, jobs.asScala.toSeq, queries.asScala.toSeq, roots, rowsRead.get)
     } finally {
       spark.listenerManager.unregister(queryListener)
       sc.removeSparkListener(jobListener)

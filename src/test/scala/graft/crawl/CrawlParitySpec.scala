@@ -103,9 +103,35 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
-  /** jobs started by the claim's `count()` (the cached claim path). */
-  def claimCountJobs(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
-    jobs.filter(_.stageInfos.exists(_.name.startsWith("count at CrawlLoop.scala")))
+  /** the claim's `count()` action (the cached claim path). */
+  val ClaimCount = "count at CrawlLoop.scala"
+  /** the small claim's one `collect()` action. */
+  val ClaimCollect = "collect at CrawlLoop.scala"
+
+  /** Run a session round by round, checking after each round that the seen
+    * set holds the live frontier plus every page processed, as the round
+    * reports it.
+    */
+  def runChecked(s: CrawlSession): CrawlSession.CrawlResult = {
+    s.init()
+    val rounds = Iterator.continually(s.runRound()).takeWhile(_.isDefined).map(_.get)
+      .map { r =>
+        assert(r.seenTotal == r.frontierLeft + r.processed, s"round ${r.round}")
+        assert(s.seenTable.read().count() == r.seenTotal, s"round ${r.round}")
+        r
+      }.toList
+    CrawlSession.CrawlResult(rounds, rounds.map(_.claimed).sum)
+  }
+
+  /** the same identity read from the manifest alone, for a session that ran
+    * no round (a resume after completion).
+    */
+  def assertSeenIdentity(s: CrawlSession): Unit = {
+    val ft = s.frontierTable
+    val v = ft.currentVersion
+    val processed = ft.metric(v, "processed").map(_.toLong).getOrElse(0L)
+    assert(s.seenTable.read().count() == ft.rowsOf(v) + processed)
+  }
 
   test("a steady-state round runs no schema-inference job and at most 14 Spark jobs") {
     val session = new CrawlSession(spark, baseConfig("round-jobs"), corpusDf,
@@ -122,12 +148,15 @@ class CrawlParitySpec extends AnyFunSuite {
       s"jobs outside any SQL execution: ${inference.flatMap(_.stageInfos.map(_.name))}")
     // a small frontier's claim is one collect: no cache, no count stages,
     // and the claim order is sorted on the driver
-    assert(claimCountJobs(t.jobs).isEmpty, "the small claim ran a count")
+    assert(t.jobsOf(ClaimCount).isEmpty, "the small claim ran a count")
+    // measured: the claim collect is 3 jobs for this round on this corpus
+    val collect = t.jobsOf(ClaimCollect)
+    assert(collect.size == 3, s"${collect.size} jobs in the claim collect")
     assert(t.queries.size == 4, s"${t.queries.size} SQL actions")
     // measured: 12-13 jobs for this round on this corpus (17-18 with a
     // cached and counted claim and a Spark-sorted claim order)
     assert(t.jobs.size <= 14,
-      s"${t.jobs.size} jobs: ${t.jobs.map(_.stageInfos.map(_.name).mkString("+"))}")
+      s"${t.jobs.size} jobs: ${t.jobs.map(t.actionOf).mkString(", ")}")
     session.cleanup()
   }
 
@@ -147,8 +176,7 @@ class CrawlParitySpec extends AnyFunSuite {
         assert(t.result.exists(r => r.claimed > 0 && r.docsWritten > 0), mode)
         val (actions, jobs) = (t.queries.size, t.jobs.size)
         assert(actions == sqlActions, s"$mode: $actions SQL actions")
-        assert(jobs <= maxJobs,
-          s"$mode: $jobs jobs: ${t.jobs.map(_.stageInfos.map(_.name).mkString("+"))}")
+        assert(jobs <= maxJobs, s"$mode: $jobs jobs: ${t.jobs.map(t.actionOf).mkString(", ")}")
         assert(new java.io.File(dir).list().toSet == Set("sessions", "docs"), mode)
         session.cleanup()
     }
@@ -189,12 +217,19 @@ class CrawlParitySpec extends AnyFunSuite {
     s1.init()
     val r1 = s1.runRound().get
     // simulate a crash AFTER the next round's frontier commit but BEFORE the
-    // seen commit / checkpoint flip: orphan snapshots exist on both tables'
-    // heads, the round checkpoint still points at round 1's versions
+    // docs commit / checkpoint flip: an orphan frontier snapshot on the
+    // table's head, whose append log (the seen set it would publish) holds
+    // the orphan url; the round checkpoint still points at round 1's version
     import spark.implicits._
-    s1.frontierTable.commitFull(Seq(("http://orphan/x", 1L, "orphan", 0, "p"))
-      .toDF("url", "urlHash", "host", "depth", "parentUrl"), Map("round" -> "99"))
-    s1.seenTable.commitAppend(Seq(("http://orphan/x", 1L)).toDF("url", "urlHash"))
+    val ft = s1.frontierTable
+    val v1 = ft.currentVersion
+    val orphan = Seq(("http://orphan/x", 1L, "orphan", 0, "p"))
+      .toDF("url", "urlHash", "host", "depth", "parentUrl")
+    val (ov, _) = ft.commitDeltaTo(orphan, orphan.limit(0).select("urlHash", "url"), v1,
+      Map("round" -> "99"))
+    assert(ft.appendedOf(ov) == ft.appendedOf(v1) :+ ov.toString)
+    assert(ft.readSegments(ft.appendedOf(ov)).filter($"url" === "http://orphan/x").count() == 1)
+    assert(s1.seenTable.read().filter($"url".contains("orphan")).isEmpty)
     // resume: a fresh session over the same workDir must reproduce the
     // uninterrupted crawl exactly (orphans invisible)
     val s2 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
@@ -203,6 +238,8 @@ class CrawlParitySpec extends AnyFunSuite {
     val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
     assert(fullOrder == oracle.crawlOrder)
     assert(!rest.crawlOrder.exists(_._1.contains("orphan")))
+    val seen = s2.seenTable.read().select("url").collect().map(_.getString(0)).toSet
+    assert(seen == oracle.seen, "the orphan's append log is not the seen set")
     s2.cleanup()
   }
 
@@ -313,7 +350,7 @@ class CrawlParitySpec extends AnyFunSuite {
         PropertyRule("title", SpanText("title"), trimSpaces = true)))))
     val dir = TestSpark.tmpDir("crawl-compaction")
     val s1 = new CrawlSession(spark, cfg, cmpCorpus.toDF(), cmpRobots.toDF(), dir)
-    val engine = s1.run()
+    val engine = runChecked(s1)
     val ft = s1.frontierTable
     val compactions = (0L to ft.currentVersion).filter(v =>
       ft.metric(v, "round").exists(_.toInt > 1) && ft.tombstonesOf(v).isEmpty)
@@ -324,14 +361,21 @@ class CrawlParitySpec extends AnyFunSuite {
     def seenOf(s: CrawlSession) =
       s.seenTable.read().select("url").collect().map(_.getString(0)).toSet
     assert(seenOf(s1) == oracle.seen)
-    // every seen entry references a frontier segment: nothing written locally
-    val seenSegs = java.nio.file.Paths.get(dir, "sessions", "compaction", "seen", "segments")
-    assert(new java.io.File(seenSegs.toString).list().isEmpty)
+    // the seen set is the frontier's append log: no table of its own, and
+    // a compaction's base segment never joins the log
+    assert(new java.io.File(s"$dir/sessions/compaction").list().toSet ==
+      Set("frontier", "round.json"))
+    val log = ft.appendedOf(ft.currentVersion)
+    compactions.foreach { v =>
+      assert(ft.segmentsOf(v).contains(s"$v-base") && log.contains(v.toString))
+      assert(!log.contains(s"$v-base"))
+    }
     val frontierLeft = ft.rowsOf(ft.currentVersion)
     s1.gc()
     val s2 = new CrawlSession(spark, cfg, cmpCorpus.toDF(), cmpRobots.toDF(), dir)
     assert(s2.run().rounds.isEmpty, "completed crawl resumes as a no-op after gc")
     assert(seenOf(s2) == oracle.seen, "gc kept the frontier segments seen refers to")
+    assertSeenIdentity(s2)
     assert(s2.frontierTable.read().count() == frontierLeft, "gc kept the base segment")
     s2.cleanup()
   }
@@ -362,7 +406,7 @@ class CrawlParitySpec extends AnyFunSuite {
     val r1 = session.runRound().get
     val t = TestSpark.traced(session.runRound())
     val r2 = t.result.get
-    assert(claimCountJobs(t.jobs).nonEmpty, "the large frontier's claim was not counted")
+    assert(t.jobsOf(ClaimCount).nonEmpty, "the large frontier's claim was not counted")
     val claimed = r1.claimed + r2.claimed
     val oracle = Oracle.crawl(lgPages, lgRobotsMap, cfg.copy(maxAccessCount = claimed))
     val order = Seq(r1, r2).flatMap(_.claimOrder)
@@ -372,6 +416,26 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(seen == oracle.seen)
     assert(claimed == oracle.processed)
     session.cleanup()
+  }
+
+  test("the seen set holds the live frontier plus every page processed, every round and after a gc resume") {
+    val cfg = baseConfig("seen-count")
+    val dir = TestSpark.tmpDir("crawl-seen-count")
+    val s1 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
+    val engine = runChecked(s1)
+    val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
+    assert(engine.rounds.size > 3 && engine.crawlOrder == oracle.crawlOrder)
+    def seenOf(s: CrawlSession) =
+      s.seenTable.read().select("url").collect().map(_.getString(0)).toSet
+    assert(seenOf(s1) == oracle.seen)
+    assert(engine.rounds.last.seenTotal == oracle.seen.size)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "sessions", "seen-count", "seen")))
+    s1.gc()
+    val s2 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
+    assert(s2.run().rounds.isEmpty, "completed crawl resumes as a no-op after gc")
+    assertSeenIdentity(s2)
+    assert(seenOf(s2) == oracle.seen)
+    s2.cleanup()
   }
 
   test("the driver-side claim order sorts like Spark's orderBy(depth, urlHash, url)") {
@@ -468,7 +532,7 @@ class WriteModeSpec extends AnyFunSuite {
     s1.run()
     val docsBefore = s1.docsTable.read().count()
     val seenBefore = s1.seenTable.read().count()
-    s1.gc() // retains checkpoint..head incl. the seen table's frontier refs
+    s1.gc() // retains checkpoint..head incl. the frontier's append log
     val s2 = new CrawlSession(spark, cfg("gc-1", WriteMode.Default), corpusDf,
       robotsDf, dir, () => new Timestamp(1700000002000L))
     val resumed = s2.run()

@@ -1,5 +1,7 @@
 package graft.frontier
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -139,7 +141,6 @@ class SeenSetSpec extends AnyFunSuite {
   }
 
   test("snapshot table: a compacting delta writes the batch once, beside a base of the survivors") {
-    import java.nio.file.{Files, Paths}
     Seq(false, true).foreach { sequenced =>
       val tag = if (sequenced) "sequenced" else "plain"
       val dir = TestSpark.tmpDir("snap-compact-once")
@@ -179,14 +180,12 @@ class SeenSetSpec extends AnyFunSuite {
       val want = (6000 until 20010).map(i => s"u$i").toSet
       assert(live == want.size && t.rowsOf(v1) == want.size, tag)
       assert(urls(t.readVersion(v1)) == want, tag)
-      // a seen-shaped table referencing segment v reads exactly the batch
-      import org.apache.spark.sql.types._
-      val seen = new SnapshotTable(TestSpark.tmpDir("snap-compact-ref"), spark)
-        .withReadSchema(StructType(Seq(
-          StructField("urlHash", LongType), StructField("url", StringType))))
-      val (_, n) = seen.commitAppendRef(seg.toString, -1L)
-      assert(n == 10 && urls(seen.read()) == urls(batch), tag)
-      seen.drop()
+      // the append log gains segment v, never the base: it reads every row
+      // the table was given once, the tombstoned ones included
+      assert(t.appendedOf(v1) == Seq(v0.toString, v.toString), tag)
+      assert(urls(t.readSegments(Seq(v.toString))) == urls(batch), tag)
+      val log = t.readSegments(t.appendedOf(v1))
+      assert(log.count() == 20010 && urls(log) == (0 until 20010).map(i => s"u$i").toSet, tag)
       t.drop()
     }
   }
@@ -305,41 +304,40 @@ class SeenSetSpec extends AnyFunSuite {
     assert(new java.io.File(s"$dir/segments").list().length == 2)
     assert(t.read().count() == live, "head snapshot unaffected")
     assert(t.rowsOf(t.currentVersion) == live)
-    // extraRetain protects segments another table references
+    // extraRetain protects segments a reader still needs (an append log)
     val t2 = new SnapshotTable(TestSpark.tmpDir("snap-expire2"), spark)
     val (x0, _) = t2.commitFull(rows(0 until 100))
     t2.commitFull(rows(100 until 200)) // full rewrite → x0's segment dead
-    val (d0, _) = t2.expireBefore(t2.currentVersion,
-      extraRetain = Set(s"${t2.root}/segments/$x0"))
+    val (d0, _) = t2.expireBefore(t2.currentVersion, extraRetain = Set(x0.toString))
     assert(d0 == 0, "externally-referenced segment must survive")
     val (d1, _) = t2.expireBefore(t2.currentVersion)
     assert(d1 == 1)
     t.drop(); t2.drop()
   }
 
-  test("shared-ref segments: narrowed reads, footer counts, bloom over empty refs") {
-    import org.apache.spark.sql.types._
-    val dir = TestSpark.tmpDir("snap-ref")
-    val ext = TestSpark.tmpDir("snap-ref-ext")
-    // the referencing table narrows to its own columns (seen-table shape)
-    val t = new SnapshotTable(dir, spark).withReadSchema(StructType(Seq(
-      StructField("urlHash", LongType), StructField("url", StringType))))
+  test("append log: narrowed reads, footer counts, bloom over empty segments") {
+    val dir = TestSpark.tmpDir("snap-log")
+    val t = new SnapshotTable(dir, spark)
     def rows(ids: Range) = ids.map(i => (i.toLong, s"u$i", s"h$i", i, "p"))
-      .toDF("urlHash", "url", "host", "depth", "parentUrl")
-    rows(0 until 50).write.parquet(s"$ext/a") // frontier-shaped, 5 cols
-    rows(0 until 0).write.parquet(s"$ext/b")  // a round that adds 0 new URLs
-    val (v0, n0) = t.commitAppendRef(s"$ext/a", -1L)
-    assert(n0 == 50, "footer count of the referenced files")
-    assert(t.read().columns.toSeq == Seq("urlHash", "url"), "extra columns pruned")
-    assert(t.read().count() == 50)
+      .toDF("urlHash", "url", "host", "depth", "parentUrl") // frontier-shaped
+    val (v0, n0) = t.commitFull(rows(0 until 50))
+    assert(t.appendedOf(v0) == Seq(v0.toString) && t.segmentRows(v0.toString) == n0)
+    def seen(v: Long) = t.readSegments(t.appendedOf(v)).select("urlHash", "url")
+    assert(seen(v0).columns.toSeq == Seq("urlHash", "url"), "extra columns pruned")
     val bloom = new IncrementalSeenBloom(t)
     bloom.forVersion(v0, n0)
-    val (v1, n1) = t.commitAppendRef(s"$ext/b", v0)
-    assert(n1 == 50)
-    // regression: advancing over the EMPTY referenced segment NPE'd in
-    // stat.bloomFilter when emptiness was inferred from the segment NAME
-    val b = bloom.forVersion(v1, n1)
+    // a round that claims 10 pages and adds 0 new URLs: the log keeps the
+    // claimed rows and gains an empty segment
+    val (v1, live) = t.commitDeltaTo(rows(0 until 0), rows(0 until 10), v0)
+    assert(live == 40 && t.appendedOf(v1) == Seq(v0.toString, v1.toString))
+    assert(t.segmentRows(v1.toString) == 0 && seen(v1).count() == 50)
+    // regression: advancing over an EMPTY segment NPE'd in stat.bloomFilter
+    // when emptiness was inferred from the segment NAME
+    val b = bloom.forVersion(v1, 50)
     (0 until 50).foreach(i => assert(b.mightContain(i.toLong)))
+    // commitFull starts a new log
+    val (v2, _) = t.commitFull(rows(50 until 60))
+    assert(t.appendedOf(v2) == Seq(v2.toString))
     t.drop()
   }
 
@@ -361,15 +359,19 @@ class SeenSetSpec extends AnyFunSuite {
     assert(read.result.schema == plain.schema)
     assert(read.result.collect().toSet == plain.collect().toSet)
     assert(read.result.count() == 65)
-    val seg = TestSpark.traced(reopened.readSegment(v1.toString))
+    val seg = TestSpark.traced(reopened.readSegments(Seq(v1.toString)))
     assert(seg.jobs.isEmpty)
     assert(seg.result.schema == spark.read.parquet(s"$dir/segments/$v1").schema)
 
-    // a footer without Spark's row-metadata key: Spark infers, as before
+    // a footer without Spark's row-metadata key: Spark infers, as before.
+    // The committed segment's files are replaced by one written outside Spark
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
-    val ext = TestSpark.tmpDir("snap-footer-ext")
+    val t2 = new SnapshotTable(TestSpark.tmpDir("snap-footer2"), spark)
+    val (x0, _) = t2.commitFull(rows(0 until 5).select("urlHash", "url"))
+    val ext = s"${t2.root}/segments/$x0"
+    new java.io.File(ext).listFiles().foreach(_.delete())
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message m { required int64 urlHash; required binary url (UTF8); }")
     val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
@@ -378,8 +380,6 @@ class SeenSetSpec extends AnyFunSuite {
     val g = new SimpleGroupFactory(schema)
     try (0 until 5).foreach(i => w.write(g.newGroup().append("urlHash", i.toLong).append("url", s"u$i")))
     finally w.close()
-    val t2 = new SnapshotTable(TestSpark.tmpDir("snap-footer2"), spark)
-    t2.commitAppendRef(ext, -1L)
     val inferred = TestSpark.traced(t2.read())
     assert(inferred.jobs.exists(_.stageInfos.exists(_.name.contains("FrontierStore.scala"))),
       "the fallback runs Spark's schema inference")
@@ -461,26 +461,32 @@ class SeenSetSpec extends AnyFunSuite {
     t.drop()
   }
 
-  test("incremental seen bloom: a segment list past 64 KiB still saves and reloads the sidecar") {
-    import org.apache.spark.sql.types._
-    val dir = TestSpark.tmpDir("snap-bloom-long")
-    val ext = TestSpark.tmpDir("snap-bloom-long-ext")
-    val t = new SnapshotTable(dir, spark).withReadSchema(StructType(Seq(
-      StructField("urlHash", LongType), StructField("url", StringType))))
-    Seq.tabulate(50)(i => (UrlOps.urlHash(s"http://h/$i"), s"http://h/$i"))
-      .toDF("urlHash", "url").write.parquet(s"$ext/a")
-    val (v0, rows) = t.commitAppendRef(s"$ext/a", -1L)
-    // ~100 rounds that added no url, under a ~700-character work dir
-    val deep = Seq.fill(3)("d" * 230).mkString(s"$ext/", "/", "")
-    val v = (0 until 100).foldLeft(v0) { (parent, i) =>
-      val empty = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(f"$deep/e$i%03d"))
-      t.commitAppendRef(empty.toString, parent)._1
-    }
-    assert(t.segmentsOf(v).mkString(",").getBytes("UTF-8").length > 65535)
-    new IncrementalSeenBloom(t).forVersion(v, rows)
-    val reloaded = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v, rows))
+  test("incremental seen bloom: a fresh instance reloads the sidecar with no job; an expired covered snapshot rebuilds once") {
+    val dir = TestSpark.tmpDir("snap-bloom-sidecar")
+    val t = new SnapshotTable(dir, spark)
+    def seenRows(ids: Range) = ids.map { i =>
+      val u = s"http://h/$i"; (u, UrlOps.urlHash(u))
+    }.toDF("url", "urlHash")
+    def covers(f: org.apache.spark.util.sketch.BloomFilter, n: Int) =
+      (0 until n).forall(i => f.mightContainLong(UrlOps.urlHash(s"http://h/$i")))
+    t.commitFull(seenRows(0 until 50))
+    val (v1, _) = t.commitAppend(seenRows(50 until 60))
+    new IncrementalSeenBloom(t).forVersion(v1, 60)
+    assert(Files.exists(Paths.get(dir, "bloom.current")))
+    val reloaded = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v1, 60))
     assert(reloaded.jobs.isEmpty, "a fresh instance loads the sidecar instead of rescanning")
-    assert((0 until 50).forall(i => reloaded.result.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
+    assert(covers(reloaded.result, 60))
+    // gc expires the covered snapshot's meta: the sidecar names no segments,
+    // so it no longer loads, and the next instance rebuilds from the whole
+    // log once (an advance over the sidecar would read only segment v2)
+    val (v2, _) = t.commitAppend(seenRows(60 until 70))
+    t.expireBefore(v2, t.appendedOf(v2).toSet)
+    assert(!Files.exists(Paths.get(dir, "snapshots", v1.toString)))
+    val rebuilt = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v2, 70))
+    assert(rebuilt.rowsRead == 70, s"read ${rebuilt.rowsRead} rows")
+    assert(covers(rebuilt.result, 70))
+    val again = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v2, 70))
+    assert(again.jobs.isEmpty, "the rebuild rewrote the sidecar")
     t.drop()
   }
 }

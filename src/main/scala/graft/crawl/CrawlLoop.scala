@@ -100,6 +100,18 @@ final class CrawlSession(
 
   private val sitemapRe = RuleCompiler.anchored(config.sitemapPattern)
 
+  /** robots Crawl-delay as per-host round quotas (Z1): floor(round window /
+    * delay), at least 1, for each host with a delay. The robots table is
+    * fixed for the session, so it is collected once, on first use.
+    */
+  private lazy val delayBudgets: Map[String, Int] =
+    if (!config.robotsTxt || !robots.columns.contains("crawl_delay_s")) Map.empty
+    else robots.filter(col("host").isNotNull && col("crawl_delay_s").isNotNull)
+      .select(col("host"),
+        greatest(lit(1L), floor(lit(config.roundWindowSeconds) /
+          col("crawl_delay_s")).cast("long")).cast("int"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+
   /** robots predicate (Z2): URL's path must not start with any disallowed
     * prefix for its host. Pure built-ins — stays codegen'd.
     */
@@ -209,44 +221,44 @@ final class CrawlSession(
     def cache(df: DataFrame): DataFrame = { cached.synchronized(cached += df); df.persist() }
     var docsF = scala.concurrent.Future.successful(0L)
     try {
-      val frontier = frontierTable.readVersion(v)
       // every claimed row is tombstoned exactly once (the commitDeltaTo
       // contract), so the append log holds the live frontier plus every
       // page processed
       val seenCount = frontierRows + processed
 
       // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
-      val delayBudgets =
-        if (config.robotsTxt && robots.columns.contains("crawl_delay_s"))
-          Some(robots.filter(col("crawl_delay_s").isNotNull)
-            .select(col("host"),
-              greatest(lit(1L), floor(lit(config.roundWindowSeconds) /
-                col("crawl_delay_s")).cast("long")).cast("int").as("budget")))
-        else None
-      // the global A2 cap cannot bind when the whole frontier fits in the
-      // remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows ≤
-      // remaining) — skip the TakeOrdered stage those rounds pay for nothing
-      val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
-      val claim = delayBudgets
-        .map(b => Politeness.claimWithHostBudgets(
-          frontier, config.hostBudgetPerRound, b, capRemaining))
-        .getOrElse(Politeness.claim(frontier, config.hostBudgetPerRound,
-          capRemaining))
-      // The claim is a subset of the frontier and of the budget, so
-      // min(frontierRows, remaining) — both from the manifest — bounds it
-      // with no job. Under the gate the claim is ONE collect, ending at the
-      // window's own result stage, and comes back as a LocalRelation: the
-      // fetch join broadcasts it, the tombstones write it, and the claim
-      // order sorts it on the driver, with no cache and no count stages.
-      // Above the gate the claim stays a cached frame counted once: a large
-      // round is bound by its data, not by this action, and collecting it
-      // would move up to FetchBroadcastMaxRows rows through the driver.
+      // The gate reads frontierRows from the manifest, so choosing the path
+      // runs no job. Below it the live frontier is read on the driver
+      // (SnapshotTable.collectVersion: its parquet files, minus tombstones)
+      // and claimed there by Politeness.claimRows — no Spark job — and the
+      // claim comes back as a LocalRelation: the fetch join broadcasts it,
+      // the tombstones write it, and the claim order sorts it on the
+      // driver, with no cache and no count stages. Above the gate the claim
+      // is the per-host window, cached and counted once: a large round is
+      // bound by its data, not by this action, and a driver claim would move
+      // the whole frontier through the driver.
       val (claimed, claimedCount, claimRows) =
-        if (math.min(frontierRows, remaining) <= SmallWriteRows) {
-          val rows = claim.collect()
-          (spark.createDataFrame(java.util.Arrays.asList(rows: _*), claim.schema),
+        if (frontierRows <= SmallWriteRows) {
+          val (schema, live) = frontierTable.collectVersion(v)
+          val rows = Politeness.claimRows(live, config.hostBudgetPerRound,
+            delayBudgets, remaining)
+          (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
             rows.length.toLong, Some(rows))
         } else {
+          val frontier = frontierTable.readVersion(v)
+          // the global A2 cap cannot bind when the whole frontier fits in
+          // the remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows
+          // ≤ remaining) — skip the TakeOrdered stage those rounds pay for
+          // nothing
+          val capRemaining = if (remaining >= frontierRows) Long.MaxValue else remaining
+          val claim =
+            if (delayBudgets.isEmpty)
+              Politeness.claim(frontier, config.hostBudgetPerRound, capRemaining)
+            else {
+              import spark.implicits._
+              Politeness.claimWithHostBudgets(frontier, config.hostBudgetPerRound,
+                delayBudgets.toSeq.toDF("host", "budget"), capRemaining)
+            }
           val c = cache(claim)
           (c, c.count(), None)
         }
@@ -402,8 +414,8 @@ final class CrawlSession(
       // growth, written once.
       val newProcessed = processed + claimedCount
       val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
-        fanoutShape(newEntries.select(frontier.columns.map(col): _*)),
-        // tombstones read the collected claim (or, above the gate, its
+        fanoutShape(newEntries.select(claimed.columns.map(col): _*)),
+        // tombstones read the driver claim (or, above the gate, its
         // cache) — coalesce merges the tiny scan tasks without
         // repartition(1)'s extra exchange
         fanoutShape(claimed.select("urlHash", "url")), v, Map(
@@ -419,11 +431,11 @@ final class CrawlSession(
       writeCheckpoint(newFv)
 
       // round claim order for parity tests, sorted on the driver: a small
-      // round sorts the rows its claim collected and runs no Spark job
+      // round sorts the rows it claimed there and runs no Spark job
       val order =
         if (!recordOrder) Seq.empty[(String, Int)]
         else claimOrder(claimRows.getOrElse(
-          claimed.select("url", "depth", "urlHash").collect()).toSeq)
+          claimed.select("url", "depth", "urlHash").collect().toSeq))
 
       log(s"round ${round + 1}: claimed=$claimedCount docs=$docsWritten " +
         s"new=$newUrls frontier=$frontierLeft seen=$seenTotal processed=$newProcessed")
@@ -516,8 +528,19 @@ final class CrawlSession(
     docs.select(to_json(struct(docs.columns.map(col): _*)).as("json"))
   }
 
-  def cleanup(): Unit = { // S9
-    frontierTable.drop(); docsTable.drop()
+  /** Drop the docs table and the whole session dir (S9): the frontier and
+    * the round checkpoint, with any `.tmp` a crash left, so a new session
+    * under this id over the same workDir starts from its seeds.
+    */
+  def cleanup(): Unit = {
+    docsTable.drop()
+    val dir = checkpointPath.getParent
+    if (java.nio.file.Files.exists(dir)) {
+      val paths = java.nio.file.Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally paths.close()
+    }
   }
 
   /** Expire dead snapshot storage for this session (the Iceberg
@@ -557,6 +580,7 @@ object CrawlSession {
     * one real parquet file instead of shuffle-partition-many near-empty
     * ones (task-commit overhead dominates small-round latency). Large
     * rounds keep the parallel multi-file write and per-partition lineage.
+    * A live frontier of at most this many rows is claimed on the driver.
     */
   private[graft] val SmallWriteRows = 8192L
 
@@ -577,17 +601,11 @@ object CrawlSession {
     */
   private[graft] val AutoBloomMinItems = 1048576L
 
-  /** `(url, depth)` of claim rows in canonical crawl order, as Spark's
-    * `orderBy(depth, urlHash, url)` sorts them: `urlHash` as a signed long,
-    * `url` by its UTF-8 bytes (not by Java's UTF-16 `compareTo`).
+  /** `(url, depth)` of claim rows in canonical crawl order
+    * ([[Politeness.canonicalOrder]], Spark's `orderBy(depth, urlHash, url)`).
     */
-  private[graft] def claimOrder(rows: Seq[org.apache.spark.sql.Row]): Seq[(String, Int)] = {
-    import org.apache.spark.unsafe.types.UTF8String
-    implicit val utf8Order: Ordering[UTF8String] = (a, b) => a.compareTo(b)
-    rows.map(r => (r.getAs[Int]("depth"), r.getAs[Long]("urlHash"), r.getAs[String]("url")))
-      .sortBy { case (d, h, u) => (d, h, UTF8String.fromString(u)) }
-      .map { case (d, _, u) => (u, d) }
-  }
+  private[graft] def claimOrder(rows: Seq[org.apache.spark.sql.Row]): Seq[(String, Int)] =
+    Politeness.canonicalOrder(rows).map(r => (r.getAs[String]("url"), r.getAs[Int]("depth")))
 
   /** fetch join with a size-gated broadcast hint on the claim batch. */
   private[graft] def fetchJoin(corpus: DataFrame, claimed: DataFrame,

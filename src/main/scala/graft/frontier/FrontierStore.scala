@@ -7,8 +7,11 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
 /** Snapshot-versioned table shim (S3/Z6) — stands in for Iceberg (no Iceberg
   * runtime jar ships offline; SURVEY.md §7.1). Semantics mirrored:
@@ -129,16 +132,24 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * lacks the key, Spark infers as before.
     */
   private def parquetAt(dirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StructType}
     val schema =
       if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-      else dirs.flatMap(d => parquetFiles(d).map(f => s"$d/$f")).minOption
-        .flatMap(f => footer(f)(r => Option(r.getFileMetaData
-          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))))
-        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-        .collect { case s: StructType => s }
+      else filesIn(dirs).minOption.flatMap(sparkSchema(_))
     schema.fold(spark.read)(spark.read.schema).parquet(dirs: _*)
   }
+
+  private def filesIn(dirs: Seq[String]): Seq[String] =
+    dirs.flatMap(d => parquetFiles(d).map(f => s"$d/$f"))
+
+  /** the Spark schema a file's footer records under Spark's row-metadata
+    * key, if any.
+    */
+  private def sparkSchema(file: String,
+      conf: Configuration = spark.sessionState.newHadoopConf()): Option[StructType] =
+    footer(file, conf)(r => Option(r.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY)))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
 
   private def segPath(s: String): String = s"$root/segments/$s"
 
@@ -171,6 +182,82 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         data.join(tside, cond, "left_anti").drop(SeqCol)
       }
     }
+  }
+
+  /** [[readVersion]] on the driver, with no Spark job: every parquet file
+    * of snapshot v's segments and tombstones is read with parquet-hadoop,
+    * and rows whose key a tombstone holds are dropped through a hash set
+    * (a key with a null deletes nothing, as in the anti-join). Meant for
+    * small tables: the crawl reads a frontier of at most
+    * `CrawlSession.SmallWriteRows` live rows this way. The schema is
+    * `readVersion`'s, from the same footer, in the data files' column order
+    * (`readVersion`'s anti-join moves the tombstone keys first); rows come
+    * in file order. Only string, bigint and int columns are read, and a
+    * sequenced table is refused.
+    */
+  def collectVersion(v: Long): (StructType, Seq[Row]) = {
+    require(!sequenced, s"collectVersion reads unsequenced tables only: $root")
+    // one conf for every file: building one per file re-copies the session's
+    // Hadoop conf each time
+    val conf = spark.sessionState.newHadoopConf()
+    def schemaOf(files: Seq[String]): StructType = {
+      val s = files.minOption.flatMap(sparkSchema(_, conf)).getOrElse(
+        throw new IllegalStateException(s"no Spark schema in the footers of $root@$v"))
+      s.fields.find(f => !Seq(StringType, LongType, IntegerType).contains(f.dataType))
+        .foreach(f => throw new UnsupportedOperationException(
+          s"collectVersion cannot read ${f.name}: ${f.dataType.simpleString}"))
+      // a file source reads every column as nullable
+      StructType(s.fields.map(_.copy(nullable = true)))
+    }
+    val dataFiles = filesIn(segmentsOf(v).map(segPath))
+    val schema = schemaOf(dataFiles)
+    val data = dataFiles.flatMap(readRows(_, schema, conf))
+    val tombFiles = filesIn(tombstonesOf(v).map(t => s"$root/tombstones/$t"))
+    val live =
+      if (tombFiles.isEmpty) data
+      else {
+        val tombSchema = schemaOf(tombFiles)
+        val dead = tombFiles.flatMap(readRows(_, tombSchema, conf))
+          .map(_.toSeq).filterNot(_.contains(null)).toSet
+        val keyIdx = tombSchema.fieldNames.toSeq.map(schema.fieldIndex)
+        data.filterNot(r => dead.contains(keyIdx.map(r(_))))
+      }
+    (schema, live.map(new GenericRowWithSchema(_, schema)))
+  }
+
+  /** the rows of one parquet file as `schema`'s values, by column name (a
+    * column the file lacks reads as null).
+    */
+  private def readRows(file: String, schema: StructType,
+      conf: Configuration): Seq[Array[Any]] = footer(file, conf) { r =>
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    val fileSchema = r.getFileMetaData.getSchema
+    val cols = schema.fields.map(f =>
+      if (fileSchema.containsField(f.name)) fileSchema.getFieldIndex(f.name) else -1)
+    def value(g: Group, c: Int): Any = {
+      val i = cols(c)
+      if (i < 0 || g.getFieldRepetitionCount(i) == 0) null
+      else schema.fields(c).dataType match {
+        case StringType => g.getString(i, 0)
+        case LongType => g.getLong(i, 0)
+        case IntegerType => g.getInteger(i, 0)
+      }
+    }
+    val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(fileSchema)
+    val out = Seq.newBuilder[Array[Any]]
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val records = io.getRecordReader(pages, new GroupRecordConverter(fileSchema))
+      var n = pages.getRowCount
+      while (n > 0) {
+        val g = records.read()
+        out += Array.tabulate[Any](cols.length)(value(g, _))
+        n -= 1
+      }
+      pages = r.readNextRowGroup()
+    }
+    out.result()
   }
 
   /** raw data segments, no tombstones applied (e.g. an [[appendedOf]] log). */
@@ -356,9 +443,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * builds default options around a fresh Hadoop `Configuration`, which
     * re-parses the default XML resources on every call (~17 ms a read).
     */
-  private def footer[A](file: String)(
+  private def footer[A](file: String,
+      conf: Configuration = spark.sessionState.newHadoopConf())(
       f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
-    val conf = spark.sessionState.newHadoopConf()
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,

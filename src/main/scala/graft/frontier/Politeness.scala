@@ -1,8 +1,9 @@
 package graft.frontier
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Politeness claim (W2/Z1) — the reference's time-based per-thread pacing
   * (WebRiverIntervalController.java:5-13, RiverWeb.java:437-439) translated
@@ -81,7 +82,35 @@ object Politeness {
       Seq(col("depth").asc, col("urlHash").asc, col("url").asc),
       hostBudget, remaining,
       budget = coalesce(col("__hb"), lit(hostBudget)))
-      .drop("__hb")
+      .select(frontier.columns.map(col): _*) // the join put host first
+  }
+
+  /** [[claimWithHostBudgets]] on the driver, for a frontier whose rows are
+    * already there (no overrides: [[claim]]): per host, the first
+    * min(`hostBudget`, `budgets(host)`) rows in canonical order, then the
+    * first `remaining` of those in the same order, which is the order they
+    * come back in. A budget ≤ 0 claims nothing from its host; a null host
+    * is one host with the default budget. Rows need non-null `depth`,
+    * `urlHash` and `url` fields and a `host` field.
+    */
+  def claimRows(rows: Seq[Row], hostBudget: Int, budgets: Map[String, Int],
+      remaining: Long): Seq[Row] = {
+    val perHost = rows.groupBy(r => Option(r.getAs[String]("host"))).toSeq
+      .flatMap { case (host, hostRows) =>
+        val budget = host.flatMap(budgets.get).fold(hostBudget)(math.min(_, hostBudget))
+        canonicalOrder(hostRows).take(budget)
+      }
+    canonicalOrder(perHost).take(math.min(remaining, Int.MaxValue.toLong).toInt)
+  }
+
+  /** rows in canonical crawl order, as Spark's `orderBy(depth, urlHash,
+    * url)` sorts them: `urlHash` as a signed long, `url` by its UTF-8 bytes
+    * (not by Java's UTF-16 `compareTo`).
+    */
+  def canonicalOrder(rows: Seq[Row]): Seq[Row] = {
+    implicit val utf8Order: Ordering[UTF8String] = (a, b) => a.compareTo(b)
+    rows.sortBy(r => (r.getAs[Int]("depth"), r.getAs[Long]("urlHash"),
+      UTF8String.fromString(r.getAs[String]("url"))))
   }
 
   private def claimOrdered(

@@ -103,4 +103,48 @@ class PolitenessSpec extends AnyFunSuite {
       assert(sample == sampleRef, ctx)
     }
   }
+
+  test("claimRows on the driver claims the same rows as claim and claimWithHostBudgets") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("url", StringType), StructField("urlHash", LongType),
+      StructField("host", StringType), StructField("depth", IntegerType),
+      StructField("parentUrl", StringType)))
+    // "～" (U+FF5E) sorts before "😀" (U+1F600) by UTF-8 bytes but after it
+    // by UTF-16 units; narrow depth and hash ranges make the url break ties
+    val tails = Seq("a", "b", "～", "😀", "é", "z/～1", "z/😀1")
+    val rnd = new scala.util.Random(18L)
+    (0 until 40).foreach { c =>
+      val hosts = Seq(null, "h0", "h1", "h2", "h3").take(2 + rnd.nextInt(4))
+      val n = 1 + rnd.nextInt(60)
+      val rows = (0 until n).map { i =>
+        val host = hosts(rnd.nextInt(hosts.size))
+        new GenericRowWithSchema(Array(s"http://$host/${tails(rnd.nextInt(tails.size))}$i",
+          (rnd.nextInt(7) - 3).toLong, host, rnd.nextInt(3), "p"), schema): Row
+      }
+      val hostBudget = 1 + rnd.nextInt(4)
+      // overrides of 0, 1 and above the default, one of them on an absent host
+      val budgets = Map("h0" -> 0, "h1" -> 1, "h2" -> (hostBudget + 2), "hx" -> 1)
+        .filter(_ => rnd.nextBoolean())
+      val perHostTotal = rows.groupBy(r => Option(r.getString(2))).map { case (h, rs) =>
+        math.min(rs.size, h.flatMap(budgets.get).fold(hostBudget)(math.min(_, hostBudget)).max(0))
+      }.sum
+      val remaining =
+        if (rnd.nextBoolean()) math.max(0, perHostTotal - 1 - rnd.nextInt(3)).toLong
+        else perHostTotal + rnd.nextInt(3).toLong
+      val frontier = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .repartition(1 + rnd.nextInt(3))
+      val ctx = s"case $c: n=$n budget=$hostBudget overrides=$budgets remaining=$remaining"
+      val driver = Politeness.claimRows(rows, hostBudget, budgets, remaining)
+      assert(driver.size == math.min(perHostTotal.toLong, remaining), ctx)
+      assert(driver == Politeness.canonicalOrder(driver), ctx)
+      val spark1 = Politeness.claimWithHostBudgets(frontier, hostBudget,
+        budgets.toSeq.toDF("host", "budget"), remaining)
+      assert(spark1.columns.toSeq == schema.fieldNames.toSeq, ctx)
+      assert(spark1.collect().toSet == driver.toSet, ctx)
+      val plain = Politeness.claimRows(rows, hostBudget, Map.empty, remaining)
+      assert(Politeness.claim(frontier, hostBudget, remaining).collect().toSet == plain.toSet, ctx)
+    }
+  }
 }

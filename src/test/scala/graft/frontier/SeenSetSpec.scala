@@ -489,4 +489,45 @@ class SeenSetSpec extends AnyFunSuite {
     assert(again.jobs.isEmpty, "the rebuild rewrote the sidecar")
     t.drop()
   }
+
+  test("collectVersion reads readVersion's rows on the driver, with no Spark job") {
+    val dir = TestSpark.tmpDir("snap-collect")
+    val t = new SnapshotTable(dir, spark)
+    // frontier-shaped, seeds with a null parentUrl
+    def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong - 3000L, s"h${i % 5}", i % 4,
+      if (i % 3 == 0) null else s"p$i")).toDF("url", "urlHash", "host", "depth", "parentUrl")
+    def keys(ids: Range) = rows(ids).select("urlHash", "url")
+    def check(v: Long, what: String): Unit = {
+      val got = TestSpark.traced(t.collectVersion(v))
+      assert(got.jobs.isEmpty, s"$what: ${got.jobs.map(got.actionOf)}")
+      val (schema, live) = got.result
+      // by name: the anti-join of readVersion moves the key columns first
+      val read = t.readVersion(v).select(schema.fieldNames.map(col): _*)
+      assert(schema == read.schema, what)
+      assert(live.toSet == read.collect().toSet && live.size == t.rowsOf(v), what)
+    }
+    val (v0, _) = t.commitFull(rows(0 until 6000).repartition(2))
+    check(v0, "seed snapshot")
+    val (v1, _) = t.commitDeltaTo(rows(6000 until 6010), keys(0 until 2000), v0)
+    val (v2, _) = t.commitDeltaTo(rows(0 until 0), keys(2000 until 2010), v1)
+    assert(t.tombstonesOf(v2).size == 2 && t.segmentRows(v2.toString) == 0)
+    check(v1, "delta tombstones")
+    check(v2, "an empty segment")
+    // 2,010 + 2,190 tombstones pass the 4,096 floor: compaction
+    val (v3, _) = t.commitDeltaTo(rows(6010 until 6020), keys(2010 until 4200), v2)
+    assert(t.segmentsOf(v3).contains(s"$v3-base") && t.tombstonesOf(v3).isEmpty)
+    check(v3, "after a compaction")
+    val (v4, _) = t.commitDeltaTo(rows(6020 until 6030), keys(6010 until 6015), v3)
+    check(v4, "tombstones over a base")
+    t.drop()
+
+    val seq = new SnapshotTable(TestSpark.tmpDir("snap-collect-seq"), spark, sequenced = true)
+    val (s0, _) = seq.commitAppend(rows(0 until 5))
+    intercept[IllegalArgumentException](seq.collectVersion(s0))
+    seq.drop()
+    val wide = new SnapshotTable(TestSpark.tmpDir("snap-collect-type"), spark)
+    val (w0, _) = wide.commitFull(Seq(("u", 1.5)).toDF("url", "score"))
+    intercept[UnsupportedOperationException](wide.collectVersion(w0))
+    wide.drop()
+  }
 }

@@ -2,8 +2,10 @@ package graft.crawl
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, MapType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Extractor, RuleCompiler}
 import graft.frontier.{IncrementalSeenBloom, Politeness, SeenSet, SnapshotTable}
@@ -58,6 +60,13 @@ final class CrawlSession(
   // incrementally merged seen-set bloom router (O(new URLs) per round
   // instead of an O(|seen|) stat.bloomFilter rebuild)
   private val seenBloom = new IncrementalSeenBloom(frontierTable)
+  // the driver mirror of the checkpointed frontier while its seen set is at
+  // most SmallWriteRows rows: set at each small round's checkpoint flip,
+  // dropped by a failed round and by a seen set above the gate
+  private var mirror: Option[Mirror] = None
+
+  /** the frontier version the driver mirror holds, if any. */
+  private[crawl] def mirrorVersion: Option[Long] = mirror.map(_.version)
 
   /** The URL-seen set (J1), read-only: the frontier's append log at the
     * checkpointed version — the seed segment and every round's new-entries
@@ -124,12 +133,37 @@ final class CrawlSession(
       !graft.functions.TextExpressions.startsWithAny(normPath, prefixes)
   }
 
+  /** robots rules as a map literal from host to disallowed prefixes, read
+    * once a session: when the table has at most
+    * [[CrawlSession.SmallWriteRows]] rows and one per host (null hosts
+    * match nothing, as in the join), else None. The literal keeps the
+    * robots join out of the plan: a small round's collect, with no
+    * exchange left, is one job.
+    */
+  private lazy val robotsLiteral: Option[Column] = {
+    val all = robots.select(col("host"), col("disallow_prefixes"))
+      .limit(SmallWriteRows.toInt + 1).collect()
+    val rows = all.filterNot(_.isNullAt(0))
+    val hosts = rows.map(_.getString(0))
+    if (all.length > SmallWriteRows || hosts.distinct.length < hosts.length) None
+    else Some(mapLiteral(hosts.toSeq, rows.map(_.get(1)).toSeq,
+      robots.schema("disallow_prefixes").dataType))
+  }
+
+  /** robots (Z2) over candidate rows: a lookup in [[robotsLiteral]] for a
+    * small robots table, else a broadcast left join on `host` — the same
+    * rows either way.
+    */
   private def applyRobots(df: DataFrame): DataFrame =
     if (!config.robotsTxt) df
-    else df
-      .join(broadcast(robots), Seq("host"), "left")
-      .filter(robotsAllowed(col("url"), col("disallow_prefixes")))
-      .drop("disallow_prefixes")
+    else robotsLiteral match {
+      case Some(rules) =>
+        df.filter(robotsAllowed(col("url"), try_element_at(rules, col("host"))))
+      case None => df
+        .join(broadcast(robots), Seq("host"), "left")
+        .filter(robotsAllowed(col("url"), col("disallow_prefixes")))
+        .drop("disallow_prefixes")
+    }
 
   /** P1/P2 include/exclude on canonical child URLs (full-match anchored,
     * RiverWeb.java:400-422). Empty include list keeps everything.
@@ -148,8 +182,11 @@ final class CrawlSession(
     df.filter(inc && !exc)
   }
 
-  /** raw URL strings -> deduped canonical frontier candidates. */
-  private def toCandidates(raw: DataFrame, depthCol: Column,
+  /** raw URL strings -> canonical frontier candidates, one row per child
+    * (`url`, `urlHash`, `host`, `depth`, `parentUrl`): canonicalized, then
+    * filtered by the trap guard, include/exclude, `maxDepth` and robots.
+    */
+  private def candidateRows(raw: DataFrame, depthCol: Column,
       parentCol: Column, applyIncludeExclude: Boolean): DataFrame = {
     val canon = raw
       .select(
@@ -169,21 +206,7 @@ final class CrawlSession(
     val depthOk =
       if (config.maxDepth < 0) keyed
       else keyed.filter(col("depth") <= config.maxDepth)
-    // in-batch dedup: one row per url. A round can claim parents at mixed
-    // depths (politeness defers hot-host rows), so the same child may arrive
-    // at different depths in one batch — keep the minimum (canonical claim
-    // order processes shallower parents first, so the oracle's
-    // first-occurrence rule is exactly min-depth).
-    // min over (depth, parentUrl) AS A PAIR: aggregating them independently
-    // could stitch the min depth to a parent from a deeper occurrence —
-    // a provenance pair that never existed. Grouped on the seen anti-join's
-    // key pair, so that join reuses this exchange's hash partitioning; host
-    // is a function of url, so min(host) only carries it through.
     applyRobots(depthOk)
-      .groupBy("urlHash", "url")
-      .agg(min("host").as("host"), min(struct(col("depth"), col("parentUrl"))).as("dp"))
-      .select(col("url"), col("urlHash"), col("host"),
-        col("dp.depth").as("depth"), col("dp.parentUrl").as("parentUrl"))
   }
 
   /** Seed the frontier, and so the seen set (round 0). Idempotent: no-op
@@ -194,8 +217,8 @@ final class CrawlSession(
     if (readCheckpoint().isDefined) return
     import spark.implicits._
     val seedsDf = config.seeds.toDF("child")
-    val cand0 = toCandidates(seedsDf, lit(0), lit(null).cast("string"),
-      applyIncludeExclude = false)
+    val cand0 = dedup(candidateRows(seedsDf, lit(0), lit(null).cast("string"),
+      applyIncludeExclude = false))
     val cand =
       if (config.seeds.size <= SmallWriteRows) cand0.repartition(1) else cand0
     val (fv, n) = frontierTable.commitFull(cand,
@@ -206,6 +229,18 @@ final class CrawlSession(
 
   /** One crawl round. Returns the round's result, or None if the crawl is
     * complete (empty frontier or access budget exhausted, Z4/Z5).
+    *
+    * A round whose seen set (the live frontier plus every page processed,
+    * read from the manifest, so picking the path runs no job) is at most
+    * [[CrawlSession.SmallWriteRows]] rows runs two Spark actions. The claim
+    * comes from the session's driver mirror of the checkpointed frontier;
+    * one `collect` over the fetch returns the filtered child candidates;
+    * the in-batch dedup and the seen check run on the driver; the round's
+    * tombstones and new entries are written from the driver; and the docs
+    * are a Spark write, beside the collect, so no page content passes
+    * through the driver. Above the gate the round is one Spark DAG: the
+    * cached window claim, the children's dedup and seen anti-join, and
+    * Spark writes.
     */
   def runRound(): Option[RoundResult] = {
     val v = readCheckpoint().getOrElse(return None)
@@ -227,24 +262,25 @@ final class CrawlSession(
       val seenCount = frontierRows + processed
 
       // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
-      // The gate reads frontierRows from the manifest, so choosing the path
-      // runs no job. Below it the live frontier is read on the driver
-      // (SnapshotTable.collectVersion: its parquet files, minus tombstones)
-      // and claimed there by Politeness.claimRows — no Spark job — and the
-      // claim comes back as a LocalRelation: the fetch join broadcasts it,
-      // the tombstones write it, and the claim order sorts it on the
-      // driver, with no cache and no count stages. Above the gate the claim
-      // is the per-host window, cached and counted once: a large round is
-      // bound by its data, not by this action, and a driver claim would move
-      // the whole frontier through the driver.
-      val (claimed, claimedCount, claimRows) =
-        if (frontierRows <= SmallWriteRows) {
-          val (schema, live) = frontierTable.collectVersion(v)
-          val rows = Politeness.claimRows(live, config.hostBudgetPerRound,
+      // Below the gate the live frontier is the driver mirror's (loaded from
+      // the checkpointed version's files when it is not that version's) and
+      // Politeness.claimRows claims from it — no Spark job. Its rows ride the
+      // fetch as literals, and its tombstones are a LocalRelation, written
+      // from the driver. The gate is on the seen set, which holds the
+      // frontier: the mirror keeps both. Above the gate the claim is the
+      // per-host window, cached and counted once: a large round is bound by
+      // its data, not by this action, and a driver claim would move the
+      // whole frontier through the driver.
+      val local =
+        if (seenCount <= SmallWriteRows) Some(mirrorAt(v))
+        else { mirror = None; None }
+      val (claimed, claimedCount, claimRows) = local match {
+        case Some(m) =>
+          val rows = Politeness.claimRows(m.live, config.hostBudgetPerRound,
             delayBudgets, remaining)
-          (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+          (spark.createDataFrame(java.util.Arrays.asList(rows: _*), m.schema),
             rows.length.toLong, Some(rows))
-        } else {
+        case None =>
           val frontier = frontierTable.readVersion(v)
           // the global A2 cap cannot bind when the whole frontier fits in
           // the remaining budget (claim ⊆ frontier ⇒ |claim| ≤ frontierRows
@@ -261,7 +297,7 @@ final class CrawlSession(
             }
           val c = cache(claim)
           (c, c.count(), None)
-        }
+      }
       if (claimedCount == 0) return None
       // Small rounds write ONE file per snapshot instead of shuffle-partition
       // many near-empty ones: parquet task-commit overhead dominates
@@ -270,8 +306,7 @@ final class CrawlSession(
       // anti-join/extraction stages parallel and serializes only the write
       // task. Above the gate the parallel multi-file write is untouched.
       val smallRound = claimedCount <= SmallWriteRows
-      def writeShape(df: DataFrame): DataFrame =
-        if (smallRound) df.repartition(1) else df
+      def writeShape(df: DataFrame): DataFrame = if (smallRound) df.repartition(1) else df
 
       // --- fetch = claim ⋈ corpus (S5/J4) ------------------------------------
       // The claim batch is usually orders of magnitude smaller than the corpus
@@ -288,19 +323,29 @@ final class CrawlSession(
         if (corpus.columns.contains("httpStatus"))
           coalesce(corpus("httpStatus"), lit(200))
         else lit(200)
-      val fetched = cache(fetchJoin(corpus, claimed, claimedCount)
+      // a driver claim rides the plan as literals (fetchLocal): no broadcast
+      // exchange, so the small round's plan has no stage to materialize
+      val (joined, claimCol) = claimRows match {
+        case Some(rows) => (fetchLocal(corpus, rows), (c: String) => col(s"$LocalClaim.$c"))
+        case None => (fetchJoin(corpus, claimed, claimedCount), (c: String) => claimed(c))
+      }
+      val fetchedRows = joined
         .select(
-          claimed("url"), claimed("parentUrl"), claimed("depth"),
-          claimed("urlHash"), claimed("host").as("claimHost"),
+          claimCol("url").as("url"), claimCol("parentUrl").as("parentUrl"),
+          claimCol("depth").as("depth"), claimCol("urlHash").as("urlHash"),
+          claimCol("host").as("claimHost"),
           lit("GET").as("method"),
           lit("text/html").as("mimeType"),
           lit("UTF-8").as("charSet"),
           statusCol.as("httpStatusCode"),
           graft.functions.SpanFieldColumns.spanTextLength(corpus("spans"))
             .as("contentLength"),
-          pmod(claimed("urlHash"), lit(500)).as("executionTime"),
+          pmod(claimCol("urlHash"), lit(500)).as("executionTime"),
           corpus("lastModified").as("lastModified"),
-          corpus("spans").as("spans")))
+          corpus("spans").as("spans"))
+      // a large round's docs commit and children DAG both scan it; a small
+      // one reads its few pages twice rather than pay for a cache
+      val fetched = if (local.isDefined) fetchedRows else cache(fetchedRows)
 
       // HTTP redirect classification (reference `auto_redirect`,
       // RiverWeb.java:302-303): a page whose spans carry a `redirect` span is
@@ -331,7 +376,8 @@ final class CrawlSession(
       // flips only after BOTH commits are durable, and a docs failure
       // aborts the round before the flip, so crash semantics are unchanged
       // (a frontier snapshot without a checkpoint is a resume-ignored
-      // orphan by design).
+      // orphan by design). A small round's docs stay a Spark write too:
+      // their page content never passes through the driver.
       val stamp = clock()
       docsF = scala.concurrent.Future {
         val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
@@ -363,65 +409,77 @@ final class CrawlSession(
             .as("child"),
           (col("depth") + when(isRedirect, 0).otherwise(1)).as("cdepth"),
           col("url").as("parentUrl"))
-      val raw = toCandidates(children, col("cdepth"), col("parentUrl"),
+      val candidates = candidateRows(children, col("cdepth"), col("parentUrl"),
         applyIncludeExclude = true)
-
-      // Below the floor the bloom route costs more than it saves: the
-      // incremental filter's per-round maintenance is one Spark job per new
-      // segment (stat.bloomFilter over it), and the routed plan adds a branch
-      // union — while the exact anti-join over a tiny seen set is a single
-      // cheap (SHJ-hinted) join. Inside the band, the incrementally merged
-      // bloom: O(new URLs last round), not O(seen). Above the single-bloom
-      // ceiling, the exact anti-join again (maxBloomItems = 0 keeps filterNew
-      // from building a filter of its own).
-      val bloom =
-        if (seenCount >= AutoBloomMinItems && seenCount <= SeenSet.MaxBloomItems)
-          Some(seenBloom.forVersion(v, seenCount))
-        else None
-      // persisted only for the bloom route, whose two branches each scan it
-      // (definitely-new ∪ maybe-seen anti-join); the exact route reads it
-      // once, straight through the dedup's exchange
-      val cand = if (bloom.isDefined) cache(raw) else raw
-      val newEntries = SeenSet.filterNew(cand, seenAt(v), seenCount,
-        maxBloomItems = 0L, prebuiltBloom = bloom)
-
-      // The new-entries write keys its single-file gate on the CLAIM count
-      // (the segment write itself is the one materialization — the previous
-      // persist + eager count() spent a whole extra job per round only to
-      // re-derive what the claim count already bounds). A small claim over
-      // extreme-fanout pages (a handful of huge sitemaps) can still emit
-      // SmallWriteRows × 100 children through the single write task — a
-      // rare, bounded case (one task writing ~10^6 rows) that costs seconds
-      // when it happens, vs. a count job on EVERY small round. Above the
-      // gate the parallel multi-file write is untouched.
-      //
-      // coalesce(1), NOT repartition(1): the children pipeline ends in the
-      // dedup groupBy's exchange, so coalesce collapses only the tiny
-      // post-shuffle stages into one task — the map-side extraction stays
-      // parallel — and skips the extra round-robin exchange+stage that
-      // repartition(1) paid per round. (writeDocs keeps repartition(1):
-      // its pipeline is shuffle-free, so a coalesce there WOULD serialize
-      // the whole fetch-join + extract.)
-      def fanoutShape(df: DataFrame): DataFrame =
-        if (smallRound) df.coalesce(1) else df
 
       // --- frontier transition (S3 snapshot-atomic claim) ---------------------
       // delta commit: append the new entries, tombstone the claimed rows —
       // O(claim + new) write instead of rewriting the whole frontier
       // (SnapshotTable compacts the parent's survivors into a base segment
-      // once tombstones accumulate). Segment newFv is exactly newEntries,
-      // compaction or not, and joins the append log: it IS the seen set's
-      // growth, written once.
+      // once tombstones accumulate). Segment newFv is exactly the new
+      // entries, compaction or not, and joins the append log: it IS the seen
+      // set's growth, written once.
       val newProcessed = processed + claimedCount
-      val (newFv, frontierLeft) = frontierTable.commitDeltaTo(
-        fanoutShape(newEntries.select(claimed.columns.map(col): _*)),
-        // tombstones read the driver claim (or, above the gate, its
-        // cache) — coalesce merges the tiny scan tasks without
-        // repartition(1)'s extra exchange
-        fanoutShape(claimed.select("urlHash", "url")), v, Map(
-          "round" -> (round + 1).toString,
-          "processed" -> newProcessed.toString,
-          "claimed" -> claimedCount.toString))
+      val metrics = Map(
+        "round" -> (round + 1).toString,
+        "processed" -> newProcessed.toString,
+        "claimed" -> claimedCount.toString)
+      val (newFv, frontierLeft, next) = local match {
+        case Some(m) =>
+          // the round's one collect: the candidates, deduped and seen-checked
+          // against the mirror here; the new entries and the tombstones are
+          // local frames, written from the driver
+          val batch = dedupRows(candidates.select(m.schema.fieldNames.map(col): _*)
+            .collect().toSeq)
+          val fresh = batch.filterNot(r => m.seen.contains(seenKey(r)))
+          val (fv, left) = frontierTable.commitDeltaTo(
+            spark.createDataFrame(java.util.Arrays.asList(fresh: _*), m.schema),
+            claimed.select("urlHash", "url"), v, metrics)
+          (fv, left, Some((m, fresh)))
+        case None =>
+          val raw = dedup(candidates)
+          // Below the floor the bloom route costs more than it saves: the
+          // incremental filter's per-round maintenance is one Spark job per
+          // new segment (stat.bloomFilter over it), and the routed plan adds
+          // a branch union — while the exact anti-join over a tiny seen set
+          // is a single cheap (SHJ-hinted) join. Inside the band, the
+          // incrementally merged bloom: O(new URLs last round), not O(seen).
+          // Above the single-bloom ceiling, the exact anti-join again
+          // (maxBloomItems = 0 keeps filterNew from building a filter of its
+          // own).
+          val bloom =
+            if (seenCount >= AutoBloomMinItems && seenCount <= SeenSet.MaxBloomItems)
+              Some(seenBloom.forVersion(v, seenCount))
+            else None
+          // persisted only for the bloom route, whose two branches each scan
+          // it (definitely-new ∪ maybe-seen anti-join); the exact route reads
+          // it once, straight through the dedup's exchange
+          val cand = if (bloom.isDefined) cache(raw) else raw
+          val newEntries = SeenSet.filterNew(cand, seenAt(v), seenCount,
+            maxBloomItems = 0L, prebuiltBloom = bloom)
+          // The new-entries write keys its single-file gate on the CLAIM
+          // count (the segment write itself is the one materialization). A
+          // small claim over extreme-fanout pages (a handful of huge
+          // sitemaps) can still emit SmallWriteRows × 100 children through
+          // the single write task — a rare, bounded case (one task writing
+          // ~10^6 rows) that costs seconds when it happens, vs. a count job
+          // on EVERY small round.
+          //
+          // coalesce(1), NOT repartition(1): the children pipeline ends in
+          // the dedup groupBy's exchange, so coalesce collapses only the tiny
+          // post-shuffle stages into one task — the map-side extraction
+          // stays parallel — and skips the extra round-robin exchange+stage
+          // that repartition(1) paid per round. (writeDocs keeps
+          // repartition(1): its pipeline is shuffle-free, so a coalesce there
+          // WOULD serialize the whole fetch-join + extract.) The tombstones
+          // read the claim's cache.
+          def fanoutShape(df: DataFrame): DataFrame =
+            if (smallRound) df.coalesce(1) else df
+          val (fv, left) = frontierTable.commitDeltaTo(
+            fanoutShape(newEntries.select(claimed.columns.map(col): _*)),
+            fanoutShape(claimed.select("urlHash", "url")), v, metrics)
+          (fv, left, None)
+      }
       val newUrls = frontierTable.metric(newFv, "segmentRows").map(_.toLong).getOrElse(0L)
       val seenTotal = frontierLeft + newProcessed
       // both commits must be durable before the round becomes visible
@@ -429,6 +487,13 @@ final class CrawlSession(
         docsF, scala.concurrent.duration.Duration.Inf)
       // the round becomes visible HERE — one atomic rename
       writeCheckpoint(newFv)
+      // the mirror moves to the new version while its seen set stays under
+      // the gate: live − claimed + new entries, and seen + new entries
+      mirror = next.filter(_ => seenTotal <= SmallWriteRows).map { case (m, fresh) =>
+        val gone = claimRows.get.map(seenKey).toSet
+        Mirror(newFv, m.schema, m.live.filterNot(r => gone.contains(seenKey(r))) ++ fresh,
+          m.seen ++ fresh.map(seenKey))
+      }
 
       // round claim order for parity tests, sorted on the driver: a small
       // round sorts the rows it claimed there and runs no Spark job
@@ -442,12 +507,27 @@ final class CrawlSession(
       Some(RoundResult(round + 1, claimedCount, docsWritten, newUrls,
         frontierLeft, seenTotal, newProcessed, order))
     } catch { case scala.util.control.NonFatal(e) =>
+      // a failed round may have committed frontier files past the mirror's
+      // version: the next small round reloads from the checkpoint
+      mirror = None
       // the docs commit may still be scanning `fetched` and `docs`: let it
       // end before they are released (its own failure is secondary)
       scala.util.Try(scala.concurrent.Await.result(
         docsF, scala.concurrent.duration.Duration.Inf))
       throw e
     } finally cached.foreach(_.unpersist())
+  }
+
+  /** the driver mirror of checkpointed version `v`: the session's, when it
+    * is at `v`, else loaded from `v`'s files — the live frontier through
+    * `collectVersion`, the seen keys from the append log.
+    */
+  private def mirrorAt(v: Long): Mirror = mirror.filter(_.version == v).getOrElse {
+    val (schema, live) = frontierTable.collectVersion(v)
+    val seen = frontierTable.collectSegments(frontierTable.appendedOf(v))._2.map(seenKey).toSet
+    val m = Mirror(v, schema, live, seen)
+    mirror = Some(m)
+    m
   }
 
   /** Mode-aware document write (RiverWebTest semantics, SURVEY.md §2.1 S8 +
@@ -576,11 +656,16 @@ object CrawlSession {
     */
   private[graft] val FetchBroadcastMaxRows = 2000000L
 
-  /** Below this claim-batch size a round's snapshot writes repartition(1):
-    * one real parquet file instead of shuffle-partition-many near-empty
-    * ones (task-commit overhead dominates small-round latency). Large
-    * rounds keep the parallel multi-file write and per-partition lineage.
-    * A live frontier of at most this many rows is claimed on the driver.
+  /** The small-round gate. A seen set of at most this many rows, and so
+    * the live frontier it holds, is kept on the driver (the session's
+    * mirror): its round collects only the child candidates, whose dedup,
+    * seen check and new entries are computed and written from the driver,
+    * while the docs stay a Spark write. Above it, a claim batch of at most
+    * this many rows still writes ONE file per snapshot (repartition(1))
+    * instead of shuffle-partition many near-empty ones (task-commit
+    * overhead dominates small-round latency); larger rounds keep the
+    * parallel multi-file write. It also bounds the robots table inlined as
+    * a literal.
     */
   private[graft] val SmallWriteRows = 8192L
 
@@ -601,6 +686,52 @@ object CrawlSession {
     */
   private[graft] val AutoBloomMinItems = 1048576L
 
+  /** The driver's copy of checkpointed frontier version `version`: its
+    * live rows under the frontier's `schema`, and the seen set's
+    * `(urlHash, url)` keys.
+    */
+  private final case class Mirror(version: Long, schema: StructType, live: Seq[Row],
+      seen: Set[(Long, String)])
+
+  /** the seen-set key of a frontier or candidate row. */
+  private[graft] def seenKey(r: Row): (Long, String) =
+    (r.getAs[Long]("urlHash"), r.getAs[String]("url"))
+
+  /** In-batch dedup of frontier candidates: one row per url. A round can
+    * claim parents at mixed depths (politeness defers hot-host rows), so
+    * the same child may arrive at different depths in one batch — keep the
+    * minimum (canonical claim order processes shallower parents first, so
+    * the oracle's first-occurrence rule is exactly min-depth). min over
+    * (depth, parentUrl) AS A PAIR: aggregating them independently could
+    * stitch the min depth to a parent from a deeper occurrence — a
+    * provenance pair that never existed. Grouped on the seen anti-join's
+    * key pair, so that join reuses this exchange's hash partitioning; host
+    * is a function of url, so min(host) only carries it through.
+    */
+  private[graft] def dedup(candidates: DataFrame): DataFrame =
+    candidates.groupBy("urlHash", "url")
+      .agg(min("host").as("host"), min(struct(col("depth"), col("parentUrl"))).as("dp"))
+      .select(col("url"), col("urlHash"), col("host"),
+        col("dp.depth").as("depth"), col("dp.parentUrl").as("parentUrl"))
+
+  /** [[dedup]] on the driver, over collected candidate rows: per
+    * `(urlHash, url)`, the row with the least `(depth, parentUrl)`, compared
+    * as Spark's `min(struct(...))` does — nulls first, `parentUrl` by its
+    * UTF-8 bytes.
+    */
+  private[graft] def dedupRows(rows: Seq[Row]): Seq[Row] = {
+    def nullsFirst[A](x: A, y: A)(cmp: (A, A) => Int): Int =
+      if (x == null) (if (y == null) 0 else -1) else if (y == null) 1 else cmp(x, y)
+    val depthParent: Ordering[Row] = (a, b) => {
+      val d = nullsFirst(a.getAs[Any]("depth"), b.getAs[Any]("depth"))((x, y) =>
+        Integer.compare(x.asInstanceOf[Int], y.asInstanceOf[Int]))
+      if (d != 0) d
+      else nullsFirst(a.getAs[String]("parentUrl"), b.getAs[String]("parentUrl"))((x, y) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y)))
+    }
+    rows.groupBy(seenKey).values.map(_.min(depthParent)).toSeq
+  }
+
   /** `(url, depth)` of claim rows in canonical crawl order
     * ([[Politeness.canonicalOrder]], Spark's `orderBy(depth, urlHash, url)`).
     */
@@ -616,6 +747,36 @@ object CrawlSession {
         org.apache.spark.sql.functions.broadcast(claimed)
       else claimed
     corpus.join(build, corpus("doc_id") === claimed("url"), "inner")
+  }
+
+  /** the struct column of a page's claim row in [[fetchLocal]]'s output. */
+  private[graft] val LocalClaim = "__claim"
+
+  /** [[fetchJoin]] for a claim already on the driver, with no join: the
+    * corpus is filtered on the claimed urls (an `InSet` literal), and each
+    * fetched page takes its claim row from a map literal keyed by url, as
+    * the struct column [[LocalClaim]] — the join's rows and values, with no
+    * broadcast exchange in the plan.
+    */
+  private[graft] def fetchLocal(corpus: DataFrame, claim: Seq[Row]): DataFrame = {
+    val urls = claim.map(_.getAs[String]("url"))
+    val byUrl = mapLiteral(urls, claim, claim.headOption.fold(new StructType())(_.schema))
+    corpus.filter(corpus("doc_id").isin(urls: _*))
+      .withColumn(LocalClaim, try_element_at(byUrl, corpus("doc_id")))
+  }
+
+  /** a map literal from each of `keys` to the value at its position, of
+    * Spark type `valueType`.
+    */
+  private def mapLiteral(keys: Seq[String], values: Seq[Any], valueType: DataType): Column = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
+    val data = new ArrayBasedMapData(
+      ArrayData.toArrayData(keys.map(UTF8String.fromString).toArray),
+      ArrayData.toArrayData(values.map(convertToCatalyst).toArray))
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(data,
+        MapType(StringType, valueType, valueContainsNull = true)))
   }
 
   final case class RoundResult(

@@ -74,7 +74,7 @@ object Oracle {
 
     // seeds: canonicalized, robots-filtered, no include/exclude (engine parity)
     // (no depth gate here: seeds are depth 0, which passes every maxDepth —
-    // the engine's toCandidates filter is likewise vacuous for seeds)
+    // the engine's candidateRows depth filter is likewise vacuous for seeds)
     config.seeds.map(UrlOps.canonicalize).filter(_.nonEmpty).distinct
       .filter(trapOk)
       .filter(allowedByRobots)

@@ -10,7 +10,9 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
 /** Snapshot-versioned table shim (S3/Z6) — stands in for Iceberg (no Iceberg
@@ -37,6 +39,12 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *     compaction's `<v>-base` never joins it, so the log holds every row
   *     the table was given exactly once, tombstoned or not — the frontier's
   *     log is the crawl's URL-seen set ([[appendedOf]], [[readSegments]]);
+  *   - every commit writes its frames one of two ways: a frame whose rows
+  *     are already on the driver (its optimized plan is a `LocalRelation`,
+  *     e.g. a small crawl round's claim tombstones and new entries)
+  *     is written from the driver as one file, with no Spark job, through
+  *     the writer Spark's own tasks use; any other frame is a Spark write.
+  *     Readers cannot tell the two apart;
   *   - resume = read the current manifest (session isolation + resume,
   *     RiverWeb.java:80-84,238-240); crawl state (round, processed) rides in
   *     the metrics map.
@@ -164,7 +172,6 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * broadcast-vs-shuffle call on equality-delete files).
     */
   def readVersion(v: Long): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
     val segs = segmentsOf(v)
     val data = parquetAt(segs.map(segPath))
     val tombs = tombstonesOf(v)
@@ -173,7 +180,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       val tomb = parquetAt(tombs.map(t => s"$root/tombstones/$t"))
       val tside = if (tombRowsOf(v) <= broadcastTombRows) broadcast(tomb) else tomb
       if (!sequenced)
-        data.join(tside, tomb.columns.toSeq, "left_anti")
+        // the using-join moves the key columns first: keep the data order,
+        // so every version reads in one column order
+        data.join(tside, tomb.columns.toSeq, "left_anti").select(data.columns.map(col): _*)
       else {
         // sequence rule: a tombstone deletes only rows written BEFORE it
         val keyCols = tomb.columns.filterNot(_ == SeqCol)
@@ -190,39 +199,51 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * (a key with a null deletes nothing, as in the anti-join). Meant for
     * small tables: the crawl reads a frontier of at most
     * `CrawlSession.SmallWriteRows` live rows this way. The schema is
-    * `readVersion`'s, from the same footer, in the data files' column order
-    * (`readVersion`'s anti-join moves the tombstone keys first); rows come
-    * in file order. Only string, bigint and int columns are read, and a
-    * sequenced table is refused.
+    * `readVersion`'s, from the same footer and in the same column order;
+    * rows come in file order. Only string, bigint and int columns are read,
+    * and a sequenced table is refused.
     */
   def collectVersion(v: Long): (StructType, Seq[Row]) = {
     require(!sequenced, s"collectVersion reads unsequenced tables only: $root")
     // one conf for every file: building one per file re-copies the session's
     // Hadoop conf each time
     val conf = spark.sessionState.newHadoopConf()
-    def schemaOf(files: Seq[String]): StructType = {
-      val s = files.minOption.flatMap(sparkSchema(_, conf)).getOrElse(
-        throw new IllegalStateException(s"no Spark schema in the footers of $root@$v"))
-      s.fields.find(f => !Seq(StringType, LongType, IntegerType).contains(f.dataType))
-        .foreach(f => throw new UnsupportedOperationException(
-          s"collectVersion cannot read ${f.name}: ${f.dataType.simpleString}"))
-      // a file source reads every column as nullable
-      StructType(s.fields.map(_.copy(nullable = true)))
-    }
-    val dataFiles = filesIn(segmentsOf(v).map(segPath))
-    val schema = schemaOf(dataFiles)
-    val data = dataFiles.flatMap(readRows(_, schema, conf))
+    val (schema, data) = collectFiles(filesIn(segmentsOf(v).map(segPath)), conf)
     val tombFiles = filesIn(tombstonesOf(v).map(t => s"$root/tombstones/$t"))
     val live =
       if (tombFiles.isEmpty) data
       else {
-        val tombSchema = schemaOf(tombFiles)
-        val dead = tombFiles.flatMap(readRows(_, tombSchema, conf))
-          .map(_.toSeq).filterNot(_.contains(null)).toSet
+        val (tombSchema, tomb) = collectFiles(tombFiles, conf)
+        val dead = tomb.map(_.toSeq).filterNot(_.contains(null)).toSet
         val keyIdx = tombSchema.fieldNames.toSeq.map(schema.fieldIndex)
         data.filterNot(r => dead.contains(keyIdx.map(r(_))))
       }
     (schema, live.map(new GenericRowWithSchema(_, schema)))
+  }
+
+  /** [[readSegments]] on the driver, with no Spark job, under the same
+    * limits as [[collectVersion]]: e.g. a small frontier's append log.
+    */
+  def collectSegments(segs: Seq[String]): (StructType, Seq[Row]) = {
+    require(!sequenced, s"collectSegments reads unsequenced tables only: $root")
+    val (schema, rows) =
+      collectFiles(filesIn(segs.map(segPath)), spark.sessionState.newHadoopConf())
+    (schema, rows.map(new GenericRowWithSchema(_, schema)))
+  }
+
+  /** the rows of `files` under the Spark schema of the least file's footer
+    * (the one a Spark read takes), every column nullable.
+    */
+  private def collectFiles(files: Seq[String],
+      conf: Configuration): (StructType, Seq[Array[Any]]) = {
+    val s = files.minOption.flatMap(sparkSchema(_, conf)).getOrElse(
+      throw new IllegalStateException(s"no Spark schema in the footers of $root: $files"))
+    s.fields.find(f => !Seq(StringType, LongType, IntegerType).contains(f.dataType))
+      .foreach(f => throw new UnsupportedOperationException(
+        s"cannot read ${f.name} on the driver: ${f.dataType.simpleString}"))
+    // a file source reads every column as nullable
+    val schema = StructType(s.fields.map(_.copy(nullable = true)))
+    (schema, files.flatMap(readRows(_, schema, conf)))
   }
 
   /** the rows of one parquet file as `schema`'s values, by column name (a
@@ -284,10 +305,10 @@ final class SnapshotTable(dir: String, spark: SparkSession,
 
   /** Delta transition anchored at `parentVersion`: `newRows` becomes data
     * segment `<v>` and `tombstones` (key columns of rows to logically
-    * delete) tombstone segment `<v>`, written concurrently (two independent
-    * Spark jobs). Write cost is O(new + tombstones) regardless
-    * of table size — the round-loop fix for the per-round O(frontier)
-    * copy-on-write rewrite.
+    * delete) tombstone segment `<v>`, written concurrently (Spark writes,
+    * or driver writes for local frames). Write cost is O(new + tombstones)
+    * regardless of table size — the round-loop fix for the per-round
+    * O(frontier) copy-on-write rewrite.
     *
     * Compaction: once accumulated tombstones, counted from the written
     * footers, exceed a quarter of the live rows (floor 4096), the parent's
@@ -314,7 +335,6 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   def commitDeltaTo(newRows: DataFrame, tombstones: DataFrame,
       parentVersion: Long,
       metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    import org.apache.spark.sql.functions.broadcast
     val v = currentVersion + 1
     val prevRows = rowsOf(parentVersion)
     val prevTombRows = tombRowsOf(parentVersion)
@@ -323,12 +343,12 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     val base = s"$v-base"
     try {
       val tombF = Future {
-        stamp(tombstones, v).write.mode("overwrite").parquet(tombDir)
+        write(stamp(tombstones, v), tombDir)
       }(SnapshotTable.writeEc)
       // a failed segment write first waits the tombstone write out: left
       // running, it would race the cleanup below and a retry's write of
       // the same dir
-      try stamp(newRows, v).write.mode("overwrite").parquet(segDir)
+      try write(stamp(newRows, v), segDir)
       catch { case NonFatal(e) =>
         scala.util.Try(Await.result(tombF, Duration.Inf))
         throw e
@@ -343,8 +363,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         val tombRaw = parquetAt(Seq(tombDir)).drop(SeqCol)
         val tomb =
           if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
-        stamp(readVersion(parentVersion).join(tomb, tombRaw.columns.toSeq, "left_anti"), v)
-          .write.mode("overwrite").parquet(segPath(base))
+        val parent = readVersion(parentVersion)
+        write(stamp(parent.join(tomb, tombRaw.columns.toSeq, "left_anti")
+          .select(parent.columns.map(col): _*), v), segPath(base))
         // the base segment replaces every tombstone: no snapshot needs this one
         rmTree(Paths.get(tombDir))
         commitManifest(metrics, appendTo = Seq(base),
@@ -370,6 +391,33 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   private def stamp(df: DataFrame, v: Long): DataFrame =
     if (sequenced) df.withColumn(SeqCol, org.apache.spark.sql.functions.lit(v)) else df
 
+  /** Write `df` as the parquet dir `dir`, replacing any earlier one. A
+    * frame whose optimized plan is a [[LocalRelation]] (rows built on the
+    * driver, with any projection over them, the `__seq` stamp included,
+    * folded in by the optimizer) is written from the driver with no Spark
+    * job, as one `part-<uuid>` file through the writer Spark's own tasks use
+    * (`ParquetFileFormat.prepareWrite` + `OutputWriter`), so the file has
+    * the same codec, footer and row-metadata key. Any other frame is a
+    * Spark write.
+    */
+  private def write(df: DataFrame, dir: String): Unit = df.queryExecution.optimizedPlan match {
+    case local: LocalRelation =>
+      import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+      import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+      val schema = local.schema
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+      rmTree(Paths.get(dir))
+      Files.createDirectories(Paths.get(dir))
+      val out = factory.newInstance(
+        s"$dir/part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}",
+        schema, ctx)
+      try local.data.foreach(out.write) finally out.close()
+    case _ => df.write.mode("overwrite").parquet(dir)
+  }
+
   private def dirRowCount(dir: String): Long =
     parquetFiles(dir).map(f => footerRowCount(s"$dir/$f")).sum
 
@@ -381,7 +429,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L): (Long, Long) = {
     val v = currentVersion + 1
-    stamp(df, v).write.mode("overwrite").parquet(segPath(v.toString))
+    write(stamp(df, v), segPath(v.toString))
     commitManifest(metrics, appendTo, logTo, prevRows, tombSegs, tombRows,
       expectVersion = v)
   }

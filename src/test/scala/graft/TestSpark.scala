@@ -26,14 +26,15 @@ object TestSpark {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** What `f` ran on Spark: the jobs it started and the SQL executions it
-    * finished, in order, and the rows its tasks read from input files.
+    * finished, in order, the rows its tasks read from input files and the
+    * bytes of task results they sent to the driver.
     * `descriptions` maps each SQL execution to the description of its root
     * execution: the engine call site of the action, e.g.
     * `collect at CrawlLoop.scala:249`.
     */
   final case class Traced[A](result: A, jobs: Seq[SparkListenerJobStart],
       queries: Seq[QueryExecution], descriptions: Map[Long, String],
-      rowsRead: Long) {
+      rowsRead: Long, resultBytes: Long) {
     /** the action a job belongs to, or None outside any SQL execution. AQE
       * names its map-stage jobs after a JDK frame, so stage names cannot
       * tell which action started a job; its SQL execution can.
@@ -61,6 +62,7 @@ object TestSpark {
     // execution id -> (description, root execution id)
     val executions = new java.util.concurrent.ConcurrentHashMap[Long, (String, Long)]
     val rowsRead = new java.util.concurrent.atomic.AtomicLong
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong
     val (open, close) = (java.util.UUID.randomUUID().toString, java.util.UUID.randomUUID().toString)
     @volatile var recording = false
     val closed = new java.util.concurrent.CountDownLatch(1)
@@ -72,8 +74,10 @@ object TestSpark {
           case _ => if (recording) jobs.add(e)
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (recording) Option(e.taskMetrics)
-          .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
+        if (recording) Option(e.taskMetrics).foreach { m =>
+          rowsRead.addAndGet(m.inputMetrics.recordsRead)
+          resultBytes.addAndGet(m.resultSize)
+        }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
           executions.put(s.executionId,
@@ -102,7 +106,8 @@ object TestSpark {
       val described = executions.asScala.toMap
       val roots = described.map { case (id, (_, root)) =>
         id -> described.get(root).fold("")(_._1) }
-      Traced(out, jobs.asScala.toSeq, queries.asScala.toSeq, roots, rowsRead.get)
+      Traced(out, jobs.asScala.toSeq, queries.asScala.toSeq, roots, rowsRead.get,
+        resultBytes.get)
     } finally {
       spark.listenerManager.unregister(queryListener)
       sc.removeSparkListener(jobListener)

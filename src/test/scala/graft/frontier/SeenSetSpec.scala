@@ -501,8 +501,7 @@ class SeenSetSpec extends AnyFunSuite {
       val got = TestSpark.traced(t.collectVersion(v))
       assert(got.jobs.isEmpty, s"$what: ${got.jobs.map(got.actionOf)}")
       val (schema, live) = got.result
-      // by name: the anti-join of readVersion moves the key columns first
-      val read = t.readVersion(v).select(schema.fieldNames.map(col): _*)
+      val read = t.readVersion(v)
       assert(schema == read.schema, what)
       assert(live.toSet == read.collect().toSet && live.size == t.rowsOf(v), what)
     }
@@ -529,5 +528,109 @@ class SeenSetSpec extends AnyFunSuite {
     val (w0, _) = wide.commitFull(Seq(("u", 1.5)).toDF("url", "score"))
     intercept[UnsupportedOperationException](wide.collectVersion(w0))
     wide.drop()
+  }
+
+  test("snapshot table: every version reads in its data segments' column order") {
+    val t = new SnapshotTable(TestSpark.tmpDir("snap-order"), spark)
+    def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong, s"h${i % 3}")).toDF("url", "urlHash", "host")
+    // the tombstone keys come in another order than the data's
+    def keys(ids: Range) = rows(ids).select("urlHash", "url")
+    val order = Seq("url", "urlHash", "host")
+    def check(v: Long, what: String): Unit = {
+      val segs = t.segmentsOf(v).map(s => s"${t.root}/segments/$s")
+      assert(segs.forall(spark.read.parquet(_).columns.toSeq == order), what)
+      assert(t.readVersion(v).columns.toSeq == order, what)
+      assert(t.collectVersion(v)._1.fieldNames.toSeq == order, what)
+    }
+    // Spark-written segments: a repartition keeps them off the driver write
+    val (v0, _) = t.commitFull(rows(0 until 5000).repartition(2))
+    check(v0, "seed version")
+    val (v1, _) = t.commitDeltaTo(rows(5000 until 5010).repartition(1), keys(0 until 10), v0)
+    assert(t.tombstonesOf(v1).nonEmpty)
+    check(v1, "after a delta")
+    // 10 + 4,190 tombstones pass the 4,096 floor: the base is written from
+    // readVersion, in the data order
+    val (v2, _) = t.commitDeltaTo(rows(5010 until 5020), keys(10 until 4200), v1)
+    assert(t.segmentsOf(v2).contains(s"$v2-base") && t.tombstonesOf(v2).isEmpty)
+    check(v2, "after a compaction")
+    t.drop()
+  }
+
+  test("snapshot table: segments and tombstones written from the driver read like Spark-written ones") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    def frontier(ids: Range) = ids.map(i => (s"u$i", i.toLong - 3000L, s"h${i % 5}", i % 4,
+      if (i % 3 == 0) null else s"p$i")).toDF("url", "urlHash", "host", "depth", "parentUrl")
+    def keys(ids: Range) = frontier(ids).select("urlHash", "url")
+    // the docs shape: an array column, a nested struct and the @timestamp
+    def docs(ids: Range, tag: String) = ids.map(i => (s"u$i", tag,
+      Seq(s"b$i", null), new java.sql.Timestamp(1700000000000L + i)))
+      .toDF("url", "title", "body", "@timestamp")
+      .withColumn("nav", struct(col("title").as("t"), col("body").as("items")))
+    def rowsOf(df: DataFrame) = df.collect().map(r => r.toSeq).toSet
+    def footerSchema(dir: String): String = {
+      val f = new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).min
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFileMetaData.getKeyValueMetaData.get(
+        org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY) +
+        r.getFileMetaData.getSchema.toString + r.getRowGroups.asScala.headOption
+          .fold("")(_.getColumns.asScala.map(_.getCodec.toString).mkString(","))
+      finally r.close()
+    }
+    def written(dir: String) = new java.io.File(dir).list().toSet
+    // the same commits twice: local frames (written from the driver) and
+    // the same rows behind a repartition (written by Spark)
+    def both(sequenced: Boolean)(commits: (SnapshotTable, DataFrame => DataFrame) => Long): Unit = {
+      val d = new SnapshotTable(TestSpark.tmpDir("snap-driver"), spark, sequenced = sequenced)
+      val s = new SnapshotTable(TestSpark.tmpDir("snap-spark"), spark, sequenced = sequenced)
+      val dw = TestSpark.traced(commits(d, identity))
+      assert(dw.jobs.isEmpty, s"the local frames ran Spark jobs: ${dw.jobs.map(dw.actionOf)}")
+      val v = commits(s, _.repartition(1))
+      assert(dw.result == v)
+      (0L to v).foreach { k =>
+        val what = s"sequenced=$sequenced v=$k"
+        assert(d.segmentsOf(k) == s.segmentsOf(k) && d.tombstonesOf(k) == s.tombstonesOf(k), what)
+        assert(d.rowsOf(k) == s.rowsOf(k), what)
+        val (dv, sv) = (d.readVersion(k), s.readVersion(k))
+        assert(dv.schema == sv.schema && rowsOf(dv) == rowsOf(sv), what)
+        assert(rowsOf(d.readSegments(d.appendedOf(k))) == rowsOf(s.readSegments(s.appendedOf(k))), what)
+        if (!sequenced) {
+          val ((dSchema, dLive), (sSchema, sLive)) = (d.collectVersion(k), s.collectVersion(k))
+          assert(dSchema == sSchema && dLive.toSet == sLive.toSet, what)
+        }
+      }
+      (d.segmentsOf(v) ++ d.appendedOf(v)).distinct.foreach { seg =>
+        val (dd, sd) = (s"${d.root}/segments/$seg", s"${s.root}/segments/$seg")
+        assert(d.segmentRows(seg) == s.segmentRows(seg), seg)
+        val (dr, sr) = (spark.read.parquet(dd), spark.read.parquet(sd))
+        assert(dr.schema == sr.schema && rowsOf(dr) == rowsOf(sr), seg)
+        assert(footerSchema(dd) == footerSchema(sd), seg)
+        if (!seg.endsWith("-base")) {
+          assert(written(dd).count(_.endsWith(".parquet")) == 1 && !written(dd).contains("_SUCCESS"), seg)
+          assert(written(sd).contains("_SUCCESS"), seg)
+        }
+      }
+      d.tombstonesOf(v).foreach { t =>
+        val (dt, st) = (s"${d.root}/tombstones/$t", s"${s.root}/tombstones/$t")
+        assert(rowsOf(spark.read.parquet(dt)) == rowsOf(spark.read.parquet(st)), t)
+        assert(footerSchema(dt) == footerSchema(st), t)
+      }
+      d.drop(); s.drop()
+    }
+    both(sequenced = false) { (t, shape) =>
+      val (v0, _) = t.commitFull(shape(frontier(0 until 3000)))
+      val (v1, _) = t.commitDeltaTo(shape(frontier(3000 until 3010)), shape(keys(0 until 20)), v0)
+      val (v2, _) = t.commitDeltaTo(shape(frontier(0 until 0)), shape(keys(20 until 30)), v1)
+      t.commitDeltaTo(shape(frontier(3010 until 3020)), shape(keys(30 until 40)), v2)._1
+    }
+    both(sequenced = true) { (t, shape) =>
+      val (v0, _) = t.commitAppend(shape(docs(0 until 10, "a")))
+      // the sequence rule: same-keyed rows replace their tombstoned elders
+      val (v1, _) = t.commitDeltaTo(shape(docs(0 until 5, "b")),
+        shape(docs(0 until 5, "x").select("url")), v0)
+      t.commitAppend(shape(docs(20 until 22, "c")))._1
+    }
   }
 }

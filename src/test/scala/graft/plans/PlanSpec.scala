@@ -238,8 +238,11 @@ class PlanSpec extends AnyFunSuite {
     }
 
     // exact route (seen < 1,048,576 rows): the candidate side of the anti-join
-    // shuffles once, in the dedup — the join reuses its hash partitioning
-    val exact = new CrawlSession(spark, cfg("plan-exact", Nil), corpus, robots,
+    // shuffles once, in the dedup — the join reuses its hash partitioning.
+    // 9,000 filler seeds put the seen set above the small-round gate, below
+    // which the round dedups and seen-checks its candidates on the driver
+    val fillers = (0 until 9000).map(i => s"http://filler.example.com/s/$i")
+    val exact = new CrawlSession(spark, cfg("plan-exact", fillers), corpus, robots,
       TestSpark.tmpDir("plan-exact"))
     exact.init()
     val exactPlan = roundWritePlan(exact)

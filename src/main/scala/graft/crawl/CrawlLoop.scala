@@ -12,17 +12,21 @@ import graft.frontier.{IncrementalSeenBloom, Politeness, SeenSet, SnapshotTable}
 import graft.model._
 
 /** One crawl session: the rebuild of `RiverWeb.crawl()`
-  * (RiverWeb.java:226-508) as a driver round-loop where each round is ONE
-  * declarative DataFrame DAG (SURVEY.md §3.1):
+  * (RiverWeb.java:226-508) as a driver round-loop (SURVEY.md §3.1):
   *
   *   claim (politeness windows, W1/W2) → fetch = frontier⋈corpus (J4, S5)
   *   → extract (P3-P9, F1-F9, A1, X4) → children (X5, U2/U3)
   *   → canonicalize-hash-dedup (F13 + J1 bloom-prefiltered exact anti-join)
   *   → mode-aware doc write (S8, J2/J3) + frontier snapshot commit.
   *
+  * A round above the small-round gate ([[CrawlSession.SmallWriteRows]]) is
+  * ONE declarative DataFrame DAG. A round below it claims from the
+  * session's driver mirror of the frontier; its Spark work is one collect
+  * of the child candidates and the docs write.
+  *
   * All state crosses rounds through [[SnapshotTable]] commits, so a crawl
   * resumes from its latest manifest (Z6) and every round's plan starts from
-  * a fresh parquet scan (no unbounded lineage).
+  * a fresh parquet scan or the mirror (no unbounded lineage).
   *
   * Canonical crawl order is `(depth asc, urlHash asc, url asc)` — the
   * deterministic, shuffle-free stand-in for the reference's wall-clock
@@ -110,12 +114,13 @@ final class CrawlSession(
   private val sitemapRe = RuleCompiler.anchored(config.sitemapPattern)
 
   /** robots Crawl-delay as per-host round quotas (Z1): floor(round window /
-    * delay), at least 1, for each host with a delay. The robots table is
-    * fixed for the session, so it is collected once, on first use.
+    * delay), at least 1, for each host with a positive delay; a delay of 0
+    * or less sets no quota. The robots table is fixed for the session, so
+    * it is collected once, on first use.
     */
   private lazy val delayBudgets: Map[String, Int] =
     if (!config.robotsTxt || !robots.columns.contains("crawl_delay_s")) Map.empty
-    else robots.filter(col("host").isNotNull && col("crawl_delay_s").isNotNull)
+    else robots.filter(col("host").isNotNull && col("crawl_delay_s") > 0)
       .select(col("host"),
         greatest(lit(1L), floor(lit(config.roundWindowSeconds) /
           col("crawl_delay_s")).cast("long")).cast("int"))
@@ -262,8 +267,8 @@ final class CrawlSession(
       val seenCount = frontierRows + processed
 
       // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
-      // Below the gate the live frontier is the driver mirror's (loaded from
-      // the checkpointed version's files when it is not that version's) and
+      // Below the gate the live frontier is the driver mirror's (collected
+      // from the checkpointed version when it is not that version's) and
       // Politeness.claimRows claims from it — no Spark job. Its rows ride the
       // fetch as literals, and its tombstones are a LocalRelation, written
       // from the driver. The gate is on the seen set, which holds the
@@ -519,13 +524,14 @@ final class CrawlSession(
   }
 
   /** the driver mirror of checkpointed version `v`: the session's, when it
-    * is at `v`, else loaded from `v`'s files — the live frontier through
-    * `collectVersion`, the seen keys from the append log.
+    * is at `v`, else loaded with two collects — the live frontier of
+    * `readVersion(v)` and the seen keys of `v`'s append log. The session's
+    * first small round pays them, and the round after a failed one.
     */
   private def mirrorAt(v: Long): Mirror = mirror.filter(_.version == v).getOrElse {
-    val (schema, live) = frontierTable.collectVersion(v)
-    val seen = frontierTable.collectSegments(frontierTable.appendedOf(v))._2.map(seenKey).toSet
-    val m = Mirror(v, schema, live, seen)
+    val live = frontierTable.readVersion(v)
+    val m = Mirror(v, live.schema, live.collect().toSeq,
+      seenAt(v).collect().map(seenKey).toSet)
     mirror = Some(m)
     m
   }
@@ -540,8 +546,7 @@ final class CrawlSession(
     * Incremental survivors — so the joins that read `docs` see the batch
     * without a layout exchange of its own.
     */
-  private def writeDocs(docs: DataFrame,
-      shape: DataFrame => DataFrame = identity): Long = {
+  private def writeDocs(docs: DataFrame, shape: DataFrame => DataFrame): Long = {
     val parent = docsTable.currentVersion
     val hasExisting = parent >= 0 && docsTable.rowsOf(parent) > 0
     config.mode match {

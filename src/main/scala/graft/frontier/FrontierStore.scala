@@ -7,13 +7,11 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-versioned table shim (S3/Z6) — stands in for Iceberg (no Iceberg
   * runtime jar ships offline; SURVEY.md §7.1). Semantics mirrored:
@@ -44,7 +42,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *     e.g. a small crawl round's claim tombstones and new entries)
   *     is written from the driver as one file, with no Spark job, through
   *     the writer Spark's own tasks use; any other frame is a Spark write.
-  *     Readers cannot tell the two apart;
+  *     Readers cannot tell the two apart: every read is a Spark read
+  *     ([[readVersion]], [[readSegments]]) over the schema of one footer;
+  *   - a meta.json writes each run of consecutive commit versions in its
+  *     segment, tombstone and append-log lists as one `"<a>..<b>"` entry,
+  *     so a snapshot's manifest does not grow with its log;
   *   - resume = read the current manifest (session isolation + resume,
   *     RiverWeb.java:80-84,238-240); crawl state (round, processed) rides in
   *     the metrics map.
@@ -108,7 +110,10 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(json) match {
       case Some(m) =>
         m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
+          .filter(_.nonEmpty).toSeq.flatMap {
+            case Run(a, b) => (a.toLong to b.toLong).map(_.toString)
+            case entry => Seq(entry)
+          }
       case None => Seq.empty
     }
   }
@@ -152,9 +157,8 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   /** the Spark schema a file's footer records under Spark's row-metadata
     * key, if any.
     */
-  private def sparkSchema(file: String,
-      conf: Configuration = spark.sessionState.newHadoopConf()): Option[StructType] =
-    footer(file, conf)(r => Option(r.getFileMetaData.getKeyValueMetaData
+  private def sparkSchema(file: String): Option[StructType] =
+    footer(file)(r => Option(r.getFileMetaData.getKeyValueMetaData
       .get(ParquetReadSupport.SPARK_METADATA_KEY)))
       .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
       .collect { case s: StructType => s }
@@ -191,94 +195,6 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         data.join(tside, cond, "left_anti").drop(SeqCol)
       }
     }
-  }
-
-  /** [[readVersion]] on the driver, with no Spark job: every parquet file
-    * of snapshot v's segments and tombstones is read with parquet-hadoop,
-    * and rows whose key a tombstone holds are dropped through a hash set
-    * (a key with a null deletes nothing, as in the anti-join). Meant for
-    * small tables: the crawl reads a frontier of at most
-    * `CrawlSession.SmallWriteRows` live rows this way. The schema is
-    * `readVersion`'s, from the same footer and in the same column order;
-    * rows come in file order. Only string, bigint and int columns are read,
-    * and a sequenced table is refused.
-    */
-  def collectVersion(v: Long): (StructType, Seq[Row]) = {
-    require(!sequenced, s"collectVersion reads unsequenced tables only: $root")
-    // one conf for every file: building one per file re-copies the session's
-    // Hadoop conf each time
-    val conf = spark.sessionState.newHadoopConf()
-    val (schema, data) = collectFiles(filesIn(segmentsOf(v).map(segPath)), conf)
-    val tombFiles = filesIn(tombstonesOf(v).map(t => s"$root/tombstones/$t"))
-    val live =
-      if (tombFiles.isEmpty) data
-      else {
-        val (tombSchema, tomb) = collectFiles(tombFiles, conf)
-        val dead = tomb.map(_.toSeq).filterNot(_.contains(null)).toSet
-        val keyIdx = tombSchema.fieldNames.toSeq.map(schema.fieldIndex)
-        data.filterNot(r => dead.contains(keyIdx.map(r(_))))
-      }
-    (schema, live.map(new GenericRowWithSchema(_, schema)))
-  }
-
-  /** [[readSegments]] on the driver, with no Spark job, under the same
-    * limits as [[collectVersion]]: e.g. a small frontier's append log.
-    */
-  def collectSegments(segs: Seq[String]): (StructType, Seq[Row]) = {
-    require(!sequenced, s"collectSegments reads unsequenced tables only: $root")
-    val (schema, rows) =
-      collectFiles(filesIn(segs.map(segPath)), spark.sessionState.newHadoopConf())
-    (schema, rows.map(new GenericRowWithSchema(_, schema)))
-  }
-
-  /** the rows of `files` under the Spark schema of the least file's footer
-    * (the one a Spark read takes), every column nullable.
-    */
-  private def collectFiles(files: Seq[String],
-      conf: Configuration): (StructType, Seq[Array[Any]]) = {
-    val s = files.minOption.flatMap(sparkSchema(_, conf)).getOrElse(
-      throw new IllegalStateException(s"no Spark schema in the footers of $root: $files"))
-    s.fields.find(f => !Seq(StringType, LongType, IntegerType).contains(f.dataType))
-      .foreach(f => throw new UnsupportedOperationException(
-        s"cannot read ${f.name} on the driver: ${f.dataType.simpleString}"))
-    // a file source reads every column as nullable
-    val schema = StructType(s.fields.map(_.copy(nullable = true)))
-    (schema, files.flatMap(readRows(_, schema, conf)))
-  }
-
-  /** the rows of one parquet file as `schema`'s values, by column name (a
-    * column the file lacks reads as null).
-    */
-  private def readRows(file: String, schema: StructType,
-      conf: Configuration): Seq[Array[Any]] = footer(file, conf) { r =>
-    import org.apache.parquet.example.data.Group
-    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    val fileSchema = r.getFileMetaData.getSchema
-    val cols = schema.fields.map(f =>
-      if (fileSchema.containsField(f.name)) fileSchema.getFieldIndex(f.name) else -1)
-    def value(g: Group, c: Int): Any = {
-      val i = cols(c)
-      if (i < 0 || g.getFieldRepetitionCount(i) == 0) null
-      else schema.fields(c).dataType match {
-        case StringType => g.getString(i, 0)
-        case LongType => g.getLong(i, 0)
-        case IntegerType => g.getInteger(i, 0)
-      }
-    }
-    val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(fileSchema)
-    val out = Seq.newBuilder[Array[Any]]
-    var pages = r.readNextRowGroup()
-    while (pages != null) {
-      val records = io.getRecordReader(pages, new GroupRecordConverter(fileSchema))
-      var n = pages.getRowCount
-      while (n > 0) {
-        val g = records.read()
-        out += Array.tabulate[Any](cols.length)(value(g, _))
-        n -= 1
-      }
-      pages = r.readNextRowGroup()
-    }
-    out.result()
   }
 
   /** raw data segments, no tombstones applied (e.g. an [[appendedOf]] log). */
@@ -461,9 +377,10 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       .map { case (k, q) => s""""$k": "${q.replace("\"", "'")}"""" }
       .mkString(",\n  ")
     def arr(xs: Seq[String]) = xs.map(x => s""""$x"""").mkString("[", ",", "]")
+    def runs(xs: Seq[String]) = arr(toRuns(xs))
     Files.createDirectories(metaPath(v).getParent)
     Files.writeString(metaPath(v),
-      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": ${arr(appendTo :+ seg)},\n  "tombstones": ${arr(tombSegs)},\n  "appended": ${arr(logTo :+ seg)},\n  "newFiles": ${arr(files)}\n}\n""")
+      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": ${runs(appendTo :+ seg)},\n  "tombstones": ${runs(tombSegs)},\n  "appended": ${runs(logTo :+ seg)},\n  "newFiles": ${arr(files)}\n}\n""")
     val tmp = Paths.get(root, s".manifest.$v.tmp")
     Files.writeString(tmp, s"""{"current": $v}""")
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
@@ -491,9 +408,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * builds default options around a fresh Hadoop `Configuration`, which
     * re-parses the default XML resources on every call (~17 ms a read).
     */
-  private def footer[A](file: String,
-      conf: Configuration = spark.sessionState.newHadoopConf())(
+  private def footer[A](file: String)(
       f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val conf = spark.sessionState.newHadoopConf()
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
@@ -547,6 +464,25 @@ final class SnapshotTable(dir: String, spark: SparkSession,
 object SnapshotTable {
   /** hidden per-segment sequence column of `sequenced` tables. */
   val SeqCol = "__seq"
+
+  /** a manifest entry standing for the integer entries `<a>` to `<b>`. */
+  private val Run = """(\d+)\.\.(\d+)""".r
+
+  /** `entries` with each run of two or more consecutive integer entries
+    * written as one [[Run]]: a snapshot's lists are mostly the commit
+    * versions since the log started, so its manifest stays small.
+    */
+  private def toRuns(entries: Seq[String]): Seq[String] =
+    entries.foldLeft(Vector.empty[Either[String, (Long, Long)]]) { (out, e) =>
+      (out.lastOption, e.toLongOption.filter(n => n >= 0 && n.toString == e)) match {
+        case (Some(Right((a, b))), Some(n)) if n == b + 1 => out.init :+ Right((a, n))
+        case (_, Some(n)) => out :+ Right((n, n))
+        case _ => out :+ Left(e)
+      }
+    }.map {
+      case Right((a, b)) => if (a == b) a.toString else s"$a..$b"
+      case Left(e) => e
+    }
 
   /** driver pool for the tombstone write that [[SnapshotTable.commitDeltaTo]]
     * overlaps with its segment write. Two threads: a crawl round's frontier

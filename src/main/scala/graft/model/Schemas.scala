@@ -59,7 +59,8 @@ final case class FetchResult(
 /** robots.txt rules per host (Z2; RiverWeb.java:297-299). `crawl_delay_s`
   * is the robots Crawl-delay directive: converted to a per-round fetch
   * quota (min with the config budget) at claim time — see
-  * [[graft.frontier.Politeness.claimWithHostBudgets]].
+  * [[graft.frontier.Politeness.claimWithHostBudgets]]; a delay of 0 or
+  * less sets no quota.
   */
 final case class RobotsRules(host: String, disallow_prefixes: Seq[String],
     crawl_delay_s: Option[Long] = None)

@@ -182,10 +182,11 @@ class CrawlParitySpec extends AnyFunSuite {
     }
     assert(t.result.forall(_.exists(_.claimed > 0)), "five rounds that claim pages")
     // the loop's collects by call site: the round's candidates once a
-    // round, the robots rules and the Crawl-delay budgets once a session
+    // round; the robots rules, the Crawl-delay budgets and the driver
+    // mirror's two loads (live frontier, seen keys) once a session
     val loop = t.descriptions.values.filter(_.startsWith(LoopCollect))
       .groupBy(identity).values.map(_.size).toSeq.sorted
-    assert(loop == Seq(1, 1, 5), s"collects by call site: $loop")
+    assert(loop == Seq(1, 1, 1, 1, 5), s"collects by call site: $loop")
     session.cleanup()
   }
 
@@ -335,6 +336,27 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
+  test("a robots Crawl-delay of 0 sets no quota: the host crawls under the default budget, with ANSI arithmetic on (Z1)") {
+    val hot = UrlOps.host(seedUrls(0L).head)
+    val rules = robotsDf.collect().toSeq
+    val noDelay = rules.filter(_.host != hot) :+ RobotsRules(hot,
+      rules.find(_.host == hot).map(_.disallow_prefixes).getOrElse(Nil), Some(0L))
+    // Spark's default arithmetic, under which a division by zero throws
+    val ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    val cfg = baseConfig("zerodelay")
+    val session = new CrawlSession(spark, cfg, corpusDf, ansi.createDataFrame(noDelay).toDF(),
+      TestSpark.tmpDir("crawl-zerodelay"))
+    val result = session.run()
+    // the oracle knows no Crawl-delay: a host without a quota crawls alike
+    val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
+    assert(result.crawlOrder == oracle.crawlOrder,
+      s"order diverged at ${result.crawlOrder.zip(oracle.crawlOrder).indexWhere(p => p._1 != p._2)}")
+    assert(result.rounds.exists(_.claimOrder.count(c => UrlOps.host(c._1) == hot) ==
+      cfg.hostBudgetPerRound), "the 0-delay host never claimed the default budget")
+    session.cleanup()
+  }
+
   test("parity holds at larger scale (2000-page corpus, deeper BFS, more skew)") {
     val bigBuilder = SyntheticCorpus.Builder(n = 2000, hostCount = 40)
     val bigCorpus = bigBuilder.corpus(spark)
@@ -379,6 +401,51 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(fullOrder == oracle.crawlOrder)
     val seen = s2.seenTable.read().select("url").collect().map(_.getString(0)).toSet
     assert(seen == oracle.seen)
+    s2.cleanup()
+  }
+
+  test("a resumed session loads its driver mirror with two collects in its first round, then runs steady-state rounds") {
+    val cfg = baseConfig("mirror-load")
+    val dir = TestSpark.tmpDir("crawl-mirror-load")
+    val s1 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
+    s1.init()
+    val first = Seq(s1.runRound().get, s1.runRound().get)
+    val s2 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
+    assert(s2.mirrorVersion.isEmpty)
+    val ft = s2.frontierTable
+    // the SQL actions that scan the frontier's files, i.e. the mirror loads
+    def frontierScans(t: TestSpark.Traced[_]) = t.queries.count(_.optimizedPlan.exists {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.rootPaths.exists(_.toString.contains(s"${ft.root}/"))
+          case _ => false
+        }
+      case _ => false
+    })
+    def loopCollects(t: TestSpark.Traced[_]) =
+      t.descriptions.values.filter(_.startsWith(LoopCollect)).toSeq
+    val load = TestSpark.traced(s2.runRound())
+    val r3 = load.result.get
+    assert(frontierScans(load) == 2, s"${frontierScans(load)} frontier scans")
+    // the round's candidates, the robots rules and Crawl-delay budgets (once
+    // a session) and the two loads: five collects, each once
+    assert(loopCollects(load).size == 5 && loopCollects(load).distinct.size == 5,
+      s"${loopCollects(load)}")
+    assert(load.queries.size == 6, s"${load.queries.size} SQL actions")
+    assert(s2.mirrorVersion.contains(ft.currentVersion))
+    val steady = TestSpark.traced(s2.runRound())
+    val r4 = steady.result.get
+    assert(frontierScans(steady) == 0 && loopCollects(steady).size == 1)
+    assert(steady.queries.size == 2, s"${steady.queries.size} SQL actions")
+    assert(steady.jobs.size <= 4,
+      s"${steady.jobs.size} jobs: ${steady.jobs.map(steady.actionOf).mkString(", ")}")
+    val rest = Iterator.continually(s2.runRound()).takeWhile(_.isDefined).map(_.get).toList
+    val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
+    val order = (first ++ (r3 :: r4 :: rest)).flatMap(_.claimOrder)
+    assert(order == oracle.crawlOrder,
+      s"order diverged at ${order.zip(oracle.crawlOrder).indexWhere(p => p._1 != p._2)}")
+    assert(s2.seenTable.read().select("url").collect().map(_.getString(0)).toSet == oracle.seen)
     s2.cleanup()
   }
 
@@ -556,13 +623,13 @@ class CrawlParitySpec extends AnyFunSuite {
     val dead = spark.read.parquet(ft.tombstonesOf(v).map(t => s"${ft.root}/tombstones/$t"): _*)
     val live = urls(all.join(dead, Seq("urlHash", "url"), "left_anti"))
     assert(live.size == ft.rowsOf(v) && urls(ft.readVersion(v)).toSet == live.toSet)
-    assert(ft.collectVersion(v)._2.map(_.getAs[String]("url")).toSet == live.toSet)
+    assert(ft.readVersion(v).collect().map(_.getAs[String]("url")).toSet == live.toSet)
     log.foreach { seg =>
       assert(ft.segmentRows(seg) == spark.read.parquet(s"${ft.root}/segments/$seg").count(), seg)
     }
     assert(urls(ft.readSegments(log)).sorted == urls(spark.read.parquet(
       log.map(seg => s"${ft.root}/segments/$seg"): _*)).sorted)
-    assert(ft.collectSegments(log)._2.size == rounds.last.seenTotal)
+    assert(ft.readSegments(log).collect().length == rounds.last.seenTotal)
     assert(s.docsTable.read().count() == rounds.map(_.docsWritten).sum)
     s.cleanup()
   }

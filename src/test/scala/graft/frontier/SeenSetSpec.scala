@@ -341,6 +341,47 @@ class SeenSetSpec extends AnyFunSuite {
     t.drop()
   }
 
+  test("snapshot table: a meta.json writes runs of versions as one entry; an expanded meta still reads") {
+    val t = new SnapshotTable(TestSpark.tmpDir("snap-runs"), spark)
+    def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong)).toDF("url", "urlHash")
+    def keys(ids: Range) = rows(ids).select("urlHash", "url")
+    def meta(v: Long) = Paths.get(t.root, "snapshots", v.toString, "meta.json")
+    def names(vs: Range) = vs.map(_.toString)
+    // 300 deltas on a 5,000-row seed, each one row in and one row out: no
+    // compaction, so every list is a run of versions
+    t.commitFull(rows(0 until 5000))
+    (1 to 300).foreach(i => t.commitDeltaTo(rows(5000 + i to 5000 + i), keys(i to i), i - 1L))
+    val v = t.currentVersion
+    assert(v == 300)
+    assert(t.segmentsOf(v) == names(0 to 300) && t.appendedOf(v) == names(0 to 300))
+    assert(t.tombstonesOf(v) == names(1 to 300))
+    assert(Files.size(meta(v)) < 1024, Files.readString(meta(v)))
+    assert(Files.readString(meta(v)).contains("\"appended\": [\"0..300\"]"))
+    // a compaction's base segment breaks the run of the live list
+    val (c, _) = t.commitDeltaTo(rows(0 until 0), keys(301 until 4500), v)
+    val (d, _) = t.commitDeltaTo(rows(6000 until 6001), keys(4500 until 4501), c)
+    val (e, _) = t.commitDeltaTo(rows(6001 until 6002), keys(4501 until 4502), d)
+    assert(t.segmentsOf(e) == Seq(s"$c-base", c, d, e).map(_.toString))
+    assert(t.tombstonesOf(e) == Seq(d, e).map(_.toString) && t.appendedOf(e) == names(0 to e.toInt))
+    assert(Files.readString(meta(e)).contains(s"\"segments\": [\"$c-base\",\"$c..$e\"]"))
+    val live = t.readVersion(e).collect().toSet
+    assert(live.size == t.rowsOf(e) && t.rowsOf(e) == 5000 - 4501 + 302)
+    // a meta written before runs, every entry spelled out, reads the same
+    def spelled(xs: Seq[String]) = xs.map(x => "\"" + x + "\"").mkString("[", ",", "]")
+    val (segs, tombs, log) = (t.segmentsOf(e), t.tombstonesOf(e), t.appendedOf(e))
+    Files.writeString(meta(e), Files.readString(meta(e))
+      .replaceAll("\"segments\": \\[[^\\]]*\\]", "\"segments\": " + spelled(segs))
+      .replaceAll("\"tombstones\": \\[[^\\]]*\\]", "\"tombstones\": " + spelled(tombs))
+      .replaceAll("\"appended\": \\[[^\\]]*\\]", "\"appended\": " + spelled(log)))
+    assert(Files.readString(meta(e)).contains("\"1\",\"2\",\"3\""))
+    assert(t.segmentsOf(e) == segs && t.tombstonesOf(e) == tombs && t.appendedOf(e) == log)
+    assert(t.readVersion(e).collect().toSet == live)
+    val (f, _) = t.commitDeltaTo(rows(6002 until 6003), keys(4502 until 4503), e)
+    assert(t.appendedOf(f) == names(0 to f.toInt))
+    assert(Files.readString(meta(f)).contains(s"\"appended\": [\"0..$f\"]"))
+    t.drop()
+  }
+
   test("snapshot table: read schemas come from one footer, with no Spark job before the action") {
     val dir = TestSpark.tmpDir("snap-footer")
     val t = new SnapshotTable(dir, spark)
@@ -490,46 +531,6 @@ class SeenSetSpec extends AnyFunSuite {
     t.drop()
   }
 
-  test("collectVersion reads readVersion's rows on the driver, with no Spark job") {
-    val dir = TestSpark.tmpDir("snap-collect")
-    val t = new SnapshotTable(dir, spark)
-    // frontier-shaped, seeds with a null parentUrl
-    def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong - 3000L, s"h${i % 5}", i % 4,
-      if (i % 3 == 0) null else s"p$i")).toDF("url", "urlHash", "host", "depth", "parentUrl")
-    def keys(ids: Range) = rows(ids).select("urlHash", "url")
-    def check(v: Long, what: String): Unit = {
-      val got = TestSpark.traced(t.collectVersion(v))
-      assert(got.jobs.isEmpty, s"$what: ${got.jobs.map(got.actionOf)}")
-      val (schema, live) = got.result
-      val read = t.readVersion(v)
-      assert(schema == read.schema, what)
-      assert(live.toSet == read.collect().toSet && live.size == t.rowsOf(v), what)
-    }
-    val (v0, _) = t.commitFull(rows(0 until 6000).repartition(2))
-    check(v0, "seed snapshot")
-    val (v1, _) = t.commitDeltaTo(rows(6000 until 6010), keys(0 until 2000), v0)
-    val (v2, _) = t.commitDeltaTo(rows(0 until 0), keys(2000 until 2010), v1)
-    assert(t.tombstonesOf(v2).size == 2 && t.segmentRows(v2.toString) == 0)
-    check(v1, "delta tombstones")
-    check(v2, "an empty segment")
-    // 2,010 + 2,190 tombstones pass the 4,096 floor: compaction
-    val (v3, _) = t.commitDeltaTo(rows(6010 until 6020), keys(2010 until 4200), v2)
-    assert(t.segmentsOf(v3).contains(s"$v3-base") && t.tombstonesOf(v3).isEmpty)
-    check(v3, "after a compaction")
-    val (v4, _) = t.commitDeltaTo(rows(6020 until 6030), keys(6010 until 6015), v3)
-    check(v4, "tombstones over a base")
-    t.drop()
-
-    val seq = new SnapshotTable(TestSpark.tmpDir("snap-collect-seq"), spark, sequenced = true)
-    val (s0, _) = seq.commitAppend(rows(0 until 5))
-    intercept[IllegalArgumentException](seq.collectVersion(s0))
-    seq.drop()
-    val wide = new SnapshotTable(TestSpark.tmpDir("snap-collect-type"), spark)
-    val (w0, _) = wide.commitFull(Seq(("u", 1.5)).toDF("url", "score"))
-    intercept[UnsupportedOperationException](wide.collectVersion(w0))
-    wide.drop()
-  }
-
   test("snapshot table: every version reads in its data segments' column order") {
     val t = new SnapshotTable(TestSpark.tmpDir("snap-order"), spark)
     def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong, s"h${i % 3}")).toDF("url", "urlHash", "host")
@@ -540,7 +541,6 @@ class SeenSetSpec extends AnyFunSuite {
       val segs = t.segmentsOf(v).map(s => s"${t.root}/segments/$s")
       assert(segs.forall(spark.read.parquet(_).columns.toSeq == order), what)
       assert(t.readVersion(v).columns.toSeq == order, what)
-      assert(t.collectVersion(v)._1.fieldNames.toSeq == order, what)
     }
     // Spark-written segments: a repartition keeps them off the driver write
     val (v0, _) = t.commitFull(rows(0 until 5000).repartition(2))
@@ -596,10 +596,6 @@ class SeenSetSpec extends AnyFunSuite {
         val (dv, sv) = (d.readVersion(k), s.readVersion(k))
         assert(dv.schema == sv.schema && rowsOf(dv) == rowsOf(sv), what)
         assert(rowsOf(d.readSegments(d.appendedOf(k))) == rowsOf(s.readSegments(s.appendedOf(k))), what)
-        if (!sequenced) {
-          val ((dSchema, dLive), (sSchema, sLive)) = (d.collectVersion(k), s.collectVersion(k))
-          assert(dSchema == sSchema && dLive.toSet == sLive.toSet, what)
-        }
       }
       (d.segmentsOf(v) ++ d.appendedOf(v)).distinct.foreach { seg =>
         val (dd, sd) = (s"${d.root}/segments/$seg", s"${s.root}/segments/$seg")

@@ -26,7 +26,9 @@ import graft.model._
   *
   * All state crosses rounds through [[SnapshotTable]] commits, so a crawl
   * resumes from its latest manifest (Z6) and every round's plan starts from
-  * a fresh parquet scan or the mirror (no unbounded lineage).
+  * a fresh parquet scan or the mirror (no unbounded lineage). A session's
+  * durable state is its two tables and nothing else: the frontier's
+  * manifest rename is a round's commit point.
   *
   * Canonical crawl order is `(depth asc, urlHash asc, url asc)` — the
   * deterministic, shuffle-free stand-in for the reference's wall-clock
@@ -64,52 +66,24 @@ final class CrawlSession(
   // incrementally merged seen-set bloom router (O(new URLs) per round
   // instead of an O(|seen|) stat.bloomFilter rebuild)
   private val seenBloom = new IncrementalSeenBloom(frontierTable)
-  // the driver mirror of the checkpointed frontier while its seen set is at
-  // most SmallWriteRows rows: set at each small round's checkpoint flip,
-  // dropped by a failed round and by a seen set above the gate
+  // the driver mirror of the frontier while its seen set is at most
+  // SmallWriteRows rows: set at each small round's commit, dropped by a
+  // seen set above the gate
   private var mirror: Option[Mirror] = None
 
   /** the frontier version the driver mirror holds, if any. */
   private[crawl] def mirrorVersion: Option[Long] = mirror.map(_.version)
 
-  /** The URL-seen set (J1), read-only: the frontier's append log at the
-    * checkpointed version — the seed segment and every round's new-entries
-    * segment, no tombstones applied — so every url ever enqueued, once.
+  /** The URL-seen set (J1), read-only: the frontier's append log at its
+    * head — the seed segment and every round's new-entries segment, no
+    * tombstones applied — so every url ever enqueued, once.
     */
   object seenTable {
-    def read(): DataFrame = seenAt(readCheckpoint().getOrElse(-1L))
+    def read(): DataFrame = seenAt(frontierTable.currentVersion)
   }
 
   private def seenAt(v: Long): DataFrame =
     frontierTable.readSegments(frontierTable.appendedOf(v)).select("urlHash", "url")
-
-  // --- round checkpoint: the ATOMIC commit point of a round ----------------
-  // A round commits the frontier transition and the docs; the round only
-  // "happens" when this pointer flips (atomic rename), after both commits
-  // are durable. A crash before the flip leaves an orphan frontier snapshot
-  // that resume IGNORES, because all reads and appends anchor on the
-  // checkpointed version, never on the table's own head. (Docs are the one
-  // at-least-once surface: a crash after the docs append but before the
-  // pointer flip re-runs the round, duplicating Default-mode docs — the
-  // same semantics as re-running the reference, whose ES sink has no
-  // idempotence key in default mode; an Overwrite re-run replaces them, an
-  // Incremental one skips them.)
-  private val checkpointPath =
-    java.nio.file.Paths.get(s"$workDir/sessions/${config.sessionId}/round.json")
-
-  private def readCheckpoint(): Option[Long] =
-    if (!java.nio.file.Files.exists(checkpointPath)) None
-    else "\"frontier\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(java.nio.file.Files.readString(checkpointPath))
-      .map(_.group(1).toLong)
-
-  private def writeCheckpoint(frontierV: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$checkpointPath.tmp")
-    java.nio.file.Files.writeString(tmp, s"""{"frontier": $frontierV}""")
-    java.nio.file.Files.move(tmp, checkpointPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
 
   private val sitemapRe = RuleCompiler.anchored(config.sitemapPattern)
 
@@ -215,20 +189,19 @@ final class CrawlSession(
   }
 
   /** Seed the frontier, and so the seen set (round 0). Idempotent: no-op
-    * on resume (checkpoint present); orphan snapshots from a crash mid-init
-    * are ignored because the checkpoint never pointed at them.
+    * on resume (a published frontier). The seeds are a driver list, so
+    * their candidate rows are collected, deduped on the driver and written
+    * from the driver as one file.
     */
   def init(): Unit = {
-    if (readCheckpoint().isDefined) return
+    if (!frontierTable.isEmpty) return
     import spark.implicits._
-    val seedsDf = config.seeds.toDF("child")
-    val cand0 = dedup(candidateRows(seedsDf, lit(0), lit(null).cast("string"),
-      applyIncludeExclude = false))
-    val cand =
-      if (config.seeds.size <= SmallWriteRows) cand0.repartition(1) else cand0
-    val (fv, n) = frontierTable.commitFull(cand,
+    val cand = candidateRows(config.seeds.toDF("child"), lit(0), lit(null).cast("string"),
+      applyIncludeExclude = false).select("url", "urlHash", "host", "depth", "parentUrl")
+    val seeds = dedupRows(cand.collect().toSeq)
+    val (_, n) = frontierTable.commitFull(
+      spark.createDataFrame(java.util.Arrays.asList(seeds: _*), cand.schema),
       Map("round" -> "0", "processed" -> "0", "kind" -> "seed"))
-    writeCheckpoint(fv)
     log(s"seeded frontier: $n urls")
   }
 
@@ -238,7 +211,7 @@ final class CrawlSession(
     * A round whose seen set (the live frontier plus every page processed,
     * read from the manifest, so picking the path runs no job) is at most
     * [[CrawlSession.SmallWriteRows]] rows runs two Spark actions. The claim
-    * comes from the session's driver mirror of the checkpointed frontier;
+    * comes from the session's driver mirror of the frontier;
     * one `collect` over the fetch returns the filtered child candidates;
     * the in-batch dedup and the seen check run on the driver; the round's
     * tombstones and new entries are written from the driver; and the docs
@@ -246,9 +219,19 @@ final class CrawlSession(
     * through the driver. Above the gate the round is one Spark DAG: the
     * cached window claim, the children's dedup and seen anti-join, and
     * Spark writes.
+    *
+    * The frontier's files are written before the docs commit ends, but
+    * published (its manifest rename, the round's one commit point) only
+    * after: a round whose docs commit fails leaves the frontier at its
+    * parent, with no files of the failed version. Docs are the one
+    * at-least-once surface: a crash after the docs commit and before the
+    * rename re-runs the round on resume, which stores Default-mode docs
+    * twice (as re-running the reference would), replaces Overwrite ones
+    * and skips Incremental ones.
     */
   def runRound(): Option[RoundResult] = {
-    val v = readCheckpoint().getOrElse(return None)
+    val v = frontierTable.currentVersion
+    if (v < 0) return None
     val round = frontierTable.metric(v, "round").map(_.toInt).getOrElse(0)
     val processed = frontierTable.metric(v, "processed").map(_.toLong).getOrElse(0L)
     val frontierRows = frontierTable.rowsOf(v)
@@ -260,6 +243,8 @@ final class CrawlSession(
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cache(df: DataFrame): DataFrame = { cached.synchronized(cached += df); df.persist() }
     var docsF = scala.concurrent.Future.successful(0L)
+    def docsDurable(): Long =
+      scala.concurrent.Await.result(docsF, scala.concurrent.duration.Duration.Inf)
     try {
       // every claimed row is tombstoned exactly once (the commitDeltaTo
       // contract), so the append log holds the live frontier plus every
@@ -268,7 +253,7 @@ final class CrawlSession(
 
       // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
       // Below the gate the live frontier is the driver mirror's (collected
-      // from the checkpointed version when it is not that version's) and
+      // from version v when the mirror is not at v) and
       // Politeness.claimRows claims from it — no Spark job. Its rows ride the
       // fetch as literals, and its tombstones are a LocalRelation, written
       // from the driver. The gate is on the seen set, which holds the
@@ -377,12 +362,11 @@ final class CrawlSession(
       // sequential because the driver calls them sequentially); its tasks
       // back-fill executor slots left idle by the children DAG's stage
       // tails, and the docs plan is built and analysed there too, while
-      // this thread plans the children DAG. The round checkpoint still
-      // flips only after BOTH commits are durable, and a docs failure
-      // aborts the round before the flip, so crash semantics are unchanged
-      // (a frontier snapshot without a checkpoint is a resume-ignored
-      // orphan by design). A small round's docs stay a Spark write too:
-      // their page content never passes through the driver.
+      // this thread plans the children DAG. The frontier commit awaits it
+      // before its manifest rename, the round's commit point, so a docs
+      // failure aborts the round with the frontier at its parent. A small
+      // round's docs stay a Spark write too: their page content never
+      // passes through the driver.
       val stamp = clock()
       docsF = scala.concurrent.Future {
         val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
@@ -423,7 +407,8 @@ final class CrawlSession(
       // (SnapshotTable compacts the parent's survivors into a base segment
       // once tombstones accumulate). Segment newFv is exactly the new
       // entries, compaction or not, and joins the append log: it IS the seen
-      // set's growth, written once.
+      // set's growth, written once. It is published only once the docs
+      // commit is durable.
       val newProcessed = processed + claimedCount
       val metrics = Map(
         "round" -> (round + 1).toString,
@@ -439,7 +424,7 @@ final class CrawlSession(
           val fresh = batch.filterNot(r => m.seen.contains(seenKey(r)))
           val (fv, left) = frontierTable.commitDeltaTo(
             spark.createDataFrame(java.util.Arrays.asList(fresh: _*), m.schema),
-            claimed.select("urlHash", "url"), v, metrics)
+            claimed.select("urlHash", "url"), metrics, () => docsDurable())
           (fv, left, Some((m, fresh)))
         case None =>
           val raw = dedup(candidates)
@@ -482,16 +467,12 @@ final class CrawlSession(
             if (smallRound) df.coalesce(1) else df
           val (fv, left) = frontierTable.commitDeltaTo(
             fanoutShape(newEntries.select(claimed.columns.map(col): _*)),
-            fanoutShape(claimed.select("urlHash", "url")), v, metrics)
+            fanoutShape(claimed.select("urlHash", "url")), metrics, () => docsDurable())
           (fv, left, None)
       }
       val newUrls = frontierTable.metric(newFv, "segmentRows").map(_.toLong).getOrElse(0L)
       val seenTotal = frontierLeft + newProcessed
-      // both commits must be durable before the round becomes visible
-      val docsWritten = scala.concurrent.Await.result(
-        docsF, scala.concurrent.duration.Duration.Inf)
-      // the round becomes visible HERE — one atomic rename
-      writeCheckpoint(newFv)
+      val docsWritten = docsDurable()
       // the mirror moves to the new version while its seen set stays under
       // the gate: live − claimed + new entries, and seen + new entries
       mirror = next.filter(_ => seenTotal <= SmallWriteRows).map { case (m, fresh) =>
@@ -512,21 +493,17 @@ final class CrawlSession(
       Some(RoundResult(round + 1, claimedCount, docsWritten, newUrls,
         frontierLeft, seenTotal, newProcessed, order))
     } catch { case scala.util.control.NonFatal(e) =>
-      // a failed round may have committed frontier files past the mirror's
-      // version: the next small round reloads from the checkpoint
-      mirror = None
       // the docs commit may still be scanning `fetched` and `docs`: let it
       // end before they are released (its own failure is secondary)
-      scala.util.Try(scala.concurrent.Await.result(
-        docsF, scala.concurrent.duration.Duration.Inf))
+      scala.util.Try(docsDurable())
       throw e
     } finally cached.foreach(_.unpersist())
   }
 
-  /** the driver mirror of checkpointed version `v`: the session's, when it
-    * is at `v`, else loaded with two collects — the live frontier of
+  /** the driver mirror of frontier version `v`: the session's, when it is
+    * at `v`, else loaded with two collects — the live frontier of
     * `readVersion(v)` and the seen keys of `v`'s append log. The session's
-    * first small round pays them, and the round after a failed one.
+    * first small round pays them.
     */
   private def mirrorAt(v: Long): Mirror = mirror.filter(_.version == v).getOrElse {
     val live = frontierTable.readVersion(v)
@@ -565,7 +542,7 @@ final class CrawlSession(
         else {
           val replaced = docsTable.readVersion(parent).select("url")
             .join(docs.select("url"), Seq("url"), "left_semi")
-          docsTable.commitDeltaTo(shape(docs), shape(replaced), parent)
+          docsTable.commitDeltaTo(shape(docs), shape(replaced))
         }
       case WriteMode.Incremental =>
         // J2: skip docs whose lastModified is not newer than what's stored
@@ -613,13 +590,13 @@ final class CrawlSession(
     docs.select(to_json(struct(docs.columns.map(col): _*)).as("json"))
   }
 
-  /** Drop the docs table and the whole session dir (S9): the frontier and
-    * the round checkpoint, with any `.tmp` a crash left, so a new session
-    * under this id over the same workDir starts from its seeds.
+  /** Drop the docs table and the whole session dir (S9): the frontier, with
+    * anything a crash left beside it, so a new session under this id over
+    * the same workDir starts from its seeds.
     */
   def cleanup(): Unit = {
     docsTable.drop()
-    val dir = checkpointPath.getParent
+    val dir = java.nio.file.Paths.get(frontierTable.root).getParent
     if (java.nio.file.Files.exists(dir)) {
       val paths = java.nio.file.Files.walk(dir)
       try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -630,14 +607,15 @@ final class CrawlSession(
 
   /** Expire dead snapshot storage for this session (the Iceberg
     * `expire_snapshots` analog — Z6 operability: compactions and crash
-    * orphans otherwise accumulate segment dirs forever). Retains everything
-    * reachable from the checkpointed round through each table's head, and
-    * the checkpointed frontier's append log (the seen set, which keeps
-    * segments a compaction replaced), so a resume after gc() is
-    * unaffected. Returns (segment dirs, tombstone dirs) deleted.
+    * orphans otherwise accumulate segment dirs forever). Retains each
+    * table's head and the frontier head's append log (the seen set, which
+    * keeps segments a compaction replaced), so a resume after gc() is
+    * unaffected; deletes the files of any publish a crash lost above a
+    * head. Returns (segment dirs, tombstone dirs) deleted.
     */
   def gc(): (Int, Int) = {
-    val fv = readCheckpoint().getOrElse(return (0, 0))
+    val fv = frontierTable.currentVersion
+    if (fv < 0) return (0, 0)
     val (fS, fT) = frontierTable.expireBefore(fv, frontierTable.appendedOf(fv).toSet)
     val (dS, dT) = docsTable.expireBefore(docsTable.currentVersion)
     (fS + dS, fT + dT)
@@ -691,7 +669,7 @@ object CrawlSession {
     */
   private[graft] val AutoBloomMinItems = 1048576L
 
-  /** The driver's copy of checkpointed frontier version `version`: its
+  /** The driver's copy of frontier version `version`: its
     * live rows under the frontier's `schema`, and the seen set's
     * `(urlHash, url)` keys.
     */

@@ -219,12 +219,19 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       tombRows = tombRowsOf(parent))
   }
 
-  /** Delta transition anchored at `parentVersion`: `newRows` becomes data
+  /** Delta transition on top of the table's head: `newRows` becomes data
     * segment `<v>` and `tombstones` (key columns of rows to logically
     * delete) tombstone segment `<v>`, written concurrently (Spark writes,
     * or driver writes for local frames). Write cost is O(new + tombstones)
     * regardless of table size — the round-loop fix for the per-round
     * O(frontier) copy-on-write rewrite.
+    *
+    * Staged publish: `beforePublish` runs once every file of snapshot v
+    * (segments, tombstones, `snapshots/<v>/meta.json`) is written and
+    * before the `manifest.json` rename that publishes it. If it throws,
+    * the table stays at its parent, snapshot v's files are deleted, and
+    * the exception is rethrown — so a caller can make the rename the
+    * commit point of work outside this table (the crawl round's docs).
     *
     * Compaction: once accumulated tombstones, counted from the written
     * footers, exceed a quarter of the live rows (floor 4096), the parent's
@@ -249,11 +256,12 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * live twice is tombstoned twice, a new key not at all.
     */
   def commitDeltaTo(newRows: DataFrame, tombstones: DataFrame,
-      parentVersion: Long,
-      metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    val v = currentVersion + 1
-    val prevRows = rowsOf(parentVersion)
-    val prevTombRows = tombRowsOf(parentVersion)
+      metrics: Map[String, String] = Map.empty,
+      beforePublish: () => Unit = () => ()): (Long, Long) = {
+    val head = currentVersion
+    val v = head + 1
+    val prevRows = rowsOf(head)
+    val prevTombRows = tombRowsOf(head)
     val tombDir = s"$root/tombstones/$v"
     val segDir = s"$root/segments/$v"
     val base = s"$v-base"
@@ -279,25 +287,25 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         val tombRaw = parquetAt(Seq(tombDir)).drop(SeqCol)
         val tomb =
           if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
-        val parent = readVersion(parentVersion)
+        val parent = readVersion(head)
         write(stamp(parent.join(tomb, tombRaw.columns.toSeq, "left_anti")
           .select(parent.columns.map(col): _*), v), segPath(base))
         // the base segment replaces every tombstone: no snapshot needs this one
         rmTree(Paths.get(tombDir))
         commitManifest(metrics, appendTo = Seq(base),
-          logTo = appendedOf(parentVersion), prevRows = segmentRows(base),
-          expectVersion = v)
+          logTo = appendedOf(head), prevRows = segmentRows(base),
+          expectVersion = v, beforePublish = beforePublish)
       } else {
-        commitManifest(metrics, appendTo = segmentsOf(parentVersion),
-          logTo = appendedOf(parentVersion), prevRows = prevRows - newTombRows,
-          tombSegs = tombstonesOf(parentVersion) :+ v.toString, tombRows = totalTomb,
-          expectVersion = v)
+        commitManifest(metrics, appendTo = segmentsOf(head),
+          logTo = appendedOf(head), prevRows = prevRows - newTombRows,
+          tombSegs = tombstonesOf(head) :+ v.toString, tombRows = totalTomb,
+          expectVersion = v, beforePublish = beforePublish)
       }
     } catch { case NonFatal(e) if currentVersion < v =>
-      // no manifest references snapshot v's dirs yet: drop them (partial
+      // no manifest references snapshot v yet: drop its files (partial
       // ones included) so a retry starts from a clean slate; best-effort,
       // so the write's own failure is what the caller sees
-      Seq(tombDir, segDir, segPath(base))
+      Seq(tombDir, segDir, segPath(base), metaPath(v).getParent.toString)
         .foreach(d => scala.util.Try(rmTree(Paths.get(d))))
       throw e
     }
@@ -352,14 +360,15 @@ final class SnapshotTable(dir: String, spark: SparkSession,
 
   /** manifest-only commit step: record the written segment `<v>` as
     * snapshot v's new segment, after `appendTo` in the live list and after
-    * `logTo` in the append log. Row count comes straight from the parquet
+    * `logTo` in the append log, then run `beforePublish` and publish v by
+    * the manifest rename. Row count comes straight from the parquet
     * footers on the driver — no Spark job (a count() per commit was ~3
     * driver round-trips per crawl round of pure scheduling overhead).
     */
   private def commitManifest(metrics: Map[String, String],
       appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
-      expectVersion: Long = -1L): (Long, Long) = {
+      expectVersion: Long = -1L, beforePublish: () => Unit = () => ()): (Long, Long) = {
     val v = currentVersion + 1
     require(expectVersion < 0 || expectVersion == v,
       s"concurrent commit detected: expected $expectVersion, at $v")
@@ -381,6 +390,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     Files.createDirectories(metaPath(v).getParent)
     Files.writeString(metaPath(v),
       s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": ${runs(appendTo :+ seg)},\n  "tombstones": ${runs(tombSegs)},\n  "appended": ${runs(logTo :+ seg)},\n  "newFiles": ${arr(files)}\n}\n""")
+    beforePublish()
     val tmp = Paths.get(root, s".manifest.$v.tmp")
     Files.writeString(tmp, s"""{"current": $v}""")
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
@@ -419,11 +429,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   }
 
   /** every segment / tombstone entry referenced by any snapshot in
-    * [max(0, from), currentVersion] — crash-orphan snapshots in that range
-    * included, so a conservative GC never deletes what a resume (which
-    * anchors at the checkpointed version ≥ `from`) could still read. Append
-    * logs are not references: a log keeps every segment a compaction
-    * replaced, so a caller that reads one retains it through `extraRetain`.
+    * [max(0, from), currentVersion]. Append logs are not references: a log
+    * keeps every segment a compaction replaced, so a caller that reads one
+    * retains it through `extraRetain`.
     */
   private def referencedEntries(from: Long): (Set[String], Set[String]) = {
     val vs = (math.max(0L, from) to currentVersion)
@@ -431,13 +439,14 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     (vs.flatMap(segmentsOf).toSet, vs.flatMap(tombstonesOf).toSet)
   }
 
-  /** Expire storage not referenced by any snapshot ≥ `from` (the Iceberg
-    * `expire_snapshots` analog for this shim): deletes segment and
-    * tombstone dirs outside the retain sets and the metas of snapshots
-    * below `from`. `extraRetain` holds further segment names to keep (the
-    * crawl passes the frontier's append log, which it reads as the seen
-    * set). Time travel below `from` stops working, exactly like Iceberg
-    * snapshot expiry.
+  /** Expire storage not referenced by any snapshot in [`from`, head] (the
+    * Iceberg `expire_snapshots` analog for this shim): deletes segment and
+    * tombstone dirs outside the retain sets, the metas of snapshots below
+    * `from`, and those above the head (a publish a crash lost after its
+    * meta was written). `extraRetain` holds further segment names to keep
+    * (the crawl passes the frontier's append log, which it reads as the
+    * seen set). Time travel below `from` stops working, exactly like
+    * Iceberg snapshot expiry.
     */
   def expireBefore(from: Long, extraRetain: Set[String] = Set.empty): (Int, Int) = {
     val (segs, tombs) = referencedEntries(from)
@@ -450,9 +459,9 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     }
     val deletedSegs = sweep("segments", segs ++ extraRetain)
     val deletedTombs = sweep("tombstones", tombs)
-    (0L until math.max(0L, from)).foreach { v =>
-      Files.deleteIfExists(metaPath(v))
-      Files.deleteIfExists(metaPath(v).getParent)
+    val head = currentVersion
+    listDir(Paths.get(root, "snapshots")).foreach { p =>
+      if (p.getFileName.toString.toLongOption.exists(v => v < from || v > head)) rmTree(p)
     }
     (deletedSegs, deletedTombs)
   }

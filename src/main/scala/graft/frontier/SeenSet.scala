@@ -123,11 +123,9 @@ object SeenSet {
   * probes), never correctness: a bloom OR has no false negatives, and
   * `mightContain=true` falls through to the exact anti-join.
   *
-  * The filter is persisted as a sidecar (`$root/bloom.current`) keyed by
-  * the covered snapshot version, so a resumed crawl reloads it instead of
-  * rescanning; the covered segments are that snapshot's append log. Once
-  * gc has expired that snapshot's meta the sidecar no longer loads, and
-  * the next call rebuilds once.
+  * The filter lives in memory only: it is an index the append log can
+  * always rebuild, so a fresh instance (a resumed crawl) builds it once
+  * from a full scan of the log.
   */
 final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
 
@@ -136,14 +134,11 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
   private var coveredVersion: Long = -1L
   private var coveredSegments: Set[String] = Set.empty
 
-  private def sidecar = java.nio.file.Paths.get(table.root, "bloom.current")
-
   /** Bloom covering the append log of snapshot `v` (`rows` rows), advancing
     * the cached filter over only the NEW segments since the last call.
     */
   def forVersion(v: Long, rows: Long): BloomFilter = {
     if (coveredVersion == v && filter.isDefined) return filter.get
-    if (filter.isEmpty) loadSidecar()
     val segs = table.appendedOf(v)
     val canAdvance = filter.isDefined && rows <= capacity &&
       coveredSegments.subsetOf(segs.toSet)
@@ -160,43 +155,9 @@ final class IncrementalSeenBloom(table: SnapshotTable, fpp: Double = 0.03) {
     }
     coveredVersion = v
     coveredSegments = segs.toSet
-    saveSidecar()
     filter.get
   }
 
   private def bloomOf(segs: Seq[String]): BloomFilter =
     table.readSegments(segs).stat.bloomFilter("urlHash", capacity, fpp)
-
-  // sidecar layout: covered version, capacity, then the serialized filter.
-  // Best-effort on both ends — a missing/corrupt sidecar, or one whose
-  // covered snapshot has expired, just means one rebuild scan.
-  private def saveSidecar(): Unit =
-    try {
-      val tmp = java.nio.file.Paths.get(table.root, ".bloom.tmp")
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(tmp)))
-      try {
-        out.writeLong(coveredVersion)
-        out.writeLong(capacity)
-        filter.get.writeTo(out)
-      } finally out.close()
-      java.nio.file.Files.move(tmp, sidecar,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case _: java.io.IOException => () }
-
-  private def loadSidecar(): Unit =
-    try {
-      if (!java.nio.file.Files.exists(sidecar)) return
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        java.nio.file.Files.newInputStream(sidecar)))
-      try {
-        coveredVersion = in.readLong()
-        capacity = in.readLong()
-        filter = Some(BloomFilter.readFrom(in))
-      } finally in.close()
-      coveredSegments = table.appendedOf(coveredVersion).toSet
-    } catch { case _: java.io.IOException =>
-      filter = None; coveredVersion = -1L; coveredSegments = Set.empty
-    }
 }

@@ -106,8 +106,8 @@ class CrawlParitySpec extends AnyFunSuite {
   /** the claim's `count()` action (the cached claim path). */
   val ClaimCount = "count at CrawlLoop.scala"
   /** any `collect()` the round loop runs: a small round's candidates, and
-    * once a session the robots rules and the Crawl-delay budgets; the
-    * above-gate claim runs none.
+    * once a session the seed candidates (in `init`), the robots rules and
+    * the Crawl-delay budgets; the above-gate claim runs none.
     */
   val LoopCollect = "collect at CrawlLoop.scala"
 
@@ -182,12 +182,42 @@ class CrawlParitySpec extends AnyFunSuite {
     }
     assert(t.result.forall(_.exists(_.claimed > 0)), "five rounds that claim pages")
     // the loop's collects by call site: the round's candidates once a
-    // round; the robots rules, the Crawl-delay budgets and the driver
-    // mirror's two loads (live frontier, seen keys) once a session
+    // round; the seed candidates, the robots rules, the Crawl-delay budgets
+    // and the driver mirror's two loads (live frontier, seen keys) once a
+    // session
     val loop = t.descriptions.values.filter(_.startsWith(LoopCollect))
       .groupBy(identity).values.map(_.size).toSeq.sorted
-    assert(loop == Seq(1, 1, 1, 1, 5), s"collects by call site: $loop")
+    assert(loop == Seq(1, 1, 1, 1, 1, 5), s"collects by call site: $loop")
     session.cleanup()
+  }
+
+  test("init seeds the frontier from the driver: no Spark write, the rows and schema of a Spark-written seed") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    // a seed listed twice and a spelling that canonicalizes to another
+    // seed: the frontier holds each url once
+    val seeds = seedUrls(0L, 5L, 96L)
+    val cfg = baseConfig("seed-driver").copy(seeds = seeds ++ Seq(seeds(1), seeds.head + "#top"))
+    val s = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), TestSpark.tmpDir("crawl-seed-driver"))
+    val t = TestSpark.traced(s.init())
+    assert(sparkWrites(t).isEmpty, s"Spark writes: ${sparkWrites(t)}")
+    val ft = s.frontierTable
+    val v = ft.currentVersion
+    assert(ft.metric(v, "kind").contains("seed"))
+    // the same candidates through Spark's dedup and a Spark write
+    val want = new graft.frontier.SnapshotTable(TestSpark.tmpDir("crawl-seed-spark"), spark)
+    want.commitFull(CrawlSession.dedup(cfg.seeds.toDF("child")
+      .select(UrlOps.canonicalizeCol(col("child")).as("url"))
+      .withColumn("urlHash", UrlOps.urlHashCol(col("url")))
+      .withColumn("host", UrlOps.hostCol(col("url")))
+      .withColumn("depth", lit(0))
+      .withColumn("parentUrl", lit(null).cast("string"))).repartition(1))
+    val (got, exp) = (ft.readVersion(v), want.read())
+    assert(got.schema == exp.schema, s"${got.schema} != ${exp.schema}")
+    val rows = got.collect().toSeq
+    assert(rows.size == seeds.size && rows.toSet == exp.collect().toSet)
+    want.drop()
+    s.cleanup()
   }
 
   test("cleanup() removes the session: a fresh session under the same id crawls the same again") {
@@ -199,9 +229,9 @@ class CrawlParitySpec extends AnyFunSuite {
     val first = s1.run()
     val firstSeen = seenOf(s1)
     assert(first.totalClaimed > 0)
-    // a checkpoint temp file a crash could leave behind goes too
+    // a manifest temp file a crash could leave behind goes too
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "sessions", "cleanup", "round.json.tmp"), "{}")
+      java.nio.file.Paths.get(s1.frontierTable.root, ".manifest.99.tmp"), "{}")
     s1.cleanup()
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "sessions", "cleanup")))
     val s2 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
@@ -263,24 +293,35 @@ class CrawlParitySpec extends AnyFunSuite {
   }
 
   test("crash between a round's two table commits: resume ignores orphan snapshots") {
+    import java.nio.file.{Files, Paths}
     val cfg = baseConfig("crash")
     val dir = TestSpark.tmpDir("crawl-crash")
     val s1 = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
     s1.init()
     val r1 = s1.runRound().get
-    // simulate a crash AFTER the next round's frontier commit but BEFORE the
-    // docs commit / checkpoint flip: an orphan frontier snapshot on the
-    // table's head, whose append log (the seen set it would publish) holds
-    // the orphan url; the round checkpoint still points at round 1's version
+    // simulate a crash AFTER the next round's frontier files are written
+    // but BEFORE they are published: a staged commit whose publish barrier
+    // moves the staged files aside (a dead process deletes nothing) and
+    // throws; the files then go back, an orphan version above the head
+    // whose append log holds the orphan url
     import spark.implicits._
     val ft = s1.frontierTable
     val v1 = ft.currentVersion
+    val ov = v1 + 1
+    val staged = Seq("segments", "tombstones", "snapshots").map(k => Paths.get(ft.root, k, ov.toString))
+    val aside = Paths.get(TestSpark.tmpDir("crawl-crash-aside"))
+    def asideOf(d: java.nio.file.Path) = aside.resolve(d.getParent.getFileName.toString)
     val orphan = Seq(("http://orphan/x", 1L, "orphan", 0, "p"))
       .toDF("url", "urlHash", "host", "depth", "parentUrl")
-    val (ov, _) = ft.commitDeltaTo(orphan, orphan.limit(0).select("urlHash", "url"), v1,
-      Map("round" -> "99"))
+    intercept[IllegalStateException](ft.commitDeltaTo(orphan,
+      orphan.limit(0).select("urlHash", "url"), Map("round" -> "99"), () => {
+        staged.foreach(d => Files.move(d, asideOf(d)))
+        throw new IllegalStateException("crash")
+      }))
+    staged.foreach(d => Files.move(asideOf(d), d))
     assert(ft.appendedOf(ov) == ft.appendedOf(v1) :+ ov.toString)
     assert(ft.readSegments(ft.appendedOf(ov)).filter($"url" === "http://orphan/x").count() == 1)
+    assert(ft.currentVersion == v1)
     assert(s1.seenTable.read().filter($"url".contains("orphan")).isEmpty)
     // resume: a fresh session over the same workDir must reproduce the
     // uninterrupted crawl exactly (orphans invisible)
@@ -341,11 +382,11 @@ class CrawlParitySpec extends AnyFunSuite {
     val rules = robotsDf.collect().toSeq
     val noDelay = rules.filter(_.host != hot) :+ RobotsRules(hot,
       rules.find(_.host == hot).map(_.disallow_prefixes).getOrElse(Nil), Some(0L))
-    // Spark's default arithmetic, under which a division by zero throws
-    val ansi = spark.newSession()
-    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    // the suite runs Spark's default arithmetic, under which a division by
+    // zero throws
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     val cfg = baseConfig("zerodelay")
-    val session = new CrawlSession(spark, cfg, corpusDf, ansi.createDataFrame(noDelay).toDF(),
+    val session = new CrawlSession(spark, cfg, corpusDf, spark.createDataFrame(noDelay).toDF(),
       TestSpark.tmpDir("crawl-zerodelay"))
     val result = session.run()
     // the oracle knows no Crawl-delay: a host without a quota crawls alike
@@ -481,8 +522,7 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(seenOf(s1) == oracle.seen)
     // the seen set is the frontier's append log: no table of its own, and
     // a compaction's base segment never joins the log
-    assert(new java.io.File(s"$dir/sessions/compaction").list().toSet ==
-      Set("frontier", "round.json"))
+    assert(new java.io.File(s"$dir/sessions/compaction").list().toSet == Set("frontier"))
     val log = ft.appendedOf(ft.currentVersion)
     compactions.foreach { v =>
       assert(ft.segmentsOf(v).contains(s"$v-base") && log.contains(v.toString))
@@ -547,7 +587,8 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
-  test("a round that fails after its frontier commit drops the driver mirror; the same session reloads it and matches the oracle") {
+  test("a round whose docs commit fails leaves the frontier at its parent with no staged files; the same session keeps its mirror and matches the oracle") {
+    import java.nio.file.{Files, Paths}
     val cfg = baseConfig("mirror-fail")
     val dir = TestSpark.tmpDir("crawl-mirror-fail")
     val s = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), dir)
@@ -557,22 +598,26 @@ class CrawlParitySpec extends AnyFunSuite {
     val head = ft.currentVersion
     assert(s.mirrorVersion.contains(head))
     // the docs table's segment dir becomes a file: round 3's docs write
-    // throws, after its frontier files and manifest are committed and before
-    // the checkpoint flips
-    val segs = java.nio.file.Paths.get(dir, "docs", "segments")
-    val aside = java.nio.file.Paths.get(dir, "docs-segments")
-    java.nio.file.Files.move(segs, aside)
-    java.nio.file.Files.writeString(segs, "not a dir")
+    // throws while its frontier files are staged, before their publish
+    val segs = Paths.get(dir, "docs", "segments")
+    val aside = Paths.get(dir, "docs-segments")
+    Files.move(segs, aside)
+    Files.writeString(segs, "not a dir")
     val docsV = s.docsTable.currentVersion
     intercept[Exception](s.runRound())
-    assert(ft.currentVersion == head + 1, "the failed round committed its frontier snapshot")
+    assert(ft.currentVersion == head, "the failed round published its frontier snapshot")
+    Seq("segments", "tombstones", "snapshots").foreach { kind =>
+      val left = new java.io.File(s"${ft.root}/$kind").list()
+        .filter(n => n == s"${head + 1}" || n == s"${head + 1}-base")
+      assert(left.isEmpty, s"$kind: ${left.mkString(", ")} left")
+    }
     assert(s.docsTable.currentVersion == docsV)
-    assert(s.mirrorVersion.isEmpty, "the failed round kept the mirror")
-    java.nio.file.Files.delete(segs)
-    java.nio.file.Files.move(aside, segs)
-    // the same object reloads the mirror at the checkpoint and goes on
+    assert(s.mirrorVersion.contains(head), "the failed round dropped the mirror")
+    Files.delete(segs)
+    Files.move(aside, segs)
+    // the same object goes on from its mirror
     val r3 = s.runRound().get
-    assert(s.mirrorVersion.contains(ft.currentVersion) && ft.currentVersion == head + 2)
+    assert(s.mirrorVersion.contains(ft.currentVersion) && ft.currentVersion == head + 1)
     val rest = Iterator.continually(s.runRound()).takeWhile(_.isDefined).map(_.get).toList
     val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
     val order = (first ++ (r3 :: rest)).flatMap(_.claimOrder)
@@ -611,12 +656,12 @@ class CrawlParitySpec extends AnyFunSuite {
       df.select("url").collect().map(_.getString(0)).toSeq
     assert(urls(s.seenTable.read()).toSet == oracle.seen)
     // a Spark write leaves its _SUCCESS marker, a driver write one data file:
-    // the seed and the large rounds by Spark, the small rounds by the driver
+    // the large rounds by Spark, the seed and the small rounds by the driver
     def sparkWritten(d: String) = new java.io.File(d).list().contains("_SUCCESS")
     val v = ft.currentVersion
     val log = ft.appendedOf(v)
     val (bySpark, byDriver) = log.partition(seg => sparkWritten(s"${ft.root}/segments/$seg"))
-    assert(bySpark.size == 1 + rounds.size - small && byDriver.size == small,
+    assert(bySpark.size == rounds.size - small && byDriver.size == 1 + small,
       s"Spark $bySpark, driver $byDriver")
     // every reader sees the same rows
     val all = spark.read.parquet(ft.segmentsOf(v).map(seg => s"${ft.root}/segments/$seg"): _*)
@@ -877,15 +922,16 @@ class WriteModeSpec extends AnyFunSuite {
     val s1 = session(crashDir, "ow-run", WriteMode.Overwrite)
     s1.init()
     s1.runRound()
-    val checkpoint = Paths.get(crashDir, "sessions", "ow-run", "round.json")
-    val saved = Files.readAllBytes(checkpoint)
+    val manifest = Paths.get(s1.frontierTable.root, "manifest.json")
+    val saved = Files.readAllBytes(manifest)
     val docsBefore = s1.docsTable.currentVersion
     assert(s1.runRound().exists(_.docsWritten > 0))
     assert(s1.docsTable.currentVersion == docsBefore + 1, "the lost round committed its docs")
-    // the crash: the round's docs are durable, its checkpoint flip is lost
-    val tmp = Paths.get(s"$checkpoint.restore")
+    // the crash: the round's docs are durable, its checkpoint flip (the
+    // frontier's manifest rename) is lost
+    val tmp = Paths.get(s"$manifest.restore")
     Files.write(tmp, saved)
-    Files.move(tmp, checkpoint, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     val s2 = session(crashDir, "ow-run", WriteMode.Overwrite)
     s2.run()
     val got = lastModified(s2)

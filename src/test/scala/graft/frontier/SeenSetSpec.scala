@@ -102,7 +102,7 @@ class SeenSetSpec extends AnyFunSuite {
     val (v0, n0) = t.commitFull(rows(0 until 100))
     assert(n0 == 100)
     // delta: add 10 new rows, tombstone 5 claimed ones
-    val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5), v0)
+    val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5))
     assert(n1 == 105, "live rows = 100 + 10 - 5")
     assert(t.rowsOf(v1) == 105 && t.tombRowsOf(v1) == 5)
     val got = t.readVersion(v1).select("url").collect().map(_.getString(0)).toSet
@@ -127,13 +127,23 @@ class SeenSetSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("snap-fail")
     val t = new SnapshotTable(dir, spark)
     val (v0, _) = t.commitFull(rows(0 until 100))
-    intercept[Exception](t.commitDeltaTo(broken, rows(0 until 5), v0))
+    intercept[Exception](t.commitDeltaTo(broken, rows(0 until 5)))
+    def staged(v: Long) = Seq("segments", "tombstones", "snapshots")
+      .map(kind => Paths.get(dir, kind, v.toString))
     assert(t.currentVersion == v0)
-    Seq("segments", "tombstones").foreach { kind =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, kind, (v0 + 1).toString)), kind)
-    }
-    val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5), v0)
+    staged(v0 + 1).foreach(p => assert(!Files.exists(p), p))
+    // a publish barrier that throws: every file of v0 + 1 was written, and
+    // none is left; the table stays at its parent
+    var seen = Seq.empty[Boolean]
+    intercept[IllegalStateException](t.commitDeltaTo(rows(100 until 110), rows(0 until 5),
+      beforePublish = () => {
+        seen = staged(v0 + 1).map(Files.exists(_))
+        throw new IllegalStateException("barrier")
+      }))
+    assert(seen == Seq(true, true, true), s"staged before the barrier: $seen")
+    assert(t.currentVersion == v0)
+    staged(v0 + 1).foreach(p => assert(!Files.exists(p), p))
+    val (v1, n1) = t.commitDeltaTo(rows(100 until 110), rows(0 until 5))
     assert(v1 == v0 + 1 && n1 == 105)
     assert(t.readVersion(v1).select("url").collect().map(_.getString(0)).toSet ==
       (5 until 110).map(i => s"u$i").toSet)
@@ -163,12 +173,12 @@ class SeenSetSpec extends AnyFunSuite {
         .filter(_.getFileName.toString.endsWith(".parquet")).maxBy(_.toString)
       val good = Files.readAllBytes(victim)
       Files.write(victim, Array.fill[Byte](good.length)(7))
-      intercept[Exception](t.commitDeltaTo(batch, tombs, v0))
+      intercept[Exception](t.commitDeltaTo(batch, tombs))
       assert(t.currentVersion == v0, tag)
       Seq(seg, base, tombDir).foreach(p => assert(!Files.exists(p), s"$tag: $p left"))
       Files.write(victim, good)
 
-      val (v1, live) = t.commitDeltaTo(batch, tombs, v0)
+      val (v1, live) = t.commitDeltaTo(batch, tombs)
       assert(v1 == v && t.tombstonesOf(v1).isEmpty, s"$tag: compacted")
       assert(!Files.exists(tombDir), tag)
       assert(t.segmentsOf(v1).toSet == Set(s"$v-base", v.toString), tag)
@@ -198,13 +208,13 @@ class SeenSetSpec extends AnyFunSuite {
     // the policy compacts when cumulative tombstones exceed
     // max(4096, prevLiveRows/4) or MaxTombRows; 40 of 100 sits under the
     // 4096 floor → still a delta
-    val (v1, _) = t.commitDeltaTo(rows(100 until 110), rows(0 until 40), v0)
+    val (v1, _) = t.commitDeltaTo(rows(100 until 110), rows(0 until 40))
     assert(t.segmentsOf(v1).size == 2 && t.tombRowsOf(v1) == 40)
     // cross the floor: 20k-row base, 8k cumulative tombstones over two deltas
     val (w0, _) = t.commitFull(rows(0 until 20000))
-    val (w1, _) = t.commitDeltaTo(rows(20000 until 20010), rows(0 until 4000), w0)
+    val (w1, _) = t.commitDeltaTo(rows(20000 until 20010), rows(0 until 4000))
     assert(t.tombstonesOf(w1).nonEmpty, "first delta stays a delta")
-    val (w2, liveW2) = t.commitDeltaTo(rows(20010 until 20020), rows(4000 until 8000), w1)
+    val (w2, liveW2) = t.commitDeltaTo(rows(20010 until 20020), rows(4000 until 8000))
     // 8000 cumulative tombstones > max(4096, ~16010/4) → compacted
     assert(t.tombstonesOf(w2).isEmpty, "compaction resets the tombstone list")
     assert(t.tombRowsOf(w2) == 0)
@@ -230,7 +240,7 @@ class SeenSetSpec extends AnyFunSuite {
     for (r <- 0 until 9) {
       val (nv, _) = t.commitDeltaTo(
         rows(live + r * 10 until live + (r + 1) * 10),
-        rows(r * 1000 until (r + 1) * 1000), v)
+        rows(r * 1000 until (r + 1) * 1000))
       v = nv
     }
     assert(t.tombstonesOf(v).size == 9, "every round under live/4 is a delta")
@@ -241,7 +251,7 @@ class SeenSetSpec extends AnyFunSuite {
     // a 14000-claim round pushes cumulative tombstones (23000) past
     // live/4 (91090/4 = 22772) → exactly one compaction, sized ~live
     val (vc, liveAfter) = t.commitDeltaTo(
-      rows(live + 90 until live + 100), rows(9000 until 23000), v)
+      rows(live + 90 until live + 100), rows(9000 until 23000))
     assert(t.tombstonesOf(vc).isEmpty, "compaction resets tombstones")
     assert(liveAfter == live + 100 - 23000)
     // the batch stays the delta segment; the survivors form the base
@@ -257,7 +267,7 @@ class SeenSetSpec extends AnyFunSuite {
     val t = new SnapshotTable(dir, spark, broadcastTombRows = 50L)
     def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong)).toDF("url", "urlHash")
     val (v0, _) = t.commitFull(rows(0 until 2000))
-    val (v1, n1) = t.commitDeltaTo(rows(2000 until 2010), rows(0 until 100), v0)
+    val (v1, n1) = t.commitDeltaTo(rows(2000 until 2010), rows(0 until 100))
     assert(n1 == 1910)
     // tiny test inputs auto-broadcast regardless of the hint — disable the
     // size-based planner path so only the explicit hint can broadcast
@@ -273,7 +283,7 @@ class SeenSetSpec extends AnyFunSuite {
       // under the budget the explicit broadcast hint is kept
       val t2 = new SnapshotTable(TestSpark.tmpDir("snap-bcast-tomb"), spark)
       val (w0, _) = t2.commitFull(rows(0 until 2000))
-      val (w1, _) = t2.commitDeltaTo(rows(2000 until 2010), rows(0 until 100), w0)
+      val (w1, _) = t2.commitDeltaTo(rows(2000 until 2010), rows(0 until 100))
       val plan2 = t2.readVersion(w1).queryExecution.executedPlan.toString
       assert(plan2.contains("BroadcastHashJoin"),
         s"under the budget the tombstone anti-join must broadcast:\n$plan2")
@@ -290,11 +300,11 @@ class SeenSetSpec extends AnyFunSuite {
     val t = new SnapshotTable(dir, spark)
     def rows(ids: Range) = ids.map(i => (s"u$i", i.toLong)).toDF("url", "urlHash")
     val (w0, _) = t.commitFull(rows(0 until 20000))
-    val (w1, _) = t.commitDeltaTo(rows(20000 until 20010), rows(0 until 4000), w0)
+    val (w1, _) = t.commitDeltaTo(rows(20000 until 20010), rows(0 until 4000))
     // second delta crosses the tombstone threshold → compaction folds the
     // surviving parent rows into a base segment beside the delta; w0/w1
     // segments become garbage once their snapshots expire
-    val (w2, live) = t.commitDeltaTo(rows(20010 until 20020), rows(4000 until 8000), w1)
+    val (w2, live) = t.commitDeltaTo(rows(20010 until 20020), rows(4000 until 8000))
     assert(t.tombstonesOf(w2).isEmpty)
     val segsBefore = new java.io.File(s"$dir/segments").list().length
     assert(segsBefore == 4)
@@ -312,6 +322,23 @@ class SeenSetSpec extends AnyFunSuite {
     assert(d0 == 0, "externally-referenced segment must survive")
     val (d1, _) = t2.expireBefore(t2.currentVersion)
     assert(d1 == 1)
+    // a publish a crash lost: the files of the version above the head
+    // survive the process, and expiry deletes them
+    val head = t2.currentVersion
+    val lost = Seq("segments", "tombstones", "snapshots").map(k => Paths.get(t2.root, k, (head + 1).toString))
+    val aside = Paths.get(TestSpark.tmpDir("snap-expire-lost"))
+    intercept[IllegalStateException](t2.commitDeltaTo(rows(200 until 210), rows(100 until 105),
+      beforePublish = () => {
+        lost.foreach(d => Files.move(d, aside.resolve(d.getParent.getFileName.toString)))
+        throw new IllegalStateException("crash")
+      }))
+    lost.foreach(d => Files.move(aside.resolve(d.getParent.getFileName.toString), d))
+    assert(t2.currentVersion == head && lost.forall(Files.exists(_)))
+    assert(t2.expireBefore(head) == (1, 1))
+    lost.foreach(p => assert(!Files.exists(p), p))
+    assert(new java.io.File(t2.root).list().toSet ==
+      Set("manifest.json", "segments", "tombstones", "snapshots"))
+    assert(t2.read().count() == 100)
     t.drop(); t2.drop()
   }
 
@@ -328,7 +355,7 @@ class SeenSetSpec extends AnyFunSuite {
     bloom.forVersion(v0, n0)
     // a round that claims 10 pages and adds 0 new URLs: the log keeps the
     // claimed rows and gains an empty segment
-    val (v1, live) = t.commitDeltaTo(rows(0 until 0), rows(0 until 10), v0)
+    val (v1, live) = t.commitDeltaTo(rows(0 until 0), rows(0 until 10))
     assert(live == 40 && t.appendedOf(v1) == Seq(v0.toString, v1.toString))
     assert(t.segmentRows(v1.toString) == 0 && seen(v1).count() == 50)
     // regression: advancing over an EMPTY segment NPE'd in stat.bloomFilter
@@ -350,7 +377,7 @@ class SeenSetSpec extends AnyFunSuite {
     // 300 deltas on a 5,000-row seed, each one row in and one row out: no
     // compaction, so every list is a run of versions
     t.commitFull(rows(0 until 5000))
-    (1 to 300).foreach(i => t.commitDeltaTo(rows(5000 + i to 5000 + i), keys(i to i), i - 1L))
+    (1 to 300).foreach(i => t.commitDeltaTo(rows(5000 + i to 5000 + i), keys(i to i)))
     val v = t.currentVersion
     assert(v == 300)
     assert(t.segmentsOf(v) == names(0 to 300) && t.appendedOf(v) == names(0 to 300))
@@ -358,9 +385,9 @@ class SeenSetSpec extends AnyFunSuite {
     assert(Files.size(meta(v)) < 1024, Files.readString(meta(v)))
     assert(Files.readString(meta(v)).contains("\"appended\": [\"0..300\"]"))
     // a compaction's base segment breaks the run of the live list
-    val (c, _) = t.commitDeltaTo(rows(0 until 0), keys(301 until 4500), v)
-    val (d, _) = t.commitDeltaTo(rows(6000 until 6001), keys(4500 until 4501), c)
-    val (e, _) = t.commitDeltaTo(rows(6001 until 6002), keys(4501 until 4502), d)
+    val (c, _) = t.commitDeltaTo(rows(0 until 0), keys(301 until 4500))
+    val (d, _) = t.commitDeltaTo(rows(6000 until 6001), keys(4500 until 4501))
+    val (e, _) = t.commitDeltaTo(rows(6001 until 6002), keys(4501 until 4502))
     assert(t.segmentsOf(e) == Seq(s"$c-base", c, d, e).map(_.toString))
     assert(t.tombstonesOf(e) == Seq(d, e).map(_.toString) && t.appendedOf(e) == names(0 to e.toInt))
     assert(Files.readString(meta(e)).contains(s"\"segments\": [\"$c-base\",\"$c..$e\"]"))
@@ -376,7 +403,7 @@ class SeenSetSpec extends AnyFunSuite {
     assert(Files.readString(meta(e)).contains("\"1\",\"2\",\"3\""))
     assert(t.segmentsOf(e) == segs && t.tombstonesOf(e) == tombs && t.appendedOf(e) == log)
     assert(t.readVersion(e).collect().toSet == live)
-    val (f, _) = t.commitDeltaTo(rows(6002 until 6003), keys(4502 until 4503), e)
+    val (f, _) = t.commitDeltaTo(rows(6002 until 6003), keys(4502 until 4503))
     assert(t.appendedOf(f) == names(0 to f.toInt))
     assert(Files.readString(meta(f)).contains(s"\"appended\": [\"0..$f\"]"))
     t.drop()
@@ -390,7 +417,7 @@ class SeenSetSpec extends AnyFunSuite {
     // a later segment with an extra column: Spark's inference reads one
     // file's schema, and the footer read must pick the same one
     val (v1, _) = t.commitAppend(rows(50 until 60).withColumn("x", lit("e")))
-    val (v2, _) = t.commitDeltaTo(rows(60 until 70), rows(0 until 5).select("url", "urlHash"), v1)
+    val (v2, _) = t.commitDeltaTo(rows(60 until 70), rows(0 until 5).select("url", "urlHash"))
     val reopened = new SnapshotTable(dir, spark)
     val read = TestSpark.traced(reopened.read())
     assert(read.jobs.isEmpty, read.jobs.flatMap(_.stageInfos.map(_.name)))
@@ -439,7 +466,7 @@ class SeenSetSpec extends AnyFunSuite {
     // replace u0..u4 in ONE commit: tombstone the urls AND insert new rows
     // for the same urls — the sequence rule keeps the fresh rows
     val (v1, n1) = t.commitDeltaTo(rows(0 until 5, "new"),
-      rows(0 until 5, "x").select("url"), v0)
+      rows(0 until 5, "x").select("url"))
     assert(n1 == 10, "5 deleted + 5 inserted")
     val byTag = t.readVersion(v1).collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
@@ -455,7 +482,7 @@ class SeenSetSpec extends AnyFunSuite {
     val batch = rows(Seq(5, 6, 10), "merge")
     val replaced = t.readVersion(v2).select("url")
       .join(batch.select("url"), Seq("url"), "left_semi")
-    val (v3, n3) = t.commitDeltaTo(batch, replaced, v2)
+    val (v3, n3) = t.commitDeltaTo(batch, replaced)
     assert(t.tombRowsOf(v3) - t.tombRowsOf(v2) == 3, "u5 once, u6 twice")
     assert(n3 == 11 - 3 + 3 && t.rowsOf(v3) == t.readVersion(v3).count())
     val merged = t.readVersion(v3).collect().map(r => (r.getString(0), r.getString(1)))
@@ -470,7 +497,7 @@ class SeenSetSpec extends AnyFunSuite {
     t.drop()
   }
 
-  test("incremental seen bloom: advances over new segments only, reloads from sidecar, never false-negative") {
+  test("incremental seen bloom: advances over new segments only, never false-negative across empty segments and a 4x rebuild") {
     val dir = TestSpark.tmpDir("snap-bloom")
     val t = new SnapshotTable(dir, spark)
     def seenRows(ids: Range) = ids.map { i =>
@@ -484,8 +511,8 @@ class SeenSetSpec extends AnyFunSuite {
     val (v1, _) = t.commitAppend(seenRows(500 until 600))
     val f1 = bloom0.forVersion(v1, 600)
     assert((0 until 600).forall(i => f1.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
-    // a FRESH instance reloads the persisted sidecar instead of rescanning:
-    // same coverage guarantee
+    // a FRESH instance (a resumed crawl) rebuilds from the log: same
+    // coverage guarantee
     val bloom1 = new IncrementalSeenBloom(t)
     val f2 = bloom1.forVersion(v1, 600)
     assert((0 until 600).forall(i => f2.mightContainLong(UrlOps.urlHash(s"http://h/$i"))))
@@ -502,8 +529,8 @@ class SeenSetSpec extends AnyFunSuite {
     t.drop()
   }
 
-  test("incremental seen bloom: a fresh instance reloads the sidecar with no job; an expired covered snapshot rebuilds once") {
-    val dir = TestSpark.tmpDir("snap-bloom-sidecar")
+  test("incremental seen bloom: a fresh instance rebuilds once from the whole log, then advances one job per non-empty new segment; nothing but the table is on disk") {
+    val dir = TestSpark.tmpDir("snap-bloom-rebuild")
     val t = new SnapshotTable(dir, spark)
     def seenRows(ids: Range) = ids.map { i =>
       val u = s"http://h/$i"; (u, UrlOps.urlHash(u))
@@ -512,22 +539,25 @@ class SeenSetSpec extends AnyFunSuite {
       (0 until n).forall(i => f.mightContainLong(UrlOps.urlHash(s"http://h/$i")))
     t.commitFull(seenRows(0 until 50))
     val (v1, _) = t.commitAppend(seenRows(50 until 60))
-    new IncrementalSeenBloom(t).forVersion(v1, 60)
-    assert(Files.exists(Paths.get(dir, "bloom.current")))
-    val reloaded = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v1, 60))
-    assert(reloaded.jobs.isEmpty, "a fresh instance loads the sidecar instead of rescanning")
-    assert(covers(reloaded.result, 60))
-    // gc expires the covered snapshot's meta: the sidecar names no segments,
-    // so it no longer loads, and the next instance rebuilds from the whole
-    // log once (an advance over the sidecar would read only segment v2)
+    val bloom = new IncrementalSeenBloom(t)
+    val built = TestSpark.traced(bloom.forVersion(v1, 60))
+    assert(built.rowsRead == 60, s"read ${built.rowsRead} rows")
+    assert(covers(built.result, 60))
+    // one empty and one 10-row segment: the advance reads the new rows only
+    t.commitAppend(seenRows(0 until 0))
     val (v2, _) = t.commitAppend(seenRows(60 until 70))
-    t.expireBefore(v2, t.appendedOf(v2).toSet)
-    assert(!Files.exists(Paths.get(dir, "snapshots", v1.toString)))
-    val rebuilt = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v2, 70))
-    assert(rebuilt.rowsRead == 70, s"read ${rebuilt.rowsRead} rows")
-    assert(covers(rebuilt.result, 70))
-    val again = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v2, 70))
-    assert(again.jobs.isEmpty, "the rebuild rewrote the sidecar")
+    val one = TestSpark.traced(bloom.forVersion(v2, 70))
+    val per = built.jobs.size
+    assert(one.rowsRead == 10 && one.jobs.size == per,
+      s"advance read ${one.rowsRead} rows in ${one.jobs.size} jobs (a build is $per)")
+    assert(covers(one.result, 70))
+    val again = TestSpark.traced(bloom.forVersion(v2, 70))
+    assert(again.jobs.isEmpty, "a covered version ran a job")
+    // a second fresh instance rebuilds from the whole log once
+    val fresh = TestSpark.traced(new IncrementalSeenBloom(t).forVersion(v2, 70))
+    assert(fresh.rowsRead == 70 && covers(fresh.result, 70))
+    assert(new java.io.File(dir).list().toSet ==
+      Set("manifest.json", "segments", "tombstones", "snapshots"))
     t.drop()
   }
 
@@ -545,12 +575,12 @@ class SeenSetSpec extends AnyFunSuite {
     // Spark-written segments: a repartition keeps them off the driver write
     val (v0, _) = t.commitFull(rows(0 until 5000).repartition(2))
     check(v0, "seed version")
-    val (v1, _) = t.commitDeltaTo(rows(5000 until 5010).repartition(1), keys(0 until 10), v0)
+    val (v1, _) = t.commitDeltaTo(rows(5000 until 5010).repartition(1), keys(0 until 10))
     assert(t.tombstonesOf(v1).nonEmpty)
     check(v1, "after a delta")
     // 10 + 4,190 tombstones pass the 4,096 floor: the base is written from
     // readVersion, in the data order
-    val (v2, _) = t.commitDeltaTo(rows(5010 until 5020), keys(10 until 4200), v1)
+    val (v2, _) = t.commitDeltaTo(rows(5010 until 5020), keys(10 until 4200))
     assert(t.segmentsOf(v2).contains(s"$v2-base") && t.tombstonesOf(v2).isEmpty)
     check(v2, "after a compaction")
     t.drop()
@@ -617,15 +647,15 @@ class SeenSetSpec extends AnyFunSuite {
     }
     both(sequenced = false) { (t, shape) =>
       val (v0, _) = t.commitFull(shape(frontier(0 until 3000)))
-      val (v1, _) = t.commitDeltaTo(shape(frontier(3000 until 3010)), shape(keys(0 until 20)), v0)
-      val (v2, _) = t.commitDeltaTo(shape(frontier(0 until 0)), shape(keys(20 until 30)), v1)
-      t.commitDeltaTo(shape(frontier(3010 until 3020)), shape(keys(30 until 40)), v2)._1
+      val (v1, _) = t.commitDeltaTo(shape(frontier(3000 until 3010)), shape(keys(0 until 20)))
+      val (v2, _) = t.commitDeltaTo(shape(frontier(0 until 0)), shape(keys(20 until 30)))
+      t.commitDeltaTo(shape(frontier(3010 until 3020)), shape(keys(30 until 40)))._1
     }
     both(sequenced = true) { (t, shape) =>
       val (v0, _) = t.commitAppend(shape(docs(0 until 10, "a")))
       // the sequence rule: same-keyed rows replace their tombstoned elders
       val (v1, _) = t.commitDeltaTo(shape(docs(0 until 5, "b")),
-        shape(docs(0 until 5, "x").select("url")), v0)
+        shape(docs(0 until 5, "x").select("url")))
       t.commitAppend(shape(docs(20 until 22, "c")))._1
     }
   }

@@ -3,12 +3,14 @@ package graft.crawl
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PhysicalRows
 import org.apache.spark.sql.types.{DataType, MapType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Extractor, RuleCompiler}
-import graft.frontier.{IncrementalSeenBloom, Politeness, SeenSet, SnapshotTable}
+import graft.frontier.{IncrementalSeenBloom, Politeness, SeenSet, SegmentWriter, SnapshotTable}
 import graft.model._
 
 /** One crawl session: the rebuild of `RiverWeb.crawl()`
@@ -21,8 +23,8 @@ import graft.model._
   *
   * A round above the small-round gate ([[CrawlSession.SmallWriteRows]]) is
   * ONE declarative DataFrame DAG. A round below it claims from the
-  * session's driver mirror of the frontier; its Spark work is one collect
-  * of the child candidates and the docs write.
+  * session's driver mirror of the frontier; in Default mode its Spark work
+  * is one action that writes the docs and returns the child candidates.
   *
   * All state crosses rounds through [[SnapshotTable]] commits, so a crawl
   * resumes from its latest manifest (Z6) and every round's plan starts from
@@ -71,8 +73,9 @@ final class CrawlSession(
   // seen set above the gate
   private var mirror: Option[Mirror] = None
 
-  /** the frontier version the driver mirror holds, if any. */
+  /** the frontier version the driver mirror holds, if any, and its schema. */
   private[crawl] def mirrorVersion: Option[Long] = mirror.map(_.version)
+  private[crawl] def mirrorSchema: Option[StructType] = mirror.map(_.schema)
 
   /** The URL-seen set (J1), read-only: the frontier's append log at its
     * head — the seed segment and every round's new-entries segment, no
@@ -147,51 +150,47 @@ final class CrawlSession(
   /** P1/P2 include/exclude on canonical child URLs (full-match anchored,
     * RiverWeb.java:400-422). Empty include list keeps everything.
     */
-  private def includeExclude(df: DataFrame): DataFrame = {
+  private def includeExclude(url: Column): Column = {
     val inc =
       if (config.includeUrls.isEmpty) lit(true)
-      else config.includeUrls
-        .map(re => col("url").rlike(RuleCompiler.anchored(re)))
-        .reduce(_ || _)
+      else config.includeUrls.map(re => url.rlike(RuleCompiler.anchored(re))).reduce(_ || _)
     val exc =
       if (config.excludeUrls.isEmpty) lit(false)
-      else config.excludeUrls
-        .map(re => col("url").rlike(RuleCompiler.anchored(re)))
-        .reduce(_ || _)
-    df.filter(inc && !exc)
+      else config.excludeUrls.map(re => url.rlike(RuleCompiler.anchored(re))).reduce(_ || _)
+    inc && !exc
   }
 
   /** raw URL strings -> canonical frontier candidates, one row per child
     * (`url`, `urlHash`, `host`, `depth`, `parentUrl`): canonicalized, then
     * filtered by the trap guard, include/exclude, `maxDepth` and robots.
+    * Few DataFrame steps, as each one analyzes the whole plan again: a
+    * small round builds this plan every round.
     */
   private def candidateRows(raw: DataFrame, depthCol: Column,
       parentCol: Column, applyIncludeExclude: Boolean): DataFrame = {
+    val url = col("url")
+    val keep = Seq(
+      Some(trim(url) =!= ""), // P9
+      // spider-trap guard: a map-side sorted-segment compare, zero plan cost
+      Option.when(config.trapGuard)(
+        !graft.frontier.TrapDetector.pathRepeats(url, config.trapMaxRepeat)),
+      Option.when(applyIncludeExclude)(includeExclude(url)),
+      Option.when(config.maxDepth >= 0)(col("depth") <= config.maxDepth)).flatten
     val canon = raw
       .select(
         UrlOps.canonicalizeCol(col("child")).as("url"),
         depthCol.cast("int").as("depth"),
         parentCol.as("parentUrl"))
-      .filter(trim(col("url")) =!= "") // P9
-    // spider-trap guard: a map-side sorted-segment compare, zero plan cost
-    val guarded =
-      if (!config.trapGuard) canon
-      else canon.filter(!graft.frontier.TrapDetector.pathRepeats(
-        col("url"), config.trapMaxRepeat))
-    val filtered = if (applyIncludeExclude) includeExclude(guarded) else guarded
-    val keyed = filtered
-      .withColumn("urlHash", UrlOps.urlHashCol(col("url")))
-      .withColumn("host", UrlOps.hostCol(col("url")))
-    val depthOk =
-      if (config.maxDepth < 0) keyed
-      else keyed.filter(col("depth") <= config.maxDepth)
-    applyRobots(depthOk)
+      .filter(keep.reduce(_ && _))
+    applyRobots(canon.select(url, UrlOps.urlHashCol(url).as("urlHash"),
+      UrlOps.hostCol(url).as("host"), col("depth"), col("parentUrl")))
   }
 
   /** Seed the frontier, and so the seen set (round 0). Idempotent: no-op
     * on resume (a published frontier). The seeds are a driver list, so
     * their candidate rows are collected, deduped on the driver and written
-    * from the driver as one file.
+    * from the driver as one file; they also become the driver mirror of
+    * the seed version, so a fresh session's first round loads none.
     */
   def init(): Unit = {
     if (!frontierTable.isEmpty) return
@@ -199,9 +198,14 @@ final class CrawlSession(
     val cand = candidateRows(config.seeds.toDF("child"), lit(0), lit(null).cast("string"),
       applyIncludeExclude = false).select("url", "urlHash", "host", "depth", "parentUrl")
     val seeds = dedupRows(cand.collect().toSeq)
-    val (_, n) = frontierTable.commitFull(
+    val (v, n) = frontierTable.commitFull(
       spark.createDataFrame(java.util.Arrays.asList(seeds: _*), cand.schema),
       Map("round" -> "0", "processed" -> "0", "kind" -> "seed"))
+    // a file read makes every column nullable: the mirror takes the schema
+    // readVersion(v) would give it (the frontier's columns are all atomic)
+    if (n <= SmallWriteRows)
+      mirror = Some(Mirror(v, StructType(cand.schema.map(_.copy(nullable = true))),
+        seeds, seeds.map(seenKey).toSet))
     log(s"seeded frontier: $n urls")
   }
 
@@ -210,22 +214,25 @@ final class CrawlSession(
     *
     * A round whose seen set (the live frontier plus every page processed,
     * read from the manifest, so picking the path runs no job) is at most
-    * [[CrawlSession.SmallWriteRows]] rows runs two Spark actions. The claim
-    * comes from the session's driver mirror of the frontier;
-    * one `collect` over the fetch returns the filtered child candidates;
-    * the in-batch dedup and the seen check run on the driver; the round's
-    * tombstones and new entries are written from the driver; and the docs
-    * are a Spark write, beside the collect, so no page content passes
-    * through the driver. Above the gate the round is one Spark DAG: the
-    * cached window claim, the children's dedup and seen anti-join, and
-    * Spark writes.
+    * [[CrawlSession.SmallWriteRows]] rows claims from the session's driver
+    * mirror of the frontier. In Default mode it then runs ONE Spark
+    * action ([[CrawlSession.fuseDocsAndCandidates]]): a single task writes
+    * the round's docs file into the docs table's staged segment and returns
+    * the filtered child candidates, so no page content passes through the
+    * driver. The in-batch dedup and the seen check run on the driver, the
+    * round's tombstones and new entries are written from the driver, and
+    * the docs segment is published at the frontier commit's barrier.
+    * Overwrite and Incremental small rounds collect the candidates and run
+    * their Spark docs merge beside the collect. Above the gate the round is
+    * one Spark DAG: the cached window claim, the children's dedup and seen
+    * anti-join, and Spark writes.
     *
     * The frontier's files are written before the docs commit ends, but
     * published (its manifest rename, the round's one commit point) only
     * after: a round whose docs commit fails leaves the frontier at its
-    * parent, with no files of the failed version. Docs are the one
-    * at-least-once surface: a crash after the docs commit and before the
-    * rename re-runs the round on resume, which stores Default-mode docs
+    * parent, with no files of the failed version in either table. Docs are
+    * the one at-least-once surface: a crash after the docs commit and before
+    * the rename re-runs the round on resume, which stores Default-mode docs
     * twice (as re-running the reference would), replaces Overwrite ones
     * and skips Incremental ones.
     */
@@ -245,6 +252,9 @@ final class CrawlSession(
     var docsF = scala.concurrent.Future.successful(0L)
     def docsDurable(): Long =
       scala.concurrent.Await.result(docsF, scala.concurrent.duration.Duration.Inf)
+    // the docs version a fused round's action writes, staged until the
+    // frontier commit's barrier publishes it
+    var stagedDocs: Option[Long] = None
     try {
       // every claimed row is tombstoned exactly once (the commitDeltaTo
       // contract), so the append log holds the live frontier plus every
@@ -356,28 +366,37 @@ final class CrawlSession(
       val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
 
       // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
-      // The docs-table commit touches only docsTable — fully
-      // independent of the frontier transition below — so it runs
+      // A small Default round writes its docs inside the candidates' action
+      // (below). Any other round's docs-table commit touches only docsTable
+      // — fully independent of the frontier transition below — so it runs
       // CONCURRENTLY on a driver pool thread (guide §2.6: actions are only
       // sequential because the driver calls them sequentially); its tasks
       // back-fill executor slots left idle by the children DAG's stage
       // tails, and the docs plan is built and analysed there too, while
       // this thread plans the children DAG. The frontier commit awaits it
       // before its manifest rename, the round's commit point, so a docs
-      // failure aborts the round with the frontier at its parent. A small
-      // round's docs stay a Spark write too: their page content never
-      // passes through the driver.
+      // failure aborts the round with the frontier at its parent. Either
+      // way page content never passes through the driver.
       val stamp = clock()
-      docsF = scala.concurrent.Future {
-        val docs0 = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
-          .drop("children")
-          .withColumn("@timestamp", lit(stamp))
+      def extracted: DataFrame = {
+        val docs = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
+        docs.select(
+          docs.columns.filter(_ != "children").map(col) :+ lit(stamp).as("@timestamp"): _*)
+      }
+      val fused = local.isDefined && config.mode == WriteMode.Default
+      // a fused round's docs frame and staged writer are built on the docs
+      // thread, while this one builds the candidates
+      val fusedDocs = if (!fused) None else Some(scala.concurrent.Future {
+        val docs = extracted
+        (docs, docsTable.stagedWriter(docs.schema))
+      }(CrawlSession.docsCommitEc))
+      if (!fused) docsF = scala.concurrent.Future {
         // persisted only for Overwrite, whose merge reads the extraction
         // twice (the replaced-row tombstones' semi-join and the replacement
         // segment); Default and Incremental read it once, so the cache
         // would be pure copy overhead there
         val docs =
-          if (config.mode == WriteMode.Overwrite) cache(docs0) else docs0
+          if (config.mode == WriteMode.Overwrite) cache(extracted) else extracted
         writeDocs(docs, writeShape)
       }(CrawlSession.docsCommitEc)
 
@@ -416,15 +435,25 @@ final class CrawlSession(
         "claimed" -> claimedCount.toString)
       val (newFv, frontierLeft, next) = local match {
         case Some(m) =>
-          // the round's one collect: the candidates, deduped and seen-checked
+          // the round's one action: the candidates, deduped and seen-checked
           // against the mirror here; the new entries and the tombstones are
-          // local frames, written from the driver
-          val batch = dedupRows(candidates.select(m.schema.fieldNames.map(col): _*)
-            .collect().toSeq)
-          val fresh = batch.filterNot(r => m.seen.contains(seenKey(r)))
+          // local frames, written from the driver. A fused round's docs
+          // segment is published at the barrier, before the frontier's.
+          val cands = candidates.select(m.schema.fieldNames.map(col): _*)
+          val (rows, publishDocs): (Seq[Row], () => Unit) =
+            if (!fused) (cands.collect().toSeq, () => docsDurable())
+            else {
+              val (docs, (dv, writer)) = scala.concurrent.Await.result(fusedDocs.get,
+                scala.concurrent.duration.Duration.Inf)
+              stagedDocs = Some(dv)
+              val (file, n, rows) = fuseDocsAndCandidates(docs, cands, writer, dv.toString)
+              docsF = scala.concurrent.Future.successful(n)
+              (rows, () => docsTable.commitWritten(dv, file, n))
+            }
+          val fresh = dedupRows(rows).filterNot(r => m.seen.contains(seenKey(r)))
           val (fv, left) = frontierTable.commitDeltaTo(
             spark.createDataFrame(java.util.Arrays.asList(fresh: _*), m.schema),
-            claimed.select("urlHash", "url"), metrics, () => docsDurable())
+            claimed.select("urlHash", "url"), metrics, publishDocs)
           (fv, left, Some((m, fresh)))
         case None =>
           val raw = dedup(candidates)
@@ -494,8 +523,10 @@ final class CrawlSession(
         frontierLeft, seenTotal, newProcessed, order))
     } catch { case scala.util.control.NonFatal(e) =>
       // the docs commit may still be scanning `fetched` and `docs`: let it
-      // end before they are released (its own failure is secondary)
+      // end before they are released (its own failure is secondary); a
+      // fused round's unpublished docs segment is deleted
       scala.util.Try(docsDurable())
+      stagedDocs.foreach(docsTable.discardStaged)
       throw e
     } finally cached.foreach(_.unpersist())
   }
@@ -641,9 +672,10 @@ object CrawlSession {
 
   /** The small-round gate. A seen set of at most this many rows, and so
     * the live frontier it holds, is kept on the driver (the session's
-    * mirror): its round collects only the child candidates, whose dedup,
-    * seen check and new entries are computed and written from the driver,
-    * while the docs stay a Spark write. Above it, a claim batch of at most
+    * mirror): its round brings only the child candidates to the driver,
+    * whose dedup, seen check and new entries are computed and written from
+    * the driver, while the docs are written by a Spark task (in Default
+    * mode the candidates' own task). Above it, a claim batch of at most
     * this many rows still writes ONE file per snapshot (repartition(1))
     * instead of shuffle-partition many near-empty ones (task-commit
     * overhead dominates small-round latency); larger rounds keep the
@@ -675,6 +707,42 @@ object CrawlSession {
     */
   private final case class Mirror(version: Long, schema: StructType, live: Seq[Row],
       seen: Set[(Long, String)])
+
+  /** The fused small Default round's one Spark action: the round's docs
+    * (`docs`, the extraction) and child candidates (`candidates`, in the
+    * mirror's columns) as one tagged union — each packed into its own
+    * struct column, the other null — shuffled into ONE partition
+    * (`repartition(1)`, not `coalesce(1)`: the scans and extraction stay
+    * parallel; [[PhysicalRows.collect]]). Its single task writes
+    * every doc with `writer` into one file named after `tag` and its task
+    * attempt, opened even when no doc comes, so the segment always has a
+    * schema footer, and returns only the candidate rows, the file's name and
+    * its row count: no page content reaches the driver. Returns (file, docs
+    * rows, candidates).
+    */
+  private[crawl] def fuseDocsAndCandidates(docs: DataFrame, candidates: DataFrame,
+      writer: SegmentWriter, tag: String): (String, Long, Seq[Row]) = {
+    val candType = candidates.schema
+    val (docFields, candFields) = (docs.schema.length, candType.length)
+    val results = PhysicalRows.collect(Seq(docs, candidates)) { rows =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(candType)
+      val out = writer.open(s"$tag-${org.apache.spark.TaskContext.get().taskAttemptId()}")
+      val cands = Array.newBuilder[Row]
+      try rows.foreach { r =>
+        if (r.isNullAt(0)) cands += toRow(r.getStruct(1, candFields)).asInstanceOf[Row]
+        else out.write(r.getStruct(0, docFields))
+      } finally out.close()
+      Iterator((out.name, out.rows, cands.result()))
+    }
+    // a plan the optimizer proves empty has no partition, and so no task:
+    // the driver writes the empty file
+    val (file, n, rows) = results.headOption.getOrElse {
+      val out = writer.open(s"$tag-driver")
+      out.close()
+      (out.name, 0L, Array.empty[Row])
+    }
+    (file, n, rows.toSeq)
+  }
 
   /** the seen-set key of a frontier or candidate row. */
   private[graft] def seenKey(r: Row): (Long, String) =

@@ -263,9 +263,10 @@ object Extractor {
       }
     }
 
-    val flat = propNames.foldLeft(matched) { (df, name) =>
-      df.withColumn(colAlias(name), propCol(name))
-    }.withColumn("children", childArray(config))
+    // one projection step for every property: each DataFrame step analyzes
+    // the whole plan again
+    val flat = matched.withColumns(scala.collection.immutable.ListMap(
+      propNames.map(n => colAlias(n) -> propCol(n)) :+ ("children" -> childArray(config)): _*))
 
     // X4 zip-explode over the `[]` group
     val groupNames = propNames.filter(_.startsWith("[]"))

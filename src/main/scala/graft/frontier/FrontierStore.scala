@@ -7,11 +7,16 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Snapshot-versioned table shim (S3/Z6) — stands in for Iceberg (no Iceberg
   * runtime jar ships offline; SURVEY.md §7.1). Semantics mirrored:
@@ -41,8 +46,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     are already on the driver (its optimized plan is a `LocalRelation`,
   *     e.g. a small crawl round's claim tombstones and new entries)
   *     is written from the driver as one file, with no Spark job, through
-  *     the writer Spark's own tasks use; any other frame is a Spark write.
-  *     Readers cannot tell the two apart: every read is a Spark read
+  *     the writer Spark's own tasks use ([[SegmentWriter]]); any other
+  *     frame is a Spark write;
+  *   - an append can also commit a segment written before the commit:
+  *     [[stagedWriter]] hands out a serializable [[SegmentWriter]] for the
+  *     next version's segment dir, one Spark task writes one file with it
+  *     (a small crawl round's docs, beside the round's other work), and
+  *     [[commitWritten]] deletes any other file in that dir (a lost
+  *     attempt), then publishes it with the writer's row count. Readers
+  *     cannot tell any of these apart: every read is a Spark read
   *     ([[readVersion]], [[readSegments]]) over the schema of one footer;
   *   - a meta.json writes each run of consecutive commit versions in its
   *     segment, tombstone and append-log lists as one `"<a>..<b>"` entry,
@@ -206,17 +218,61 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   def segmentRows(seg: String): Long = dirRowCount(segPath(seg))
 
   /** Replace the table with `df`; starts a new append log. */
-  def commitFull(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) =
-    commit(df, metrics, appendTo = Seq.empty, logTo = Seq.empty, prevRows = 0L)
+  def commitFull(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) = {
+    val v = currentVersion + 1
+    val written = write(stamp(df, v), segPath(v.toString))
+    commitManifest(metrics, appendTo = Seq.empty, logTo = Seq.empty, prevRows = 0L,
+      expectVersion = v, segRows = written)
+  }
 
   /** Append `df` on top of the table's head. */
   def commitAppend(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    val parent = currentVersion
-    // carry the parent's tombstones forward — an append must not resurrect
-    // logically deleted rows
-    commit(df, metrics, appendTo = segmentsOf(parent), logTo = appendedOf(parent),
+    val v = currentVersion + 1
+    appendManifest(v, metrics, segRows = write(stamp(df, v), segPath(v.toString)))
+  }
+
+  /** A writer of the data segment of the next append, version v = head + 1,
+    * for a Spark task to write directly; [[commitWritten]] then commits the
+    * file it wrote. On a sequenced table it stamps each row with `__seq` v.
+    */
+  def stagedWriter(schema: StructType): (Long, SegmentWriter) = {
+    val v = currentVersion + 1
+    (v, segmentWriter(segPath(v.toString), schema, if (sequenced) Some(v) else None))
+  }
+
+  /** [[commitAppend]] of a segment a [[stagedWriter]] wrote: `file`, of
+    * `rows` rows (the writer's count: no footer is reopened). Any other
+    * file in the segment dir (from a lost task attempt or an earlier failed
+    * try at version v) is deleted first. If it fails, the table stays at
+    * its parent; [[discardStaged]] deletes the staged files.
+    */
+  def commitWritten(v: Long, file: String, rows: Long,
+      metrics: Map[String, String] = Map.empty): (Long, Long) = {
+    listDir(Paths.get(segPath(v.toString)))
+      .filterNot(p => Set(file, s".$file.crc").contains(p.getFileName.toString))
+      .foreach(rmTree)
+    appendManifest(v, metrics, segRows = Some(rows))
+  }
+
+  /** delete the staged segment and meta of version v unless v is
+    * published (best-effort): what a failed [[commitWritten]] or a writer
+    * whose commit never ran leaves.
+    */
+  def discardStaged(v: Long): Unit =
+    if (currentVersion < v)
+      Seq(segPath(v.toString), metaPath(v).getParent.toString)
+        .foreach(d => scala.util.Try(rmTree(Paths.get(d))))
+
+  /** publish segment `<v>` on top of the parent v - 1, carrying its
+    * tombstones forward — an append must not resurrect logically deleted
+    * rows.
+    */
+  private def appendManifest(v: Long, metrics: Map[String, String],
+      segRows: Option[Long]): (Long, Long) = {
+    val parent = v - 1
+    commitManifest(metrics, appendTo = segmentsOf(parent), logTo = appendedOf(parent),
       prevRows = rowsOf(parent), tombSegs = tombstonesOf(parent),
-      tombRows = tombRowsOf(parent))
+      tombRows = tombRowsOf(parent), expectVersion = v, segRows = segRows)
   }
 
   /** Delta transition on top of the table's head: `newRows` becomes data
@@ -233,14 +289,14 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * the exception is rethrown — so a caller can make the rename the
     * commit point of work outside this table (the crawl round's docs).
     *
-    * Compaction: once accumulated tombstones, counted from the written
-    * footers, exceed a quarter of the live rows (floor 4096), the parent's
-    * surviving rows (`readVersion(parent)` minus the fresh tombstones) are
-    * rewritten as a second segment of snapshot v, `<v>-base`, and the
-    * tombstone list resets. Segment `<v>` holds exactly `newRows` on both
-    * paths, so no row is written twice, `segmentRows` is the batch, and
-    * `<v>` (never `<v>-base`) joins the append log. The budget scales
-    * WITH the table — amortized, one rewrite per live/4
+    * Compaction: once accumulated tombstones, counted by the driver writer
+    * or from the written footers, exceed a quarter of the live rows (floor
+    * 4096), the parent's surviving rows (`readVersion(parent)` minus the
+    * fresh tombstones) are rewritten as a second segment of snapshot v,
+    * `<v>-base`, and the tombstone list resets. Segment `<v>` holds exactly
+    * `newRows` on both paths, so no row is written twice, `segmentRows` is
+    * the batch, and `<v>` (never `<v>-base`) joins the append log. The
+    * budget scales WITH the table — amortized, one rewrite per live/4
     * claimed rows ≈ 4 rows rewritten per claim at any size (at 10^10 rows
     * an absolute cap forced a full rewrite every ~1M claims ≈ 10^4 rows
     * per claim). Reads between compactions stay broadcast-anti-join up to
@@ -248,7 +304,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     *
     * Contract: every tombstone row deletes exactly ONE live row of the
     * parent. The new live count is then parent − tombstone rows + segment
-    * rows, all read from footers, and the compaction trigger counts only
+    * rows, all counted as written, and the compaction trigger counts only
     * real deletes. The frontier's claimed rows satisfy it (each url is in
     * the frontier once); a replace-style caller on a sequenced table
     * tombstones the key of each parent row it replaces, e.g.
@@ -272,13 +328,13 @@ final class SnapshotTable(dir: String, spark: SparkSession,
       // a failed segment write first waits the tombstone write out: left
       // running, it would race the cleanup below and a retry's write of
       // the same dir
-      try write(stamp(newRows, v), segDir)
-      catch { case NonFatal(e) =>
-        scala.util.Try(Await.result(tombF, Duration.Inf))
-        throw e
-      }
-      Await.result(tombF, Duration.Inf)
-      val newTombRows = dirRowCount(tombDir)
+      val segRows =
+        try write(stamp(newRows, v), segDir)
+        catch { case NonFatal(e) =>
+          scala.util.Try(Await.result(tombF, Duration.Inf))
+          throw e
+        }
+      val newTombRows = Await.result(tombF, Duration.Inf).getOrElse(dirRowCount(tombDir))
       val totalTomb = prevTombRows + newTombRows
       if (totalTomb > math.max(4096L, prevRows / 4)) {
         // readVersion(parent) already applied older tombstones (and dropped
@@ -294,12 +350,12 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         rmTree(Paths.get(tombDir))
         commitManifest(metrics, appendTo = Seq(base),
           logTo = appendedOf(head), prevRows = segmentRows(base),
-          expectVersion = v, beforePublish = beforePublish)
+          expectVersion = v, beforePublish = beforePublish, segRows = segRows)
       } else {
         commitManifest(metrics, appendTo = segmentsOf(head),
           logTo = appendedOf(head), prevRows = prevRows - newTombRows,
           tombSegs = tombstonesOf(head) :+ v.toString, tombRows = totalTomb,
-          expectVersion = v, beforePublish = beforePublish)
+          expectVersion = v, beforePublish = beforePublish, segRows = segRows)
       }
     } catch { case NonFatal(e) if currentVersion < v =>
       // no manifest references snapshot v yet: drop its files (partial
@@ -319,27 +375,28 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * frame whose optimized plan is a [[LocalRelation]] (rows built on the
     * driver, with any projection over them, the `__seq` stamp included,
     * folded in by the optimizer) is written from the driver with no Spark
-    * job, as one `part-<uuid>` file through the writer Spark's own tasks use
-    * (`ParquetFileFormat.prepareWrite` + `OutputWriter`), so the file has
-    * the same codec, footer and row-metadata key. Any other frame is a
-    * Spark write.
+    * job, as one `part-<uuid>` file through a [[SegmentWriter]], and its
+    * row count is returned, so no footer is reopened to count them. Any
+    * other frame is a Spark write (None).
     */
-  private def write(df: DataFrame, dir: String): Unit = df.queryExecution.optimizedPlan match {
+  private def write(df: DataFrame, dir: String): Option[Long] = df.queryExecution.optimizedPlan match {
     case local: LocalRelation =>
-      import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-      import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-      val schema = local.schema
-      val job = Job.getInstance(spark.sessionState.newHadoopConf())
-      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
       rmTree(Paths.get(dir))
       Files.createDirectories(Paths.get(dir))
-      val out = factory.newInstance(
-        s"$dir/part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}",
-        schema, ctx)
+      val out = segmentWriter(dir, local.schema, seq = None)
+        .open(java.util.UUID.randomUUID().toString)
       try local.data.foreach(out.write) finally out.close()
-    case _ => df.write.mode("overwrite").parquet(dir)
+      Some(out.rows)
+    case _ =>
+      df.write.mode("overwrite").parquet(dir)
+      None
+  }
+
+  private def segmentWriter(dir: String, schema: StructType, seq: Option[Long]): SegmentWriter = {
+    val full = if (seq.isEmpty) schema else schema.add(SeqCol, LongType, nullable = false)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, full)
+    new SegmentWriter(dir, full, seq, factory, new SerializableConfiguration(job.getConfiguration))
   }
 
   private def dirRowCount(dir: String): Long =
@@ -349,38 +406,31 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     listDir(Paths.get(dir)).map(_.getFileName.toString)
       .filter(_.endsWith(".parquet")).sorted
 
-  private def commit(df: DataFrame, metrics: Map[String, String],
-      appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
-      tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L): (Long, Long) = {
-    val v = currentVersion + 1
-    write(stamp(df, v), segPath(v.toString))
-    commitManifest(metrics, appendTo, logTo, prevRows, tombSegs, tombRows,
-      expectVersion = v)
-  }
-
   /** manifest-only commit step: record the written segment `<v>` as
     * snapshot v's new segment, after `appendTo` in the live list and after
     * `logTo` in the append log, then run `beforePublish` and publish v by
-    * the manifest rename. Row count comes straight from the parquet
-    * footers on the driver — no Spark job (a count() per commit was ~3
+    * the manifest rename. The segment's row count is `segRows` when its
+    * writer counted them, else it comes straight from the parquet footers
+    * on the driver — no Spark job either way (a count() per commit was ~3
     * driver round-trips per crawl round of pure scheduling overhead).
     */
   private def commitManifest(metrics: Map[String, String],
       appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
-      expectVersion: Long = -1L, beforePublish: () => Unit = () => ()): (Long, Long) = {
+      expectVersion: Long = -1L, beforePublish: () => Unit = () => (),
+      segRows: Option[Long] = None): (Long, Long) = {
     val v = currentVersion + 1
     require(expectVersion < 0 || expectVersion == v,
       s"concurrent commit detected: expected $expectVersion, at $v")
     val seg = v.toString
     val segDir = segPath(seg)
     val files = parquetFiles(segDir)
-    val segRows = files.map(f => footerRowCount(s"$segDir/$f")).sum
-    val rows = prevRows + segRows
+    val segmentRows = segRows.getOrElse(files.map(f => footerRowCount(s"$segDir/$f")).sum)
+    val rows = prevRows + segmentRows
     val metricsJson = (metrics ++ Map(
       "parentVersion" -> currentVersion.toString,
       "rows" -> rows.toString,
-      "segmentRows" -> segRows.toString,
+      "segmentRows" -> segmentRows.toString,
       "tombRows" -> tombRows.toString))
       .toSeq.sortBy(_._1)
       .map { case (k, q) => s""""$k": "${q.replace("\"", "'")}"""" }
@@ -515,4 +565,44 @@ object SnapshotTable {
 
   def apply(root: String)(implicit spark: SparkSession): SnapshotTable =
     new SnapshotTable(root, spark)
+}
+
+/** Writes the parquet files of one segment dir through the writer Spark's
+  * own write tasks use (`ParquetFileFormat.prepareWrite` + `OutputWriter`),
+  * so a file has the same codec, footer and row-metadata key as a Spark
+  * write's, without Spark's job commit (no `_temporary` dir, no
+  * `_SUCCESS`). Built on the driver by [[SnapshotTable]]; serializable, so
+  * a Spark task can write with it as well as the driver. `seq` stamps every
+  * row with a sequenced table's `__seq`.
+  */
+final class SegmentWriter private[frontier] (val dir: String, schema: StructType,
+    seq: Option[Long], factory: OutputWriterFactory, conf: SerializableConfiguration)
+    extends Serializable {
+
+  /** open `part-00000-<tag>-c000<ext>` in [[dir]]. */
+  def open(tag: String): SegmentFile = {
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    val ctx = new TaskAttemptContextImpl(conf.value,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val name = s"part-00000-$tag-c000${factory.getFileExtension(ctx)}"
+    new SegmentFile(name, factory.newInstance(s"$dir/$name", schema, ctx), seq)
+  }
+}
+
+/** One open file of a [[SegmentWriter]]: `name` in its dir, and the rows
+  * written so far.
+  */
+final class SegmentFile private[frontier] (val name: String, out: OutputWriter,
+    seq: Option[Long]) {
+  private val stamped = seq.map(v => (new JoinedRow, InternalRow(v)))
+  private var written = 0L
+
+  def rows: Long = written
+
+  def write(row: InternalRow): Unit = {
+    out.write(stamped.fold(row) { case (j, s) => j(row, s) })
+    written += 1
+  }
+
+  def close(): Unit = out.close()
 }

@@ -105,9 +105,11 @@ class CrawlParitySpec extends AnyFunSuite {
 
   /** the claim's `count()` action (the cached claim path). */
   val ClaimCount = "count at CrawlLoop.scala"
-  /** any `collect()` the round loop runs: a small round's candidates, and
-    * once a session the seed candidates (in `init`), the robots rules and
-    * the Crawl-delay budgets; the above-gate claim runs none.
+  /** any `collect()` the round loop runs: a small round's action (a
+    * Default round's fused docs write and candidates, another mode's
+    * candidates), and once a session the seed candidates (in `init`), the
+    * robots rules and the Crawl-delay budgets; the above-gate claim runs
+    * none.
     */
   val LoopCollect = "collect at CrawlLoop.scala"
 
@@ -142,7 +144,7 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(s.seenTable.read().count() == ft.rowsOf(v) + processed)
   }
 
-  test("a steady-state small round: one collect and the docs write, no schema-inference, claim or frontier-write job, at most 4 Spark jobs") {
+  test("a steady-state small Default round: one SQL action, at most 2 Spark jobs, no Spark write, one docs file in the new segment") {
     val session = new CrawlSession(spark, baseConfig("round-jobs"), corpusDf,
       robotsDf.toDF(), TestSpark.tmpDir("crawl-round-jobs"))
     session.init()
@@ -156,20 +158,23 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(inference.isEmpty,
       s"jobs outside any SQL execution: ${inference.flatMap(_.stageInfos.map(_.name))}")
     // a small frontier is claimed from the driver mirror (no count, no
-    // cache), and the frontier's files are written from the driver: the
-    // actions are the collect of the round's candidates and the docs write
+    // cache), and the frontier's files are written from the driver: the one
+    // action writes the docs and returns the round's candidates
     assert(t.jobsOf(ClaimCount).isEmpty, "the small claim ran a count")
-    val writes = sparkWrites(t)
-    assert(writes.size == 1 && writes.forall(_.contains(s"${session.docsTable.root}/")),
-      s"Spark writes: $writes")
-    assert(t.queries.size == 2, s"${t.queries.size} SQL actions")
-    assert(t.descriptions.values.count(_.startsWith(LoopCollect)) == 1,
+    assert(sparkWrites(t).isEmpty, s"Spark writes: ${sparkWrites(t)}")
+    assert(t.queries.size == 1, s"${t.queries.size} SQL actions")
+    assert(t.descriptions.values.toSet.count(_.startsWith(LoopCollect)) == 1,
       s"${t.descriptions.values.toSet}")
-    // measured: 3 jobs for this round on this corpus in 3 runs, the collect's
-    // one and the docs write's two (9-10 jobs in 3 actions when the frontier
-    // and tombstone writes ran on Spark)
-    assert(t.jobs.size <= 4,
+    // measured: 1 job of 2 stages for this round on this corpus, as the
+    // action runs without AQE (3 jobs in 2 actions when the docs were a
+    // Spark write beside the candidates' collect)
+    assert(t.jobs.size <= 2,
       s"${t.jobs.size} jobs: ${t.jobs.map(t.actionOf).mkString(", ")}")
+    val dt = session.docsTable
+    val files = new java.io.File(s"${dt.root}/segments/${dt.currentVersion}").list().toSeq
+    assert(files.count(_.endsWith(".parquet")) == 1 && !files.contains("_SUCCESS"),
+      s"docs segment: $files")
+    assert(dt.segmentRows(dt.currentVersion.toString) == t.result.get.docsWritten)
     session.cleanup()
   }
 
@@ -181,13 +186,12 @@ class CrawlParitySpec extends AnyFunSuite {
       (1 to 5).map(_ => session.runRound())
     }
     assert(t.result.forall(_.exists(_.claimed > 0)), "five rounds that claim pages")
-    // the loop's collects by call site: the round's candidates once a
-    // round; the seed candidates, the robots rules, the Crawl-delay budgets
-    // and the driver mirror's two loads (live frontier, seen keys) once a
-    // session
+    // the loop's collects by call site: the round's action once a round;
+    // the seed candidates, the robots rules and the Crawl-delay budgets once
+    // a session. `init` seeds the driver mirror, so no round loads it.
     val loop = t.descriptions.values.filter(_.startsWith(LoopCollect))
       .groupBy(identity).values.map(_.size).toSeq.sorted
-    assert(loop == Seq(1, 1, 1, 1, 1, 5), s"collects by call site: $loop")
+    assert(loop == Seq(1, 1, 1, 5), s"collects by call site: $loop")
     session.cleanup()
   }
 
@@ -214,6 +218,10 @@ class CrawlParitySpec extends AnyFunSuite {
       .withColumn("parentUrl", lit(null).cast("string"))).repartition(1))
     val (got, exp) = (ft.readVersion(v), want.read())
     assert(got.schema == exp.schema, s"${got.schema} != ${exp.schema}")
+    // the seed rows are the driver mirror of the seed version, under the
+    // schema a read of it gives
+    assert(s.mirrorVersion.contains(v) && s.mirrorSchema.contains(got.schema),
+      s"${s.mirrorSchema} != ${got.schema}")
     val rows = got.collect().toSeq
     assert(rows.size == seeds.size && rows.toSet == exp.collect().toSet)
     want.drop()
@@ -469,17 +477,18 @@ class CrawlParitySpec extends AnyFunSuite {
     val load = TestSpark.traced(s2.runRound())
     val r3 = load.result.get
     assert(frontierScans(load) == 2, s"${frontierScans(load)} frontier scans")
-    // the round's candidates, the robots rules and Crawl-delay budgets (once
-    // a session) and the two loads: five collects, each once
+    // the round's action, the robots rules and Crawl-delay budgets (once a
+    // session) and the two loads: five collects, each once, and no other
+    // SQL action
     assert(loopCollects(load).size == 5 && loopCollects(load).distinct.size == 5,
       s"${loopCollects(load)}")
-    assert(load.queries.size == 6, s"${load.queries.size} SQL actions")
+    assert(load.queries.size == 5, s"${load.queries.size} SQL actions")
     assert(s2.mirrorVersion.contains(ft.currentVersion))
     val steady = TestSpark.traced(s2.runRound())
     val r4 = steady.result.get
     assert(frontierScans(steady) == 0 && loopCollects(steady).size == 1)
-    assert(steady.queries.size == 2, s"${steady.queries.size} SQL actions")
-    assert(steady.jobs.size <= 4,
+    assert(steady.queries.size == 1, s"${steady.queries.size} SQL actions")
+    assert(steady.jobs.size <= 2,
       s"${steady.jobs.size} jobs: ${steady.jobs.map(steady.actionOf).mkString(", ")}")
     val rest = Iterator.continually(s2.runRound()).takeWhile(_.isDefined).map(_.get).toList
     val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
@@ -629,6 +638,144 @@ class CrawlParitySpec extends AnyFunSuite {
     s.cleanup()
   }
 
+  /** the urls whose docs a crawl under `cfg` stores: claimed 200 pages
+    * that are neither redirects nor sitemaps and match a rule.
+    */
+  def oracleDocs(cfg: CrawlConfig, oracle: Oracle.Result): Set[String] =
+    oracle.crawlOrder.map(_._1).filter(storesDoc(cfg, _)).toSet
+
+  def storesDoc(cfg: CrawlConfig, url: String): Boolean =
+    pagesMap.get(url).exists(p => p.httpStatus == 200 && !p.spans.exists(_.kind == "redirect")) &&
+      !url.matches(cfg.sitemapPattern) && cfg.rules.exists(r => url.matches(r.urlPattern))
+
+  /** the entries of snapshot v in a table root's `segments`, `tombstones`
+    * and `snapshots` dirs.
+    */
+  def staged(root: String, v: Long): Seq[String] =
+    Seq("segments", "tombstones", "snapshots").flatMap { kind =>
+      Option(new java.io.File(s"$root/$kind").list()).toSeq.flatten
+        .filter(n => n == v.toString || n == s"$v-base").map(n => s"$kind/$n")
+    }
+
+  test("a small Default round whose fused action or frontier write fails stages nothing in either table, releases its frames and keeps the mirror; the same session then matches the oracle") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.{col, udf}
+    val cfg = baseConfig("fused-fail")
+    val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
+    // the corpus's lastModified throws for one page while FusedFault is set
+    val failing = udf { (id: String, t: Long) =>
+      if (FusedFault.failOn.contains(id)) throw new IllegalStateException(s"injected: $id")
+      t
+    }
+    val corpus = corpusDf.withColumn("lastModified", failing(col("doc_id"), col("lastModified")))
+    val dir = TestSpark.tmpDir("crawl-fused-fail")
+    val s = new CrawlSession(spark, cfg, corpus, robotsDf.toDF(), dir)
+    val (ft, dt) = (s.frontierTable, s.docsTable)
+    s.init()
+    val done = scala.collection.mutable.ListBuffer(s.runRound().get, s.runRound().get)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the first page after these rounds that stores a doc: the round that
+    // claims it throws in its fused action
+    val target = oracle.crawlOrder.drop(done.map(_.claimOrder.size).sum).map(_._1)
+      .find(storesDoc(cfg, _)).get
+    def assertUnmoved(head: Long, docsHead: Long): Unit = {
+      assert(ft.currentVersion == head && dt.currentVersion == docsHead)
+      assert(staged(ft.root, head + 1).isEmpty, s"frontier: ${staged(ft.root, head + 1)}")
+      assert(staged(dt.root, docsHead + 1).isEmpty, s"docs: ${staged(dt.root, docsHead + 1)}")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"round left cached RDDs $left")
+      assert(s.mirrorVersion.contains(head), "the failed round dropped the mirror")
+    }
+    FusedFault.failOn = Some(target)
+    try {
+      var failed = false
+      while (!failed) {
+        val (head, docsHead) = (ft.currentVersion, dt.currentVersion)
+        scala.util.Try(s.runRound()) match {
+          case scala.util.Success(r) =>
+            assert(r.exists(!_.claimOrder.exists(_._1 == target)), s"$target never failed")
+            done += r.get
+          case scala.util.Failure(e) =>
+            failed = true
+            assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+              .exists(x => String.valueOf(x.getMessage).contains(s"injected: $target")), e)
+            assertUnmoved(head, docsHead)
+        }
+      }
+    } finally FusedFault.failOn = None
+    // the docs file is written, then the frontier's segment write fails: the
+    // staged docs segment goes with the frontier's files
+    val (head, docsHead) = (ft.currentVersion, dt.currentVersion)
+    val segs = Paths.get(ft.root, "segments")
+    val aside = Paths.get(dir, "frontier-segments")
+    Files.move(segs, aside)
+    Files.writeString(segs, "not a dir")
+    intercept[Exception](s.runRound())
+    Files.delete(segs)
+    Files.move(aside, segs)
+    assertUnmoved(head, docsHead)
+    done ++= Iterator.continually(s.runRound()).takeWhile(_.isDefined).map(_.get)
+    val order = done.toList.flatMap(_.claimOrder)
+    assert(order == oracle.crawlOrder,
+      s"order diverged at ${order.zip(oracle.crawlOrder).indexWhere(p => p._1 != p._2)}")
+    assert(s.seenTable.read().select("url").collect().map(_.getString(0)).toSet == oracle.seen)
+    val docs = dt.read().select("url").collect().map(_.getString(0))
+    assert(docs.length == docs.toSet.size && docs.toSet == oracleDocs(cfg, oracle))
+    s.cleanup()
+  }
+
+  test("a fused docs segment commits over a lost attempt's file, and reads like the same docs written by Spark") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.lit
+    import graft.frontier.SnapshotTable
+    val cfg = baseConfig("fused-stray")
+    val s = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), TestSpark.tmpDir("crawl-fused-stray"))
+    val dt = s.docsTable
+    s.init()
+    val first = Seq(s.runRound().get, s.runRound().get)
+    // a lost attempt's file in the next docs segment: a copy of the fullest
+    // docs file so far, whose rows would be stored twice if it were kept
+    def parquetIn(v: Long) = new java.io.File(s"${dt.root}/segments/$v").list()
+      .filter(_.endsWith(".parquet")).toSeq
+    val fullest = (0L to dt.currentVersion).maxBy(v => dt.segmentRows(v.toString))
+    assert(dt.segmentRows(fullest.toString) > 0)
+    val next = dt.currentVersion + 1
+    val stray = s"part-00000-$next-999999-c000.snappy.parquet"
+    Files.createDirectories(Paths.get(dt.root, "segments", next.toString))
+    Files.copy(Paths.get(dt.root, "segments", fullest.toString, parquetIn(fullest).head),
+      Paths.get(dt.root, "segments", next.toString, stray))
+    val rest = Iterator.continually(s.runRound()).takeWhile(_.isDefined).map(_.get).toList
+    assert(parquetIn(next).size == 1 && !parquetIn(next).contains(stray), parquetIn(next))
+    val oracle = Oracle.crawl(pagesMap, robotsMap, cfg)
+    assert((first ++ rest).flatMap(_.claimOrder) == oracle.crawlOrder)
+    val docs = dt.read().select("url").collect().map(_.getString(0))
+    assert(docs.length == docs.toSet.size && docs.toSet == oracleDocs(cfg, oracle))
+
+    // the session's docs, and its seeds as candidates, through the fused
+    // action into one sequenced table and through a Spark commitAppend into
+    // another: the same schema and rows; with no rows at all, the driver
+    // writes the segment's file, with the same schema
+    val all = dt.read()
+    val seeds = s.frontierTable.readVersion(0)
+    Seq(all, all.filter(lit(false))).foreach { docsIn =>
+      val fused = new SnapshotTable(TestSpark.tmpDir("fused-docs"), spark, sequenced = true)
+      val bySpark = new SnapshotTable(TestSpark.tmpDir("spark-docs"), spark, sequenced = true)
+      val (v, writer) = fused.stagedWriter(docsIn.schema)
+      val t = TestSpark.traced(CrawlSession.fuseDocsAndCandidates(docsIn, seeds, writer, v.toString))
+      val (file, n, cands) = t.result
+      assert(sparkWrites(t).isEmpty && t.queries.size == 1, s"${t.queries.size} SQL actions")
+      fused.commitWritten(v, file, n)
+      bySpark.commitAppend(docsIn.repartition(1))
+      val (got, exp) = (fused.readVersion(v), bySpark.readVersion(0))
+      assert(got.schema == exp.schema, s"${got.schema} != ${exp.schema}")
+      val rows = got.collect().toSeq
+      assert(rows.size == n && n == exp.count() && rows.toSet == exp.collect().toSet)
+      assert(cands.toSet == seeds.collect().toSet)
+      fused.drop(); bySpark.drop()
+    }
+    s.cleanup()
+  }
+
   test("a session whose seen set crosses the small-round gate keeps oracle parity; its driver- and Spark-written segments read alike") {
     // 8,150 filler seeds on 100 hosts (pages the corpus lacks) start the
     // seen set just below the gate; the real pages' children push it past,
@@ -679,7 +826,7 @@ class CrawlParitySpec extends AnyFunSuite {
     s.cleanup()
   }
 
-  test("a small round with a large claim and large docs writes the docs with Spark, not through the driver") {
+  test("a small round with a large claim and large docs writes the docs in its task, not through the driver") {
     // every page gains a 64 KB paragraph, which the body rule extracts: a
     // claim of a hundred pages holds megabytes of docs. The paragraph is
     // hashes of the page's url — a collect compresses its rows, and a
@@ -700,8 +847,8 @@ class CrawlParitySpec extends AnyFunSuite {
     val r = t.result.get
     assert(s.mirrorVersion.isDefined, "the round was not a small round")
     assert(r.claimed >= 50 && r.docsWritten >= 20, r)
-    // task results are what crosses to the driver: the candidates' urls and
-    // the write's commit messages, not the docs
+    // task results are what crosses to the driver: the candidates' rows and
+    // the docs file's name and row count, not the docs
     assert(t.resultBytes < r.docsWritten * paragraph / 10,
       s"${t.resultBytes} B of task results for ${r.docsWritten} docs")
     val rest = Iterator.continually(s.runRound()).takeWhile(_.isDefined).map(_.get).toList
@@ -1227,4 +1374,11 @@ class CrawlSearchSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
     assert(viaMerged == direct)
   }
+}
+
+/** the fault the fused-round test injects: the corpus page whose read
+  * throws, while set.
+  */
+object FusedFault {
+  @volatile var failOn: Option[String] = None
 }

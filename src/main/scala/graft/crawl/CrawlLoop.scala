@@ -5,8 +5,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PhysicalRows
-import org.apache.spark.sql.types.{DataType, MapType, StringType, StructType}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.graftbridge.{ClaimedPages, PhysicalRows}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType,
+  TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Extractor, RuleCompiler}
@@ -24,7 +26,8 @@ import graft.model._
   * A round above the small-round gate ([[CrawlSession.SmallWriteRows]]) is
   * ONE declarative DataFrame DAG. A round below it claims from the
   * session's driver mirror of the frontier; in Default mode its Spark work
-  * is one action that writes the docs and returns the child candidates.
+  * is one action, of a plan planned once a session, that writes the docs
+  * and returns the child candidates.
   *
   * All state crosses rounds through [[SnapshotTable]] commits, so a crawl
   * resumes from its latest manifest (Z6) and every round's plan starts from
@@ -160,31 +163,163 @@ final class CrawlSession(
     inc && !exc
   }
 
-  /** raw URL strings -> canonical frontier candidates, one row per child
-    * (`url`, `urlHash`, `host`, `depth`, `parentUrl`): canonicalized, then
-    * filtered by the trap guard, include/exclude, `maxDepth` and robots.
-    * Few DataFrame steps, as each one analyzes the whole plan again: a
-    * small round builds this plan every round.
+  /** P9 (no blank url), the spider-trap guard, include/exclude and
+    * `maxDepth`, over a canonical candidate's `url` and `depth`.
     */
-  private def candidateRows(raw: DataFrame, depthCol: Column,
-      parentCol: Column, applyIncludeExclude: Boolean): DataFrame = {
+  private def candidateKeep(applyIncludeExclude: Boolean): Column = {
     val url = col("url")
-    val keep = Seq(
+    Seq(
       Some(trim(url) =!= ""), // P9
       // spider-trap guard: a map-side sorted-segment compare, zero plan cost
       Option.when(config.trapGuard)(
         !graft.frontier.TrapDetector.pathRepeats(url, config.trapMaxRepeat)),
       Option.when(applyIncludeExclude)(includeExclude(url)),
       Option.when(config.maxDepth >= 0)(col("depth") <= config.maxDepth)).flatten
-    val canon = raw
+      .reduce(_ && _)
+  }
+
+  /** canonical candidates (`url`, `depth`, `parentUrl`) keyed by `urlHash`
+    * and `host` and checked against robots, with `carry` in front. A row
+    * whose `url` is null passes robots.
+    */
+  private def keyedCandidates(canon: DataFrame, carry: Column*): DataFrame = {
+    val url = col("url")
+    applyRobots(canon.select(carry ++ Seq(url, UrlOps.urlHashCol(url).as("urlHash"),
+      UrlOps.hostCol(url).as("host"), col("depth"), col("parentUrl")): _*))
+  }
+
+  /** raw URL strings -> canonical frontier candidates, one row per child
+    * (`url`, `urlHash`, `host`, `depth`, `parentUrl`): canonicalized, then
+    * filtered by [[candidateKeep]] and robots.
+    */
+  private def candidateRows(raw: DataFrame, depthCol: Column,
+      parentCol: Column, applyIncludeExclude: Boolean): DataFrame =
+    keyedCandidates(raw
       .select(
         UrlOps.canonicalizeCol(col("child")).as("url"),
         depthCol.cast("int").as("depth"),
         parentCol.as("parentUrl"))
-      .filter(keep.reduce(_ && _))
-    applyRobots(canon.select(url, UrlOps.urlHashCol(url).as("urlHash"),
-      UrlOps.hostCol(url).as("host"), col("depth"), col("parentUrl")))
+      .filter(candidateKeep(applyIncludeExclude)))
+
+  /** the corpus columns a fetch reads, keyed on `doc_id` (first): the
+    * response status — from the corpus when it carries one
+    * (PageDoc.httpStatus); a status-less corpus is all-200 — the last
+    * modified time and the spans. Non-200 pages flow through the round but
+    * the P5 gate stores no document and emits no children (304 = the
+    * incremental-skip route, crawler/rule+.xml:39-40; 4xx/5xx = fetch
+    * failure).
+    */
+  private lazy val corpusPages: DataFrame = corpus.select(col("doc_id"),
+    (if (corpus.columns.contains("httpStatus")) coalesce(col("httpStatus"), lit(200))
+     else lit(200)).as("httpStatusCode"),
+    col("lastModified"), col("spans"))
+
+  /** the fetch's response rows over fetched pages: [[corpusPages]]'
+    * columns with the claim row's (`url`, `urlHash`, `host`, `depth`,
+    * `parentUrl`), and `extra`.
+    */
+  private def fetchedOf(pages: DataFrame, extra: Column*): DataFrame = pages.select(
+    Seq(col("url"), col("parentUrl"), col("depth"), col("urlHash"), col("host").as("claimHost"),
+      lit("GET").as("method"),
+      lit("text/html").as("mimeType"),
+      lit("UTF-8").as("charSet"),
+      col("httpStatusCode"),
+      graft.functions.SpanFieldColumns.spanTextLength(col("spans")).as("contentLength"),
+      pmod(col("urlHash"), lit(500)).as("executionTime"),
+      col("lastModified"), col("spans")) ++ extra: _*)
+
+  // HTTP redirect classification (reference `auto_redirect`,
+  // RiverWeb.java:302-303): a page whose spans carry a `redirect` span is
+  // a 3xx response — Location = the span's media_ref. Redirects are
+  // HTTP-layer, so they bypass rule matching AND the P5 status gate:
+  // no document is stored, no content children are extracted, and (with
+  // autoRedirect on, the reference's default) the target is enqueued at
+  // the SOURCE's depth — a redirect hop costs no depth, exactly like the
+  // reference's transparent HttpClient follow. Both source and target
+  // end up seen (the source was claimed; the target goes through the
+  // normal candidate anti-join). autoRedirect=false drops the target:
+  // the 3xx response simply fails the 200 gate, like the reference with
+  // redirect handling off. Targets pass robots + include/exclude like
+  // any enqueued URL (the declarative analog of never fetching them).
+  private val redirectRefs = Extractor.spanRefs(col("spans"), "redirect")
+  private val isRedirect = size(redirectRefs) > 0
+  private val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
+
+  /** a fetched page's child urls (X5 + S6 sitemaps + redirect remap), from
+    * one branch: a redirect's target (none with autoRedirect off), a 200
+    * sitemap's locs, or a 200 rule-matched page's links `ruleChildren` (the
+    * docs' P5 gate); any other page has none. Needs `ruleId`.
+    */
+  private def pageChildren(ruleChildren: Column): Column = {
+    val ok = col("httpStatusCode") === 200
+    when(isRedirect,
+        if (config.http.autoRedirect.getOrElse(true)) redirectRefs
+        else lit(null).cast("array<string>"))
+      .when(isSitemap && ok, Extractor.spanRefs(col("spans"), "sitemap-loc"))
+      .when(col("ruleId").isNotNull && ok, ruleChildren)
   }
+
+  /** a child's depth: a redirect target keeps the source's, every other
+    * child is one level deeper.
+    */
+  private val childDepth = (col("depth") + when(isRedirect, 0).otherwise(1)).cast("int")
+
+  /** The fused small Default round's plan over the claimed-pages leaf
+    * `pages`: each page's documents and filtered child candidates as tagged
+    * rows — `_0`, a document (the extraction with `@timestamp`: the P4/P5
+    * gates, and none for a sitemap or a redirect), or `_1`, a candidate in
+    * the mirror's columns `claim`; the other column null. One explode over
+    * the page's documents followed by its children, then the candidate
+    * filters, which document rows pass: one pass over each page, so the
+    * round's action scans each corpus partition once, with the extraction
+    * on the map side. Built and planned once a session.
+    */
+  private def fusedRound(pages: DataFrame, claim: StructType): DataFrame = {
+    val (flat, docs) = Extractor.documents(fetchedOf(pages, col("@timestamp")), config,
+      Seq(col("@timestamp")))
+    val docType = flat.select(docs).schema.head.dataType.asInstanceOf[ArrayType].elementType
+    def tagged(doc: Column, child: Column) = struct(doc.as("doc"), child.as("child"))
+    val (noDoc, noChild) = (lit(null).cast(docType), lit(null).cast(StringType))
+    val canon = flat
+      .select(
+        explode(concat(
+          transform(coalesce(when(!isSitemap && !isRedirect, docs),
+            array().cast(ArrayType(docType))), tagged(_, noChild)),
+          transform(coalesce(pageChildren(col("children")), array().cast("array<string>")),
+            tagged(noDoc, _)))).as("t"),
+        childDepth.as("depth"), col("url").as("parentUrl"))
+      .select(col("t.doc").as("doc"), UrlOps.canonicalizeCol(col("t.child")).as("url"),
+        col("depth"), col("parentUrl"))
+      .filter(col("doc").isNotNull || candidateKeep(applyIncludeExclude = true))
+    keyedCandidates(canon, col("doc")).select(col("doc").as("_0"),
+      when(col("doc").isNull, struct(claim.fieldNames.map(col): _*)).as("_1"))
+  }
+
+  /** The small round's session-scoped plans, for the mirror's `schema`:
+    * the claimed-pages leaf, whose claim rows are the mirror's with the
+    * round's `@timestamp`, and the fused round's plan over it, planned by
+    * the session's first fused round.
+    */
+  private final class SmallRoundPlans(val schema: StructType) {
+    val pages = new ClaimedPages(corpusPages,
+      schema.add("@timestamp", TimestampType, nullable = false))
+    lazy val fused: PhysicalRows = {
+      fusedPlans += 1
+      PhysicalRows(fusedRound(pages.template, schema))
+    }
+  }
+  private var smallPlans: Option[SmallRoundPlans] = None
+  private var fusedPlans = 0
+
+  private def smallPlansFor(schema: StructType): SmallRoundPlans =
+    smallPlans.filter(_.schema == schema).getOrElse {
+      val p = new SmallRoundPlans(schema)
+      smallPlans = Some(p)
+      p
+    }
+
+  /** how many times this session has planned the fused round. */
+  private[crawl] def fusedRoundPlans: Int = fusedPlans
 
   /** Seed the frontier, and so the seen set (round 0). Idempotent: no-op
     * on resume (a published frontier). The seeds are a driver list, so
@@ -215,11 +350,17 @@ final class CrawlSession(
     * A round whose seen set (the live frontier plus every page processed,
     * read from the manifest, so picking the path runs no job) is at most
     * [[CrawlSession.SmallWriteRows]] rows claims from the session's driver
-    * mirror of the frontier. In Default mode it then runs ONE Spark
-    * action ([[CrawlSession.fuseDocsAndCandidates]]): a single task writes
-    * the round's docs file into the docs table's staged segment and returns
-    * the filtered child candidates, so no page content passes through the
-    * driver. The in-batch dedup and the seen check run on the driver, the
+    * mirror of the frontier. Its pages are an input, not literals: the
+    * driver builds the rows of the session's claimed-pages leaf
+    * ([[ClaimedPages]]) from the claim, with no job. In Default mode the
+    * round then runs ONE Spark action ([[CrawlSession.fuseDocsAndCandidates]])
+    * of a plan built and planned once a session, by its first fused round
+    * ([[fusedRound]]), into which each round binds its pages: one scan of
+    * each corpus partition feeds a single task that writes the round's docs
+    * file into the docs table's staged segment and returns the filtered
+    * child candidates, so no page content passes through the driver and no
+    * round analyzes, optimizes or plans a query of its own. The in-batch
+    * dedup and the seen check run on the driver, the
     * round's tombstones and new entries are written from the driver, and
     * the docs segment is published at the frontier commit's barrier.
     * Overwrite and Incremental small rounds collect the candidates and run
@@ -264,13 +405,13 @@ final class CrawlSession(
       // --- claim (W1/W2/A2; Z1 robots Crawl-delay as a per-host quota) --------
       // Below the gate the live frontier is the driver mirror's (collected
       // from version v when the mirror is not at v) and
-      // Politeness.claimRows claims from it — no Spark job. Its rows ride the
-      // fetch as literals, and its tombstones are a LocalRelation, written
-      // from the driver. The gate is on the seen set, which holds the
-      // frontier: the mirror keeps both. Above the gate the claim is the
-      // per-host window, cached and counted once: a large round is bound by
-      // its data, not by this action, and a driver claim would move the
-      // whole frontier through the driver.
+      // Politeness.claimRows claims from it — no Spark job. Its rows select
+      // the round's pages (ClaimedPages), and its tombstones are a
+      // LocalRelation, written from the driver. The gate is on the seen
+      // set, which holds the frontier: the mirror keeps both. Above the
+      // gate the claim is the per-host window, cached and counted once: a
+      // large round is bound by its data, not by this action, and a driver
+      // claim would move the whole frontier through the driver.
       val local =
         if (seenCount <= SmallWriteRows) Some(mirrorAt(v))
         else { mirror = None; None }
@@ -309,61 +450,20 @@ final class CrawlSession(
       def writeShape(df: DataFrame): DataFrame = if (smallRound) df.repartition(1) else df
 
       // --- fetch = claim ⋈ corpus (S5/J4) ------------------------------------
-      // The claim batch is usually orders of magnitude smaller than the corpus
-      // (≤ hosts·budget rows) and broadcasts as the build side; the hint is
-      // size-GATED on the known claimedCount — an unconditional broadcast OOMs
-      // once hosts×budget reaches 10^7+ rows (see fetchJoin) — falling through
-      // to an AQE-planned shuffle join above the cap.
-      // Response status comes from the corpus when it carries one (PageDoc
-      // .httpStatus); a status-less corpus is all-200. Non-200 pages flow
-      // through the round but the P5 gate stores no document and emits no
-      // children (304 = the incremental-skip route, crawler/rule+.xml:39-40;
-      // 4xx/5xx = fetch failure).
-      val statusCol =
-        if (corpus.columns.contains("httpStatus"))
-          coalesce(corpus("httpStatus"), lit(200))
-        else lit(200)
-      // a driver claim rides the plan as literals (fetchLocal): no broadcast
-      // exchange, so the small round's plan has no stage to materialize
-      val (joined, claimCol) = claimRows match {
-        case Some(rows) => (fetchLocal(corpus, rows), (c: String) => col(s"$LocalClaim.$c"))
-        case None => (fetchJoin(corpus, claimed, claimedCount), (c: String) => claimed(c))
-      }
-      val fetchedRows = joined
-        .select(
-          claimCol("url").as("url"), claimCol("parentUrl").as("parentUrl"),
-          claimCol("depth").as("depth"), claimCol("urlHash").as("urlHash"),
-          claimCol("host").as("claimHost"),
-          lit("GET").as("method"),
-          lit("text/html").as("mimeType"),
-          lit("UTF-8").as("charSet"),
-          statusCol.as("httpStatusCode"),
-          graft.functions.SpanFieldColumns.spanTextLength(corpus("spans"))
-            .as("contentLength"),
-          pmod(claimCol("urlHash"), lit(500)).as("executionTime"),
-          corpus("lastModified").as("lastModified"),
-          corpus("spans").as("spans"))
-      // a large round's docs commit and children DAG both scan it; a small
-      // one reads its few pages twice rather than pay for a cache
-      val fetched = if (local.isDefined) fetchedRows else cache(fetchedRows)
-
-      // HTTP redirect classification (reference `auto_redirect`,
-      // RiverWeb.java:302-303): a page whose spans carry a `redirect` span is
-      // a 3xx response — Location = the span's media_ref. Redirects are
-      // HTTP-layer, so they bypass rule matching AND the P5 status gate:
-      // no document is stored, no content children are extracted, and (with
-      // autoRedirect on, the reference's default) the target is enqueued at
-      // the SOURCE's depth — a redirect hop costs no depth, exactly like the
-      // reference's transparent HttpClient follow. Both source and target
-      // end up seen (the source was claimed; the target goes through the
-      // normal candidate anti-join). autoRedirect=false drops the target:
-      // the 3xx response simply fails the 200 gate, like the reference with
-      // redirect handling off. Targets pass robots + include/exclude like
-      // any enqueued URL (the declarative analog of never fetching them).
-      val redirectRefs = Extractor.spanRefs(col("spans"), "redirect")
-      val isRedirect = size(redirectRefs) > 0
-      val followRedirects = config.http.autoRedirect.getOrElse(true)
-      val isSitemap = col("url").rlike(sitemapRe) && !isRedirect
+      // Below the gate the claim is on the driver and never enters a plan:
+      // the round's pages are the session's ClaimedPages leaf bound to this
+      // round's rows (each corpus row of a claimed url with its claim row
+      // and the round's stamp, built on the driver with no job). Above it
+      // the claim batch is usually orders of magnitude smaller than the
+      // corpus (≤ hosts·budget rows) and broadcasts as the build side; the
+      // hint is size-GATED on the known claimedCount — an unconditional
+      // broadcast OOMs once hosts×budget reaches 10^7+ rows (see fetchJoin)
+      // — falling through to an AQE-planned shuffle join above the cap.
+      val stamp = clock()
+      val plans = local.map(m => smallPlansFor(m.schema))
+      val pages = plans.map(_.pages.rows(
+        claimRows.get.map(r => Row.fromSeq(r.toSeq :+ stamp)), "url"))
+      val fused = pages.isDefined && config.mode == WriteMode.Default
 
       // --- extract + store docs (P3-F9, X4, S8, J2/J3) ------------------------
       // A small Default round writes its docs inside the candidates' action
@@ -377,48 +477,33 @@ final class CrawlSession(
       // before its manifest rename, the round's commit point, so a docs
       // failure aborts the round with the frontier at its parent. Either
       // way page content never passes through the driver.
-      val stamp = clock()
-      def extracted: DataFrame = {
-        val docs = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
-        docs.select(
-          docs.columns.filter(_ != "children").map(col) :+ lit(stamp).as("@timestamp"): _*)
-      }
-      val fused = local.isDefined && config.mode == WriteMode.Default
-      // a fused round's docs frame and staged writer are built on the docs
-      // thread, while this one builds the candidates
-      val fusedDocs = if (!fused) None else Some(scala.concurrent.Future {
-        val docs = extracted
-        (docs, docsTable.stagedWriter(docs.schema))
-      }(CrawlSession.docsCommitEc))
-      if (!fused) docsF = scala.concurrent.Future {
-        // persisted only for Overwrite, whose merge reads the extraction
-        // twice (the replaced-row tombstones' semi-join and the replacement
-        // segment); Default and Incremental read it once, so the cache
-        // would be pure copy overhead there
-        val docs =
-          if (config.mode == WriteMode.Overwrite) cache(extracted) else extracted
-        writeDocs(docs, writeShape)
-      }(CrawlSession.docsCommitEc)
-
+      //
       // --- children (X5 + S6 sitemaps + redirect remap) → J1 anti-join ---------
-      // one pass over `fetched`: a page's children come from one branch —
-      // a redirect's target (none with autoRedirect off), a 200 sitemap's
-      // locs, or a 200 rule-matched page's links (the docs' P5 gate); any
-      // other page emits none. Redirect targets keep the source's depth;
-      // every other child is one level deeper.
-      val none = lit(null).cast("array<string>")
-      val ok = col("httpStatusCode") === 200
-      val children = fetched
-        .withColumn("ruleId", RuleCompiler.ruleId(config.rules, col("url"), col("mimeType")))
-        .select(
-          explode(when(isRedirect, if (followRedirects) redirectRefs else none)
-            .when(isSitemap && ok, Extractor.spanRefs(col("spans"), "sitemap-loc"))
-            .when(col("ruleId").isNotNull && ok, Extractor.childArray(config)))
-            .as("child"),
-          (col("depth") + when(isRedirect, 0).otherwise(1)).as("cdepth"),
-          col("url").as("parentUrl"))
-      val candidates = candidateRows(children, col("cdepth"), col("parentUrl"),
-        applyIncludeExclude = true)
+      // one pass over `fetched`: a page's children come from one branch
+      // (pageChildren).
+      val candidates = if (fused) None else Some {
+        val fetched = (plans, pages) match {
+          case (Some(p), Some(rows)) => fetchedOf(p.pages.frame(rows))
+          // a large round's docs commit and children DAG both scan it; a
+          // small one reads its few pages twice rather than pay for a cache
+          case _ => cache(fetchedOf(fetchJoin(corpusPages, claimed, claimedCount)))
+        }
+        docsF = scala.concurrent.Future {
+          val extracted = Extractor.extract(fetched.filter(!isSitemap && !isRedirect), config)
+          val docs = extracted.select(extracted.columns.filter(_ != "children").map(col) :+
+            lit(stamp).as("@timestamp"): _*)
+          // persisted only for Overwrite, whose merge reads the extraction
+          // twice (the replaced-row tombstones' semi-join and the replacement
+          // segment); Default and Incremental read it once, so the cache
+          // would be pure copy overhead there
+          writeDocs(if (config.mode == WriteMode.Overwrite) cache(docs) else docs, writeShape)
+        }(CrawlSession.docsCommitEc)
+        val children = fetched
+          .withColumn("ruleId", RuleCompiler.ruleId(config.rules, col("url"), col("mimeType")))
+          .select(explode(pageChildren(Extractor.childArray(config))).as("child"),
+            childDepth.as("cdepth"), col("url").as("parentUrl"))
+        candidateRows(children, col("cdepth"), col("parentUrl"), applyIncludeExclude = true)
+      }
 
       // --- frontier transition (S3 snapshot-atomic claim) ---------------------
       // delta commit: append the new entries, tombstone the claimed rows —
@@ -439,24 +524,26 @@ final class CrawlSession(
           // against the mirror here; the new entries and the tombstones are
           // local frames, written from the driver. A fused round's docs
           // segment is published at the barrier, before the frontier's.
-          val cands = candidates.select(m.schema.fieldNames.map(col): _*)
-          val (rows, publishDocs): (Seq[Row], () => Unit) =
-            if (!fused) (cands.collect().toSeq, () => docsDurable())
-            else {
-              val (docs, (dv, writer)) = scala.concurrent.Await.result(fusedDocs.get,
-                scala.concurrent.duration.Duration.Inf)
+          val (rows, publishDocs): (Seq[Row], () => Unit) = candidates match {
+            case Some(c) =>
+              (c.select(m.schema.fieldNames.map(col): _*).collect().toSeq, () => docsDurable())
+            case None =>
+              val p = plans.get
+              val (dv, writer) = docsTable.stagedWriter(
+                p.fused.schema("_0").dataType.asInstanceOf[StructType])
               stagedDocs = Some(dv)
-              val (file, n, rows) = fuseDocsAndCandidates(docs, cands, writer, dv.toString)
+              val (file, n, rows) =
+                fuseDocsAndCandidates(p.fused, p.pages.bind(pages.get), writer, dv.toString)
               docsF = scala.concurrent.Future.successful(n)
               (rows, () => docsTable.commitWritten(dv, file, n))
-            }
+          }
           val fresh = dedupRows(rows).filterNot(r => m.seen.contains(seenKey(r)))
           val (fv, left) = frontierTable.commitDeltaTo(
             spark.createDataFrame(java.util.Arrays.asList(fresh: _*), m.schema),
             claimed.select("urlHash", "url"), metrics, publishDocs)
           (fv, left, Some((m, fresh)))
         case None =>
-          val raw = dedup(candidates)
+          val raw = dedup(candidates.get)
           // Below the floor the bloom route costs more than it saves: the
           // incremental filter's per-round maintenance is one Spark job per
           // new segment (stat.bloomFilter over it), and the routed plan adds
@@ -708,23 +795,23 @@ object CrawlSession {
   private final case class Mirror(version: Long, schema: StructType, live: Seq[Row],
       seen: Set[(Long, String)])
 
-  /** The fused small Default round's one Spark action: the round's docs
-    * (`docs`, the extraction) and child candidates (`candidates`, in the
-    * mirror's columns) as one tagged union — each packed into its own
-    * struct column, the other null — shuffled into ONE partition
-    * (`repartition(1)`, not `coalesce(1)`: the scans and extraction stay
-    * parallel; [[PhysicalRows.collect]]). Its single task writes
-    * every doc with `writer` into one file named after `tag` and its task
-    * attempt, opened even when no doc comes, so the segment always has a
-    * schema footer, and returns only the candidate rows, the file's name and
-    * its row count: no page content reaches the driver. Returns (file, docs
-    * rows, candidates).
+  /** The fused small Default round's one Spark action: the round plan
+    * `rows` (planned once a session; [[CrawlSession.fusedRound]]) with its
+    * leaf bound by `bind` to the round's pages, gathered into ONE partition
+    * ([[PhysicalRows.collect]]). A row carries a document in its struct
+    * column `_0` or a child candidate in `_1`. The single task writes every
+    * document with `writer` into one file named after `tag` and its task
+    * attempt, opened even when no document comes, so the segment always
+    * has a schema footer, and returns only the candidate rows, the file's
+    * name and its row count: no page content reaches the driver. Returns
+    * (file, docs rows, candidates).
     */
-  private[crawl] def fuseDocsAndCandidates(docs: DataFrame, candidates: DataFrame,
+  private[crawl] def fuseDocsAndCandidates(rows: PhysicalRows, bind: SparkPlan => SparkPlan,
       writer: SegmentWriter, tag: String): (String, Long, Seq[Row]) = {
-    val candType = candidates.schema
-    val (docFields, candFields) = (docs.schema.length, candType.length)
-    val results = PhysicalRows.collect(Seq(docs, candidates)) { rows =>
+    val candType = rows.schema("_1").dataType.asInstanceOf[StructType]
+    val (docFields, candFields) =
+      (rows.schema("_0").dataType.asInstanceOf[StructType].length, candType.length)
+    val results = rows.collect(bind) { rows =>
       val toRow = CatalystTypeConverters.createToScalaConverter(candType)
       val out = writer.open(s"$tag-${org.apache.spark.TaskContext.get().taskAttemptId()}")
       val cands = Array.newBuilder[Row]
@@ -736,12 +823,12 @@ object CrawlSession {
     }
     // a plan the optimizer proves empty has no partition, and so no task:
     // the driver writes the empty file
-    val (file, n, rows) = results.headOption.getOrElse {
+    val (file, n, cands) = results.headOption.getOrElse {
       val out = writer.open(s"$tag-driver")
       out.close()
       (out.name, 0L, Array.empty[Row])
     }
-    (file, n, rows.toSeq)
+    (file, n, cands.toSeq)
   }
 
   /** the seen-set key of a frontier or candidate row. */
@@ -798,22 +885,6 @@ object CrawlSession {
         org.apache.spark.sql.functions.broadcast(claimed)
       else claimed
     corpus.join(build, corpus("doc_id") === claimed("url"), "inner")
-  }
-
-  /** the struct column of a page's claim row in [[fetchLocal]]'s output. */
-  private[graft] val LocalClaim = "__claim"
-
-  /** [[fetchJoin]] for a claim already on the driver, with no join: the
-    * corpus is filtered on the claimed urls (an `InSet` literal), and each
-    * fetched page takes its claim row from a map literal keyed by url, as
-    * the struct column [[LocalClaim]] — the join's rows and values, with no
-    * broadcast exchange in the plan.
-    */
-  private[graft] def fetchLocal(corpus: DataFrame, claim: Seq[Row]): DataFrame = {
-    val urls = claim.map(_.getAs[String]("url"))
-    val byUrl = mapLiteral(urls, claim, claim.headOption.fold(new StructType())(_.schema))
-    corpus.filter(corpus("doc_id").isin(urls: _*))
-      .withColumn(LocalClaim, try_element_at(byUrl, corpus("doc_id")))
   }
 
   /** a map literal from each of `keys` to the value at its position, of

@@ -241,18 +241,65 @@ object Extractor {
     *         `[]` zip-explode group exists) + `children` array column.
     */
   def extract(fetched: DataFrame, config: CrawlConfig): DataFrame = {
-    val spans = col("spans")
-    val rid = RuleCompiler.ruleId(config.rules, col("url"), col("mimeType"))
     // P4 no-rule skip + P5 status gate
-    val matched = fetched
-      .withColumn("ruleId", rid)
-      .filter(col("ruleId").isNotNull && col("httpStatusCode") === 200)
+    val flat = withProperties(fetched
+      .withColumn("ruleId", RuleCompiler.ruleId(config.rules, col("url"), col("mimeType")))
+      .filter(matched), config)
+    // X4 zip-explode over the `[]` group
+    val value = (n: String) => col(colAlias(n))
+    if (groupNames(config).isEmpty)
+      flat.select(docColumns(config, value, None) :+ col("children"): _*)
+    else flat
+      .withColumn("position", explode(sequence(lit(0), groupLength(config, value) - 1)))
+      .select(docColumns(config, value, Some(col("position"))) :+ col("children"): _*)
+  }
 
-    // union of output property names across rules (non-child), first-rule
-    // branch wins per row via the ruleId when-chain
-    val propNames: Seq[String] = config.rules
-      .flatMap(_.properties.filterNot(_.isChild).map(_.name)).distinct
+  /** [[extract]] with no row per document: `fetched` with its `ruleId`,
+    * property and `children` columns, one row per page, and the column of
+    * each page's documents — an array of structs, each one row of
+    * [[extract]] without `children` and with `extra` appended, null for a
+    * page the P4/P5 gates store nothing for. A plan that needs both a
+    * page's documents and its children in one pass reads them from here.
+    */
+  def documents(fetched: DataFrame, config: CrawlConfig,
+      extra: Seq[Column]): (DataFrame, Column) = {
+    val flat = withProperties(fetched
+      .withColumn("ruleId", RuleCompiler.ruleId(config.rules, col("url"), col("mimeType"))),
+      config)
+    val value = (n: String) => col(colAlias(n))
+    def doc(pos: Option[Column]): Column = struct(docColumns(config, value, pos) ++ extra: _*)
+    val docs =
+      if (groupNames(config).isEmpty) array(doc(None))
+      else transform(sequence(lit(0), groupLength(config, value) - 1), p => doc(Some(p)))
+    (flat, when(matched, docs))
+  }
 
+  /** P4 (a rule matched) and P5 (a 200 response): the pages that store
+    * documents.
+    */
+  private val matched: Column = col("ruleId").isNotNull && col("httpStatusCode") === 200
+
+  /** union of output property names across rules (non-child). */
+  private def propNames(config: CrawlConfig): Seq[String] = config.rules
+    .flatMap(_.properties.filterNot(_.isChild).map(_.name)).distinct
+
+  /** names of the `[]` zip-explode group (X4). */
+  private def groupNames(config: CrawlConfig): Seq[String] =
+    propNames(config).filter(_.startsWith("[]"))
+
+  /** the group members whose values are lists: one element per position. */
+  private def listMembers(config: CrawlConfig): Seq[String] =
+    groupNames(config).filter { n =>
+      config.rules.exists(_.properties.exists(p => p.name == n && p.isArray))
+    }
+
+  /** `fetched` (with `ruleId`) plus one column per property — the first
+    * rule's branch wins per row via the ruleId when-chain — and the
+    * `children`, in one projection step: each DataFrame step analyzes the
+    * whole plan again.
+    */
+  private def withProperties(fetched: DataFrame, config: CrawlConfig): DataFrame = {
+    val spans = col("spans")
     def propCol(name: String): Column = {
       val branches = config.rules.zipWithIndex.flatMap { case (r, i) =>
         r.properties.find(p => p.name == name && !p.isChild)
@@ -262,44 +309,36 @@ object Extractor {
         case (acc, (c, v)) => acc.when(c, v)
       }
     }
+    fetched.withColumns(scala.collection.immutable.ListMap(
+      propNames(config).map(n => colAlias(n) -> propCol(n)) :+
+        ("children" -> childArray(config)): _*))
+  }
 
-    // one projection step for every property: each DataFrame step analyzes
-    // the whole plan again
-    val flat = matched.withColumns(scala.collection.immutable.ListMap(
-      propNames.map(n => colAlias(n) -> propCol(n)) :+ ("children" -> childArray(config)): _*))
+  /** the rows a page's `[]` group explodes into: its longest list, at
+    * least 1.
+    */
+  private def groupLength(config: CrawlConfig, value: String => Column): Column = {
+    val lists = listMembers(config)
+    if (lists.isEmpty) lit(1)
+    else greatest((lists.map(n => coalesce(size(value(n)), lit(0)).cast("int")) :+ lit(1)): _*)
+  }
 
-    // X4 zip-explode over the `[]` group
-    val groupNames = propNames.filter(_.startsWith("[]"))
-    val exploded =
-      if (groupNames.isEmpty) flat
-      else {
-        val listMembers = groupNames.filter { n =>
-          config.rules.exists(_.properties.exists(p => p.name == n && p.isArray))
-        }
-        val scalarMembers = groupNames.filterNot(listMembers.contains)
-        val maxLen =
-          if (listMembers.isEmpty) lit(1)
-          else greatest(
-            (listMembers.map(n => coalesce(size(col(colAlias(n))), lit(0)).cast("int")) :+
-              lit(1)): _*)
-        val withPos = flat
-          .withColumn("position", explode(sequence(lit(0), maxLen - 1)))
-        val reshaped = listMembers.foldLeft(withPos) { (df, n) =>
-          df.withColumn(colAlias(n), get(col(colAlias(n)), col("position")))
-        }
-        scalarMembers.foldLeft(reshaped) { (df, n) =>
-          // non-list group members appear only on the first exploded row
-          // (ScrapingTransformer.java:589-595)
-          df.withColumn(colAlias(n),
-            when(col("position") === 0, col(colAlias(n))))
-        }
-      }
-
-    // final projection: metadata (P6) + nested structs for dotted names (F9)
-    val outProps = nestDotted(propNames.map(n => stripGroup(n) -> col(colAlias(n))))
-    val posCols = if (groupNames.isEmpty) Seq.empty else Seq(col("position"))
-    exploded.select(
-      (MetaCols.map(col) ++ outProps ++ posCols :+ col("children")): _*)
+  /** the columns of one document row, from the property values `value`
+    * at the group position `pos` (None: no `[]` group): metadata (P6), the
+    * properties with nested structs for dotted names (F9), and `position`.
+    * A list member of the group takes its element at `pos`; a non-list
+    * member appears only at position 0 (ScrapingTransformer.java:589-595).
+    */
+  private def docColumns(config: CrawlConfig, value: String => Column,
+      pos: Option[Column]): Seq[Column] = {
+    val (groups, lists) = (groupNames(config).toSet, listMembers(config).toSet)
+    def at(n: String): Column = pos match {
+      case Some(p) if lists.contains(n) => get(value(n), p)
+      case Some(p) if groups.contains(n) => when(p === 0, value(n))
+      case _ => value(n)
+    }
+    MetaCols.map(col) ++ nestDotted(propNames(config).map(n => stripGroup(n) -> at(n))) ++
+      pos.map(_.as("position"))
   }
 
   /** internal flat column name for a property ([] and dots escaped). */

@@ -808,7 +808,9 @@ object Dedup {
       val viaJump = labels
         .join(labels.select(col("id").as("rep"), col("rep").as("jumpRep")), "rep")
         .select(col("id"), col("jumpRep"))
-      val next = labels
+      // the labels that moved, counted by the checkpoint's own job
+      val changed = org.apache.spark.sql.Observation(s"cc-changed-$iters")
+      labels = labels
         .join(viaNeighbors, Seq("id"), "left")
         .join(viaJump, Seq("id"), "left")
         .select(col("id"),
@@ -817,9 +819,10 @@ object Dedup {
             coalesce(col("jumpRep"), col("rep"))).as("rep"),
           (least(coalesce(col("nbrRep"), col("rep")),
             coalesce(col("jumpRep"), col("rep"))) < col("rep")).as("changed"))
+        .observe(changed, sum(col("changed").cast("long")).as("n"))
+        .drop("changed")
         .localCheckpoint(true) // eager: truncates lineage + materializes once
-      converged = next.filter(col("changed")).limit(1).isEmpty
-      labels = next.drop("changed")
+      converged = Option(changed.get("n")).forall(_ == 0L)
       iters += 1
     }
     edges.unpersist(blocking = false)

@@ -4,47 +4,63 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, CreateStruct, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Project, Repartition, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.InsertAdaptiveSparkPlan
+import org.apache.spark.sql.types.StructType
 
-/** An action over the physical rows of a tagged union of frames: what
-  * `Dataset.collect` runs, with a function of the partition's rows in place
-  * of the row copy. Compiled into the `org.apache.spark.sql` namespace like
-  * [[ColumnBridge]], so Spark's call-site rule names the action
-  * `collect at <caller>`.
+/** A frame planned once and run many times, as an action over its physical
+  * rows: what `Dataset.collect` runs, with a function of the partition's
+  * rows in place of the row copy. Compiled into the `org.apache.spark.sql`
+  * namespace like [[ColumnBridge]], so Spark's call-site rule names each
+  * run `collect at <caller>`.
+  *
+  * The frame's rows are gathered into ONE partition by a round-robin
+  * shuffle (`repartition(1)`: the frame's own stage stays parallel). The
+  * plan is analyzed, optimized and planned once, without adaptive
+  * execution, so a run is one job: it is meant for the few rows of a small
+  * crawl round, where an analysis of the whole plan, a re-optimization
+  * after the shuffle stage or a second plan of the same frame cost more
+  * than the job itself.
   */
-object PhysicalRows {
-  /** `f` over the rows of every frame of `frames`, gathered into ONE
-    * partition by a round-robin shuffle (`repartition(1)`: the frames'
-    * own stages stay parallel), with the results collected. A row of frame
-    * i is column i of the union, a struct of that frame's columns; every
-    * other column is null. One SQL execution, which listeners see as one
-    * `collect`. The rows are only valid while `f` is on them (Spark reuses
-    * them): `f` copies what it keeps.
-    *
-    * The plan is built from the frames' analyzed plans and analyzed once,
-    * and it runs without adaptive execution, as one job: it is meant for
-    * the few rows of a small crawl round, where every extra analysis of the
-    * whole plan, and a re-optimization after the shuffle stage, cost more
-    * than the stage itself.
+final class PhysicalRows private (planned: QueryExecution) {
+
+  /** the frame's columns: what a row of a run holds. */
+  def schema: StructType = planned.analyzed.schema
+
+  /** `f` over the rows of `bind(executedPlan)`, with the results collected:
+    * one SQL execution, which listeners see as one `collect` whose analyzed
+    * and optimized plans are this object's. `bind` must return a plan
+    * whose every node that runs a shuffle is a fresh copy — a
+    * `transformUp` below the shuffle gives one — since a reused exchange
+    * would hand back the last run's map output. The rows are only valid
+    * while `f` is on them (Spark reuses them): `f` copies what it keeps.
+    * `f` is not cleaned: it must capture only what its tasks need.
     */
-  def collect[A: ClassTag](frames: Seq[DataFrame])(
+  def collect[A: ClassTag](bind: SparkPlan => SparkPlan)(
       f: Iterator[InternalRow] => Iterator[A]): Array[A] = {
-    val plans = frames.map(_.queryExecution.analyzed)
-    val branches = plans.indices.map { i =>
-      Project(plans.indices.map { j =>
-        Alias(if (j == i) CreateStruct(plans(j).output) else Literal(null, plans(j).schema),
-          s"_$j")()
-      }, plans(i))
+    val plan = bind(planned.executedPlan)
+    val run = new QueryExecution(planned.sparkSession, planned.analyzed) {
+      override def analyzed: LogicalPlan = planned.analyzed
+      override def optimizedPlan: LogicalPlan = planned.optimizedPlan
+      override def sparkPlan: SparkPlan = plan
+      override def executedPlan: SparkPlan = plan
     }
-    val session = frames.head.queryExecution.sparkSession
-    val qe = new QueryExecution(session, Repartition(1, shuffle = true, Union(branches))) {
+    SQLExecution.withNewExecutionId(run, Some("collect"))(
+      run.toRdd.mapPartitionsInternal(f).collect())
+  }
+}
+
+object PhysicalRows {
+  /** `frame` gathered into one partition, planned now. */
+  def apply(frame: DataFrame): PhysicalRows = {
+    val qe = new QueryExecution(frame.queryExecution.sparkSession,
+        Repartition(1, shuffle = true, frame.queryExecution.analyzed)) {
       override def preparations: Seq[Rule[SparkPlan]] =
         super.preparations.filterNot(_.isInstanceOf[InsertAdaptiveSparkPlan])
     }
-    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.toRdd.mapPartitions(f).collect())
+    qe.executedPlan
+    new PhysicalRows(qe)
   }
 }

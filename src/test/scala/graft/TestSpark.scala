@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -25,15 +25,16 @@ object TestSpark {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** What `f` ran on Spark: the jobs it started and the SQL executions it
-    * finished, in order, the rows its tasks read from input files and the
-    * bytes of task results they sent to the driver.
+    * finished, in order, the ids of the stages it ran (a job's stage that
+    * is not among them was skipped), the rows its tasks read from input
+    * files and the bytes of task results they sent to the driver.
     * `descriptions` maps each SQL execution to the description of its root
     * execution: the engine call site of the action, e.g.
     * `collect at CrawlLoop.scala:249`.
     */
   final case class Traced[A](result: A, jobs: Seq[SparkListenerJobStart],
       queries: Seq[QueryExecution], descriptions: Map[Long, String],
-      rowsRead: Long, resultBytes: Long) {
+      stagesRun: Set[Int], rowsRead: Long, resultBytes: Long) {
     /** the action a job belongs to, or None outside any SQL execution. AQE
       * names its map-stage jobs after a JDK frame, so stage names cannot
       * tell which action started a job; its SQL execution can.
@@ -60,6 +61,7 @@ object TestSpark {
     val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     // execution id -> (description, root execution id)
     val executions = new java.util.concurrent.ConcurrentHashMap[Long, (String, Long)]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val rowsRead = new java.util.concurrent.atomic.AtomicLong
     val resultBytes = new java.util.concurrent.atomic.AtomicLong
     val (open, close) = (java.util.UUID.randomUUID().toString, java.util.UUID.randomUUID().toString)
@@ -72,6 +74,8 @@ object TestSpark {
           case Some(`close`) => recording = false; closed.countDown()
           case _ => if (recording) jobs.add(e)
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (recording) stages.add(e.stageInfo.stageId)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (recording) Option(e.taskMetrics).foreach { m =>
           rowsRead.addAndGet(m.inputMetrics.recordsRead)
@@ -105,8 +109,8 @@ object TestSpark {
       val described = executions.asScala.toMap
       val roots = described.map { case (id, (_, root)) =>
         id -> described.get(root).fold("")(_._1) }
-      Traced(out, jobs.asScala.toSeq, queries.asScala.toSeq, roots, rowsRead.get,
-        resultBytes.get)
+      Traced(out, jobs.asScala.toSeq, queries.asScala.toSeq, roots, stages.asScala.toSet,
+        rowsRead.get, resultBytes.get)
     } finally {
       spark.listenerManager.unregister(queryListener)
       sc.removeSparkListener(jobListener)

@@ -178,6 +178,45 @@ class CrawlParitySpec extends AnyFunSuite {
     session.cleanup()
   }
 
+  test("a steady small Default session plans its round once: each round is one job that scans each corpus partition once, skips no stage and stages exactly its claimed documents") {
+    val cfg = baseConfig("round-template").copy(maxAccessCount = 400, hostBudgetPerRound = 2)
+    val session = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(),
+      TestSpark.tmpDir("crawl-round-template"))
+    session.init()
+    session.runRound(); session.runRound()
+    val corpusPartitions = corpusDf.queryExecution.toRdd.getNumPartitions
+    val dt = session.docsTable
+    val runs = (3 to 8).map { i =>
+      val t = TestSpark.traced(session.runRound())
+      val r = t.result.getOrElse(fail(s"round $i claimed nothing"))
+      assert(t.queries.size == 1 && t.jobs.size == 1,
+        s"round $i: ${t.queries.size} SQL actions, ${t.jobs.size} jobs")
+      val stages = t.jobs.head.stageInfos
+      assert(stages.forall(st => t.stagesRun.contains(st.stageId)),
+        s"round $i skipped stages ${stages.map(_.stageId).filterNot(t.stagesRun)}")
+      // the map stage, then the writer task's
+      val Seq(map, writer) = stages.sortBy(_.stageId)
+      assert(map.numTasks == corpusPartitions && writer.numTasks == 1,
+        s"round $i: ${map.numTasks} map tasks over $corpusPartitions corpus partitions")
+      // the round's docs segment: exactly the claimed pages that store a
+      // document, by its footers and by its rows
+      val seg = s"${dt.root}/segments/${dt.currentVersion}"
+      val urls = spark.read.parquet(seg).select("url").collect().map(_.getString(0)).toSeq
+      val expected = r.claimOrder.map(_._1).filter(storesDoc(cfg, _))
+      assert(urls.sorted == expected.sorted, s"round $i")
+      assert(dt.segmentRows(dt.currentVersion.toString) == expected.size &&
+        r.docsWritten == expected.size, s"round $i")
+      t.queries.head
+    }
+    // one analyzed and optimized plan for every round, a fresh physical plan
+    // each round
+    assert(session.fusedRoundPlans == 1, s"${session.fusedRoundPlans} plans")
+    assert(runs.forall(q => (q.analyzed eq runs.head.analyzed) &&
+      (q.optimizedPlan eq runs.head.optimizedPlan)))
+    assert(runs.map(q => System.identityHashCode(q.executedPlan)).distinct.size == runs.size)
+    session.cleanup()
+  }
+
   test("the robots Crawl-delay budgets are collected once a session, not every round") {
     val session = new CrawlSession(spark, baseConfig("robots-once"), corpusDf,
       robotsDf.toDF(), TestSpark.tmpDir("crawl-robots-once"))
@@ -721,12 +760,14 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(s.seenTable.read().select("url").collect().map(_.getString(0)).toSet == oracle.seen)
     val docs = dt.read().select("url").collect().map(_.getString(0))
     assert(docs.length == docs.toSet.size && docs.toSet == oracleDocs(cfg, oracle))
+    // every round after the failures ran on the plan of the first
+    assert(s.fusedRoundPlans == 1, s"${s.fusedRoundPlans} fused round plans")
     s.cleanup()
   }
 
   test("a fused docs segment commits over a lost attempt's file, and reads like the same docs written by Spark") {
     import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{col, lit, struct}
     import graft.frontier.SnapshotTable
     val cfg = baseConfig("fused-stray")
     val s = new CrawlSession(spark, cfg, corpusDf, robotsDf.toDF(), TestSpark.tmpDir("crawl-fused-stray"))
@@ -761,7 +802,13 @@ class CrawlParitySpec extends AnyFunSuite {
       val fused = new SnapshotTable(TestSpark.tmpDir("fused-docs"), spark, sequenced = true)
       val bySpark = new SnapshotTable(TestSpark.tmpDir("spark-docs"), spark, sequenced = true)
       val (v, writer) = fused.stagedWriter(docsIn.schema)
-      val t = TestSpark.traced(CrawlSession.fuseDocsAndCandidates(docsIn, seeds, writer, v.toString))
+      // the docs as tagged rows (`_0`) beside the seeds (`_1`)
+      val tagged = docsIn
+        .select(struct(docsIn.columns.map(col): _*).as("_0"), lit(null).cast(seeds.schema).as("_1"))
+        .unionByName(seeds.select(lit(null).cast(docsIn.schema).as("_0"),
+          struct(seeds.columns.map(col): _*).as("_1")))
+      val t = TestSpark.traced(CrawlSession.fuseDocsAndCandidates(
+        org.apache.spark.sql.graftbridge.PhysicalRows(tagged), identity, writer, v.toString))
       val (file, n, cands) = t.result
       assert(sparkWrites(t).isEmpty && t.queries.size == 1, s"${t.queries.size} SQL actions")
       fused.commitWritten(v, file, n)

@@ -472,6 +472,25 @@ class DedupSpec extends AnyFunSuite {
     assert(reps.map(_.getLong(0)).toSeq == Seq(0L))
   }
 
+  test("connectedComponents: each iteration is its checkpoint's action alone; the fixpoint test rides it") {
+    val chain = (0 until 40).map(i => (i.toLong, i.toLong + 1)).toDF("id_a", "id_b")
+    val t = TestSpark.traced(Dedup.connectedComponents(chain).collect())
+    assert(t.result.map(_.getLong(1)).toSet == Set(0L))
+    val actions = t.descriptions.values.toSeq.distinct.sorted
+    assert(actions.forall(a => a.startsWith("localCheckpoint at Dedup.scala") ||
+      a.startsWith("collect at OpsSpec.scala")), actions)
+    // the SQL actions: the initial labels' checkpoint, one checkpoint per
+    // iteration (a 41-node chain converges in a handful of pointer-doubling
+    // rounds), and the collect
+    val iterations = t.queries.size - 2
+    assert(iterations >= 2 && iterations <= 8, s"$iterations iterations")
+    // measured: 63 jobs in 8 checkpoints (AQE runs each shuffle stage as a
+    // job of the checkpoint's action); the emptiness probe each iteration
+    // ran as an action of its own is gone
+    val loopJobs = t.jobsOf("localCheckpoint at Dedup.scala").size
+    assert(loopJobs <= 9 * (iterations + 1), s"$loopJobs jobs in ${iterations + 1} checkpoints")
+  }
+
   test("keepBest: argmax per cluster, min-id tiebreak, singletons kept") {
     val docs = Seq(
       (1L, 10L), (2L, 30L), (3L, 20L),   // cluster {1,2,3}: 2 wins on score

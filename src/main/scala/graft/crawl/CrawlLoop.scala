@@ -532,8 +532,7 @@ final class CrawlSession(
               val (dv, writer) = docsTable.stagedWriter(
                 p.fused.schema("_0").dataType.asInstanceOf[StructType])
               stagedDocs = Some(dv)
-              val (file, n, rows) =
-                fuseDocsAndCandidates(p.fused, p.pages.bind(pages.get), writer, dv.toString)
+              val (file, n, rows) = fuseDocsAndCandidates(p.fused, p.pages.bind(pages.get), writer)
               docsF = scala.concurrent.Future.successful(n)
               (rows, () => docsTable.commitWritten(dv, file, n))
           }
@@ -773,12 +772,15 @@ object CrawlSession {
 
   /** Driver pool for the concurrent docs-table commit (guide §2.6 overlap
     * of independent jobs): 2 threads is plenty — one in-flight docs write
-    * per round, and job descriptions/scheduling are thread-local.
+    * per round, and job descriptions/scheduling are thread-local. Its
+    * threads inherit no thread locals, so no Spark local property of the
+    * thread that happened to start one (a streaming batch's SQL execution
+    * id, say) sticks to every docs write it later runs.
     */
   private[graft] lazy val docsCommitEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-docs-commit"); t.setDaemon(true); t
+        val t = new Thread(null, r, "graft-docs-commit", 0L, false); t.setDaemon(true); t
       }))
 
   /** Bloom-route floor: below this seen-set size the plain exact anti-join
@@ -800,35 +802,29 @@ object CrawlSession {
     * leaf bound by `bind` to the round's pages, gathered into ONE partition
     * ([[PhysicalRows.collect]]). A row carries a document in its struct
     * column `_0` or a child candidate in `_1`. The single task writes every
-    * document with `writer` into one file named after `tag` and its task
-    * attempt, opened even when no document comes, so the segment always
-    * has a schema footer, and returns only the candidate rows, the file's
-    * name and its row count: no page content reaches the driver. Returns
-    * (file, docs rows, candidates).
+    * document with `writer` into its one file, opened even when no
+    * document comes, so the segment always has a schema footer, and
+    * returns only the candidate rows, the file's name and its row count:
+    * no page content reaches the driver. A plan the optimizer proves empty
+    * runs no task, and the driver writes the empty file. Returns (file,
+    * docs rows, candidates).
     */
   private[crawl] def fuseDocsAndCandidates(rows: PhysicalRows, bind: SparkPlan => SparkPlan,
-      writer: SegmentWriter, tag: String): (String, Long, Seq[Row]) = {
+      writer: SegmentWriter): (String, Long, Seq[Row]) = {
     val candType = rows.schema("_1").dataType.asInstanceOf[StructType]
     val (docFields, candFields) =
       (rows.schema("_0").dataType.asInstanceOf[StructType].length, candType.length)
     val results = rows.collect(bind) { rows =>
       val toRow = CatalystTypeConverters.createToScalaConverter(candType)
-      val out = writer.open(s"$tag-${org.apache.spark.TaskContext.get().taskAttemptId()}")
       val cands = Array.newBuilder[Row]
-      try rows.foreach { r =>
+      val file = writer.writeFile(out => rows.foreach { r =>
         if (r.isNullAt(0)) cands += toRow(r.getStruct(1, candFields)).asInstanceOf[Row]
         else out.write(r.getStruct(0, docFields))
-      } finally out.close()
-      Iterator((out.name, out.rows, cands.result()))
+      })
+      Iterator((file, cands.result()))
     }
-    // a plan the optimizer proves empty has no partition, and so no task:
-    // the driver writes the empty file
-    val (file, n, cands) = results.headOption.getOrElse {
-      val out = writer.open(s"$tag-driver")
-      out.close()
-      (out.name, 0L, Array.empty[Row])
-    }
-    (file, n, cands.toSeq)
+    val Seq((file, n)) = writer.filesOf(results.map(_._1))
+    (file, n, results.flatMap(_._2).toSeq)
   }
 
   /** the seen-set key of a frontier or candidate row. */

@@ -15,6 +15,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.graftbridge.PhysicalRows
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -42,20 +43,30 @@ import org.apache.spark.util.SerializableConfiguration
   *     compaction's `<v>-base` never joins it, so the log holds every row
   *     the table was given exactly once, tombstoned or not — the frontier's
   *     log is the crawl's URL-seen set ([[appendedOf]], [[readSegments]]);
-  *   - every commit writes its frames one of two ways: a frame whose rows
-  *     are already on the driver (its optimized plan is a `LocalRelation`,
-  *     e.g. a small crawl round's claim tombstones and new entries)
-  *     is written from the driver as one file, with no Spark job, through
-  *     the writer Spark's own tasks use ([[SegmentWriter]]); any other
-  *     frame is a Spark write;
-  *   - an append can also commit a segment written before the commit:
-  *     [[stagedWriter]] hands out a serializable [[SegmentWriter]] for the
-  *     next version's segment dir, one Spark task writes one file with it
-  *     (a small crawl round's docs, beside the round's other work), and
-  *     [[commitWritten]] deletes any other file in that dir (a lost
-  *     attempt), then publishes it with the writer's row count. Readers
-  *     cannot tell any of these apart: every read is a Spark read
-  *     ([[readVersion]], [[readSegments]]) over the schema of one footer;
+  *   - every file is written by one writer, [[SegmentWriter]] (the parquet
+  *     writer Spark's own write tasks use), and every commit publishes the
+  *     files and row counts its writers return: no commit takes its file
+  *     list from a dir listing or opens a footer to count rows. A frame
+  *     whose rows are already on the driver (its optimized plan is a
+  *     `LocalRelation`, e.g. a small crawl round's claim tombstones and new
+  *     entries) is written from the driver as one file, with no Spark
+  *     job; any other frame is one Spark action whose tasks each write
+  *     their partition's file. An append can also commit a segment written
+  *     before the commit: [[stagedWriter]] hands out the writer of the next version's
+  *     segment dir, a Spark task writes with it (a small crawl round's
+  *     docs, beside the round's other work), and [[commitWritten]]
+  *     publishes the file the task returned. Readers cannot tell these
+  *     apart: every read is a Spark read ([[readVersion]],
+  *     [[readSegments]]) over the schema of one footer;
+  *   - a commit deletes every other file in the dirs it wrote (a failed
+  *     task attempt's, or any stray), since reads list the dirs. That
+  *     needs no attempt to write after its job has ended, which holds
+  *     because the table is on the local file system (`java.nio`
+  *     throughout) under local Spark, which starts a task's retry only
+  *     once the failed attempt has ended. On a cluster, with speculation
+  *     or a lost executor, an attempt can outlive its job; reads planned
+  *     from the manifest's file lists, not from dir listings, would lift
+  *     the condition;
   *   - a meta.json writes each run of consecutive commit versions in its
   *     segment, tombstone and append-log lists as one `"<a>..<b>"` entry,
   *     so a snapshot's manifest does not grow with its log;
@@ -164,7 +175,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   }
 
   private def filesIn(dirs: Seq[String]): Seq[String] =
-    dirs.flatMap(d => parquetFiles(d).map(f => s"$d/$f"))
+    dirs.flatMap(d => listDir(Paths.get(d)).map(_.toString).filter(_.endsWith(".parquet")))
 
   /** the Spark schema a file's footer records under Spark's row-metadata
     * key, if any.
@@ -215,20 +226,19 @@ final class SnapshotTable(dir: String, spark: SparkSession,
   /** raw row count of one segment from its parquet footers (driver-side,
     * no Spark job).
     */
-  def segmentRows(seg: String): Long = dirRowCount(segPath(seg))
+  def segmentRows(seg: String): Long = filesIn(Seq(segPath(seg))).map(footer(_)(_.getRecordCount)).sum
 
   /** Replace the table with `df`; starts a new append log. */
   def commitFull(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) = {
     val v = currentVersion + 1
-    val written = write(stamp(df, v), segPath(v.toString))
     commitManifest(metrics, appendTo = Seq.empty, logTo = Seq.empty, prevRows = 0L,
-      expectVersion = v, segRows = written)
+      expectVersion = v, written = write(df, segPath(v.toString), v))
   }
 
   /** Append `df` on top of the table's head. */
   def commitAppend(df: DataFrame, metrics: Map[String, String] = Map.empty): (Long, Long) = {
     val v = currentVersion + 1
-    appendManifest(v, metrics, segRows = write(stamp(df, v), segPath(v.toString)))
+    appendManifest(v, metrics, write(df, segPath(v.toString), v))
   }
 
   /** A writer of the data segment of the next append, version v = head + 1,
@@ -237,22 +247,16 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     */
   def stagedWriter(schema: StructType): (Long, SegmentWriter) = {
     val v = currentVersion + 1
-    (v, segmentWriter(segPath(v.toString), schema, if (sequenced) Some(v) else None))
+    (v, segmentWriter(segPath(v.toString), schema, v))
   }
 
   /** [[commitAppend]] of a segment a [[stagedWriter]] wrote: `file`, of
-    * `rows` rows (the writer's count: no footer is reopened). Any other
-    * file in the segment dir (from a lost task attempt or an earlier failed
-    * try at version v) is deleted first. If it fails, the table stays at
-    * its parent; [[discardStaged]] deletes the staged files.
+    * `rows` rows, as the writer returned them. If it fails, the table stays
+    * at its parent; [[discardStaged]] deletes the staged files.
     */
   def commitWritten(v: Long, file: String, rows: Long,
-      metrics: Map[String, String] = Map.empty): (Long, Long) = {
-    listDir(Paths.get(segPath(v.toString)))
-      .filterNot(p => Set(file, s".$file.crc").contains(p.getFileName.toString))
-      .foreach(rmTree)
-    appendManifest(v, metrics, segRows = Some(rows))
-  }
+      metrics: Map[String, String] = Map.empty): (Long, Long) =
+    appendManifest(v, metrics, swept(Written(segPath(v.toString), Seq(file -> rows))))
 
   /** delete the staged segment and meta of version v unless v is
     * published (best-effort): what a failed [[commitWritten]] or a writer
@@ -268,19 +272,18 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * rows.
     */
   private def appendManifest(v: Long, metrics: Map[String, String],
-      segRows: Option[Long]): (Long, Long) = {
+      written: Written): (Long, Long) = {
     val parent = v - 1
     commitManifest(metrics, appendTo = segmentsOf(parent), logTo = appendedOf(parent),
       prevRows = rowsOf(parent), tombSegs = tombstonesOf(parent),
-      tombRows = tombRowsOf(parent), expectVersion = v, segRows = segRows)
+      tombRows = tombRowsOf(parent), expectVersion = v, written = written)
   }
 
   /** Delta transition on top of the table's head: `newRows` becomes data
     * segment `<v>` and `tombstones` (key columns of rows to logically
-    * delete) tombstone segment `<v>`, written concurrently (Spark writes,
-    * or driver writes for local frames). Write cost is O(new + tombstones)
-    * regardless of table size — the round-loop fix for the per-round
-    * O(frontier) copy-on-write rewrite.
+    * delete) tombstone segment `<v>`, written concurrently. Write cost is
+    * O(new + tombstones) regardless of table size — the round-loop fix for
+    * the per-round O(frontier) copy-on-write rewrite.
     *
     * Staged publish: `beforePublish` runs once every file of snapshot v
     * (segments, tombstones, `snapshots/<v>/meta.json`) is written and
@@ -289,9 +292,8 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     * the exception is rethrown — so a caller can make the rename the
     * commit point of work outside this table (the crawl round's docs).
     *
-    * Compaction: once accumulated tombstones, counted by the driver writer
-    * or from the written footers, exceed a quarter of the live rows (floor
-    * 4096), the parent's surviving rows (`readVersion(parent)` minus the
+    * Compaction: once accumulated tombstones, as their writers counted
+    * them, exceed a quarter of the live rows (floor 4096), the parent's surviving rows (`readVersion(parent)` minus the
     * fresh tombstones) are rewritten as a second segment of snapshot v,
     * `<v>-base`, and the tombstone list resets. Segment `<v>` holds exactly
     * `newRows` on both paths, so no row is written twice, `segmentRows` is
@@ -322,19 +324,17 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     val segDir = s"$root/segments/$v"
     val base = s"$v-base"
     try {
-      val tombF = Future {
-        write(stamp(tombstones, v), tombDir)
-      }(SnapshotTable.writeEc)
+      val tombF = Future(write(tombstones, tombDir, v))(SnapshotTable.writeEc)
       // a failed segment write first waits the tombstone write out: left
       // running, it would race the cleanup below and a retry's write of
       // the same dir
-      val segRows =
-        try write(stamp(newRows, v), segDir)
+      val seg =
+        try write(newRows, segDir, v)
         catch { case NonFatal(e) =>
           scala.util.Try(Await.result(tombF, Duration.Inf))
           throw e
         }
-      val newTombRows = Await.result(tombF, Duration.Inf).getOrElse(dirRowCount(tombDir))
+      val newTombRows = Await.result(tombF, Duration.Inf).rows
       val totalTomb = prevTombRows + newTombRows
       if (totalTomb > math.max(4096L, prevRows / 4)) {
         // readVersion(parent) already applied older tombstones (and dropped
@@ -344,18 +344,18 @@ final class SnapshotTable(dir: String, spark: SparkSession,
         val tomb =
           if (newTombRows <= broadcastTombRows) broadcast(tombRaw) else tombRaw
         val parent = readVersion(head)
-        write(stamp(parent.join(tomb, tombRaw.columns.toSeq, "left_anti")
-          .select(parent.columns.map(col): _*), v), segPath(base))
+        val survivors = write(parent.join(tomb, tombRaw.columns.toSeq, "left_anti")
+          .select(parent.columns.map(col): _*), segPath(base), v)
         // the base segment replaces every tombstone: no snapshot needs this one
         rmTree(Paths.get(tombDir))
         commitManifest(metrics, appendTo = Seq(base),
-          logTo = appendedOf(head), prevRows = segmentRows(base),
-          expectVersion = v, beforePublish = beforePublish, segRows = segRows)
+          logTo = appendedOf(head), prevRows = survivors.rows,
+          expectVersion = v, beforePublish = beforePublish, written = seg)
       } else {
         commitManifest(metrics, appendTo = segmentsOf(head),
           logTo = appendedOf(head), prevRows = prevRows - newTombRows,
           tombSegs = tombstonesOf(head) :+ v.toString, tombRows = totalTomb,
-          expectVersion = v, beforePublish = beforePublish, segRows = segRows)
+          expectVersion = v, beforePublish = beforePublish, written = seg)
       }
     } catch { case NonFatal(e) if currentVersion < v =>
       // no manifest references snapshot v yet: drop its files (partial
@@ -367,70 +367,67 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     }
   }
 
-  /** `df` stamped with snapshot v's sequence, on a sequenced table. */
-  private def stamp(df: DataFrame, v: Long): DataFrame =
-    if (sequenced) df.withColumn(SeqCol, org.apache.spark.sql.functions.lit(v)) else df
-
-  /** Write `df` as the parquet dir `dir`, replacing any earlier one. A
-    * frame whose optimized plan is a [[LocalRelation]] (rows built on the
-    * driver, with any projection over them, the `__seq` stamp included,
-    * folded in by the optimizer) is written from the driver with no Spark
-    * job, as one `part-<uuid>` file through a [[SegmentWriter]], and its
-    * row count is returned, so no footer is reopened to count them. Any
-    * other frame is a Spark write (None).
+  /** Write `df` as the parquet dir `dir` of snapshot v, replacing any
+    * earlier one, through a [[SegmentWriter]]: the files it wrote with their
+    * rows, and no other file in `dir`. A frame whose optimized plan is a
+    * [[LocalRelation]] (rows built on the driver, with any projection over
+    * them folded in by the optimizer) is written from the driver as one
+    * file, with no Spark job. Any other frame is one Spark action
+    * (`collect at FrontierStore.scala`) whose tasks write their partitions
+    * ([[SegmentWriter.task]]) and return their files.
     */
-  private def write(df: DataFrame, dir: String): Option[Long] = df.queryExecution.optimizedPlan match {
-    case local: LocalRelation =>
-      rmTree(Paths.get(dir))
-      Files.createDirectories(Paths.get(dir))
-      val out = segmentWriter(dir, local.schema, seq = None)
-        .open(java.util.UUID.randomUUID().toString)
-      try local.data.foreach(out.write) finally out.close()
-      Some(out.rows)
-    case _ =>
-      df.write.mode("overwrite").parquet(dir)
-      None
+  private def write(df: DataFrame, dir: String, v: Long): Written = {
+    val plan = df.queryExecution.optimizedPlan
+    val writer = segmentWriter(dir, plan.schema, v)
+    val files = plan match {
+      case local: LocalRelation => Seq(writer.writeFile(out => local.data.foreach(out.write)))
+      case _ => writer.filesOf(PhysicalRows.collect(df)(writer.task))
+    }
+    swept(Written(dir, files))
   }
 
-  private def segmentWriter(dir: String, schema: StructType, seq: Option[Long]): SegmentWriter = {
-    val full = if (seq.isEmpty) schema else schema.add(SeqCol, LongType, nullable = false)
+  /** a writer of rows of `schema` into the emptied dir `dir`; on a sequenced
+    * table it stamps each row with `__seq` v — the one place a row gets
+    * its sequence.
+    */
+  private def segmentWriter(dir: String, schema: StructType, v: Long): SegmentWriter = {
+    rmTree(Paths.get(dir))
+    Files.createDirectories(Paths.get(dir))
+    val seq = Some(v).filter(_ => sequenced)
+    val full = seq.fold(schema)(_ => schema.add(SeqCol, LongType, nullable = false))
     val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, full)
     new SegmentWriter(dir, full, seq, factory, new SerializableConfiguration(job.getConfiguration))
   }
 
-  private def dirRowCount(dir: String): Long =
-    parquetFiles(dir).map(f => footerRowCount(s"$dir/$f")).sum
+  /** `w`, once every other file in its dir is deleted (a failed task
+    * attempt's, or a stray), each kept file's checksum excepted.
+    */
+  private def swept(w: Written): Written = {
+    val keep = w.files.flatMap { case (f, _) => Seq(f, s".$f.crc") }.toSet
+    listDir(Paths.get(w.dir)).filterNot(p => keep(p.getFileName.toString)).foreach(rmTree)
+    w
+  }
 
-  private def parquetFiles(dir: String): Seq[String] =
-    listDir(Paths.get(dir)).map(_.getFileName.toString)
-      .filter(_.endsWith(".parquet")).sorted
-
-  /** manifest-only commit step: record the written segment `<v>` as
+  /** manifest-only commit step: record `written`, segment `<v>`, as
     * snapshot v's new segment, after `appendTo` in the live list and after
-    * `logTo` in the append log, then run `beforePublish` and publish v by
-    * the manifest rename. The segment's row count is `segRows` when its
-    * writer counted them, else it comes straight from the parquet footers
-    * on the driver — no Spark job either way (a count() per commit was ~3
-    * driver round-trips per crawl round of pure scheduling overhead).
+    * `logTo` in the append log, with its writer's files and row count, then
+    * run `beforePublish` and publish v by the manifest rename.
     */
   private def commitManifest(metrics: Map[String, String],
       appendTo: Seq[String], logTo: Seq[String], prevRows: Long,
       tombSegs: Seq[String] = Seq.empty, tombRows: Long = 0L,
       expectVersion: Long = -1L, beforePublish: () => Unit = () => (),
-      segRows: Option[Long] = None): (Long, Long) = {
+      written: Written): (Long, Long) = {
     val v = currentVersion + 1
     require(expectVersion < 0 || expectVersion == v,
       s"concurrent commit detected: expected $expectVersion, at $v")
     val seg = v.toString
-    val segDir = segPath(seg)
-    val files = parquetFiles(segDir)
-    val segmentRows = segRows.getOrElse(files.map(f => footerRowCount(s"$segDir/$f")).sum)
-    val rows = prevRows + segmentRows
+    val rows = prevRows + written.rows
     val metricsJson = (metrics ++ Map(
       "parentVersion" -> currentVersion.toString,
       "rows" -> rows.toString,
-      "segmentRows" -> segmentRows.toString,
+      "segmentRows" -> written.rows.toString,
       "tombRows" -> tombRows.toString))
       .toSeq.sortBy(_._1)
       .map { case (k, q) => s""""$k": "${q.replace("\"", "'")}"""" }
@@ -439,7 +436,7 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     def runs(xs: Seq[String]) = arr(toRuns(xs))
     Files.createDirectories(metaPath(v).getParent)
     Files.writeString(metaPath(v),
-      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": ${runs(appendTo :+ seg)},\n  "tombstones": ${runs(tombSegs)},\n  "appended": ${runs(logTo :+ seg)},\n  "newFiles": ${arr(files)}\n}\n""")
+      s"""{\n  "version": $v,\n  $metricsJson,\n  "segments": ${runs(appendTo :+ seg)},\n  "tombstones": ${runs(tombSegs)},\n  "appended": ${runs(logTo :+ seg)},\n  "newFiles": ${arr(written.files.map(_._1).sorted)}\n}\n""")
     beforePublish()
     val tmp = Paths.get(root, s".manifest.$v.tmp")
     Files.writeString(tmp, s"""{"current": $v}""")
@@ -460,8 +457,6 @@ final class SnapshotTable(dir: String, spark: SparkSession,
     if (Files.isDirectory(p)) listDir(p).foreach(rmTree)
     Files.deleteIfExists(p)
   }
-
-  private def footerRowCount(file: String): Long = footer(file)(_.getRecordCount)
 
   /** open one parquet file on the driver. The read options are built from
     * the same session conf as the input file: `open(InputFile)` alone
@@ -546,12 +541,14 @@ object SnapshotTable {
   /** driver pool for the tombstone write that [[SnapshotTable.commitDeltaTo]]
     * overlaps with its segment write. Two threads: a crawl round's frontier
     * and docs commits (the latter on its own pool thread) can both be in
-    * one at a time.
+    * one at a time. Its threads inherit no thread locals, so no Spark local
+    * property of the thread that happened to start one (a streaming
+    * batch's SQL execution id, say) sticks to every write it later runs.
     */
   private[frontier] lazy val writeEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "graft-delta-write"); t.setDaemon(true); t
+        val t = new Thread(null, r, "graft-delta-write", 0L, false); t.setDaemon(true); t
       }))
 
   /** Default read-side BROADCAST budget for accumulated tombstones
@@ -563,8 +560,10 @@ object SnapshotTable {
     */
   val MaxTombRows: Long = 1000000L
 
-  def apply(root: String)(implicit spark: SparkSession): SnapshotTable =
-    new SnapshotTable(root, spark)
+  /** the files one writer put in `dir`, each with its row count. */
+  private final case class Written(dir: String, files: Seq[(String, Long)]) {
+    def rows: Long = files.map(_._2).sum
+  }
 }
 
 /** Writes the parquet files of one segment dir through the writer Spark's
@@ -579,30 +578,55 @@ final class SegmentWriter private[frontier] (val dir: String, schema: StructType
     seq: Option[Long], factory: OutputWriterFactory, conf: SerializableConfiguration)
     extends Serializable {
 
-  /** open `part-00000-<tag>-c000<ext>` in [[dir]]. */
-  def open(tag: String): SegmentFile = {
+  /** open a file in [[dir]], run `f` with it and close it: the file's name
+    * and rows. A task's file is
+    * `part-<partition>-task-<attempt id>-c000<ext>`, so a retried task
+    * writes a new file; outside a task it is the driver's
+    * `part-00000-driver-c000<ext>`. If `f` fails (a killed attempt
+    * included), the file is deleted, as Spark's own write tasks do.
+    */
+  def writeFile(f: SegmentFile => Unit): (String, Long) = {
     import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    val tag = Option(org.apache.spark.TaskContext.get())
+      .fold("00000-driver")(t => f"${t.partitionId}%05d-task-${t.taskAttemptId}")
     val ctx = new TaskAttemptContextImpl(conf.value,
       new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
-    val name = s"part-00000-$tag-c000${factory.getFileExtension(ctx)}"
-    new SegmentFile(name, factory.newInstance(s"$dir/$name", schema, ctx), seq)
+    val name = s"part-$tag-c000${factory.getFileExtension(ctx)}"
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    val out = new SegmentFile(factory.newInstance(path.toString, schema, ctx), seq)
+    try f(out) catch { case e: Throwable =>
+      scala.util.Try(out.close())
+      scala.util.Try(path.getFileSystem(conf.value).delete(path, false))
+      throw e
+    }
+    out.close()
+    (name, out.rows)
   }
+
+  /** the task of a Spark write over one partition's rows, by Spark's rule:
+    * partition 0 always writes a file, so every segment has a schema
+    * footer, and any other partition only when it has rows.
+    */
+  def task(rows: Iterator[InternalRow]): Iterator[(String, Long)] =
+    if (org.apache.spark.TaskContext.getPartitionId() > 0 && !rows.hasNext) Iterator.empty
+    else Iterator(writeFile(out => rows.foreach(out.write)))
+
+  /** the files a write's tasks returned; a plan with no partition ran no
+    * task, so the driver writes the empty file.
+    */
+  def filesOf(results: Array[(String, Long)]): Seq[(String, Long)] =
+    if (results.nonEmpty) results.toSeq else Seq(writeFile(_ => ()))
 }
 
-/** One open file of a [[SegmentWriter]]: `name` in its dir, and the rows
-  * written so far.
-  */
-final class SegmentFile private[frontier] (val name: String, out: OutputWriter,
-    seq: Option[Long]) {
+/** One open file of a [[SegmentWriter]], and the rows written so far. */
+final class SegmentFile private[frontier] (out: OutputWriter, seq: Option[Long]) {
   private val stamped = seq.map(v => (new JoinedRow, InternalRow(v)))
-  private var written = 0L
-
-  def rows: Long = written
+  private[frontier] var rows = 0L
 
   def write(row: InternalRow): Unit = {
     out.write(stamped.fold(row) { case (j, s) => j(row, s) })
-    written += 1
+    rows += 1
   }
 
-  def close(): Unit = out.close()
+  private[frontier] def close(): Unit = out.close()
 }

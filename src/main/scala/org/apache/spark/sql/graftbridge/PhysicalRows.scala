@@ -41,14 +41,12 @@ final class PhysicalRows private (planned: QueryExecution) {
   def collect[A: ClassTag](bind: SparkPlan => SparkPlan)(
       f: Iterator[InternalRow] => Iterator[A]): Array[A] = {
     val plan = bind(planned.executedPlan)
-    val run = new QueryExecution(planned.sparkSession, planned.analyzed) {
+    PhysicalRows.run(new QueryExecution(planned.sparkSession, planned.analyzed) {
       override def analyzed: LogicalPlan = planned.analyzed
       override def optimizedPlan: LogicalPlan = planned.optimizedPlan
       override def sparkPlan: SparkPlan = plan
       override def executedPlan: SparkPlan = plan
-    }
-    SQLExecution.withNewExecutionId(run, Some("collect"))(
-      run.toRdd.mapPartitionsInternal(f).collect())
+    })(f)
   }
 }
 
@@ -63,4 +61,21 @@ object PhysicalRows {
     qe.executedPlan
     new PhysicalRows(qe)
   }
+
+  /** `f` over the rows of each partition of `frame`, with the results
+    * collected: one SQL execution of its own (the frame's plan is planned
+    * afresh, adaptive as the session configures), which listeners see as
+    * one `collect`. `f`'s rules are the class's `collect`'s.
+    */
+  def collect[A: ClassTag](frame: DataFrame)(f: Iterator[InternalRow] => Iterator[A]): Array[A] =
+    run(new QueryExecution(frame.queryExecution.sparkSession, frame.queryExecution.analyzed))(f)
+
+  /** the action both `collect`s run: every job of it, adaptive stages
+    * included, belongs to one SQL execution, described by Spark's call-site
+    * rule as `collect at <the engine caller>`.
+    */
+  private def run[A: ClassTag](qe: QueryExecution)(
+      f: Iterator[InternalRow] => Iterator[A]): Array[A] =
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.toRdd.mapPartitionsInternal(f).collect())
 }

@@ -24,6 +24,15 @@ object TestSpark {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** the writer of each parquet file in a table dir, as its name tells: a
+    * Spark task of `SnapshotTable` (`task`, `part-<partition>-task-<attempt>-…`),
+    * the driver (`driver`, `part-00000-driver-…`), or another writer (the
+    * whole name).
+    */
+  def writtenBy(dir: String): Seq[String] = new java.io.File(dir).list().toSeq.sorted
+    .filter(_.endsWith(".parquet")).map(f => if (f.contains("-task-")) "task" else
+      if (f.startsWith("part-00000-driver-")) "driver" else f)
+
   /** What `f` ran on Spark: the jobs it started and the SQL executions it
     * finished, in order, the ids of the stages it ran (a job's stage that
     * is not among them was skipped), the rows its tasks read from input

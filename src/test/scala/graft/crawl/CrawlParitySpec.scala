@@ -113,10 +113,43 @@ class CrawlParitySpec extends AnyFunSuite {
     */
   val LoopCollect = "collect at CrawlLoop.scala"
 
-  /** the Spark writes among `t`'s SQL executions, by output path. */
-  def sparkWrites(t: TestSpark.Traced[_]): Seq[String] = t.queries.flatMap { q =>
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    q.analyzed.collect { case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString }
+  /** a table write run by Spark: `SnapshotTable` writes a frame that is
+    * not on the driver in one `collect` whose tasks write the files.
+    */
+  val TableWrite = "collect at FrontierStore.scala"
+
+  /** the Spark writes among `t`'s SQL executions, as `<id>: <call site>`. */
+  def sparkWrites(t: TestSpark.Traced[_]): Seq[String] =
+    t.descriptions.toSeq.sortBy(_._1)
+      .collect { case (id, d) if d.startsWith(TableWrite) => s"$id: $d" }
+
+  /** `_SUCCESS` markers and `_temporary` dirs under `dir`: Hadoop's job
+    * commit leaves them, and no table write goes through it.
+    */
+  def commitMarkers(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try st.iterator().asScala.map(_.toString)
+      .filter(p => p.endsWith("/_SUCCESS") || p.endsWith("/_temporary")).toList
+    finally st.close()
+  }
+
+  test("the write detector sees Spark's table writes: a Spark frame's commit, and an above-gate round's three") {
+    val table = new graft.frontier.SnapshotTable(TestSpark.tmpDir("detector"), spark)
+    val t = TestSpark.traced(table.commitAppend(corpusDf.select("doc_id").repartition(1)))
+    assert(sparkWrites(t).size == 1 && t.queries.size == 1, sparkWrites(t))
+    assert(TestSpark.writtenBy(s"${table.root}/segments/0") == Seq("task"))
+    // 8,200 filler seeds put the seen set above the gate from the start:
+    // the round writes the frontier's segment and tombstones and the docs
+    val filler = (0 until 8200).map(i => s"http://f${i % 100}.example.com/s/$i")
+    val s = new CrawlSession(spark, baseConfig("detector").copy(
+      seeds = seedUrls(0L, 5L, 96L) ++ filler, hostBudgetPerRound = 1),
+      corpusDf, robotsDf.toDF(), TestSpark.tmpDir("crawl-detector"))
+    s.init()
+    val r = TestSpark.traced(s.runRound())
+    assert(r.result.exists(_.docsWritten > 0) && s.mirrorVersion.isEmpty)
+    assert(sparkWrites(r).size == 3, sparkWrites(r))
+    table.drop(); s.cleanup()
   }
 
   /** Run a session round by round, checking after each round that the seen
@@ -307,6 +340,7 @@ class CrawlParitySpec extends AnyFunSuite {
         assert(actions == sqlActions, s"$mode: $actions SQL actions")
         assert(jobs <= maxJobs, s"$mode: $jobs jobs: ${t.jobs.map(t.actionOf).mkString(", ")}")
         assert(new java.io.File(dir).list().toSet == Set("sessions", "docs"), mode)
+        assert(commitMarkers(dir).isEmpty, commitMarkers(dir))
         session.cleanup()
     }
   }
@@ -571,6 +605,7 @@ class CrawlParitySpec extends AnyFunSuite {
     // the seen set is the frontier's append log: no table of its own, and
     // a compaction's base segment never joins the log
     assert(new java.io.File(s"$dir/sessions/compaction").list().toSet == Set("frontier"))
+    assert(commitMarkers(dir).isEmpty, commitMarkers(dir))
     val log = ft.appendedOf(ft.currentVersion)
     compactions.foreach { v =>
       assert(ft.segmentsOf(v).contains(s"$v-base") && log.contains(v.toString))
@@ -808,7 +843,7 @@ class CrawlParitySpec extends AnyFunSuite {
         .unionByName(seeds.select(lit(null).cast(docsIn.schema).as("_0"),
           struct(seeds.columns.map(col): _*).as("_1")))
       val t = TestSpark.traced(CrawlSession.fuseDocsAndCandidates(
-        org.apache.spark.sql.graftbridge.PhysicalRows(tagged), identity, writer, v.toString))
+        org.apache.spark.sql.graftbridge.PhysicalRows(tagged), identity, writer))
       val (file, n, cands) = t.result
       assert(sparkWrites(t).isEmpty && t.queries.size == 1, s"${t.queries.size} SQL actions")
       fused.commitWritten(v, file, n)
@@ -849,14 +884,15 @@ class CrawlParitySpec extends AnyFunSuite {
     def urls(df: org.apache.spark.sql.DataFrame) =
       df.select("url").collect().map(_.getString(0)).toSeq
     assert(urls(s.seenTable.read()).toSet == oracle.seen)
-    // a Spark write leaves its _SUCCESS marker, a driver write one data file:
-    // the large rounds by Spark, the seed and the small rounds by the driver
-    def sparkWritten(d: String) = new java.io.File(d).list().contains("_SUCCESS")
+    // a file's name tells its writer: the large rounds' segments are
+    // written by Spark tasks, the seed's and the small rounds' by the driver
     val v = ft.currentVersion
     val log = ft.appendedOf(v)
-    val (bySpark, byDriver) = log.partition(seg => sparkWritten(s"${ft.root}/segments/$seg"))
+    def writers(seg: String) = TestSpark.writtenBy(s"${ft.root}/segments/$seg").toSet
+    val (bySpark, byDriver) = log.partition(writers(_) == Set("task"))
     assert(bySpark.size == rounds.size - small && byDriver.size == 1 + small,
       s"Spark $bySpark, driver $byDriver")
+    assert(byDriver.forall(writers(_) == Set("driver")), byDriver)
     // every reader sees the same rows
     val all = spark.read.parquet(ft.segmentsOf(v).map(seg => s"${ft.root}/segments/$seg"): _*)
     val dead = spark.read.parquet(ft.tombstonesOf(v).map(t => s"${ft.root}/tombstones/$t"): _*)
@@ -870,6 +906,7 @@ class CrawlParitySpec extends AnyFunSuite {
       log.map(seg => s"${ft.root}/segments/$seg"): _*)).sorted)
     assert(ft.readSegments(log).collect().length == rounds.last.seenTotal)
     assert(s.docsTable.read().count() == rounds.map(_.docsWritten).sum)
+    assert(commitMarkers(dir).isEmpty, commitMarkers(dir))
     s.cleanup()
   }
 

@@ -19,6 +19,24 @@ class SeenSetSpec extends AnyFunSuite {
   val candUrls = (1500 until 3000).map(i => s"http://h${i % 7}.example.com/page/$i")
   val trulyNew = candUrls.toSet -- seenUrls.toSet
 
+  /** the first parquet file of `dir` by name: its Spark row-metadata key,
+    * its parquet schema and the codec of each column of its first row group.
+    */
+  def footerSchema(dir: String): String =
+    footerOf(new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).min)
+
+  def footerOf(f: String): String = {
+    import scala.jdk.CollectionConverters._
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf())
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getFileMetaData.getKeyValueMetaData.get(
+      org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY) +
+      r.getFileMetaData.getSchema.toString + r.getRowGroups.asScala.headOption
+        .fold("")(_.getColumns.asScala.map(_.getCodec.toString).mkString(","))
+    finally r.close()
+  }
+
   test("bloom path never drops a truly-new URL and equals the exact anti-join") {
     val seen = urlsDf(seenUrls)
     val n = seenUrls.size.toLong
@@ -598,18 +616,6 @@ class SeenSetSpec extends AnyFunSuite {
       .toDF("url", "title", "body", "@timestamp")
       .withColumn("nav", struct(col("title").as("t"), col("body").as("items")))
     def rowsOf(df: DataFrame) = df.collect().map(r => r.toSeq).toSet
-    def footerSchema(dir: String): String = {
-      val f = new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).min
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFileMetaData.getKeyValueMetaData.get(
-        org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY) +
-        r.getFileMetaData.getSchema.toString + r.getRowGroups.asScala.headOption
-          .fold("")(_.getColumns.asScala.map(_.getCodec.toString).mkString(","))
-      finally r.close()
-    }
-    def written(dir: String) = new java.io.File(dir).list().toSet
     // the same commits twice: local frames (written from the driver) and
     // the same rows behind a repartition (written by Spark)
     def both(sequenced: Boolean)(commits: (SnapshotTable, DataFrame => DataFrame) => Long): Unit = {
@@ -634,8 +640,8 @@ class SeenSetSpec extends AnyFunSuite {
         assert(dr.schema == sr.schema && rowsOf(dr) == rowsOf(sr), seg)
         assert(footerSchema(dd) == footerSchema(sd), seg)
         if (!seg.endsWith("-base")) {
-          assert(written(dd).count(_.endsWith(".parquet")) == 1 && !written(dd).contains("_SUCCESS"), seg)
-          assert(written(sd).contains("_SUCCESS"), seg)
+          assert(TestSpark.writtenBy(dd) == Seq("driver"), seg)
+          assert(TestSpark.writtenBy(sd) == Seq("task"), seg)
         }
       }
       d.tombstonesOf(v).foreach { t =>
@@ -658,5 +664,100 @@ class SeenSetSpec extends AnyFunSuite {
         shape(docs(0 until 5, "x").select("url")))
       t.commitAppend(shape(docs(20 until 22, "c")))._1
     }
+    // Spark's own writer is the reference: each frame, written by a
+    // test-side df.write.parquet (with the `__seq` a sequenced table
+    // stamps), has the footer schema, key and codec and the rows of the
+    // same frame committed from the driver and by Spark tasks
+    Seq(frontier(0 until 3000) -> false, keys(0 until 20) -> false,
+        docs(0 until 10, "a") -> true, docs(0 until 5, "x").select("url") -> true).foreach {
+      case (df, sequenced) =>
+        val ref = TestSpark.tmpDir("snap-spark-ref")
+        (if (sequenced) df.withColumn(SnapshotTable.SeqCol, lit(0L)) else df)
+          .repartition(1).write.mode("overwrite").parquet(ref)
+        Seq[DataFrame => DataFrame](identity, _.repartition(1)).foreach { shape =>
+          val t = new SnapshotTable(TestSpark.tmpDir("snap-ref-table"), spark, sequenced = sequenced)
+          t.commitAppend(shape(df))
+          val seg = s"${t.root}/segments/0"
+          assert(footerSchema(seg) == footerSchema(ref), df.columns.mkString(","))
+          assert(rowsOf(spark.read.parquet(seg)) == rowsOf(spark.read.parquet(ref)))
+          t.drop()
+        }
+    }
+  }
+
+  test("snapshot table: a Spark frame is written by its tasks, one file per partition with rows plus partition 0's, and the commit publishes exactly their files and rows") {
+    import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+    import org.apache.spark.sql.{DataFrame, Row}
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).sorted(
+      Ordering.by((r: Seq[Any]) => r.head.asInstanceOf[Long])).toSeq
+    def frame(where: String) = spark.range(0, 80, 1, 8).filter(where)
+      .select(col("id"), concat(lit("u"), col("id")).as("url"), (col("id") % 3).cast("int").as("depth"))
+    val t = new SnapshotTable(TestSpark.tmpDir("snap-tasks"), spark)
+    val v0File = {
+      t.commitAppend(frame("id < 4").coalesce(1))
+      new java.io.File(s"${t.root}/segments/0").list().filter(_.endsWith(".parquet")).head
+    }
+    // ids 30-49 fill partitions 3 and 4 of 8 (10 ids each): partition 0 is
+    // empty and still writes; none matches the second, and its partition 0
+    // writes the one empty file
+    Seq("id >= 30 AND id < 50" -> Seq(0, 3, 4), "id < 0" -> Seq(0)).foreach {
+      case (where, partitions) =>
+        val df = frame(where)
+        val (v, rows) = t.commitAppend(df)
+        val dir = s"${t.root}/segments/$v"
+        val files = new java.io.File(dir).list().toSeq
+        val parquet = files.filter(_.endsWith(".parquet")).sorted
+        assert(parquet.map(_.take(10)) == partitions.map(p => f"part-$p%05d"), parquet)
+        assert(TestSpark.writtenBy(dir).forall(_ == "task"), parquet)
+        assert(!files.exists(f => f == "_SUCCESS" || f == "_temporary"), files)
+        val meta = new String(Files.readAllBytes(Paths.get(t.root, "snapshots", v.toString, "meta.json")))
+        assert(meta.contains(parquet.map(f => "\"" + f + "\"").mkString("\"newFiles\": [", ",", "]")), meta)
+        val n = df.count()
+        assert(t.metric(v, "segmentRows").contains(n.toString) && t.segmentRows(v.toString) == n)
+        assert(rows == t.rowsOf(v - 1) + n)
+        // Spark's own writer, on the same frame: the same file per
+        // partition, footer and rows
+        val ref = TestSpark.tmpDir("snap-tasks-ref")
+        df.write.mode("overwrite").parquet(ref)
+        assert(new java.io.File(ref).list().filter(_.endsWith(".parquet")).map(_.take(10)).sorted.toSeq ==
+          parquet.map(_.take(10)), where)
+        assert(footerSchema(dir) == footerSchema(ref), where)
+        // and the codec of a file with rows
+        def last(d: String) = new java.io.File(d).listFiles().map(_.getPath)
+          .filter(_.endsWith(".parquet")).max
+        assert(footerOf(last(dir)) == footerOf(last(ref)), where)
+        assert(rowsOf(spark.read.parquet(dir)) == rowsOf(spark.read.parquet(ref)), where)
+    }
+    // a plan with no partition runs no task: the driver writes the empty file
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], frame("id < 0").schema)
+    val (vn, _) = t.commitAppend(none)
+    assert(TestSpark.writtenBy(s"${t.root}/segments/$vn") == Seq("driver") && t.segmentRows(vn.toString) == 0)
+    // a stray file that appears in the segment dir while the tasks write
+    // (here copied in, with its checksum, by a UDF) holds four rows more:
+    // the commit deletes it, and reads see the writer's rows alone
+    val next = t.currentVersion + 1
+    val (src, dst) = (s"${t.root}/segments/0", s"${t.root}/segments/$next")
+    val stray = "part-00007-task-999999-c000.snappy.parquet"
+    val witness = s"${TestSpark.tmpDir("snap-stray")}/copied"
+    val copyIn = udf { (id: Long) =>
+      if (id == 30L) {
+        Seq("", ".").foreach { dot =>
+          val crc = if (dot.isEmpty) "" else ".crc"
+          Files.copy(Paths.get(src, s"$dot$v0File$crc"), Paths.get(dst, s"$dot$stray$crc"), REPLACE_EXISTING)
+        }
+        Files.write(Paths.get(witness), Array.emptyByteArray)
+      }
+      id
+    }
+    val df = frame("id >= 30 AND id < 50")
+    val before = t.rowsOf(t.currentVersion)
+    val (v, rows) = t.commitAppend(df.withColumn("id", copyIn(col("id"))))
+    assert(v == next && Files.exists(Paths.get(witness)), "the stray was not copied in")
+    val left = new java.io.File(dst).list().toSeq
+    assert(!left.exists(_.contains("999999")), left)
+    assert(rows == before + 20 && t.metric(v, "segmentRows").contains("20"))
+    assert(rowsOf(t.readSegments(Seq(v.toString))) == rowsOf(df))
+    assert(t.read().count() == rows)
+    t.drop()
   }
 }

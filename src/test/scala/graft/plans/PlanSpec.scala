@@ -197,11 +197,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("crawl round: the exact seen route reuses the dedup's exchange; the bloom route scans a persisted cand") {
     import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.HashJoin
     import graft.corpus.SyntheticCorpus
@@ -211,7 +209,6 @@ class PlanSpec extends AnyFunSuite {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
-      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
       case o => o.children.flatMap(nodes)
     })
     val builder = SyntheticCorpus.Builder(n = 400, hostCount = 25)
@@ -223,18 +220,16 @@ class PlanSpec extends AnyFunSuite {
       seeds = seeds ++ extraSeeds, maxDepth = 3, maxAccessCount = 150,
       hostBudgetPerRound = 3, rules = Seq(ScrapingRule(urlPattern = ".*/page/.*",
         properties = Seq(PropertyRule("title", SpanText("title"))))))
-    // the executed plan of one round's frontier segment write
+    // the executed plan of one round's frontier segment write: the one SQL
+    // execution whose rows are frontier rows (a table write runs the
+    // frame's own plan, its tasks writing the files)
     def roundWritePlan(session: CrawlSession): SparkPlan = {
       val t = TestSpark.traced(session.runRound())
       assert(t.result.exists(_.newUrls > 0))
-      val root = session.frontierTable.root
-      t.queries.flatMap(q => nodes(q.executedPlan)).collectFirst {
-        case w: DataWritingCommandExec if (w.cmd match {
-          case i: InsertIntoHadoopFsRelationCommand =>
-            i.outputPath.toString.contains(s"$root/segments/")
-          case _ => false
-        }) => w.child
-      }.getOrElse(fail(s"no frontier segment write among ${t.queries.size} executions"))
+      val columns = session.frontierTable.read().columns.toSeq
+      val writes = t.queries.filter(_.analyzed.output.map(_.name) == columns)
+      assert(writes.size == 1, s"${writes.size} frontier-row executions among ${t.queries.size}")
+      writes.head.executedPlan
     }
 
     // exact route (seen < 1,048,576 rows): the candidate side of the anti-join
